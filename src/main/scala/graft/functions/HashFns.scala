@@ -55,15 +55,6 @@ object HashFns {
   def minHashSig(shingles: Column, k: Int): Column =
     minHashSigFromBase(minHashBase(shingles), k)
 
-  /** DuckDB spelling of [[minHashSig]] over a list-of-varchar expression. */
-  def minHashSigSql(listExpr: String, k: Int): String = {
-    val perms = minHashCoeffs(k).map { case (a, b) =>
-      s"list_min(list_transform(hb, h -> ($a * h + $b) % $MinHashP))"
-    }.mkString(", ")
-    s"(SELECT [$perms] FROM (SELECT list_transform($listExpr, " +
-      s"s -> ('0x' || substr(md5(s), 1, 8))::BIGINT % $MinHashP) AS hb))"
-  }
-
   /** LSH band keys: each of `bands` consecutive `rows`-sized signature
     * slices joined to a string — the equi-join key for candidate
     * generation. No hashing needed; the slice itself is the bucket id. */

@@ -173,8 +173,4 @@ object TextFns {
       val others = hits.collect { case (l, o) if l != lang => h >= o }
       when(others.reduce(_ && _) && h > 0, lit(lang)).otherwise(rest)
     }
-
-  /** One-shot spelling of langHits → langPick (inline; fine for single
-    * rows, use the two-step form in scans). */
-  def langGuess(c: Column): Column = langPick(langHits(c))
 }

@@ -104,7 +104,7 @@ object Layout {
     * flag, which single-file buckets make safe) — those sorts are
     * in-partition and network-free, and the `sortBy` still buys
     * row-group min/max pruning for point/range predicates on `key`
-    * within each bucket. MEASURED (r19, `tools/TimeBucketed`, sf0.1
+    * within each bucket. MEASURED (r19, BASELINE.md round-19 record, sf0.1
     * orders ⋈ lineitem, broadcast off, interleaved min-of-4): plain
     * parquet SMJ 0.515 s / 4 Exchanges / 4 Sorts → bucketed 0.297 s /
     * 0 Exchanges / 4 Sorts → bucketed + outputOrdering flag 0.277 s /

@@ -104,8 +104,8 @@ object Bpe {
     * (The previous spelling checkpointed per round yet kept a
     * per-round broadcast-join leg in the plan; past ~100 rounds the
     * accumulated task graph overflowed the task-deserializer stack.
-    * `tools/TimeBpe` is the regression harness: 1024 rounds must run,
-    * flat, at the per-round floor recorded in BASELINE.md.)
+    * BASELINE.md's round-12 record shows 1024 rounds running flat at the
+    * per-round floor.)
     *
     * A corpus that runs out of distinct pairs before `rounds` stops
     * early (the collect comes back empty). */

@@ -40,18 +40,8 @@ object Clean {
   def dropBots(col: String, pattern: String = BotRegex)(df: DataFrame): DataFrame =
     df.filter(!df(col).rlike(pattern))
 
-  /** P10 — null-fill a string column with "" (reference:
-    * PLATFORM-contextual-Chunking.py:32,44 `fillna('').astype(str)`). */
-  def fillEmpty(cols: String*)(df: DataFrame): DataFrame =
-    df.na.fill("", cols)
-
   /** P11 — conditional id-prefix strip (reference: REDDIT-Ingestion.py:76,127
     * strips Reddit's "t3_" fullname prefix). */
   def stripPrefix(c: Column, prefix: String): Column =
     regexp_replace(c, "^" + java.util.regex.Pattern.quote(prefix), "")
-
-  /** P6/P7-style ingest predicate: keep rows with a non-empty key column and
-    * a minimum child count. */
-  def keepViable(keyCol: String, countCol: String, minCount: Long)(df: DataFrame): DataFrame =
-    df.filter(df(keyCol).isNotNull && length(trim(df(keyCol))) > 0 && df(countCol) >= minCount)
 }

@@ -228,10 +228,10 @@ object Dedup {
     * checkpoint, the banding, and the verify join — the expanded arrays
     * GC-thrashed the 64× verify at default shuffle partitions until the
     * r16 partition override (BASELINE.md round 16, task 5). Rejected
-    * intermediate (measured, [[graft.tools.TimeWmh]] history in
-    * BASELINE round 17): verifying via a candidates×terms equi-join
-    * keeps every shuffle fingerprint-width but explodes 2.5M candidates
-    * × avg terms/doc through the pair-key shuffle — 2.9× slower than
+    * intermediate (measured, BASELINE.md round-17 record): verifying via
+    * a candidates×terms equi-join keeps every shuffle fingerprint-width
+    * but explodes 2.5M candidates × avg terms/doc through the pair-key
+    * shuffle — 2.9× slower than
     * the array spelling at sf0.1; the compact-vector join carries ~23
     * struct entries per side instead and stays at array-spelling speed.
     *
@@ -305,9 +305,9 @@ object Dedup {
   }
 
   /** The r16 expanded-array spelling of [[weightedMinHashLshPairs]], kept
-    * for the A/B measurement record ([[graft.tools.TimeWmh]]) and the
-    * equivalence spec: materializes the `term#1…term#min(tf,cap)`
-    * expansion as a per-doc sorted array and rides
+    * as the reference implementation for Wave44Spec's equivalence row (its
+    * A/B timing is recorded in BASELINE.md, rounds 16 and 17): materializes
+    * the `term#1…term#min(tf,cap)` expansion as a per-doc sorted array and rides
     * [[minHashLshPairsOn]]'s array-carrying verify join. Identical output
     * by construction; retired from q268 because the wide expanded-array
     * rows GC-thrashed the 64× verify join at default shuffle partitions

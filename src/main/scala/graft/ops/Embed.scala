@@ -32,16 +32,6 @@ object Embed {
     transform(VectorFns.normalize(counts), x => round(x, 6))
   }
 
-  /** xxhash64 variant of the same embedder — the faster spelling for the
-    * 100 TB path (one 64-bit hash per token instead of md5). */
-  def hashingEmbedFast(c: Column, dim: Int): Column = {
-    val toks = split(Dedup.normalized(c), " ")
-    val buckets = transform(toks, t => pmod(xxhash64(t), lit(dim.toLong)))
-    val counts = transform(sequence(lit(0), lit(dim - 1)),
-      i => size(filter(buckets, b => b === i.cast("long"))).cast("double"))
-    transform(VectorFns.normalize(counts), x => round(x, 6))
-  }
-
   /** O11 with the reference's NOISE semantics — density clustering over an
     * embedding column (reference: PLATFORM-contextual-Chunking.py:83-114 —
     * HDBSCAN, min_cluster_size 5, noise label −1): build the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Parent/child relational operators — the reference's "jointure" stage and
@@ -46,12 +46,6 @@ object Relate {
     * isin; left_semi is the distributed form). */
   def semiJoin(children: DataFrame, ids: DataFrame, key: String): DataFrame =
     children.join(ids, Seq(key), "left_semi")
-
-  /** J4 — two-hop expansion: explode an id-array column, join the target
-    * table on the exploded id (reference: PLATFORM-GenerationLLM.py:139-147's
-    * Python loop over posts_similaires → comment_ids). */
-  def expandIdList(df: DataFrame, idArrayCol: String, explodedCol: String): DataFrame =
-    df.withColumn(explodedCol, explode(col(idArrayCol))).drop(idArrayCol)
 
   /** J3/O12 — per-row co-cluster neighbor list: members of my cluster,
     * self excluded, capped at `cap`, noise cluster (-1) → empty array

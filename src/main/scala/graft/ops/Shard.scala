@@ -26,13 +26,6 @@ object Shard {
       pmod(conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10).cast("long"),
         lit(numShards.toLong)))
 
-  /** xxhash64 variant — one 64-bit hash instead of md5; the faster
-    * spelling for the 100 TB path (not oracle-comparable: xxhash64's seed
-    * and algorithm are Spark-specific). */
-  def assignShardsFast(df: DataFrame, idCol: String, numShards: Int,
-      outCol: String = "shard"): DataFrame =
-    df.withColumn(outCol, pmod(xxhash64(col(idCol).cast("string")), lit(numShards.toLong)))
-
   /** Per-shard manifest: row count, token total, and an ORDER-INDEPENDENT
     * content checksum (sum of a 32-bit md5 prefix per id — commutative, so
     * no per-shard sort and no collect; two exports of the same rows match

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,15 +36,5 @@ object TopK {
     val w = Window.partitionBy(col(groupCol)).orderBy(col(orderCol).desc, col(tiebreak).asc)
     df.withColumn(rankCol, row_number().over(w).cast("long"))
       .filter(col(rankCol) <= n)
-  }
-
-  /** W2 — global top-k with threshold: `orderBy(score desc).limit(k)` plans
-    * as TakeOrderedAndProject (per-partition heap + driver merge of k rows),
-    * no global sort — the scale-safe form of the reference's Qdrant
-    * `limit=k, score_threshold=t` search (reference: PLATFORM-GenerationLLM.py:42-58). */
-  def globalTopK(scoreCol: Column, threshold: Option[Double], k: Int, tiebreak: Column)(
-      df: DataFrame): DataFrame = {
-    val thresholded = threshold.fold(df)(t => df.filter(scoreCol >= t))
-    thresholded.orderBy(scoreCol.desc, tiebreak.asc).limit(k)
   }
 }

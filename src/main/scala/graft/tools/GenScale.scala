@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build a k× scaled copy of a fixture dir by unioning id-offset copies of
@@ -45,10 +45,7 @@ object GenScale {
     val zipf = args.length > 3 && args(3) == "zipf"
     val perturb = zipf || (args.length > 3 && args(3) == "perturb")
     val off = 100000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     def scaled(df: DataFrame, idCols: Seq[String],
         perCopy: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =

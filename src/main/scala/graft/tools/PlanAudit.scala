@@ -10,12 +10,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
     runAudit(spark, sfDir).foreach { case (name, line) =>
       println(f"$name%-26s $line")
     }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.Similarity
 
 /** Scaling-audit timer for the LSH-graph capstones at deployment-correct
@@ -36,12 +34,7 @@ object TimeScaled {
     val reps = if (args.length > 1) args(1).toInt else 3
     val tables = if (args.length > 2) args(2).toInt else 12
     val q = if (args.length > 3) args(3) else "q83"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val n = graft.io.Tables.embeddings(spark, sfDir).count()

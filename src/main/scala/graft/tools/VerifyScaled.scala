@@ -35,18 +35,13 @@ object VerifyScaled {
     val only: Option[Seq[String]] =
       if (args.length > 3) Some(args(3).split(",").toSeq) else None
     def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
+    val spark = graft.LocalSession()
     // SPARK_GRAFT_SHUFFLE: partition override for dumps whose verify
     // joins carry wide array rows (q268's 64x expanded-shingle pairs GC-
     // thrash a 32-partition single JVM; more, smaller partitions spill
     // instead — exactly the cluster remedy, minus the extra machines)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     new java.io.File(outDir).mkdirs()
 
     val emb = graft.io.Tables.embeddings(spark, sfDir)

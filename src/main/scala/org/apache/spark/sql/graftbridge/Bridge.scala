@@ -152,4 +152,11 @@ object Bridge {
       cs, None, None)
     org.apache.spark.sql.classic.Dataset.ofRows(cs, newLeaf)
   }
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (`SparkContext.listenerBus` is `private[spark]`). A job's end and its
+    * tasks' ends are posted before its action returns, so a listener read
+    * after this sees that job's complete totals. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

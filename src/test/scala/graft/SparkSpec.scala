@@ -4,19 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites must
-  * not stop it). */
+  * not stop it). Pinned to 4 cores whatever `SPARK_GRAFT_CPUS` says, so
+  * partition-count-sensitive assertions see the same session everywhere. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(cpus = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 
