@@ -28,8 +28,8 @@ object Bench {
     Seq(io.Tables.lineitem _, io.Tables.orders _, io.Tables.documents _,
       io.Tables.embeddings _, io.Tables.events _)
       .foreach(t => t(spark, sfDir).count())
-    // ambience probe: q83 min-of-3 against its 3.931 s sf0.1 steady-state
-    // pin (BENCH_stable.json, round 11) — emitted in the JSON so every
+    // ambience probe: q83 min-of-3 against its sf0.1 steady-state pin
+    // (probePin, BENCH_stable.json, round 19) — emitted in the JSON so every
     // BENCH artifact self-documents its session weather and cross-round
     // total comparisons need no archaeology (the r14 driver sweep read
     // 1.35x slow and proving that took a same-code re-sweep). probe_x is

@@ -8,7 +8,7 @@ import graft.ops.{Clean, Merge, Relate, TopK}
 import graft.functions.{TextFns, VectorFns}
 
 /** The engine's query surface: one named query per operator family from
-  * SURVEY.md §2, each paired with equivalent DuckDB SQL in [[Queries.oracle]]
+  * SURVEY.md §2, each paired with equivalent DuckDB SQL in [[Queries.defs]]
   * for the driver's hash-compare.
   *
   * Determinism rules (SURVEY.md §7.4): every float produced by arithmetic is
@@ -205,31 +205,17 @@ object Queries {
       |FROM documents""".stripMargin
 
   // ------------------------------------------------------- registry ------
-  val all: Map[String, Q] = Map(
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_topn_per_group" -> q02TopNPerGroup,
-    "q03_group_collect" -> q03GroupCollect,
-    "q04_enrich_left_join" -> q04EnrichLeftJoin,
-    "q05_semi_join" -> q05SemiJoin,
-    "q06_union_entities" -> q06UnionEntities,
-    "q07_dedup_exact" -> q07DedupExact,
-    "q08_point_lookup" -> q08PointLookup,
-    "q09_two_hop" -> q09TwoHop,
-    "q10_doc_filter" -> q10DocFilter,
-    "q11_html_strip" -> q11HtmlStrip,
-    "q12_text_assembly" -> q12TextAssembly)
-
-  val oracle: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_topn_per_group" -> q02Sql,
-    "q03_group_collect" -> q03Sql,
-    "q04_enrich_left_join" -> q04Sql,
-    "q05_semi_join" -> q05Sql,
-    "q06_union_entities" -> q06Sql,
-    "q07_dedup_exact" -> q07Sql,
-    "q08_point_lookup" -> q08Sql,
-    "q09_two_hop" -> q09Sql,
-    "q10_doc_filter" -> q10Sql,
-    "q11_html_strip" -> q11Sql,
-    "q12_text_assembly" -> q12Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q01_pricing_summary", q01PricingSummary, q01Sql),
+    QueryDef("q02_topn_per_group", q02TopNPerGroup, q02Sql),
+    QueryDef("q03_group_collect", q03GroupCollect, q03Sql),
+    QueryDef("q04_enrich_left_join", q04EnrichLeftJoin, q04Sql),
+    QueryDef("q05_semi_join", q05SemiJoin, q05Sql),
+    QueryDef("q06_union_entities", q06UnionEntities, q06Sql),
+    QueryDef("q07_dedup_exact", q07DedupExact, q07Sql),
+    QueryDef("q08_point_lookup", q08PointLookup, q08Sql),
+    QueryDef("q09_two_hop", q09TwoHop, q09Sql),
+    QueryDef("q10_doc_filter", q10DocFilter, q10Sql),
+    QueryDef("q11_html_strip", q11HtmlStrip, q11Sql),
+    QueryDef("q12_text_assembly", q12TextAssembly, q12Sql))
 }

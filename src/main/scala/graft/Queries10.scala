@@ -545,27 +545,15 @@ object Queries10 {
        |ORDER BY tr.vec_id""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q120_bpe_merges" -> q120BpeMerges,
-    "q121_bpe_compression" -> q121BpeCompression,
-    "q122_ivf_recall" -> q122IvfRecall,
-    "q123_bigram_predictability" -> q123BigramPredictability,
-    "q124_semantic_decon" -> q124SemanticDecon,
-    "q125_bpe_segment_new" -> q125BpeSegmentNew,
-    "q126_tokenizer_fertility" -> q126TokenizerFertility,
-    "q127_span_leak_audit" -> q127SpanLeakAudit,
-    "q128_trigram_backoff" -> q128TrigramBackoff,
-    "q129_packing_efficiency" -> q129PackingEfficiency)
-
-  val oracle: Map[String, String] = Map(
-    "q120_bpe_merges" -> q120Sql,
-    "q121_bpe_compression" -> q121Sql,
-    "q122_ivf_recall" -> q122Sql,
-    "q123_bigram_predictability" -> q123Sql,
-    "q124_semantic_decon" -> q124Sql,
-    "q125_bpe_segment_new" -> q125Sql,
-    "q126_tokenizer_fertility" -> q126Sql,
-    "q127_span_leak_audit" -> q127Sql,
-    "q128_trigram_backoff" -> q128Sql,
-    "q129_packing_efficiency" -> q129Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q120_bpe_merges", q120BpeMerges, q120Sql),
+    QueryDef("q121_bpe_compression", q121BpeCompression, q121Sql),
+    QueryDef("q122_ivf_recall", q122IvfRecall, q122Sql),
+    QueryDef("q123_bigram_predictability", q123BigramPredictability, q123Sql),
+    QueryDef("q124_semantic_decon", q124SemanticDecon, q124Sql),
+    QueryDef("q125_bpe_segment_new", q125BpeSegmentNew, q125Sql),
+    QueryDef("q126_tokenizer_fertility", q126TokenizerFertility, q126Sql),
+    QueryDef("q127_span_leak_audit", q127SpanLeakAudit, q127Sql),
+    QueryDef("q128_trigram_backoff", q128TrigramBackoff, q128Sql),
+    QueryDef("q129_packing_efficiency", q129PackingEfficiency, q129Sql))
 }

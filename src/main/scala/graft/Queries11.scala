@@ -238,15 +238,9 @@ object Queries11 {
        |ORDER BY node""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q130_bm25" -> q130Bm25,
-    "q131_hybrid_rrf" -> q131HybridRrf,
-    "q132_hard_negatives" -> q132HardNegatives,
-    "q133_knn_pagerank" -> q133KnnPagerank)
-
-  val oracle: Map[String, String] = Map(
-    "q130_bm25" -> q130Sql,
-    "q131_hybrid_rrf" -> q131Sql,
-    "q132_hard_negatives" -> q132Sql,
-    "q133_knn_pagerank" -> q133Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q130_bm25", q130Bm25, q130Sql),
+    QueryDef("q131_hybrid_rrf", q131HybridRrf, q131Sql),
+    QueryDef("q132_hard_negatives", q132HardNegatives, q132Sql),
+    QueryDef("q133_knn_pagerank", q133KnnPagerank, q133Sql))
 }

@@ -502,12 +502,9 @@ object Queries12 {
     * passages (`pg`, with per-passage token counts), the passage postings
     * index, the query term probe and the summed scores `sc` — the SQL
     * face of `Chunk.sentenceChunks` + `Retrieval.postings` +
-    * `bm25ScoresTerms` over passages. */
-  private[graft] val PassageScoreCtes: String = passageScoreCtes(None)
-
-  /** [[PassageScoreCtes]] with an optional probe-side document-frequency
-    * cutoff mirroring `Retrieval.bm25ScoresTerms(maxDfPpm)`: terms whose
-    * passage df exceeds the ppm are filtered from `dfreq` BEFORE the
+    * `bm25ScoresTerms` over passages. The optional probe-side
+    * document-frequency cutoff mirrors `bm25ScoresTerms(maxDfPpm)`: terms
+    * whose passage df exceeds the ppm are filtered from `dfreq` BEFORE the
     * weight join (lengths/avgdl/N stay full-index, as in the engine). */
   private[graft] def passageScoreCtes(maxDfPpm: Option[Long],
       queryMod: Long = 50L): String =
@@ -554,8 +551,13 @@ object Queries12 {
        |  WHERE w.passage_id != q.q_id AND w.passage_id // 10000 != q.q_id
        |  GROUP BY 1, 2)""".stripMargin
 
-  val q142Sql: String =
-    s"""WITH $PassageScoreCtes,
+  val q142Sql: String = q142SqlWith(None)
+
+  /** [[q142Sql]] with the df cutoff and query-sample modulus
+    * parameterized (q234's oracle; the k× proofs re-derive queryMod). */
+  private[graft] def q142SqlWith(maxDfPpm: Option[Long],
+      queryMod: Long = 50L): String =
+    s"""WITH ${passageScoreCtes(maxDfPpm, queryMod)},
        |rk AS (SELECT q_id, passage_id, score_e6,
        |    row_number() OVER (PARTITION BY q_id
        |                       ORDER BY score_e6 DESC, passage_id) AS rank
@@ -780,33 +782,18 @@ object Queries12 {
       |WHERE r.pos = least(r.haystack_id % 8, g.n_docs - 1)
       |ORDER BY r.haystack_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q134_prf_expansion" -> q134PrfExpansion,
-    "q135_retrieval_ndcg" -> q135RetrievalNdcg,
-    "q136_label_propagation" -> q136LabelPropagation,
-    "q137_expanded_bm25" -> q137ExpandedBm25,
-    "q138_route_ab" -> q138RouteAb,
-    "q139_norm_outliers" -> q139NormOutliers,
-    "q140_release_psi" -> q140ReleasePsi,
-    "q141_sentence_chunks" -> q141SentenceChunks,
-    "q142_passage_retrieval" -> q142PassageRetrieval,
-    "q143_passage_context" -> q143PassageContext,
-    "q144_multimodal_packing" -> q144MultimodalPacking,
-    "q145_sft_render" -> q145SftRender,
-    "q146_needle_depth" -> q146NeedleDepth)
-
-  val oracle: Map[String, String] = Map(
-    "q134_prf_expansion" -> q134Sql,
-    "q135_retrieval_ndcg" -> q135Sql,
-    "q136_label_propagation" -> q136Sql,
-    "q137_expanded_bm25" -> q137Sql,
-    "q138_route_ab" -> q138Sql,
-    "q139_norm_outliers" -> q139Sql,
-    "q140_release_psi" -> q140Sql,
-    "q141_sentence_chunks" -> q141Sql,
-    "q142_passage_retrieval" -> q142Sql,
-    "q143_passage_context" -> q143Sql,
-    "q144_multimodal_packing" -> q144Sql,
-    "q145_sft_render" -> q145Sql,
-    "q146_needle_depth" -> q146Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q134_prf_expansion", q134PrfExpansion, q134Sql),
+    QueryDef("q135_retrieval_ndcg", q135RetrievalNdcg, q135Sql),
+    QueryDef("q136_label_propagation", q136LabelPropagation, q136Sql),
+    QueryDef("q137_expanded_bm25", q137ExpandedBm25, q137Sql),
+    QueryDef("q138_route_ab", q138RouteAb, q138Sql),
+    QueryDef("q139_norm_outliers", q139NormOutliers, q139Sql),
+    QueryDef("q140_release_psi", q140ReleasePsi, q140Sql),
+    QueryDef("q141_sentence_chunks", q141SentenceChunks, q141Sql),
+    QueryDef("q142_passage_retrieval", q142PassageRetrieval, q142Sql),
+    QueryDef("q143_passage_context", q143PassageContext, q143Sql),
+    QueryDef("q144_multimodal_packing", q144MultimodalPacking, q144Sql),
+    QueryDef("q145_sft_render", q145SftRender, q145Sql),
+    QueryDef("q146_needle_depth", q146NeedleDepth, q146Sql))
 }

@@ -374,19 +374,11 @@ object Queries13 {
        |     // least($PqTopK, ne.n_exact))::BIGINT AS recall_ppm
        |FROM ne LEFT JOIN nh USING (q_id) ORDER BY ne.q_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q147_preference_pairs" -> q147PreferencePairs,
-    "q148_vocab_prune" -> q148VocabPrune,
-    "q149_prune_impact" -> q149PruneImpact,
-    "q150_pq_codebook" -> q150PqCodebook,
-    "q151_pq_adc_topk" -> q151PqAdcTopk,
-    "q152_pq_recall" -> q152PqRecall)
-
-  val oracle: Map[String, String] = Map(
-    "q147_preference_pairs" -> q147Sql,
-    "q148_vocab_prune" -> q148Sql,
-    "q149_prune_impact" -> q149Sql,
-    "q150_pq_codebook" -> q150Sql,
-    "q151_pq_adc_topk" -> q151Sql,
-    "q152_pq_recall" -> q152Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q147_preference_pairs", q147PreferencePairs, q147Sql),
+    QueryDef("q148_vocab_prune", q148VocabPrune, q148Sql),
+    QueryDef("q149_prune_impact", q149PruneImpact, q149Sql),
+    QueryDef("q150_pq_codebook", q150PqCodebook, q150Sql),
+    QueryDef("q151_pq_adc_topk", q151PqAdcTopk, q151Sql),
+    QueryDef("q152_pq_recall", q152PqRecall, q152Sql))
 }

@@ -333,19 +333,11 @@ object Queries14 {
        |ORDER BY word""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q153_pass_at_k" -> q153PassAtK,
-    "q154_prefix_cache" -> q154PrefixCache,
-    "q155_best_of_n" -> q155BestOfN,
-    "q156_doremi_weights" -> q156DoremiWeights,
-    "q157_bitext_mining" -> q157BitextMining,
-    "q158_unigram_segment" -> q158UnigramSegment)
-
-  val oracle: Map[String, String] = Map(
-    "q153_pass_at_k" -> q153Sql,
-    "q154_prefix_cache" -> q154Sql,
-    "q155_best_of_n" -> q155Sql,
-    "q156_doremi_weights" -> q156Sql,
-    "q157_bitext_mining" -> q157Sql,
-    "q158_unigram_segment" -> q158Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q153_pass_at_k", q153PassAtK, q153Sql),
+    QueryDef("q154_prefix_cache", q154PrefixCache, q154Sql),
+    QueryDef("q155_best_of_n", q155BestOfN, q155Sql),
+    QueryDef("q156_doremi_weights", q156DoremiWeights, q156Sql),
+    QueryDef("q157_bitext_mining", q157BitextMining, q157Sql),
+    QueryDef("q158_unigram_segment", q158UnigramSegment, q158Sql))
 }

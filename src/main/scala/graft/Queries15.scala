@@ -139,15 +139,9 @@ object Queries15 {
        |LEFT JOIN a USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q159_fim" -> q159Fim,
-    "q160_span_corrupt" -> q160SpanCorrupt,
-    "q161_diversity" -> q161Diversity,
-    "q162_novelty" -> q162Novelty)
-
-  val oracle: Map[String, String] = Map(
-    "q159_fim" -> q159Sql,
-    "q160_span_corrupt" -> q160Sql,
-    "q161_diversity" -> q161Sql,
-    "q162_novelty" -> q162Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q159_fim", q159Fim, q159Sql),
+    QueryDef("q160_span_corrupt", q160SpanCorrupt, q160Sql),
+    QueryDef("q161_diversity", q161Diversity, q161Sql),
+    QueryDef("q162_novelty", q162Novelty, q162Sql))
 }

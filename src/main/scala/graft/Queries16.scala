@@ -181,15 +181,9 @@ object Queries16 {
        |FROM (SELECT DISTINCT route_id FROM p) r LEFT JOIN a USING (route_id)
        |ORDER BY r.route_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q163_bradley_terry" -> q163BradleyTerry,
-    "q164_bitext_clean" -> q164BitextClean,
-    "q165_sign_test" -> q165SignTest,
-    "q166_block_reuse" -> q166BlockReuse)
-
-  val oracle: Map[String, String] = Map(
-    "q163_bradley_terry" -> q163Sql,
-    "q164_bitext_clean" -> q164Sql,
-    "q165_sign_test" -> q165Sql,
-    "q166_block_reuse" -> q166Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q163_bradley_terry", q163BradleyTerry, q163Sql),
+    QueryDef("q164_bitext_clean", q164BitextClean, q164Sql),
+    QueryDef("q165_sign_test", q165SignTest, q165Sql),
+    QueryDef("q166_block_reuse", q166BlockReuse, q166Sql))
 }

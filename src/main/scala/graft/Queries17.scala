@@ -259,17 +259,10 @@ object Queries17 {
        |    AS keep
        |FROM ev ORDER BY id_a, id_b""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q167_self_consistency" -> q167SelfConsistency,
-    "q168_ece" -> q168Ece,
-    "q169_fleiss_kappa" -> q169FleissKappa,
-    "q170_spec_decode" -> q170SpecDecode,
-    "q171_edit_confirm" -> q171EditConfirm)
-
-  val oracle: Map[String, String] = Map(
-    "q167_self_consistency" -> q167Sql,
-    "q168_ece" -> q168Sql,
-    "q169_fleiss_kappa" -> q169Sql,
-    "q170_spec_decode" -> q170Sql,
-    "q171_edit_confirm" -> q171Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q167_self_consistency", q167SelfConsistency, q167Sql),
+    QueryDef("q168_ece", q168Ece, q168Sql),
+    QueryDef("q169_fleiss_kappa", q169FleissKappa, q169Sql),
+    QueryDef("q170_spec_decode", q170SpecDecode, q170Sql),
+    QueryDef("q171_edit_confirm", q171EditConfirm, q171Sql))
 }

@@ -245,17 +245,10 @@ object Queries18 {
        |     - (ssum // n_samples))::BIGINT AS delta_ppm
        |FROM a ORDER BY task_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q172_cms_heavy_hitters" -> q172CmsHeavyHitters,
-    "q173_hll_cardinality" -> q173HllCardinality,
-    "q174_grpo_advantage" -> q174GrpoAdvantage,
-    "q175_coverage_budget" -> q175CoverageBudget,
-    "q176_trimmed_eval" -> q176TrimmedEval)
-
-  val oracle: Map[String, String] = Map(
-    "q172_cms_heavy_hitters" -> q172Sql,
-    "q173_hll_cardinality" -> q173Sql,
-    "q174_grpo_advantage" -> q174Sql,
-    "q175_coverage_budget" -> q175Sql,
-    "q176_trimmed_eval" -> q176Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q172_cms_heavy_hitters", q172CmsHeavyHitters, q172Sql),
+    QueryDef("q173_hll_cardinality", q173HllCardinality, q173Sql),
+    QueryDef("q174_grpo_advantage", q174GrpoAdvantage, q174Sql),
+    QueryDef("q175_coverage_budget", q175CoverageBudget, q175Sql),
+    QueryDef("q176_trimmed_eval", q176TrimmedEval, q176Sql))
 }

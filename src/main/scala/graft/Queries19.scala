@@ -222,15 +222,9 @@ object Queries19 {
        |JOIN sz sb ON sb.source = sh.src_b
        |ORDER BY sh.src_a, sh.src_b""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q177_kmv_distinct" -> q177KmvDistinct,
-    "q178_source_overlap" -> q178SourceOverlap,
-    "q179_hist_quantiles" -> q179HistQuantiles,
-    "q180_cross_source_dups" -> q180CrossSourceDups)
-
-  val oracle: Map[String, String] = Map(
-    "q177_kmv_distinct" -> q177Sql,
-    "q178_source_overlap" -> q178Sql,
-    "q179_hist_quantiles" -> q179Sql,
-    "q180_cross_source_dups" -> q180Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q177_kmv_distinct", q177KmvDistinct, q177Sql),
+    QueryDef("q178_source_overlap", q178SourceOverlap, q178Sql),
+    QueryDef("q179_hist_quantiles", q179HistQuantiles, q179Sql),
+    QueryDef("q180_cross_source_dups", q180CrossSourceDups, q180Sql))
 }

@@ -460,47 +460,25 @@ object Queries2 {
       |  FROM x GROUP BY 1, 2)""".stripMargin
 
   // ------------------------------------------------------- registry ----
-  val all: Map[String, Q] = Map(
-    "q13_dedup_exact" -> q13DedupExact,
-    "q14_minhash_lsh" -> q14MinHashLsh,
-    "q15_simhash" -> q15SimHash,
-    "q16_near_dup_embed" -> q16NearDupEmbed,
-    "q17_bucketed_near_dup" -> q17BucketedNearDup,
-    "q18_cosine_topk" -> q18CosineTopK,
-    "q19_knn_join" -> q19KnnJoin,
-    "q20_token_stats" -> q20TokenStats,
-    "q21_quality" -> q21Quality,
-    "q22_lang_guess" -> q22LangGuess,
-    "q23_fingerprint" -> q23Fingerprint,
-    "q24_chunks" -> q24Chunks,
-    "q25_cluster_neighbors" -> q25ClusterNeighbors,
-    "q26_hashing_embed" -> q26HashingEmbed,
-    "q27_events_window" -> q27EventsWindow,
-    "q28_sessionize" -> q28Sessionize,
-    "q29_rag_context" -> q29RagContext,
-    "q30_multimodal" -> q30Multimodal,
-    "q31_kmeans" -> q31KMeans,
-    "q32_centroids" -> q32Centroids)
-
-  val oracle: Map[String, String] = Map(
-    "q13_dedup_exact" -> q13Sql,
-    "q14_minhash_lsh" -> q14Sql,
-    "q15_simhash" -> q15Sql,
-    "q16_near_dup_embed" -> q16Sql,
-    "q17_bucketed_near_dup" -> q17Sql,
-    "q18_cosine_topk" -> q18Sql,
-    "q19_knn_join" -> q19Sql,
-    "q20_token_stats" -> q20Sql,
-    "q21_quality" -> q21Sql,
-    "q22_lang_guess" -> q22Sql,
-    "q23_fingerprint" -> q23Sql,
-    "q24_chunks" -> q24Sql,
-    "q25_cluster_neighbors" -> q25Sql,
-    "q26_hashing_embed" -> q26Sql,
-    "q27_events_window" -> q27Sql,
-    "q28_sessionize" -> q28Sql,
-    "q29_rag_context" -> q29Sql,
-    "q30_multimodal" -> q30Sql,
-    "q31_kmeans" -> q31Sql,
-    "q32_centroids" -> q32Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q13_dedup_exact", q13DedupExact, q13Sql),
+    QueryDef("q14_minhash_lsh", q14MinHashLsh, q14Sql),
+    QueryDef("q15_simhash", q15SimHash, q15Sql),
+    QueryDef("q16_near_dup_embed", q16NearDupEmbed, q16Sql),
+    QueryDef("q17_bucketed_near_dup", q17BucketedNearDup, q17Sql),
+    QueryDef("q18_cosine_topk", q18CosineTopK, q18Sql),
+    QueryDef("q19_knn_join", q19KnnJoin, q19Sql),
+    QueryDef("q20_token_stats", q20TokenStats, q20Sql),
+    QueryDef("q21_quality", q21Quality, q21Sql),
+    QueryDef("q22_lang_guess", q22LangGuess, q22Sql),
+    QueryDef("q23_fingerprint", q23Fingerprint, q23Sql),
+    QueryDef("q24_chunks", q24Chunks, q24Sql),
+    QueryDef("q25_cluster_neighbors", q25ClusterNeighbors, q25Sql),
+    QueryDef("q26_hashing_embed", q26HashingEmbed, q26Sql),
+    QueryDef("q27_events_window", q27EventsWindow, q27Sql),
+    QueryDef("q28_sessionize", q28Sessionize, q28Sql),
+    QueryDef("q29_rag_context", q29RagContext, q29Sql),
+    QueryDef("q30_multimodal", q30Multimodal, q30Sql),
+    QueryDef("q31_kmeans", q31KMeans, q31Sql),
+    QueryDef("q32_centroids", q32Centroids, q32Sql))
 }

@@ -289,17 +289,10 @@ object Queries20 {
        |FROM tot, est_g, ex""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q181_power_iteration" -> q181PowerIteration,
-    "q182_triangle_stats" -> q182TriangleStats,
-    "q183_priority_sample" -> q183PrioritySample,
-    "q184_k_anonymity" -> q184KAnonymity,
-    "q185_hll_merge" -> q185HllMerge)
-
-  val oracle: Map[String, String] = Map(
-    "q181_power_iteration" -> q181Sql,
-    "q182_triangle_stats" -> q182Sql,
-    "q183_priority_sample" -> q183Sql,
-    "q184_k_anonymity" -> q184Sql,
-    "q185_hll_merge" -> q185Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q181_power_iteration", q181PowerIteration, q181Sql),
+    QueryDef("q182_triangle_stats", q182TriangleStats, q182Sql),
+    QueryDef("q183_priority_sample", q183PrioritySample, q183Sql),
+    QueryDef("q184_k_anonymity", q184KAnonymity, q184Sql),
+    QueryDef("q185_hll_merge", q185HllMerge, q185Sql))
 }

@@ -303,17 +303,10 @@ object Queries21 {
 
   val q190Sql: String = q190SqlWith(Queries3.rpPlanes, Queries3.rpBits)
 
-  val all: Map[String, Q] = Map(
-    "q186_all_but_top" -> q186AllButTop,
-    "q187_collocations" -> q187Collocations,
-    "q188_cluster_folds" -> q188ClusterFolds,
-    "q189_threshold_calibration" -> q189ThresholdCalibration,
-    "q190_k_core" -> q190KCore)
-
-  val oracle: Map[String, String] = Map(
-    "q186_all_but_top" -> q186Sql,
-    "q187_collocations" -> q187Sql,
-    "q188_cluster_folds" -> q188Sql,
-    "q189_threshold_calibration" -> q189Sql,
-    "q190_k_core" -> q190Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q186_all_but_top", q186AllButTop, q186Sql),
+    QueryDef("q187_collocations", q187Collocations, q187Sql),
+    QueryDef("q188_cluster_folds", q188ClusterFolds, q188Sql),
+    QueryDef("q189_threshold_calibration", q189ThresholdCalibration, q189Sql),
+    QueryDef("q190_k_core", q190KCore, q190Sql))
 }

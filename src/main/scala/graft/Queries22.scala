@@ -190,15 +190,9 @@ object Queries22 {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q191_shuffle_quality" -> q191ShuffleQuality,
-    "q192_burst_detection" -> q192BurstDetection,
-    "q193_label_separation" -> q193LabelSeparation,
-    "q194_containment_dups" -> q194Containment)
-
-  val oracle: Map[String, String] = Map(
-    "q191_shuffle_quality" -> q191Sql,
-    "q192_burst_detection" -> q192Sql,
-    "q193_label_separation" -> q193Sql,
-    "q194_containment_dups" -> q194Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q191_shuffle_quality", q191ShuffleQuality, q191Sql),
+    QueryDef("q192_burst_detection", q192BurstDetection, q192Sql),
+    QueryDef("q193_label_separation", q193LabelSeparation, q193Sql),
+    QueryDef("q194_containment_dups", q194Containment, q194Sql))
 }

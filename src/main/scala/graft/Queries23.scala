@@ -249,15 +249,9 @@ object Queries23 {
        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q195_mutual_knn" -> q195Mutual,
-    "q196_decon_tiers" -> q196DeconTiers,
-    "q197_span_positions" -> q197SpanPositions,
-    "q198_dedup_venn" -> q198DedupVenn)
-
-  val oracle: Map[String, String] = Map(
-    "q195_mutual_knn" -> q195Sql,
-    "q196_decon_tiers" -> q196Sql,
-    "q197_span_positions" -> q197Sql,
-    "q198_dedup_venn" -> q198Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q195_mutual_knn", q195Mutual, q195Sql),
+    QueryDef("q196_decon_tiers", q196DeconTiers, q196Sql),
+    QueryDef("q197_span_positions", q197SpanPositions, q197Sql),
+    QueryDef("q198_dedup_venn", q198DedupVenn, q198Sql))
 }

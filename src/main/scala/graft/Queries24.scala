@@ -191,11 +191,7 @@ object Queries24 {
        |JOIN p90 USING (source)
        |ORDER BY b.source""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q199_greedy_coverage" -> q199GreedyCoverage,
-    "q200_release_datasheet" -> q200ReleaseDatasheet)
-
-  val oracle: Map[String, String] = Map(
-    "q199_greedy_coverage" -> q199Sql,
-    "q200_release_datasheet" -> q200Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q199_greedy_coverage", q199GreedyCoverage, q199Sql),
+    QueryDef("q200_release_datasheet", q200ReleaseDatasheet, q200Sql))
 }

@@ -87,13 +87,8 @@ object Queries25 {
       .mkString("", "\nUNION ALL ", "\nORDER BY \"column\"")
   }
 
-  val all: Map[String, Q] = Map(
-    "q201_cohort_retention" -> q201CohortRetention,
-    "q202_forward_fill" -> q202ForwardFill,
-    "q203_column_profile" -> q203ColumnProfile)
-
-  val oracle: Map[String, String] = Map(
-    "q201_cohort_retention" -> q201Sql,
-    "q202_forward_fill" -> q202Sql,
-    "q203_column_profile" -> q203Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q201_cohort_retention", q201CohortRetention, q201Sql),
+    QueryDef("q202_forward_fill", q202ForwardFill, q202Sql),
+    QueryDef("q203_column_profile", q203ColumnProfile, q203Sql))
 }

@@ -108,11 +108,7 @@ object Queries26 {
        |ORDER BY node""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q204_funnel_conversion" -> q204FunnelConversion,
-    "q205_personalized_pr" -> q205PersonalizedPr)
-
-  val oracle: Map[String, String] = Map(
-    "q204_funnel_conversion" -> q204Sql,
-    "q205_personalized_pr" -> q205Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q204_funnel_conversion", q204FunnelConversion, q204Sql),
+    QueryDef("q205_personalized_pr", q205PersonalizedPr, q205Sql))
 }

@@ -81,6 +81,6 @@ object Queries27 {
        |FROM qt GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
   }
 
-  val all: Map[String, Q] = Map("q206_rfm_segments" -> q206RfmSegments)
-  val oracle: Map[String, String] = Map("q206_rfm_segments" -> q206Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q206_rfm_segments", q206RfmSegments, q206Sql))
 }

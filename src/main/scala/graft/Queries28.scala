@@ -135,15 +135,9 @@ object Queries28 {
        |FROM isl WINDOW w2 AS (PARTITION BY key ORDER BY version ASC)
        |ORDER BY key, version""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q207_assoc_rules" -> q207AssocRules,
-    "q208_markov_transitions" -> q208MarkovTransitions,
-    "q209_last_touch" -> q209LastTouch,
-    "q210_scd2_dimension" -> q210Scd2Dimension)
-
-  val oracle: Map[String, String] = Map(
-    "q207_assoc_rules" -> q207Sql,
-    "q208_markov_transitions" -> q208Sql,
-    "q209_last_touch" -> q209Sql,
-    "q210_scd2_dimension" -> q210Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q207_assoc_rules", q207AssocRules, q207Sql),
+    QueryDef("q208_markov_transitions", q208MarkovTransitions, q208Sql),
+    QueryDef("q209_last_touch", q209LastTouch, q209Sql),
+    QueryDef("q210_scd2_dimension", q210Scd2Dimension, q210Sql))
 }

@@ -146,17 +146,10 @@ object Queries29 {
       |  SELECT * FROM d WHERE d.n_credits > 0)
       |ORDER BY channel""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q211_benford" -> q211Benford,
-    "q212_gini_concentration" -> q212Gini,
-    "q213_decay_score" -> q213DecayScore,
-    "q214_session_paths" -> q214SessionPaths,
-    "q215_linear_attribution" -> q215LinearAttribution)
-
-  val oracle: Map[String, String] = Map(
-    "q211_benford" -> q211Sql,
-    "q212_gini_concentration" -> q212Sql,
-    "q213_decay_score" -> q213Sql,
-    "q214_session_paths" -> q214Sql,
-    "q215_linear_attribution" -> q215Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q211_benford", q211Benford, q211Sql),
+    QueryDef("q212_gini_concentration", q212Gini, q212Sql),
+    QueryDef("q213_decay_score", q213DecayScore, q213Sql),
+    QueryDef("q214_session_paths", q214SessionPaths, q214Sql),
+    QueryDef("q215_linear_attribution", q215LinearAttribution, q215Sql))
 }

@@ -462,41 +462,22 @@ object Queries3 {
       |FROM documents""".stripMargin
 
   // ------------------------------------------------------- registry ----
-  val all: Map[String, Q] = Map(
-    "q33_from_json" -> q33FromJson,
-    "q34_session_window" -> q34SessionWindow,
-    "q35_sliding_window" -> q35SlidingWindow,
-    "q36_frame_sample" -> q36FrameSample,
-    "q37_ivf_topk" -> q37IvfTopK,
-    "q38_ngram_jaccard" -> q38NgramJaccard,
-    "q39_dedup_apply" -> q39DedupApply,
-    "q40_token_chunks" -> q40TokenChunks,
-    "q41_sql_cosine" -> q41SqlCosine,
-    "q42_rag_prompt" -> q42RagPrompt,
-    "q43_asof_join" -> q43AsOfJoin,
-    "q44_json_props" -> q44JsonProps,
-    "q45_doc_stats" -> q45DocStats,
-    "q46_range_join" -> q46RangeJoin,
-    "q47_rp_lsh" -> q47RpLsh,
-    "q48_repetition" -> q48Repetition,
-    "q49_pattern_counts" -> q49PatternCounts)
-
-  val oracle: Map[String, String] = Map(
-    "q33_from_json" -> q33Sql,
-    "q34_session_window" -> q34Sql,
-    "q35_sliding_window" -> q35Sql,
-    "q36_frame_sample" -> q36Sql,
-    "q37_ivf_topk" -> q37Sql,
-    "q38_ngram_jaccard" -> q38Sql,
-    "q39_dedup_apply" -> q39Sql,
-    "q40_token_chunks" -> q40Sql,
-    "q41_sql_cosine" -> q41Sql,
-    "q42_rag_prompt" -> q42Sql,
-    "q43_asof_join" -> q43Sql,
-    "q44_json_props" -> q44Sql,
-    "q45_doc_stats" -> q45Sql,
-    "q46_range_join" -> q46Sql,
-    "q47_rp_lsh" -> q47Sql,
-    "q48_repetition" -> q48Sql,
-    "q49_pattern_counts" -> q49Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q33_from_json", q33FromJson, q33Sql),
+    QueryDef("q34_session_window", q34SessionWindow, q34Sql),
+    QueryDef("q35_sliding_window", q35SlidingWindow, q35Sql),
+    QueryDef("q36_frame_sample", q36FrameSample, q36Sql),
+    QueryDef("q37_ivf_topk", q37IvfTopK, q37Sql),
+    QueryDef("q38_ngram_jaccard", q38NgramJaccard, q38Sql),
+    QueryDef("q39_dedup_apply", q39DedupApply, q39Sql),
+    QueryDef("q40_token_chunks", q40TokenChunks, q40Sql),
+    QueryDef("q41_sql_cosine", q41SqlCosine, q41Sql),
+    QueryDef("q42_rag_prompt", q42RagPrompt, q42Sql),
+    QueryDef("q43_asof_join", q43AsOfJoin, q43Sql),
+    QueryDef("q44_json_props", q44JsonProps, q44Sql),
+    QueryDef("q45_doc_stats", q45DocStats, q45Sql),
+    QueryDef("q46_range_join", q46RangeJoin, q46Sql),
+    QueryDef("q47_rp_lsh", q47RpLsh, q47Sql),
+    QueryDef("q48_repetition", q48Repetition, q48Sql),
+    QueryDef("q49_pattern_counts", q49PatternCounts, q49Sql))
 }

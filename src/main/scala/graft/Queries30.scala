@@ -141,17 +141,10 @@ object Queries30 {
       |  (sum(late) // 1000000)::BIGINT AS sum_late_s
       |FROM l GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q216_abc_parts" -> q216AbcParts,
-    "q217_weekday_profile" -> q217WeekdayProfile,
-    "q218_reconcile" -> q218Reconcile,
-    "q219_purchase_intervals" -> q219PurchaseIntervals,
-    "q220_lateness_profile" -> q220LatenessProfile)
-
-  val oracle: Map[String, String] = Map(
-    "q216_abc_parts" -> q216Sql,
-    "q217_weekday_profile" -> q217Sql,
-    "q218_reconcile" -> q218Sql,
-    "q219_purchase_intervals" -> q219Sql,
-    "q220_lateness_profile" -> q220Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q216_abc_parts", q216AbcParts, q216Sql),
+    QueryDef("q217_weekday_profile", q217WeekdayProfile, q217Sql),
+    QueryDef("q218_reconcile", q218Reconcile, q218Sql),
+    QueryDef("q219_purchase_intervals", q219PurchaseIntervals, q219Sql),
+    QueryDef("q220_lateness_profile", q220LatenessProfile, q220Sql))
 }

@@ -156,17 +156,10 @@ object Queries31 {
       |  sum(CASE WHEN bad THEN 1 ELSE 0 END)::BIGINT AS n_nonfinite
       |FROM j CROSS JOIN md""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q221_template_floods" -> q221TemplateFloods,
-    "q222_provenance_manifest" -> q222ProvenanceManifest,
-    "q223_position_bias" -> q223PositionBias,
-    "q224_nucleus_vocab" -> q224NucleusVocab,
-    "q225_vector_store_audit" -> q225VectorStoreAudit)
-
-  val oracle: Map[String, String] = Map(
-    "q221_template_floods" -> q221Sql,
-    "q222_provenance_manifest" -> q222Sql,
-    "q223_position_bias" -> q223Sql,
-    "q224_nucleus_vocab" -> q224Sql,
-    "q225_vector_store_audit" -> q225Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q221_template_floods", q221TemplateFloods, q221Sql),
+    QueryDef("q222_provenance_manifest", q222ProvenanceManifest, q222Sql),
+    QueryDef("q223_position_bias", q223PositionBias, q223Sql),
+    QueryDef("q224_nucleus_vocab", q224NucleusVocab, q224Sql),
+    QueryDef("q225_vector_store_audit", q225VectorStoreAudit, q225Sql))
 }

@@ -135,13 +135,8 @@ object Queries32 {
        |FROM pr JOIN m ON m.q_id = pr.q_id
        |ORDER BY pr.q_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q226_decile_mix" -> q226DecileMix,
-    "q227_emerging_terms" -> q227EmergingTerms,
-    "q228_rerank_agreement" -> q228RerankAgreement)
-
-  val oracle: Map[String, String] = Map(
-    "q226_decile_mix" -> q226Sql,
-    "q227_emerging_terms" -> q227Sql,
-    "q228_rerank_agreement" -> q228Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q226_decile_mix", q226DecileMix, q226Sql),
+    QueryDef("q227_emerging_terms", q227EmergingTerms, q227Sql),
+    QueryDef("q228_rerank_agreement", q228RerankAgreement, q228Sql))
 }

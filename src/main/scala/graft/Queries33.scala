@@ -96,13 +96,8 @@ object Queries33 {
        |JOIN sh2 y ON y.doc_id = c.id_b
        |ORDER BY c.id_a, c.id_b""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q229_sampler_uniformity" -> q229SamplerUniformity,
-    "q230_variance_allocation" -> q230VarianceAllocation,
-    "q231_near_miss_pairs" -> q231NearMissPairs)
-
-  val oracle: Map[String, String] = Map(
-    "q229_sampler_uniformity" -> q229Sql,
-    "q230_variance_allocation" -> q230Sql,
-    "q231_near_miss_pairs" -> q231Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q229_sampler_uniformity", q229SamplerUniformity, q229Sql),
+    QueryDef("q230_variance_allocation", q230VarianceAllocation, q230Sql),
+    QueryDef("q231_near_miss_pairs", q231NearMissPairs, q231Sql))
 }

@@ -85,11 +85,7 @@ object Queries34 {
       |FROM j CROSS JOIN t
       |ORDER BY out_rows DESC, key ASC LIMIT 20""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q232_dedup_roi" -> q232DedupRoi,
-    "q233_join_amplification" -> q233JoinAmplification)
-
-  val oracle: Map[String, String] = Map(
-    "q232_dedup_roi" -> q232Sql,
-    "q233_join_amplification" -> q233Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q232_dedup_roi", q232DedupRoi, q232Sql),
+    QueryDef("q233_join_amplification", q233JoinAmplification, q233Sql))
 }

@@ -29,15 +29,7 @@ object Queries35 {
   val q234PassageRetrievalDfCut: Q = (spark, dir) =>
     Queries12.passageRetrieval(spark, dir, maxDfPpm = Some(300000L))
 
-  val q234Sql: String =
-    s"""WITH ${Queries12.passageScoreCtes(Some(300000L))},
-       |rk AS (SELECT q_id, passage_id, score_e6,
-       |    row_number() OVER (PARTITION BY q_id
-       |                       ORDER BY score_e6 DESC, passage_id) AS rank
-       |  FROM sc)
-       |SELECT q_id, passage_id, (passage_id // 10000)::BIGINT AS doc_id,
-       |  score_e6, rank::BIGINT AS rank
-       |FROM rk WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+  val q234Sql: String = Queries12.q142SqlWith(Some(300000L))
 
   /** Best-first pretraining selection under a 50k-token corpus budget:
     * documents scored by unique-token ratio (a cheap quality proxy —
@@ -358,25 +350,14 @@ object Queries35 {
       |    AS n_tokens
       |FROM t CROSS JOIN r GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q234_bm25_df_cutoff" -> q234PassageRetrievalDfCut,
-    "q235_budget_selection" -> q235BudgetSelection,
-    "q236_lorenz_curve" -> q236LorenzCurve,
-    "q237_order_statistics" -> q237OrderStatistics,
-    "q238_conversion_lag" -> q238ConversionLag,
-    "q239_coverage_depth" -> q239CoverageDepth,
-    "q240_gini_global" -> q240GiniGlobal,
-    "q241_cutoff_agreement" -> q241CutoffAgreement,
-    "q242_token_mass_lengths" -> q242TokenMassLengths)
-
-  val oracle: Map[String, String] = Map(
-    "q234_bm25_df_cutoff" -> q234Sql,
-    "q235_budget_selection" -> q235Sql,
-    "q236_lorenz_curve" -> q236Sql,
-    "q237_order_statistics" -> q237Sql,
-    "q238_conversion_lag" -> q238Sql,
-    "q239_coverage_depth" -> q239Sql,
-    "q240_gini_global" -> q240Sql,
-    "q241_cutoff_agreement" -> q241Sql,
-    "q242_token_mass_lengths" -> q242Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q234_bm25_df_cutoff", q234PassageRetrievalDfCut, q234Sql),
+    QueryDef("q235_budget_selection", q235BudgetSelection, q235Sql),
+    QueryDef("q236_lorenz_curve", q236LorenzCurve, q236Sql),
+    QueryDef("q237_order_statistics", q237OrderStatistics, q237Sql),
+    QueryDef("q238_conversion_lag", q238ConversionLag, q238Sql),
+    QueryDef("q239_coverage_depth", q239CoverageDepth, q239Sql),
+    QueryDef("q240_gini_global", q240GiniGlobal, q240Sql),
+    QueryDef("q241_cutoff_agreement", q241CutoffAgreement, q241Sql),
+    QueryDef("q242_token_mass_lengths", q242TokenMassLengths, q242Sql))
 }

@@ -23,9 +23,6 @@ object Queries36 {
 
   val q243Sql: String = Queries12.q143SqlWith(Some(300000L))
 
-  val all: Map[String, Q] = Map(
-    "q243_passage_context_cut" -> q243PassageContextCut)
-
-  val oracle: Map[String, String] = Map(
-    "q243_passage_context_cut" -> q243Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q243_passage_context_cut", q243PassageContextCut, q243Sql))
 }

@@ -183,15 +183,9 @@ object Queries37 {
       |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
       |FROM u ORDER BY scheme""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q244_anneal_schedule" -> q244AnnealSchedule,
-    "q245_length_batching" -> q245LengthBatching,
-    "q246_attention_cost" -> q246AttentionCost,
-    "q247_reshard_stability" -> q247ReshardStability)
-
-  val oracle: Map[String, String] = Map(
-    "q244_anneal_schedule" -> q244Sql,
-    "q245_length_batching" -> q245Sql,
-    "q246_attention_cost" -> q246Sql,
-    "q247_reshard_stability" -> q247Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q244_anneal_schedule", q244AnnealSchedule, q244Sql),
+    QueryDef("q245_length_batching", q245LengthBatching, q245Sql),
+    QueryDef("q246_attention_cost", q246AttentionCost, q246Sql),
+    QueryDef("q247_reshard_stability", q247ReshardStability, q247Sql))
 }

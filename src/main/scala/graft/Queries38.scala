@@ -172,13 +172,8 @@ object Queries38 {
        |        ELSE 0 END)::BIGINT AS weight_ppm
        |FROM sel ORDER BY band""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q248_manifest_delta" -> q248ManifestDelta,
-    "q249_asset_near_dup" -> q249AssetNearDup,
-    "q250_length_band_mix" -> q250LengthBandMix)
-
-  val oracle: Map[String, String] = Map(
-    "q248_manifest_delta" -> q248Sql,
-    "q249_asset_near_dup" -> q249Sql,
-    "q250_length_band_mix" -> q250Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q248_manifest_delta", q248ManifestDelta, q248Sql),
+    QueryDef("q249_asset_near_dup", q249AssetNearDup, q249Sql),
+    QueryDef("q250_length_band_mix", q250LengthBandMix, q250Sql))
 }

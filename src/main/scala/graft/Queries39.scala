@@ -160,11 +160,7 @@ object Queries39 {
        |  LEFT JOIN sup s USING (q_id)
        |ORDER BY c.q_id, c.doc_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q251_groundedness" -> q251Groundedness,
-    "q252_attribution" -> q252Attribution)
-
-  val oracle: Map[String, String] = Map(
-    "q251_groundedness" -> q251Sql,
-    "q252_attribution" -> q252Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q251_groundedness", q251Groundedness, q251Sql),
+    QueryDef("q252_attribution", q252Attribution, q252Sql))
 }

@@ -240,27 +240,15 @@ object Queries4 {
       | sum(round(value * 10000)::BIGINT)::BIGINT AS value_e4
       |FROM events GROUP BY 1""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q50_rollup" -> q50Rollup,
-    "q51_window_analytics" -> q51WindowAnalytics,
-    "q52_dedup_clusters" -> q52DedupClusters,
-    "q53_pivot" -> q53Pivot,
-    "q54_anti_join" -> q54AntiJoin,
-    "q55_set_ops" -> q55SetOps,
-    "q56_hash_sample" -> q56HashSample,
-    "q57_interval_join" -> q57IntervalJoin,
-    "q58_unpivot" -> q58Unpivot,
-    "q59_distinct_agg" -> q59DistinctAgg)
-
-  val oracle: Map[String, String] = Map(
-    "q50_rollup" -> q50Sql,
-    "q51_window_analytics" -> q51Sql,
-    "q52_dedup_clusters" -> q52Sql,
-    "q53_pivot" -> q53Sql,
-    "q54_anti_join" -> q54Sql,
-    "q55_set_ops" -> q55Sql,
-    "q56_hash_sample" -> q56Sql,
-    "q57_interval_join" -> q57Sql,
-    "q58_unpivot" -> q58Sql,
-    "q59_distinct_agg" -> q59Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q50_rollup", q50Rollup, q50Sql),
+    QueryDef("q51_window_analytics", q51WindowAnalytics, q51Sql),
+    QueryDef("q52_dedup_clusters", q52DedupClusters, q52Sql),
+    QueryDef("q53_pivot", q53Pivot, q53Sql),
+    QueryDef("q54_anti_join", q54AntiJoin, q54Sql),
+    QueryDef("q55_set_ops", q55SetOps, q55Sql),
+    QueryDef("q56_hash_sample", q56HashSample, q56Sql),
+    QueryDef("q57_interval_join", q57IntervalJoin, q57Sql),
+    QueryDef("q58_unpivot", q58Unpivot, q58Sql),
+    QueryDef("q59_distinct_agg", q59DistinctAgg, q59Sql))
 }

@@ -157,13 +157,8 @@ object Queries40 {
        |        ELSE 0 END)::BIGINT AS unsupported_ppm
        |FROM tot2 t LEFT JOIN sup2 s USING (n) ORDER BY t.n""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q253_jump_shard" -> q253JumpShard,
-    "q254_reshard_three" -> q254ReshardThree,
-    "q255_groundedness_sweep" -> q255GroundednessSweep)
-
-  val oracle: Map[String, String] = Map(
-    "q253_jump_shard" -> q253Sql,
-    "q254_reshard_three" -> q254Sql,
-    "q255_groundedness_sweep" -> q255Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q253_jump_shard", q253JumpShard, q253Sql),
+    QueryDef("q254_reshard_three", q254ReshardThree, q254Sql),
+    QueryDef("q255_groundedness_sweep", q255GroundednessSweep, q255Sql))
 }

@@ -140,11 +140,7 @@ object Queries41 {
        |        ELSE max_docs * 64 // (n // 1000000) END)::BIGINT AS peak_ppm
        |FROM g ORDER BY scheme""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q256_bm25_zipf" -> q256Bm25Zipf,
-    "q257_shard_balance" -> q257ShardBalance)
-
-  val oracle: Map[String, String] = Map(
-    "q256_bm25_zipf" -> q256Sql,
-    "q257_shard_balance" -> q257Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q256_bm25_zipf", q256Bm25Zipf, q256Sql),
+    QueryDef("q257_shard_balance", q257ShardBalance, q257Sql))
 }

@@ -235,13 +235,8 @@ object Queries42 {
        |FROM na FULL OUTER JOIN nb USING (q_id) LEFT JOIN cm USING (q_id)
        |ORDER BY q_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q258_matryoshka_overlap" -> q258MatryoshkaOverlap,
-    "q259_matryoshka_sweep" -> q259MatryoshkaSweep,
-    "q267_matryoshka_ivf" -> q267MatryoshkaIvf)
-
-  val oracle: Map[String, String] = Map(
-    "q258_matryoshka_overlap" -> q258Sql,
-    "q259_matryoshka_sweep" -> q259Sql,
-    "q267_matryoshka_ivf" -> q267Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q258_matryoshka_overlap", q258MatryoshkaOverlap, q258Sql),
+    QueryDef("q259_matryoshka_sweep", q259MatryoshkaSweep, q259Sql),
+    QueryDef("q267_matryoshka_ivf", q267MatryoshkaIvf, q267Sql))
 }

@@ -160,11 +160,7 @@ object Queries43 {
        |  ((n_urls - n_canonical) * 1000000 // n_urls)::BIGINT AS dup_ppm
        |FROM g ORDER BY domain""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q260_url_canonical" -> q260UrlCanonical,
-    "q261_url_dedup_domains" -> q261UrlDedupDomains)
-
-  lazy val oracle: Map[String, String] = Map(
-    "q260_url_canonical" -> q260Sql,
-    "q261_url_dedup_domains" -> q261Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q260_url_canonical", q260UrlCanonical, q260Sql),
+    QueryDef("q261_url_dedup_domains", q261UrlDedupDomains, q261Sql))
 }

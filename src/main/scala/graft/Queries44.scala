@@ -153,11 +153,7 @@ object Queries44 {
        |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q262_weighted_jaccard" -> q262WeightedJaccard,
-    "q268_weighted_minhash_lsh" -> q268WeightedMinhash)
-
-  val oracle: Map[String, String] = Map(
-    "q262_weighted_jaccard" -> q262Sql,
-    "q268_weighted_minhash_lsh" -> q268Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q262_weighted_jaccard", q262WeightedJaccard, q262Sql),
+    QueryDef("q268_weighted_minhash_lsh", q268WeightedMinhash, q268Sql))
 }

@@ -131,13 +131,8 @@ object Queries45 {
        |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
        |FROM u ORDER BY scheme""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q263_jump_shard_str" -> q263JumpShardStr,
-    "q264_shard_balance_str" -> q264ShardBalanceStr,
-    "q269_reshard_three_str" -> q269ReshardThreeStr)
-
-  val oracle: Map[String, String] = Map(
-    "q263_jump_shard_str" -> q263Sql,
-    "q264_shard_balance_str" -> q264Sql,
-    "q269_reshard_three_str" -> q269Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q263_jump_shard_str", q263JumpShardStr, q263Sql),
+    QueryDef("q264_shard_balance_str", q264ShardBalanceStr, q264Sql),
+    QueryDef("q269_reshard_three_str", q269ReshardThreeStr, q269Sql))
 }

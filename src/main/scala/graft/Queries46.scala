@@ -95,11 +95,7 @@ object Queries46 {
       |    AS doc_sid
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q265_groundedness_str_id" -> q265GroundednessStrId,
-    "q266_surrogate_ids" -> q266SurrogateIds)
-
-  val oracle: Map[String, String] = Map(
-    "q265_groundedness_str_id" -> q265Sql,
-    "q266_surrogate_ids" -> q266Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q265_groundedness_str_id", q265GroundednessStrId, q265Sql),
+    QueryDef("q266_surrogate_ids", q266SurrogateIds, q266Sql))
 }

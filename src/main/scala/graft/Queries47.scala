@@ -202,13 +202,8 @@ object Queries47 {
        |SELECT doc_id, canonical FROM canon WHERE doc_id % 10 = 3
        |ORDER BY doc_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q270_psl_domains" -> q270PslDomains,
-    "q271_psl_rollup" -> q271PslRollup,
-    "q272_host_escapes" -> q272HostEscapes)
-
-  lazy val oracle: Map[String, String] = Map(
-    "q270_psl_domains" -> q270Sql,
-    "q271_psl_rollup" -> q271Sql,
-    "q272_host_escapes" -> q272Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q270_psl_domains", q270PslDomains, q270Sql),
+    QueryDef("q271_psl_rollup", q271PslRollup, q271Sql),
+    QueryDef("q272_host_escapes", q272HostEscapes, q272Sql))
 }

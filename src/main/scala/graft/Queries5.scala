@@ -584,45 +584,24 @@ object Queries5 {
       | floor(sqrt((n * sumsq_e4 - sum_e2 * sum_e2)::DOUBLE) / n * 10000.0 + 0.5)::BIGINT AS std_e6
       |FROM a""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q60_cube" -> q60Cube,
-    "q61_tfidf" -> q61Tfidf,
-    "q62_pack_chunks" -> q62PackChunks,
-    "q63_moments" -> q63Moments,
-    "q64_latest_state" -> q64LatestState,
-    "q65_incremental_dedup" -> q65IncrementalDedup,
-    "q66_histogram" -> q66Histogram,
-    "q67_star_join" -> q67StarJoin,
-    "q68_filter_funnel" -> q68FilterFunnel,
-    "q69_balanced_sample" -> q69BalancedSample,
-    "q70_resample" -> q70Resample,
-    "q71_heavy_hitters" -> q71HeavyHitters,
-    "q72_dedup_rate" -> q72DedupRate,
-    "q73_simhash_pairs" -> q73SimhashPairs,
-    "q74_quantize" -> q74Quantize,
-    "q75_quantized_topk" -> q75QuantizedTopk,
-    "q76_contamination" -> q76Contamination,
-    "q77_full_outer" -> q77FullOuter,
-    "q78_window_moments" -> q78WindowMoments)
-
-  val oracle: Map[String, String] = Map(
-    "q60_cube" -> q60Sql,
-    "q61_tfidf" -> q61Sql,
-    "q62_pack_chunks" -> q62Sql,
-    "q63_moments" -> q63Sql,
-    "q64_latest_state" -> q64Sql,
-    "q65_incremental_dedup" -> q65Sql,
-    "q66_histogram" -> q66Sql,
-    "q67_star_join" -> q67Sql,
-    "q68_filter_funnel" -> q68Sql,
-    "q69_balanced_sample" -> q69Sql,
-    "q70_resample" -> q70Sql,
-    "q71_heavy_hitters" -> q71Sql,
-    "q72_dedup_rate" -> q72Sql,
-    "q73_simhash_pairs" -> q73Sql,
-    "q74_quantize" -> q74Sql,
-    "q75_quantized_topk" -> q75Sql,
-    "q76_contamination" -> q76Sql,
-    "q77_full_outer" -> q77Sql,
-    "q78_window_moments" -> q78Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q60_cube", q60Cube, q60Sql),
+    QueryDef("q61_tfidf", q61Tfidf, q61Sql),
+    QueryDef("q62_pack_chunks", q62PackChunks, q62Sql),
+    QueryDef("q63_moments", q63Moments, q63Sql),
+    QueryDef("q64_latest_state", q64LatestState, q64Sql),
+    QueryDef("q65_incremental_dedup", q65IncrementalDedup, q65Sql),
+    QueryDef("q66_histogram", q66Histogram, q66Sql),
+    QueryDef("q67_star_join", q67StarJoin, q67Sql),
+    QueryDef("q68_filter_funnel", q68FilterFunnel, q68Sql),
+    QueryDef("q69_balanced_sample", q69BalancedSample, q69Sql),
+    QueryDef("q70_resample", q70Resample, q70Sql),
+    QueryDef("q71_heavy_hitters", q71HeavyHitters, q71Sql),
+    QueryDef("q72_dedup_rate", q72DedupRate, q72Sql),
+    QueryDef("q73_simhash_pairs", q73SimhashPairs, q73Sql),
+    QueryDef("q74_quantize", q74Quantize, q74Sql),
+    QueryDef("q75_quantized_topk", q75QuantizedTopk, q75Sql),
+    QueryDef("q76_contamination", q76Contamination, q76Sql),
+    QueryDef("q77_full_outer", q77FullOuter, q77Sql),
+    QueryDef("q78_window_moments", q78WindowMoments, q78Sql))
 }

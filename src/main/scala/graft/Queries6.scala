@@ -563,29 +563,16 @@ object Queries6 {
        |  sum(('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT)::BIGINT AS checksum
        |FROM rep GROUP BY 1""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q79_paged_ingest" -> q79PagedIngest,
-    "q80_subfetch_expand" -> q80SubfetchExpand,
-    "q81_density_clusters" -> q81DensityClusters,
-    "q82_session_prompt" -> q82SessionPrompt,
-    "q83_pipeline_golden" -> q83PipelineGolden,
-    "q84_token_budget" -> q84TokenBudget,
-    "q85_mixture_weights" -> q85MixtureWeights,
-    "q86_global_index" -> q86GlobalIndex,
-    "q87_length_quantiles" -> q87LengthQuantiles,
-    "q88_shard_manifest" -> q88ShardManifest,
-    "q89_training_mix" -> q89TrainingMix)
-
-  val oracle: Map[String, String] = Map(
-    "q79_paged_ingest" -> q79Sql,
-    "q80_subfetch_expand" -> q80Sql,
-    "q81_density_clusters" -> q81Sql,
-    "q82_session_prompt" -> q82Sql,
-    "q83_pipeline_golden" -> q83Sql,
-    "q84_token_budget" -> q84Sql,
-    "q85_mixture_weights" -> q85Sql,
-    "q86_global_index" -> q86Sql,
-    "q87_length_quantiles" -> q87Sql,
-    "q88_shard_manifest" -> q88Sql,
-    "q89_training_mix" -> q89Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q79_paged_ingest", q79PagedIngest, q79Sql),
+    QueryDef("q80_subfetch_expand", q80SubfetchExpand, q80Sql),
+    QueryDef("q81_density_clusters", q81DensityClusters, q81Sql),
+    QueryDef("q82_session_prompt", q82SessionPrompt, q82Sql),
+    QueryDef("q83_pipeline_golden", q83PipelineGolden, q83Sql),
+    QueryDef("q84_token_budget", q84TokenBudget, q84Sql),
+    QueryDef("q85_mixture_weights", q85MixtureWeights, q85Sql),
+    QueryDef("q86_global_index", q86GlobalIndex, q86Sql),
+    QueryDef("q87_length_quantiles", q87LengthQuantiles, q87Sql),
+    QueryDef("q88_shard_manifest", q88ShardManifest, q88Sql),
+    QueryDef("q89_training_mix", q89TrainingMix, q89Sql))
 }

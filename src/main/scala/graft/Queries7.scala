@@ -475,27 +475,15 @@ object Queries7 {
       .orderBy("doc_id")
   }
 
-  val all: Map[String, Q] = Map(
-    "q90_vocab_coverage" -> q90VocabCoverage,
-    "q91_oov_quality" -> q91OovQuality,
-    "q92_split_report" -> q92SplitReport,
-    "q93_repeated_spans" -> q93RepeatedSpans,
-    "q94_temperature_mix" -> q94TemperatureMix,
-    "q95_pii_redact" -> q95PiiRedact,
-    "q96_boilerplate_strip" -> q96BoilerplateStrip,
-    "q97_split_leak_audit" -> q97SplitLeakAudit,
-    "q98_corpus_datasheet" -> q98CorpusDatasheet,
-    "q107_vocab_materialized" -> q107VocabMaterialized)
-
-  val oracle: Map[String, String] = Map(
-    "q90_vocab_coverage" -> q90Sql,
-    "q91_oov_quality" -> q91Sql,
-    "q92_split_report" -> q92Sql,
-    "q93_repeated_spans" -> q93Sql,
-    "q94_temperature_mix" -> q94Sql,
-    "q95_pii_redact" -> q95Sql,
-    "q96_boilerplate_strip" -> q96Sql,
-    "q97_split_leak_audit" -> q97Sql,
-    "q98_corpus_datasheet" -> q98Sql,
-    "q107_vocab_materialized" -> q91Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q90_vocab_coverage", q90VocabCoverage, q90Sql),
+    QueryDef("q91_oov_quality", q91OovQuality, q91Sql),
+    QueryDef("q92_split_report", q92SplitReport, q92Sql),
+    QueryDef("q93_repeated_spans", q93RepeatedSpans, q93Sql),
+    QueryDef("q94_temperature_mix", q94TemperatureMix, q94Sql),
+    QueryDef("q95_pii_redact", q95PiiRedact, q95Sql),
+    QueryDef("q96_boilerplate_strip", q96BoilerplateStrip, q96Sql),
+    QueryDef("q97_split_leak_audit", q97SplitLeakAudit, q97Sql),
+    QueryDef("q98_corpus_datasheet", q98CorpusDatasheet, q98Sql),
+    QueryDef("q107_vocab_materialized", q107VocabMaterialized, q91Sql))
 }

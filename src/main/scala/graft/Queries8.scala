@@ -379,23 +379,13 @@ object Queries8 {
       |FROM v GROUP BY source, removal_reason
       |ORDER BY source, removal_reason""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q99_unicode_nfc" -> q99UnicodeNfc,
-    "q100_release_delta" -> q100ReleaseDelta,
-    "q101_gopher_repetition" -> q101GopherRepetition,
-    "q102_repetition_gate" -> q102RepetitionGate,
-    "q103_bloom_decon" -> q103BloomDecon,
-    "q104_canonical_dedup" -> q104CanonicalDedup,
-    "q105_epoch_order" -> q105EpochOrder,
-    "q106_decon_apply" -> q106DeconApply)
-
-  val oracle: Map[String, String] = Map(
-    "q99_unicode_nfc" -> q99Sql,
-    "q100_release_delta" -> q100Sql,
-    "q101_gopher_repetition" -> q101Sql,
-    "q102_repetition_gate" -> q102Sql,
-    "q103_bloom_decon" -> q103Sql,
-    "q104_canonical_dedup" -> q104Sql,
-    "q105_epoch_order" -> q105Sql,
-    "q106_decon_apply" -> q106Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q99_unicode_nfc", q99UnicodeNfc, q99Sql),
+    QueryDef("q100_release_delta", q100ReleaseDelta, q100Sql),
+    QueryDef("q101_gopher_repetition", q101GopherRepetition, q101Sql),
+    QueryDef("q102_repetition_gate", q102RepetitionGate, q102Sql),
+    QueryDef("q103_bloom_decon", q103BloomDecon, q103Sql),
+    QueryDef("q104_canonical_dedup", q104CanonicalDedup, q104Sql),
+    QueryDef("q105_epoch_order", q105EpochOrder, q105Sql),
+    QueryDef("q106_decon_apply", q106DeconApply, q106Sql))
 }

@@ -625,31 +625,18 @@ object Queries9 {
        |ORDER BY 1""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q108_quality_classifier" -> q108QualityClassifier,
-    "q109_group_cap" -> q109GroupCap,
-    "q110_paragraph_dedup" -> q110ParagraphDedup,
-    "q111_zipf_fit" -> q111ZipfFit,
-    "q112_dsir_weights" -> q112DsirWeights,
-    "q113_selection_capstone" -> q113SelectionCapstone,
-    "q114_heaps_fit" -> q114HeapsFit,
-    "q115_semantic_dedup" -> q115SemanticDedup,
-    "q116_embedding_dispersion" -> q116EmbeddingDispersion,
-    "q117_semantic_thinning_report" -> q117SemanticThinningReport,
-    "q118_filter_agreement" -> q118FilterAgreement,
-    "q119_crossdoc_span_dedup" -> q119CrossDocSpans)
-
-  val oracle: Map[String, String] = Map(
-    "q108_quality_classifier" -> q108Sql,
-    "q109_group_cap" -> q109Sql,
-    "q110_paragraph_dedup" -> q110Sql,
-    "q111_zipf_fit" -> q111Sql,
-    "q112_dsir_weights" -> q112Sql,
-    "q113_selection_capstone" -> q113Sql,
-    "q114_heaps_fit" -> q114Sql,
-    "q115_semantic_dedup" -> q115Sql,
-    "q116_embedding_dispersion" -> q116Sql,
-    "q117_semantic_thinning_report" -> q117Sql,
-    "q118_filter_agreement" -> q118Sql,
-    "q119_crossdoc_span_dedup" -> q119Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q108_quality_classifier", q108QualityClassifier, q108Sql),
+    QueryDef("q109_group_cap", q109GroupCap, q109Sql),
+    QueryDef("q110_paragraph_dedup", q110ParagraphDedup, q110Sql),
+    QueryDef("q111_zipf_fit", q111ZipfFit, q111Sql),
+    QueryDef("q112_dsir_weights", q112DsirWeights, q112Sql),
+    QueryDef("q113_selection_capstone", q113SelectionCapstone, q113Sql),
+    QueryDef("q114_heaps_fit", q114HeapsFit, q114Sql),
+    QueryDef("q115_semantic_dedup", q115SemanticDedup, q115Sql),
+    QueryDef("q116_embedding_dispersion", q116EmbeddingDispersion, q116Sql),
+    QueryDef("q117_semantic_thinning_report", q117SemanticThinningReport,
+      q117Sql),
+    QueryDef("q118_filter_agreement", q118FilterAgreement, q118Sql),
+    QueryDef("q119_crossdoc_span_dedup", q119CrossDocSpans, q119Sql))
 }

@@ -27,14 +27,46 @@ object SparkEntry {
     Relate.enrich(Tables.orders(spark, dir), grouped, "o_orderkey", "l_orderkey")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. Built once:
-    * no query object reads SparkEntry while initializing, so the eager
-    * concatenation cannot cycle. */
+  /** Every registered query, wave by wave. Built once: no query object
+    * reads SparkEntry while initializing, so the eager flatten cannot
+    * cycle. */
+  val defs: Seq[QueryDef] = Seq(
+    Queries.defs, Queries2.defs, Queries3.defs, Queries4.defs,
+    Queries5.defs, Queries6.defs, Queries7.defs, Queries8.defs,
+    Queries9.defs, Queries10.defs, Queries11.defs, Queries12.defs,
+    Queries13.defs, Queries14.defs, Queries15.defs, Queries16.defs,
+    Queries17.defs, Queries18.defs, Queries19.defs, Queries20.defs,
+    Queries21.defs, Queries22.defs, Queries23.defs, Queries24.defs,
+    Queries25.defs, Queries26.defs, Queries27.defs, Queries28.defs,
+    Queries29.defs, Queries30.defs, Queries31.defs, Queries32.defs,
+    Queries33.defs, Queries34.defs, Queries35.defs, Queries36.defs,
+    Queries37.defs, Queries38.defs, Queries39.defs, Queries40.defs,
+    Queries41.defs, Queries42.defs, Queries43.defs, Queries44.defs,
+    Queries45.defs, Queries46.defs, Queries47.defs).flatten
+
+  private val byName: Map[String, QueryDef] = QueryDef.byName(defs)
+
+  /** One entry per implemented operator from SURVEY.md §2. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ Queries2.all ++ Queries3.all ++ Queries4.all ++ Queries5.all ++ Queries6.all ++ Queries7.all ++ Queries8.all ++ Queries9.all ++ Queries10.all ++ Queries11.all ++ Queries12.all ++ Queries13.all ++ Queries14.all ++ Queries15.all ++ Queries16.all ++ Queries17.all ++ Queries18.all ++ Queries19.all ++ Queries20.all ++ Queries21.all ++ Queries22.all ++ Queries23.all ++ Queries24.all ++ Queries25.all ++ Queries26.all ++ Queries27.all ++ Queries28.all ++ Queries29.all ++ Queries30.all ++ Queries31.all ++ Queries32.all ++ Queries33.all ++ Queries34.all ++ Queries35.all ++ Queries36.all ++ Queries37.all ++ Queries38.all ++ Queries39.all ++ Queries40.all ++ Queries41.all ++ Queries42.all ++ Queries43.all ++ Queries44.all ++ Queries45.all ++ Queries46.all ++ Queries47.all
+    byName.transform((_, d) => d.run)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  val oracleSql: Map[String, String] =
-    Queries.oracle ++ Queries2.oracle ++ Queries3.oracle ++ Queries4.oracle ++ Queries5.oracle ++ Queries6.oracle ++ Queries7.oracle ++ Queries8.oracle ++ Queries9.oracle ++ Queries10.oracle ++ Queries11.oracle ++ Queries12.oracle ++ Queries13.oracle ++ Queries14.oracle ++ Queries15.oracle ++ Queries16.oracle ++ Queries17.oracle ++ Queries18.oracle ++ Queries19.oracle ++ Queries20.oracle ++ Queries21.oracle ++ Queries22.oracle ++ Queries23.oracle ++ Queries24.oracle ++ Queries25.oracle ++ Queries26.oracle ++ Queries27.oracle ++ Queries28.oracle ++ Queries29.oracle ++ Queries30.oracle ++ Queries31.oracle ++ Queries32.oracle ++ Queries33.oracle ++ Queries34.oracle ++ Queries35.oracle ++ Queries36.oracle ++ Queries37.oracle ++ Queries38.oracle ++ Queries39.oracle ++ Queries40.oracle ++ Queries41.oracle ++ Queries42.oracle ++ Queries43.oracle ++ Queries44.oracle ++ Queries45.oracle ++ Queries46.oracle ++ Queries47.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = byName.transform((_, d) => d.oracleSql)
+}
+
+/** One registered query: its name, its Spark plan over a fixture dir, and
+  * the DuckDB SQL the oracle compare runs on the same parquet tables. */
+final case class QueryDef(name: String,
+    run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+object QueryDef {
+  /** Index by name. A duplicate name throws: a later wave must not
+    * silently replace an earlier wave's query. */
+  def byName(defs: Seq[QueryDef]): Map[String, QueryDef] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    defs.map(d => d.name -> d).toMap
+  }
 }

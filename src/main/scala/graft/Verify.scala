@@ -20,12 +20,16 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleJson(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** `<outDir>/oracle_sql.json`: one name → oracle SQL object, the file
+    * the DuckDB oracle compare (`tools/check_oracle.py`) reads. */
+  def writeOracleJson(outDir: String, sql: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), sql
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}"))
 
   /** JSON string literal: escapes backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in oracle SQL would otherwise make the

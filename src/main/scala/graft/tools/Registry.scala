@@ -165,8 +165,7 @@ object Registry {
     * `probePinStable` are [[graft.Bench.probePin]] and BENCH_stable's
     * q83 min3: the calibration constant is duplicated by design (no JSON
     * parse at bench time), so the audit asserts the two never drift. */
-  def audit(queries: Set[String], oracles: Set[String],
-      verifyScaledQueries: Set[String], verifyScaledOracles: Set[String],
+  def audit(queries: Set[String], verifyScaledOverrides: Set[String],
       scale8Keys: Set[String], scale64Keys: Set[String],
       planAllowNested: Set[String], planAllowUnpart: Set[String],
       benchPins: Set[String], benchFullKeys: Set[String],
@@ -174,23 +173,10 @@ object Registry {
       scale8Excl: Map[String, String] = scale8Exclusions,
       scale64Excl: Map[String, String] = scale64Exclusions): Seq[Violation] = {
     val out = Seq.newBuilder[Violation]
-    for (q <- (queries -- oracles).toSeq.sorted)
-      out += Violation("oracle-missing", q,
-        "SparkEntry.queries entry with no oracleSql - the driver gate " +
-          "degrades to rows-only for it")
-    for (q <- (oracles -- queries).toSeq.sorted)
-      out += Violation("oracle-orphan", q,
-        "oracleSql entry with no SparkEntry query")
-    for (q <- (verifyScaledQueries -- verifyScaledOracles).toSeq.sorted)
-      out += Violation("vs-oracle-missing", q,
-        "VerifyScaled.queryMap entry with no oracleMap entry")
-    for (q <- (verifyScaledOracles -- verifyScaledQueries).toSeq.sorted)
-      out += Violation("vs-oracle-orphan", q,
-        "VerifyScaled.oracleMap entry with no queryMap entry")
-    for (q <- verifyScaledQueries.toSeq.sorted
+    for (q <- verifyScaledOverrides.toSeq.sorted
          if !queries.contains(q) && !queries.exists(r => q.startsWith(r + "_")))
       out += Violation("vs-unknown", q,
-        "VerifyScaled entry that is neither a SparkEntry query nor a " +
+        "VerifyScaled override that is neither a SparkEntry query nor a " +
           "variant (name_suffix) of one")
     def scalePass(tier: String, artifact: Set[String],
         excl: Map[String, String]): Unit = {

@@ -1,16 +1,15 @@
 package graft.tools
 
-import graft.ops.Similarity
-
 /** Scaling-audit timer for the LSH-graph capstones at deployment-correct
   * resolution: `runMain graft.tools.TimeScaled <sfDir> [reps] [tables] [q]`
-  * where `q` is `q83` (default) or `q104`.
+  * where `q` is `q83` (default) or `q104`: the [[VerifyScaled]] entry
+  * whose name starts with `q_`, at that tool's fixture-derived scale.
   *
   * A k× corpus run at the 1× fixture resolution (6 tables × 6 bits = 64
   * buckets/table) grows bucket occupancy k× and candidate pairs ~k² — a
   * fixture-resolution artifact, not a property of the operator (any
   * fixed-resolution LSH degrades identically). This tool re-derives bits
-  * from the actual corpus size via [[Similarity.lshBitsFor]] (constant
+  * from the actual corpus size via `Similarity.lshBitsFor` (constant
   * occupancy ⇒ candidate work linear in n) and raises the table count so
   * multi-table recall stays in the dedup regime: per-table hit P at
   * cosine 0.9 is (1 − acos(.9)/π)^bits ≈ 0.856^12 ≈ 0.155, and
@@ -37,17 +36,12 @@ object TimeScaled {
     val spark = graft.LocalSession()
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    val n = graft.io.Tables.embeddings(spark, sfDir).count()
-    val bits = Similarity.lshBitsFor(n)
-    val planes = graft.expr.VectorExprs.rademacherPlanes(
-      numPlanes = tables * bits, dim = 64, seed = 42L)
-    System.err.println(s"[timescaled] n=$n bits=$bits tables=$tables")
+    val scaled = VerifyScaled.defs(VerifyScaled.Scale.of(spark, sfDir, tables))
+      .find(_.name.startsWith(q + "_"))
+      .getOrElse(sys.error(s"no scaled registry entry named ${q}_*"))
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
-      val rows = (q match {
-        case "q104" => graft.Queries8.q104CanonicalWith(spark, sfDir, planes, bits)
-        case _ => graft.Queries6.q83PipelineWith(spark, sfDir, planes, bits)
-      }).count()
+      val rows = scaled.run(spark, sfDir).count()
       System.err.println(
         s"[timescaled] $q rep=$i rows=$rows sec=${(System.nanoTime() - t0) / 1e9}")
     }

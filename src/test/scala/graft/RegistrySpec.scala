@@ -5,10 +5,10 @@ import scala.util.matching.Regex
 import graft.tools.{PlanAudit, Registry, VerifyScaled}
 
 /** The wave-wiring audit (r14 verdict top item): every query must be wired
-  * into the oracle map, the scale-proof program (row or documented
-  * exclusion), and the plan-audit/bench registries — asserted mechanically
-  * on every `sbt test`, with negative rows proving the audit fires on a
-  * deliberately unwired query. */
+  * into the scale-proof program (row or documented exclusion) and the
+  * plan-audit/bench registries — asserted mechanically on every `sbt
+  * test`, with negative rows proving the audit fires on a deliberately
+  * unwired query. Oracle SQL needs no check: [[QueryDef]] requires it. */
 class RegistrySpec extends SparkSpec {
 
   /** Top-level keys of a CORRECTNESS artifact ({"qNN_name": {..row..}});
@@ -68,29 +68,18 @@ class RegistrySpec extends SparkSpec {
   }
 
   private lazy val queries = SparkEntry.queries.keySet
-  private lazy val oracles = SparkEntry.oracleSql.keySet
-
-  private lazy val (vsQueries, vsOracles) = {
-    // building the maps runs nothing (thunks are lazy); cheap params are
-    // fine for key enumeration
-    val planes = graft.expr.VectorExprs.rademacherPlanes(16, 8, 42L)
-    val q = VerifyScaled.queryMap(spark, sfDir, planes, 2, 8, 50L).keySet
-    val o = VerifyScaled.oracleMap(planes, 2, 8, 50L).keySet
-    (q, o)
-  }
 
   private lazy val realBenchFull = benchFullKeys("BENCH_full.json")
   private lazy val realStablePin = stableProbePin("BENCH_stable.json")
 
   private def auditWith(qs: Set[String] = queries,
-      os: Set[String] = oracles,
       pins: Set[String] = benchPinKeys("BENCH_stable.json"),
       full: Set[String] = realBenchFull,
       pinConst: Double = Bench.probePin,
       pinStable: Double = realStablePin,
       scale8Excl: Map[String, String] = Registry.scale8Exclusions) =
     Registry.audit(
-      qs, os, vsQueries, vsOracles,
+      qs, VerifyScaled.overrides.keySet,
       artifactKeys("CORRECTNESS_scale8.json"),
       artifactKeys("CORRECTNESS_scale64.json"),
       PlanAudit.allowNestedLoop, PlanAudit.allowUnpartWindow,
@@ -105,13 +94,20 @@ class RegistrySpec extends SparkSpec {
     val ghost = "q999_unwired"
     val vs = auditWith(qs = queries + ghost)
     val kinds = vs.filter(_.name == ghost).map(_.kind).toSet
-    assert(kinds == Set("oracle-missing", "scale8-unproven",
-      "scale64-unproven", "benchfull-missing"), kinds.toString)
+    assert(kinds == Set("scale8-unproven", "scale64-unproven",
+      "benchfull-missing"), kinds.toString)
+  }
+
+  test("the query list rejects a duplicate name") {
+    val d = SparkEntry.defs.head
+    val e = intercept[IllegalArgumentException](
+      QueryDef.byName(SparkEntry.defs :+ d.copy(oracleSql = "SELECT 1")))
+    assert(e.getMessage.contains(d.name), e.getMessage)
   }
 
   test("stale entries fail the audit: dropped query, kept wiring") {
     val victim = "q253_jump_shard"
-    val vs = auditWith(qs = queries - victim, os = oracles - victim,
+    val vs = auditWith(qs = queries - victim,
       pins = benchPinKeys("BENCH_stable.json") + victim)
     val kinds = vs.filter(_.name == victim).map(_.kind).toSet
     assert(kinds.contains("bench-pin-stale") &&

@@ -243,11 +243,11 @@ class Wave9Spec extends SparkSpec {
   }
 
   test("q117 report composes q115 and q116 exactly; survivors = one per bucket") {
-    val rep = Queries9.all("q117_semantic_thinning_report")(spark, sfDir)
+    val rep = SparkEntry.queries("q117_semantic_thinning_report")(spark, sfDir)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Long]("n"), r.getAs[Long]("pair_dist2_sum"))).toMap
     val emb = graft.io.Tables.embeddings(spark, sfDir)
-    val verdict = Queries9.all("q115_semantic_dedup")(spark, sfDir)
+    val verdict = SparkEntry.queries("q115_semantic_dedup")(spark, sfDir)
     val nBuckets = verdict.select($"bucket").distinct().count()
     assert(rep("before")._1 == emb.count())
     assert(rep("after")._1 == nBuckets, "one survivor per bucket")
@@ -281,7 +281,7 @@ class Wave9Spec extends SparkSpec {
   }
 
   test("q118 agreement cells partition each source's documents") {
-    val rows = Queries9.all("q118_filter_agreement")(spark, sfDir).collect()
+    val rows = SparkEntry.queries("q118_filter_agreement")(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val cells = Seq("both_keep", "cls_only", "gate_only", "both_drop")
@@ -298,7 +298,7 @@ class Wave9Spec extends SparkSpec {
     // the capstone materializes one tokenized projection and branches the
     // classifier / gate / DSIR off it; its executed plan must contain NO
     // parquet file scan (the single scan runs inside the checkpoint)
-    val out = Queries9.all("q113_selection_capstone")(spark, sfDir)
+    val out = SparkEntry.queries("q113_selection_capstone")(spark, sfDir)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("FileScan") && !plan.contains("Scan parquet"),
       "q113 plan re-scans parquet outside the shared checkpoint")
