@@ -84,7 +84,7 @@ object Bench {
     }
     // 3-decimal times and headline fields LAST: harnesses that keep only the
     // tail of stdout still see metric/value/failed even when the per-query
-    // map (80+ entries) pushes the line past their capture window
+    // map (272 entries) pushes the line past their capture window
     // explicit ROOT locale: the f-interpolator uses the JVM default locale,
     // which under e.g. de_DE emits "0,123" — invalid JSON
     def fmt(v: Double): String =
@@ -93,7 +93,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.filter(_._2 >= 0).map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the 3.931 pin is sf0.1-only: at any other dir a ratio would be a
+    // `probePin` is sf0.1-only: at any other dir a ratio would be a
     // plausible-looking lie in a self-documenting record (review pass) -
     // emit -1 and let probe_sec stand as a raw floor
     val probeX =

@@ -76,20 +76,11 @@ object PagedSource {
     * exactly like the reference — STACK-Ingestion.py:59-63, which sleeps
     * even after the final failure). Exhausted retries yield an EMPTY page
     * (STACK-Ingestion.py:64 returns []), so one dead listing cannot kill
-    * the whole ingestion. */
-  def fetchWithRetry[A](cfg: PagedConfig, sleep: Long => Unit)(thunk: => Seq[A]): Seq[A] = {
-    var attempts = 0
-    while (attempts < cfg.maxAttempts) {
-      try return thunk
-      catch {
-        case NonFatal(_) =>
-          attempts += 1
-          sleep((cfg.requestDelayMillis *
-            math.pow(cfg.backoffMultiplier, attempts)).toLong)
-      }
-    }
-    Seq.empty
-  }
+    * the whole ingestion: [[fetchWithRetryStrict]] with its final failure
+    * swallowed. */
+  def fetchWithRetry[A](cfg: PagedConfig, sleep: Long => Unit)(thunk: => Seq[A]): Seq[A] =
+    try fetchWithRetryStrict(cfg, sleep)(thunk)
+    catch { case NonFatal(_) => Seq.empty }
 
   /** Strict variant: same backoff schedule, but exhausted retries RETHROW
     * the last failure instead of degrading to an empty page. For callers

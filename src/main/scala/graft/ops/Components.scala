@@ -116,8 +116,6 @@ object Components {
       converged = sig == prevSig
       prevSig = sig
       iter += 1
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] iter=$iter edges=${sig._1} converged=$converged")
     }
     // fixpoint is a star per component: (member, root=min). Roots and
     // isolated vertices carry their own id.

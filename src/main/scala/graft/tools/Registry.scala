@@ -1,8 +1,8 @@
 package graft.tools
 
 /** The suite's wiring registry, made SELF-VERIFYING (the r14 verdict's top
-  * item): at 255 queries the correctness/scale/bench/plan-audit coverage
-  * lives in seven hand-maintained registries, and a new wave that forgets
+  * item): a query's scale-proof and bench coverage lives in artifacts and
+  * exclusion lists outside its `QueryDef`, and a new wave that forgets
   * one of them silently weakens the gate. [[audit]] mechanically asserts
   * the cross-registry invariants; `RegistrySpec` runs it over the REAL
   * registries on every `sbt test`, so an unwired query fails the build
@@ -167,7 +167,6 @@ object Registry {
     * parse at bench time), so the audit asserts the two never drift. */
   def audit(queries: Set[String], verifyScaledOverrides: Set[String],
       scale8Keys: Set[String], scale64Keys: Set[String],
-      planAllowNested: Set[String], planAllowUnpart: Set[String],
       benchPins: Set[String], benchFullKeys: Set[String],
       probePinConst: Double, probePinStable: Double,
       scale8Excl: Map[String, String] = scale8Exclusions,
@@ -198,12 +197,6 @@ object Registry {
     }
     scalePass("scale8", scale8Keys, scale8Excl)
     scalePass("scale64", scale64Keys, scale64Excl)
-    for (q <- (planAllowNested -- queries).toSeq.sorted)
-      out += Violation("planaudit-stale-nested", q,
-        "PlanAudit.allowNestedLoop names a query that does not exist")
-    for (q <- (planAllowUnpart -- queries).toSeq.sorted)
-      out += Violation("planaudit-stale-unpart", q,
-        "PlanAudit.allowUnpartWindow names a query that does not exist")
     for (q <- (benchPins -- queries).toSeq.sorted)
       out += Violation("bench-pin-stale", q,
         "BENCH_stable.json pins a query that does not exist")

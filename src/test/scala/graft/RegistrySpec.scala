@@ -2,13 +2,14 @@ package graft
 
 import scala.util.matching.Regex
 
-import graft.tools.{PlanAudit, Registry, VerifyScaled}
+import graft.tools.{Registry, VerifyScaled}
 
 /** The wave-wiring audit (r14 verdict top item): every query must be wired
   * into the scale-proof program (row or documented exclusion) and the
-  * plan-audit/bench registries — asserted mechanically on every `sbt
-  * test`, with negative rows proving the audit fires on a deliberately
-  * unwired query. Oracle SQL needs no check: [[QueryDef]] requires it. */
+  * bench artifacts — asserted mechanically on every `sbt test`, with
+  * negative rows proving the audit fires on a deliberately unwired query.
+  * PlanAudit's contract names are checked by PlanAuditSpec; oracle SQL
+  * needs no check: [[QueryDef]] requires it. */
 class RegistrySpec extends SparkSpec {
 
   /** Top-level keys of a CORRECTNESS artifact ({"qNN_name": {..row..}});
@@ -82,7 +83,6 @@ class RegistrySpec extends SparkSpec {
       qs, VerifyScaled.overrides.keySet,
       artifactKeys("CORRECTNESS_scale8.json"),
       artifactKeys("CORRECTNESS_scale64.json"),
-      PlanAudit.allowNestedLoop, PlanAudit.allowUnpartWindow,
       pins, full, pinConst, pinStable, scale8Excl = scale8Excl)
 
   test("the real registries carry zero wiring violations") {
