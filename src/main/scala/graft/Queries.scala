@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -16,8 +15,6 @@ import graft.functions.{TextFns, VectorFns}
   * tiebreak; derived integers are cast to long to match DuckDB's BIGINT.
   */
 object Queries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------------------- A1-ish
   /** Pricing summary — hash aggregate with map-side partial agg; one shuffle

@@ -15,8 +15,6 @@ import graft.ops.Bpe
   */
 object Queries10 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private[graft] val Rounds = 6
 
   // ------------------------------------------------- BPE merge learning
@@ -378,17 +376,8 @@ object Queries10 {
     * full, and the overall fill ratio in ppm — the table a training
     * pipeline reads to pick max_seq_len (throughput = fill ratio;
     * shorter sequences pack tighter but cost more attention windows). */
-  val q129PackingEfficiency: Q = (spark, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val d = Tables.documents(spark, dir)
-    val ch = graft.ops.Chunk.tokenChunks(d, "doc_id", "text", 64, 64)
-      .select(col("doc_id"), col("chunk_id"),
-        size(split(col("chunk"), " ")).cast("long").as("n_tok"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("doc_id").asc, col("chunk_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ch.join(d.select(col("doc_id"), col("source")), "doc_id")
-      .select(col("source"), col("n_tok"), sum(col("n_tok")).over(w).as("cum_tok"))
+  val q129PackingEfficiency: Q = (spark, dir) =>
+    Queries5.chunkCumTokens(Tables.documents(spark, dir))
       .select(col("source"), col("n_tok"), col("cum_tok"),
         explode(array(Seq(128L, 256L, 512L, 1024L).map(lit): _*)).as("capacity"))
       .groupBy(col("capacity"), col("source"),
@@ -399,19 +388,9 @@ object Queries10 {
         count(when(col("pk_tok") * 2 < col("capacity"), 1)).as("n_underfull"))
       .withColumn("fill_ppm", expr("n_tokens * 1000000L div (n_packs * capacity)"))
       .orderBy("capacity")
-  }
 
   val q129Sql: String =
-    """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk FROM documents),
-      |c AS (
-      |  SELECT doc_id, ((i - 1) // 64)::BIGINT AS chunk_id,
-      |    len(string_split(array_to_string(list_slice(tk, i::INT, (i + 63)::INT), ' '), ' '))::BIGINT AS n_tok
-      |  FROM t, unnest(generate_series(1, greatest(len(tk), 1), 64)) AS u(i)),
-      |j AS (
-      |  SELECT d.source, c.n_tok,
-      |    sum(c.n_tok) OVER (PARTITION BY d.source ORDER BY c.doc_id, c.chunk_id
-      |                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
-      |  FROM c JOIN documents d ON d.doc_id = c.doc_id),
+    s"""WITH ${Queries5.chunkCumTokensCtes},
       |e AS (SELECT j.*, cap FROM j, unnest([128, 256, 512, 1024]) AS u(cap)),
       |p AS (SELECT cap, source, ((cum_tok - n_tok) // cap)::BIGINT AS pack_id,
       |    sum(n_tok)::BIGINT AS pk_tok

@@ -18,8 +18,6 @@ import graft.ops.{Graph, Retrieval, Similarity}
   */
 object Queries11 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------- BM25 retrieval
   /** BM25@10 for every 50th document replayed as a free-text query against
     * the corpus (self-matches excluded) — see [[graft.ops.Retrieval.bm25Rank]]
@@ -36,13 +34,27 @@ object Queries11 {
     * and a corpus-proportional query sample makes the proof quadratic in
     * k on ANY realistic vocabulary. */
   def q130Bm25With(spark: SparkSession, dir: String,
-      queryMod: Long): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val queries = d.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    Retrieval.bm25Rank(d, "doc_id", "text", queries, "q_id", "q_text", k = 10)
+      queryMod: Long): DataFrame =
+    bm25TopK(Tables.documents(spark, dir), 10, queryMod)
       .orderBy("q_id", "rank")
-  }
+
+  /** BM25@k of `d(doc_id, text)` for its [[textQueries]] sample (q130,
+    * q131, q138, q228, q251, q256). */
+  private[graft] def bm25TopK(d: DataFrame, k: Int,
+      queryMod: Long = 50L): DataFrame =
+    Retrieval.bm25Rank(d, "doc_id", "text", textQueries(d, queryMod),
+      "q_id", "q_text", k = k)
+
+  /** The retrieval query sample: every document with id ≡ 7 (mod
+    * `queryMod`) as a free-text query `(q_id, q_text)`. */
+  private[graft] def textQueries(d: DataFrame, queryMod: Long = 50L): DataFrame =
+    d.filter(col("doc_id") % queryMod === 7L)
+      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
+
+  /** The same sample of embeddings as vector queries `(q_id, qvec)`. */
+  private[graft] def vecQueries(e: DataFrame, queryMod: Long = 50L): DataFrame =
+    e.filter(col("vec_id") % queryMod === 7L)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
 
   /** Shared BM25 oracle prefix: postings (`tf`), doc lengths (`dl`),
     * document frequencies (`dfreq`), corpus stats (`st`), query terms
@@ -64,6 +76,20 @@ object Queries11 {
       |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
       |    FROM documents) WHERE tok <> '')""".stripMargin
 
+  /** BM25 (k1 1.2, b 0.75) per-(doc, term) weights in micro-units as CTE
+    * `name`, over `tf`, `dl`, `st` and the document frequencies `dfRel`,
+    * keyed by `id` (q130's chain, q142's passages, q241's cut route). */
+  private[graft] def bm25WeightCte(name: String, id: String,
+      dfRel: String): String =
+    s"""$name AS MATERIALIZED (SELECT t.$id, t.term,
+       |    floor(
+       |      ln(((st.n_docs::DOUBLE - f.df::DOUBLE) + 0.5) / (f.df::DOUBLE + 0.5) + 1.0)
+       |      * ((t.tf::DOUBLE * (1.2 + 1.0))
+       |         / (t.tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (l.dl::DOUBLE / st.avgdl))))
+       |      * 1e6 + 0.5)::BIGINT AS c_e6
+       |  FROM tf t JOIN $dfRel f USING (term)
+       |  JOIN dl l ON l.$id = t.$id CROSS JOIN st)""".stripMargin
+
   def bm25CtesFromTok(k: Int, queryMod: Long, tokCte: String): String =
     s"""$tokCte,
        |tf AS MATERIALIZED (SELECT doc_id, term, count(*)::BIGINT AS tf
@@ -75,14 +101,7 @@ object Queries11 {
        |  FROM dl),
        |qt AS MATERIALIZED (SELECT DISTINCT doc_id AS q_id, term FROM tok
        |  WHERE doc_id % $queryMod = 7),
-       |wt AS MATERIALIZED (SELECT t.doc_id, t.term,
-       |    floor(
-       |      ln(((st.n_docs::DOUBLE - f.df::DOUBLE) + 0.5) / (f.df::DOUBLE + 0.5) + 1.0)
-       |      * ((t.tf::DOUBLE * (1.2 + 1.0))
-       |         / (t.tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (l.dl::DOUBLE / st.avgdl))))
-       |      * 1e6 + 0.5)::BIGINT AS c_e6
-       |  FROM tf t JOIN dfreq f USING (term)
-       |  JOIN dl l ON l.doc_id = t.doc_id CROSS JOIN st),
+       |${bm25WeightCte("wt", "doc_id", "dfreq")},
        |sc AS (SELECT q.q_id, w.doc_id, sum(w.c_e6)::BIGINT AS score_e6
        |  FROM qt q JOIN wt w USING (term)
        |  WHERE w.doc_id != q.q_id GROUP BY 1, 2),
@@ -107,13 +126,8 @@ object Queries11 {
   val q131HybridRrf: Q = (spark, dir) => {
     val d = Tables.documents(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val queries = d.filter(col("doc_id") % 50 === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val lex = Retrieval.bm25Rank(d, "doc_id", "text",
-        queries, "q_id", "q_text", k = 20)
-      .select(col("q_id"), col("doc_id"), col("rank"))
-    val qv = e.filter(col("vec_id") % 50 === 7L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
+    val lex = bm25TopK(d, 20).select(col("q_id"), col("doc_id"), col("rank"))
+    val qv = vecQueries(e)
     val sem = Similarity.knnJoin(e, "vec_id", "embedding", qv, "q_id", "qvec", 20)
       .select(col("q_id"), col("vec_id").as("doc_id"), col("rank"))
     Retrieval.rrfFuse(Seq(lex, sem), "q_id", "doc_id", "rank", k = 10)
@@ -123,13 +137,7 @@ object Queries11 {
   val q131Sql: String =
     s"""WITH ${bm25CtesShared(20)},
        |sem AS MATERIALIZED (SELECT q_id, vec_id AS doc_id, rank FROM (
-       |  SELECT q_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-       |  FROM (
-       |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-       |    FROM embeddings e JOIN embeddings q
-       |      ON q.vec_id % 50 = 7 AND e.vec_id != q.vec_id) p) r
+       |${Queries2.knnRankedSql("rank", "q.vec_id % 50 = 7")}
        |  WHERE rank <= 20),
        |pts AS (SELECT q_id, doc_id, 1000000 // (60 + rank) AS pts FROM lexrk
        |  UNION ALL
@@ -163,14 +171,8 @@ object Queries11 {
   }
 
   val q132Sql: String =
-    """WITH knn AS MATERIALIZED (SELECT q_id, vec_id, sim FROM (
-      |  SELECT q_id, vec_id, sim,
-      |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
-      |  FROM (
-      |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-      |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-      |    FROM embeddings e JOIN embeddings q
-      |      ON q.vec_id % 25 = 11 AND e.vec_id != q.vec_id) p) r
+    s"""WITH knn AS MATERIALIZED (SELECT q_id, vec_id, sim FROM (
+      |${Queries2.knnRankedSql("rk", "q.vec_id % 25 = 11")}
       |  WHERE rk <= 100),
       |pos AS (SELECT q_id, vec_id, sim, rank FROM (
       |  SELECT q_id, vec_id, sim,
@@ -200,11 +202,28 @@ object Queries11 {
       .orderBy("node")
   }
 
-  private def prRoundSql(k: Int): String =
+  /** The directed 3-NN graph `k3(src, dst)` over the sample `s` (q133,
+    * q136). */
+  private[graft] def knn3Cte: String =
+    s"""k3 AS MATERIALIZED (SELECT q_id AS src, vec_id AS dst FROM (
+       |  SELECT q_id, vec_id,
+       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
+       |  FROM (
+       |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
+       |    FROM s e JOIN s q ON e.vec_id != q.vec_id) p) r
+       |  WHERE rk <= 3)""".stripMargin
+
+  /** PageRank round `k`'s damped in-link mass `c<k>` from `r<k-1>` over
+    * `k3` and out-degrees `od` (q133, q205). */
+  private[graft] def prContribCte(k: Int): String =
     s"""c$k AS MATERIALIZED (SELECT k3.dst AS v,
        |    sum(((r.r * 17) // 20) // od.od)::BIGINT AS c
        |  FROM r${k - 1} r JOIN k3 ON k3.src = r.v JOIN od ON od.src = k3.src
-       |  GROUP BY 1),
+       |  GROUP BY 1)""".stripMargin
+
+  private def prRoundSql(k: Int): String =
+    s"""${prContribCte(k)},
        |r$k AS MATERIALIZED (SELECT n.v,
        |    ((3000000000 // (20 * (SELECT n FROM nn))) + coalesce(c.c, 0))::BIGINT AS r
        |  FROM nodes n LEFT JOIN c$k c ON c.v = n.v)""".stripMargin
@@ -213,14 +232,7 @@ object Queries11 {
     val rounds = (1 to 5).map(prRoundSql).mkString(",\n")
     s"""WITH s AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
        |  WHERE vec_id % 5 = 0),
-       |k3 AS MATERIALIZED (SELECT q_id AS src, vec_id AS dst FROM (
-       |  SELECT q_id, vec_id,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
-       |  FROM (
-       |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-       |    FROM s e JOIN s q ON e.vec_id != q.vec_id) p) r
-       |  WHERE rk <= 3),
+       |$knn3Cte,
        |od AS MATERIALIZED (SELECT src, count(*)::BIGINT AS od FROM k3 GROUP BY 1),
        |ind AS MATERIALIZED (SELECT dst, count(*)::BIGINT AS id FROM k3 GROUP BY 1),
        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM (

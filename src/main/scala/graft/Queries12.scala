@@ -21,8 +21,6 @@ import graft.ops.{Graph, RankEval, Retrieval, Similarity}
   */
 object Queries12 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ----------------------------------------- PRF query expansion
   /** RM3-lite expansion terms: BM25 top-5 feedback docs per query (the
     * q130 query sample), terms weighted by summed length-normalized
@@ -30,15 +28,17 @@ object Queries12 {
     * [[graft.ops.Retrieval.prfExpansionTerms]]. */
   val q134PrfExpansion: Q = (spark, dir) => {
     val d = Tables.documents(spark, dir)
-    val queries = d.filter(col("doc_id") % 50 === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
+    val queries = Queries11.textQueries(d)
     Retrieval.prfExpansionTerms(d, "doc_id", "text",
         queries, "q_id", "q_text", fbK = 5, nTerms = 3)
       .orderBy("q_id", "rank")
   }
 
-  val q134Sql: String =
-    s"""WITH ${Queries11.bm25CtesShared(5)},
+  /** The BM25 chain plus PRF feedback: top-5 docs `fb`, their terms'
+    * length-normalized weights `ex` and the non-query terms `fe` (q134,
+    * q137). */
+  private def prfFeedbackCtes: String =
+    s"""${Queries11.bm25CtesShared(5)},
        |fb AS MATERIALIZED (SELECT q_id, doc_id FROM lexrk),
        |ex AS MATERIALIZED (SELECT f.q_id, t.term,
        |    sum(t.tf * 1000000 // l.dl)::BIGINT AS weight_ppm
@@ -46,7 +46,10 @@ object Queries12 {
        |  GROUP BY 1, 2),
        |fe AS (SELECT e.q_id, e.term, e.weight_ppm
        |  FROM ex e LEFT JOIN qt q ON q.q_id = e.q_id AND q.term = e.term
-       |  WHERE q.term IS NULL),
+       |  WHERE q.term IS NULL)""".stripMargin
+
+  val q134Sql: String =
+    s"""WITH $prfFeedbackCtes,
        |rk AS (SELECT q_id, term, weight_ppm,
        |    row_number() OVER (PARTITION BY q_id
        |                       ORDER BY weight_ppm DESC, term) AS rank
@@ -75,17 +78,22 @@ object Queries12 {
       .orderBy("q_id")
   }
 
-  val q135Sql: String = {
-    val gains = RankEval.dcgGainsE6(10).mkString(", ")
-    val cum = RankEval.idealCumE6(10).mkString(", ")
-    s"""WITH qs AS MATERIALIZED (SELECT vec_id AS q_id, embedding AS qvec, label AS qlab
+  /** The labelled vector query sample `qs(q_id, qvec, qlab)` and its
+    * exact cosine top-k shortlist `name(q_id, vec_id, rank)` (q135, q138). */
+  private def labelledKnnCtes(name: String, k: Int): String =
+    s"""qs AS MATERIALIZED (SELECT vec_id AS q_id, embedding AS qvec, label AS qlab
        |  FROM embeddings WHERE vec_id % 50 = 7),
-       |rkd AS MATERIALIZED (SELECT q_id, vec_id, rank FROM (
+       |$name AS MATERIALIZED (SELECT q_id, vec_id, rank FROM (
        |  SELECT q.q_id, e.vec_id,
        |    row_number() OVER (PARTITION BY q.q_id ORDER BY
        |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.qvec::DOUBLE[]), 6) DESC,
        |      e.vec_id) AS rank
-       |  FROM embeddings e, qs q WHERE e.vec_id != q.q_id) WHERE rank <= 10),
+       |  FROM embeddings e, qs q WHERE e.vec_id != q.q_id) WHERE rank <= $k)""".stripMargin
+
+  val q135Sql: String = {
+    val gains = RankEval.dcgGainsE6(10).mkString(", ")
+    val cum = RankEval.idealCumE6(10).mkString(", ")
+    s"""WITH ${labelledKnnCtes("rkd", 10)},
        |rels AS MATERIALIZED (SELECT q.q_id, e.vec_id
        |  FROM qs q JOIN embeddings e ON e.label = q.qlab AND e.vec_id != q.q_id),
        |tot AS (SELECT q_id, count(*)::BIGINT AS n_rel_total FROM rels GROUP BY 1),
@@ -144,14 +152,7 @@ object Queries12 {
     val rounds = (1 to 3).map(lpRoundSql).mkString(",\n")
     s"""WITH s AS MATERIALIZED (SELECT vec_id, embedding, label FROM embeddings
        |  WHERE vec_id % 5 = 0),
-       |k3 AS MATERIALIZED (SELECT q_id AS src, vec_id AS dst FROM (
-       |  SELECT q_id, vec_id,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
-       |  FROM (
-       |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-       |    FROM s e JOIN s q ON e.vec_id != q.vec_id) p) r
-       |  WHERE rk <= 3),
+       |${Queries11.knn3Cte},
        |nodes AS MATERIALIZED (SELECT DISTINCT v FROM (
        |  SELECT src AS v FROM k3 UNION ALL SELECT dst FROM k3)),
        |l0 AS MATERIALIZED (SELECT n.v, sd.lab, sd.lab IS NOT NULL AS seed
@@ -175,8 +176,7 @@ object Queries12 {
   val q137ExpandedBm25: Q = (spark, dir) => {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(spark, dir)
-    val queries = d.filter(col("doc_id") % 50 === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
+    val queries = Queries11.textQueries(d)
     val p = Retrieval.postings(d, "doc_id", "text")
     val orig = Retrieval.queryTerms(queries, "q_id", "q_text")
     // ONE checkpointed weight table serves both probe passes (r19): the
@@ -213,15 +213,7 @@ object Queries12 {
   }
 
   val q137Sql: String =
-    s"""WITH ${Queries11.bm25CtesShared(5)},
-       |fb AS MATERIALIZED (SELECT q_id, doc_id FROM lexrk),
-       |ex AS MATERIALIZED (SELECT f.q_id, t.term,
-       |    sum(t.tf * 1000000 // l.dl)::BIGINT AS weight_ppm
-       |  FROM fb f JOIN tf t USING (doc_id) JOIN dl l USING (doc_id)
-       |  GROUP BY 1, 2),
-       |fe AS (SELECT e.q_id, e.term, e.weight_ppm
-       |  FROM ex e LEFT JOIN qt q ON q.q_id = e.q_id AND q.term = e.term
-       |  WHERE q.term IS NULL),
+    s"""WITH $prfFeedbackCtes,
        |xt AS MATERIALIZED (SELECT q_id, term FROM (
        |  SELECT q_id, term,
        |    row_number() OVER (PARTITION BY q_id
@@ -249,11 +241,7 @@ object Queries12 {
   val q138RouteAb: Q = (spark, dir) => {
     val d = Tables.documents(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val queries = d.filter(col("doc_id") % 50 === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val p = Retrieval.postings(d, "doc_id", "text")
-    val lex20 = Retrieval.bm25RankFrom(p, "doc_id",
-        queries, "q_id", "q_text", k = 20)
+    val lex20 = Queries11.bm25TopK(d, 20)
       .select(col("q_id"), col("doc_id").as("vec_id"), col("rank"))
       .localCheckpoint(eager = false)
     val qv = e.filter(col("vec_id") % 50 === 7L)
@@ -304,14 +292,7 @@ object Queries12 {
          |  LEFT JOIN tot t ON t.q_id = r.q_id
          |  GROUP BY r.q_id""".stripMargin
     s"""WITH ${Queries11.bm25CtesShared(20)},
-       |qs AS MATERIALIZED (SELECT vec_id AS q_id, embedding AS qvec, label AS qlab
-       |  FROM embeddings WHERE vec_id % 50 = 7),
-       |sem AS MATERIALIZED (SELECT q_id, vec_id, rank FROM (
-       |  SELECT q.q_id, e.vec_id,
-       |    row_number() OVER (PARTITION BY q.q_id ORDER BY
-       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.qvec::DOUBLE[]), 6) DESC,
-       |      e.vec_id) AS rank
-       |  FROM embeddings e, qs q WHERE e.vec_id != q.q_id) WHERE rank <= 20),
+       |${labelledKnnCtes("sem", 20)},
        |lex AS MATERIALIZED (SELECT q_id, doc_id AS vec_id, rank FROM lexrk),
        |pts AS (SELECT q_id, vec_id, 1000000 // (60 + rank) AS pts FROM lex
        |  UNION ALL SELECT q_id, vec_id, 1000000 // (60 + rank) FROM sem),
@@ -373,12 +354,7 @@ object Queries12 {
     * with the statistical read a dataset release note cites. */
   val q140ReleasePsi: Q = (spark, dir) => {
     val cur = Tables.documents(spark, dir)
-    val prev = cur.filter(col("doc_id") % 11 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 7 === 3, concat(col("text"), lit(" [v1]")))
-          .otherwise(col("text")).as("text"))
-      .unionByName(cur.filter(col("doc_id") % 13 === 5)
-        .select((col("doc_id") + 1000000000000L).as("doc_id"), col("text")))
+    val prev = Queries8.previousRelease(cur)
     def bucketed(d: DataFrame): DataFrame = d.select(
       expr(s"least(n_tokens div 16, 15)").as("len_bucket"))
       .withColumn("len_bucket", col("len_bucket").cast("long"))
@@ -441,8 +417,10 @@ object Queries12 {
         sentenced(Tables.documents(spark, dir)), "doc_id", "text", maxTokens = 16)
       .orderBy("doc_id", "chunk_id")
 
-  val q141Sql: String =
-    s"""WITH $SentencedSql,
+  /** Sentences `se` of the sentenced docs `sd`, their token counts `sf`
+    * and per-doc running token sums `cm` (q141, q142's passages). */
+  private def sentenceCumCtes: String =
+    s"""$SentencedSql,
        |se AS (SELECT doc_id, i AS pos, trim(sl[i]) AS s FROM (
        |    SELECT doc_id, regexp_extract_all(text, '[^.!?]+[.!?]*') AS sl
        |    FROM sd), unnest(generate_series(1, len(sl))) AS g(i)),
@@ -452,7 +430,10 @@ object Queries12 {
        |cm AS (SELECT doc_id, pos, s, n_tok,
        |    sum(n_tok) OVER (PARTITION BY doc_id ORDER BY pos
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM sf)
+       |  FROM sf)""".stripMargin
+
+  val q141Sql: String =
+    s"""WITH $sentenceCumCtes
        |SELECT doc_id, ((cum - n_tok) // 16)::BIGINT AS chunk_id,
        |  string_agg(s, ' ' ORDER BY pos) AS chunk,
        |  count(*)::BIGINT AS n_sentences,
@@ -477,25 +458,36 @@ object Queries12 {
     * corpus scales (see [[Queries11.q130Bm25With]]). */
   private[graft] def passageRetrieval(spark: SparkSession, dir: String,
       maxDfPpm: Option[Long], queryMod: Long = 50L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val (p, queries) = passagePostings(spark, dir, queryMod)
+    top5Passages(Retrieval.bm25ScoresTerms(p, "passage_id",
+        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
+        maxDfPpm = maxDfPpm))
+      .select(col("q_id"), col("passage_id"),
+        expr("passage_id div 10000L").as("doc_id"), col("score_e6"), col("rank"))
+      .orderBy("q_id", "rank")
+  }
+
+  /** The postings of the sentence-packed passages (passage_id = doc_id ·
+    * 10⁴ + chunk_id) and the sentenced query sample (q142, q241). */
+  private[graft] def passagePostings(spark: SparkSession, dir: String,
+      queryMod: Long): (Retrieval.Postings, DataFrame) = {
     val sd = sentenced(Tables.documents(spark, dir))
     val passages = graft.ops.Chunk.sentenceChunks(sd, "doc_id", "text", 16)
       .select((col("doc_id") * 10000L + col("chunk_id")).as("passage_id"),
         col("chunk"))
-    val queries = sd.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val p = Retrieval.postings(passages, "passage_id", "chunk")
+    (Retrieval.postings(passages, "passage_id", "chunk"),
+      Queries11.textQueries(sd, queryMod))
+  }
+
+  /** Each query's 5 best `score_e6` passages as `rank`, passages of the
+    * query's own document excluded (q142, q143, q241). */
+  private[graft] def top5Passages(scores: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("score_e6").desc, col("passage_id").asc)
-    Retrieval.bm25ScoresTerms(p, "passage_id",
-        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
-        maxDfPpm = maxDfPpm)
-      .filter(expr("passage_id div 10000L") =!= col("q_id"))
+    scores.filter(expr("passage_id div 10000L") =!= col("q_id"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
-      .select(col("q_id"), col("passage_id"),
-        expr("passage_id div 10000L").as("doc_id"), col("score_e6"), col("rank"))
-      .orderBy("q_id", "rank")
   }
 
   /** Shared passage-BM25 oracle prefix (q142/q143): the sentence-chunk
@@ -508,17 +500,7 @@ object Queries12 {
     * weight join (lengths/avgdl/N stay full-index, as in the engine). */
   private[graft] def passageScoreCtes(maxDfPpm: Option[Long],
       queryMod: Long = 50L): String =
-    s"""$SentencedSql,
-       |se AS (SELECT doc_id, i AS pos, trim(sl[i]) AS s FROM (
-       |    SELECT doc_id, regexp_extract_all(text, '[^.!?]+[.!?]*') AS sl
-       |    FROM sd), unnest(generate_series(1, len(sl))) AS g(i)),
-       |sf AS (SELECT doc_id, pos, s,
-       |    len(string_split_regex(s, '\\s+'))::BIGINT AS n_tok
-       |  FROM se WHERE s <> ''),
-       |cm AS (SELECT doc_id, pos, s, n_tok,
-       |    sum(n_tok) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM sf),
+    s"""$sentenceCumCtes,
        |pg AS MATERIALIZED (SELECT (doc_id * 10000 + ((cum - n_tok) // 16))::BIGINT AS passage_id,
        |    string_agg(s, ' ' ORDER BY pos) AS chunk,
        |    sum(n_tok)::BIGINT AS n_tokens
@@ -538,14 +520,7 @@ object Queries12 {
        |qt AS MATERIALIZED (SELECT DISTINCT doc_id AS q_id, tok AS term FROM (
        |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
        |    FROM sd WHERE doc_id % $queryMod = 7) WHERE tok <> ''),
-       |wt AS MATERIALIZED (SELECT t.passage_id, t.term,
-       |    floor(
-       |      ln(((st.n_docs::DOUBLE - f.df::DOUBLE) + 0.5) / (f.df::DOUBLE + 0.5) + 1.0)
-       |      * ((t.tf::DOUBLE * (1.2 + 1.0))
-       |         / (t.tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (l.dl::DOUBLE / st.avgdl))))
-       |      * 1e6 + 0.5)::BIGINT AS c_e6
-       |  FROM tf t JOIN dfc f USING (term)
-       |  JOIN dl l ON l.passage_id = t.passage_id CROSS JOIN st),
+       |${Queries11.bm25WeightCte("wt", "passage_id", "dfc")},
        |sc AS (SELECT q.q_id, w.passage_id, sum(w.c_e6)::BIGINT AS score_e6
        |  FROM qt q JOIN wt w USING (term)
        |  WHERE w.passage_id != q.q_id AND w.passage_id // 10000 != q.q_id
@@ -590,17 +565,11 @@ object Queries12 {
       .select((col("doc_id") * 10000L + col("chunk_id")).as("passage_id"),
         col("chunk"), col("n_tokens"))
       .localCheckpoint(eager = false)
-    val queries = sd.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
+    val queries = Queries11.textQueries(sd, queryMod)
     val p = Retrieval.postings(chunks, "passage_id", "chunk")
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_e6").desc, col("passage_id").asc)
-    val ranked = Retrieval.bm25ScoresTerms(p, "passage_id",
+    val ranked = top5Passages(Retrieval.bm25ScoresTerms(p, "passage_id",
         Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
-        maxDfPpm = maxDfPpm)
-      .filter(expr("passage_id div 10000L") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= 5)
+        maxDfPpm = maxDfPpm))
     val wb = Window.partitionBy(col("q_id")).orderBy(col("rank").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val budgeted = ranked

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -16,8 +16,6 @@ import graft.ops.Preference
   */
 object Queries13 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------- preference-pair construction
   /** DPO data prep over the documents corpus: candidates group into
     * prompts (doc_id % 25 — the q05-style synthetic grouping), the reward
@@ -25,16 +23,20 @@ object Queries13 {
     * [[graft.ops.Preference.pairsFromRanked]] — mirrored best-vs-worst,
     * margin ≥ 0.01 (10 000 µ), at most 4 pairs per prompt. Output hashes
     * the full pair artifact: ids, both rewards, and the margin. */
-  val q147PreferencePairs: Q = (spark, dir) => {
-    val cand = Tables.documents(spark, dir).select(
-      (col("doc_id") % 25L).as("prompt_id"), col("doc_id"),
-      graft.functions.TextFns.qualityScoreMicro(col("text")).as("quality_e6"))
-    Preference.pairsFromRanked(cand, "prompt_id", "doc_id", "quality_e6",
-        minMargin = 10000L, maxPairs = 4)
+  val q147PreferencePairs: Q = (spark, dir) =>
+    qualityPairs(Tables.documents(spark, dir))
       .select(col("prompt_id"), col("chosen_id"), col("rejected_id"),
         col("chosen_e6"), col("rejected_e6"), col("margin_e6"))
       .orderBy("prompt_id", "chosen_id")
-  }
+
+  /** Preference pairs from 25 prompts' candidate docs ranked by q21
+    * quality, margin at least 0.01, at most 4 per prompt (q147, q163,
+    * q223). */
+  private[graft] def qualityPairs(docs: DataFrame): DataFrame =
+    Preference.pairsFromRanked(
+      docs.select((col("doc_id") % 25L).as("prompt_id"), col("doc_id"),
+        graft.functions.TextFns.qualityScoreMicro(col("text")).as("quality_e6")),
+      "prompt_id", "doc_id", "quality_e6", minMargin = 10000L, maxPairs = 4)
 
   /** q147's oracle pair-construction CTEs, shared with q163's
     * Bradley-Terry leaderboard (ends at `pairs`). */

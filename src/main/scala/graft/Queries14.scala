@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -16,8 +16,6 @@ import graft.ops.{RankEval, Sft}
   * expressions, every derived numeric cast to long.
   */
 object Queries14 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------- pass@k estimation
   private val PassGroup = 8 // samples per synthetic task (doc_id div 8)
@@ -63,15 +61,18 @@ object Queries14 {
     * per-route template (route = doc_id % 10 — ten system-prompt
     * families), and [[graft.ops.Sft.prefixCacheReport]] reports per route
     * how many characters a radix prefix cache absorbs. */
-  val q154PrefixCache: Q = (spark, dir) => {
-    val prompts = Tables.documents(spark, dir).select(
-      (col("doc_id") % 10L).as("route_id"),
+  val q154PrefixCache: Q = (spark, dir) =>
+    Sft.prefixCacheReport(routedPrompts(Tables.documents(spark, dir)),
+        "route_id", "prompt")
+      .orderBy("route_id")
+
+  /** Each document as a prompt on one of 10 routes: a shared system
+    * line, a per-route task line, then the text (q154, q166). */
+  private[graft] def routedPrompts(docs: DataFrame): DataFrame =
+    docs.select((col("doc_id") % 10L).as("route_id"),
       concat(lit("sys: answer concisely\ntask "),
         (col("doc_id") % 10L).cast("string"), lit(": "),
         col("text")).as("prompt"))
-    Sft.prefixCacheReport(prompts, "route_id", "prompt")
-      .orderBy("route_id")
-  }
 
   /** q154's prompt-assembly CTE, shared with q166's block-reuse report. */
   private[graft] val PromptCte: String =
@@ -186,9 +187,13 @@ object Queries14 {
     * binding is the exact-grid parity spelling (en × fr is bounded by the
     * lang split); the at-scale route runs the same margin arithmetic over
     * LSH-banded candidates. */
-  val q157BitextMining: Q = (spark, dir) => {
-    val e = Tables.embeddings(spark, dir)
-    val d = Tables.documents(spark, dir)
+  val q157BitextMining: Q = (spark, dir) =>
+    minedBitext(Tables.embeddings(spark, dir), Tables.documents(spark, dir))
+      .orderBy("src_id")
+
+  /** Margin-mined en→fr pairs over the embeddings `e` of the documents
+    * `d` in each language (q157, q164). */
+  private[graft] def minedBitext(e: DataFrame, d: DataFrame): DataFrame = {
     def side(lang: String) = e.join(d.filter(col("lang") === lang),
         e("vec_id") === d("doc_id"))
       .select(e("vec_id"), col("embedding"))
@@ -196,7 +201,6 @@ object Queries14 {
         side("en"), "vec_id", "embedding",
         side("fr"), "vec_id", "embedding",
         k = BitextK, minMarginPpm = BitextMargin)
-      .orderBy("src_id")
   }
 
   /** q157's oracle CTE chain, shared with q164's cleaning audit (the

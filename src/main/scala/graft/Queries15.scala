@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -14,8 +13,6 @@ import graft.ops.{Delta, Synthesize, Vocab}
   * collects, every derived numeric cast to long, 0-guarded divisions.
   */
 object Queries15 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val TokList =
     "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')"

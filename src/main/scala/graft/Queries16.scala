@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -14,23 +13,16 @@ import graft.ops.{Bitext, Preference}
   */
 object Queries16 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------- Bradley-Terry leaderboard
   private val BtRounds = 6
 
   /** Bradley-Terry strengths over the q147 preference pairs (chosen =
     * winner): the reward-model-data leaderboard — see
     * [[graft.ops.Preference.bradleyTerry]]. */
-  val q163BradleyTerry: Q = (spark, dir) => {
-    val cand = Tables.documents(spark, dir).select(
-      (col("doc_id") % 25L).as("prompt_id"), col("doc_id"),
-      graft.functions.TextFns.qualityScoreMicro(col("text")).as("quality_e6"))
-    val pairs = Preference.pairsFromRanked(cand, "prompt_id", "doc_id",
-      "quality_e6", minMargin = 10000L, maxPairs = 4)
-    Preference.bradleyTerry(pairs, "chosen_id", "rejected_id", BtRounds)
+  val q163BradleyTerry: Q = (spark, dir) =>
+    Preference.bradleyTerry(Queries13.qualityPairs(Tables.documents(spark, dir)),
+        "chosen_id", "rejected_id", BtRounds)
       .orderBy("item")
-  }
 
   val q163Sql: String = {
     val T = 1000000000000L
@@ -74,15 +66,8 @@ object Queries16 {
     * identical-text rejection, per-rule verdicts — see
     * [[graft.ops.Bitext.cleanAudit]]. */
   val q164BitextClean: Q = (spark, dir) => {
-    val e = Tables.embeddings(spark, dir)
     val d = Tables.documents(spark, dir)
-    def side(lang: String) = e.join(d.filter(col("lang") === lang),
-        e("vec_id") === d("doc_id"))
-      .select(e("vec_id"), col("embedding"))
-    val mined = Bitext.marginMine(
-      side("en"), "vec_id", "embedding",
-      side("fr"), "vec_id", "embedding",
-      k = Queries14.BitextK, minMarginPpm = Queries14.BitextMargin)
+    val mined = Queries14.minedBitext(Tables.embeddings(spark, dir), d)
     Bitext.cleanAudit(mined,
         d.select(col("doc_id"), col("text")), "doc_id",
         d.select(col("doc_id"), col("text")), "doc_id", "text",
@@ -152,15 +137,11 @@ object Queries16 {
 
   /** Paged-KV cache block-reuse over the q154 prompt fleet at 16-char
     * blocks — see [[graft.ops.Sft.pagedBlockReuse]]. */
-  val q166BlockReuse: Q = (spark, dir) => {
-    val prompts = Tables.documents(spark, dir).select(
-      (col("doc_id") % 10L).as("route_id"),
-      concat(lit("sys: answer concisely\ntask "),
-        (col("doc_id") % 10L).cast("string"), lit(": "),
-        col("text")).as("prompt"))
-    graft.ops.Sft.pagedBlockReuse(prompts, "route_id", "prompt", BlockChars)
+  val q166BlockReuse: Q = (spark, dir) =>
+    graft.ops.Sft.pagedBlockReuse(
+        Queries14.routedPrompts(Tables.documents(spark, dir)),
+        "route_id", "prompt", BlockChars)
       .orderBy("route_id")
-  }
 
   val q166Sql: String =
     s"""WITH ${Queries14.PromptCte},

@@ -19,8 +19,6 @@ import graft.ops.{Dedup, RankEval, Sft}
   */
 object Queries17 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------- self-consistency voting
   private val ScGroup = 8 // samples per synthetic task (doc_id div 8)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -17,8 +16,6 @@ import graft.ops.{Preference, RankEval, Sketch, Vocab}
   * integer division throughout.
   */
 object Queries18 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------- count-min sketch audit
   private val CmsDepth = 4
@@ -90,20 +87,20 @@ object Queries18 {
       .orderBy("source")
   }
 
-  val q173Sql: String = {
-    val m = 1 << HllB
-    val r = 32 - HllB + 1
-    val alpha = Sketch.hllAlphaE6(m)
-    val tailMask = (1L << (32 - HllB)) - 1L
-    val lcRows = Sketch.linearCountTable(m)
-      .map { case (v, e) => s"($v, $e)" }.mkString(", ")
-    s"""WITH occ AS (SELECT source, unnest(
+  /** HLL register CTEs over the word tokens `occ(source, w)`: md5 hash,
+    * register and rank `rk`, per-register max `mx` and `dense`, every one
+    * of a source's 2^b registers (q173, q185). */
+  private[graft] def hllRegisterCtes(b: Int): String = {
+    val m = 1 << b
+    val r = 32 - b + 1
+    val tailMask = (1L << (32 - b)) - 1L
+    s"""occ AS (SELECT source, unnest(
        |    string_split_regex(lower(trim(text)), '\\s+')) AS w
        |  FROM documents),
        |h AS (SELECT source,
        |    ('0x' || substr(md5('0:' || w), 1, 8))::BIGINT AS hv
        |  FROM occ),
-       |rk AS (SELECT source, hv >> ${32 - HllB} AS reg,
+       |rk AS (SELECT source, hv >> ${32 - b} AS reg,
        |    (CASE WHEN (hv & $tailMask) = 0 THEN $r
        |          ELSE $r - length(bin(hv & $tailMask)) END)::BIGINT AS rank
        |  FROM h),
@@ -113,7 +110,19 @@ object Queries18 {
        |  FROM (SELECT source, g.reg
        |        FROM (SELECT DISTINCT source FROM documents),
        |             unnest(generate_series(0, ${m - 1})) AS g(reg)) d
-       |  LEFT JOIN mx m ON m.source = d.source AND m.reg = d.reg),
+       |  LEFT JOIN mx m ON m.source = d.source AND m.reg = d.reg)""".stripMargin
+  }
+
+  /** The linear-counting table `lc(v, est)` for `m` registers. */
+  private[graft] def hllLinearCountCte(m: Int): String =
+    Sketch.linearCountTable(m).map { case (v, e) => s"($v, $e)" }
+      .mkString("lc AS (SELECT * FROM (VALUES ", ", ", ") AS t(v, est))")
+
+  val q173Sql: String = {
+    val m = 1 << HllB
+    val r = 32 - HllB + 1
+    val alpha = Sketch.hllAlphaE6(m)
+    s"""WITH ${hllRegisterCtes(HllB)},
        |agg AS (SELECT source, count(*)::BIGINT AS m,
        |    sum(CASE WHEN mreg = 0 THEN 1 ELSE 0 END)::BIGINT AS n_zero,
        |    sum(1::BIGINT << ($r - mreg)::INT)::BIGINT AS s
@@ -122,7 +131,7 @@ object Queries18 {
        |    (($alpha::BIGINT * ${m.toLong * m} * ${1L << r}) // s
        |       // 1000000)::BIGINT AS raw_e
        |  FROM agg),
-       |lc AS (SELECT * FROM (VALUES $lcRows) AS t(v, est)),
+       |${hllLinearCountCte(m)},
        |sel AS (SELECT r.source, r.m, r.n_zero, r.raw_e,
        |    (CASE WHEN r.n_zero > 0 AND r.raw_e <= ${5L * m / 2}
        |          THEN l.est ELSE r.raw_e END)::BIGINT AS hll_estimate

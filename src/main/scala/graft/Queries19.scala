@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -15,8 +14,6 @@ import graft.ops.{Dedup, Sketch}
   * audit carries its exact counterpart in the same row.
   */
 object Queries19 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Shared tokenization CTE over documents (the q119 wordTokens mirror). */
   private val TokCte =

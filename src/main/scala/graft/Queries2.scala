@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -17,8 +16,6 @@ import graft.streaming.Stream
   * in graft.ops.Embed.kmeansLabels, invariant-tested).
   */
 object Queries2 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** DuckDB spelling of [[graft.ops.Dedup.normalized]]. */
   private[graft] val NormSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
@@ -54,30 +51,41 @@ object Queries2 {
     * 0.5 over word bigrams. */
   val q14MinHashLsh: Q = (spark, dir) =>
     Dedup.minHashLshPairs(Tables.documents(spark, dir), "doc_id", "text", 12, 4, 0.5)
-  val q14Sql: String = {
+  /** MinHash(12) banding CTEs over shingle lists `sh(<id>, sh)`: bucketed
+    * shingle hashes, signatures `mh`, 4 bands × 3 and the distinct
+    * same-band pairs `cand(id_a, id_b)` (q14, q249, q262, q268). */
+  private[graft] def minHashCandCtes(id: String): String = {
     val perms = HashFns.minHashCoeffs(12).map { case (a, b) =>
       s"list_min(list_transform(hb, h -> ($a * h + $b) % ${HashFns.MinHashP}))"
     }.mkString(",\n       ")
-    s"""WITH $ShinglesCte,
-       |hbs AS (SELECT doc_id, list_transform(sh,
+    s"""hbs AS (SELECT $id, list_transform(sh,
        |          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT % ${HashFns.MinHashP}) AS hb
        |        FROM sh),
-       |mh AS (SELECT doc_id, [$perms] AS sig
+       |mh AS (SELECT $id, [$perms] AS sig
        |       FROM hbs),
-       |bands AS (SELECT doc_id, b,
+       |bands AS (SELECT $id, b,
        |            array_to_string(list_slice(sig, b*3 + 1, b*3 + 3), '_') AS bsig
        |          FROM mh, unnest(generate_series(0, 3)) AS u(b)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
+       |cand AS (SELECT DISTINCT a.$id AS id_a, c.$id AS id_b
        |         FROM bands a JOIN bands c ON a.b = c.b AND a.bsig = c.bsig
-       |           AND a.doc_id < c.doc_id)
-       |SELECT id_a, id_b, jaccard FROM (
+       |           AND a.$id < c.$id)""".stripMargin
+  }
+
+  /** The verified tail over `cand`: pairs whose shingle-set Jaccard is at
+    * least `cut` (a threshold, or one followed by an ORDER BY). */
+  private[graft] def minHashJaccardSelect(id: String, cut: String): String =
+    s"""SELECT id_a, id_b, jaccard FROM (
        |  SELECT id_a, id_b,
        |    round(len(list_intersect(x.sh, y.sh))::DOUBLE
        |          / len(list_distinct(list_concat(x.sh, y.sh))), 6) AS jaccard
-       |  FROM cand JOIN sh x ON x.doc_id = cand.id_a
-       |            JOIN sh y ON y.doc_id = cand.id_b) v
-       |WHERE jaccard >= 0.5""".stripMargin
-  }
+       |  FROM cand JOIN sh x ON x.$id = cand.id_a
+       |            JOIN sh y ON y.$id = cand.id_b) v
+       |WHERE jaccard >= $cut""".stripMargin
+
+  val q14Sql: String =
+    s"""WITH $ShinglesCte,
+       |${minHashCandCtes("doc_id")}
+       |${minHashJaccardSelect("doc_id", "0.5")}""".stripMargin
 
   // -------------------------------------------------------------- SimHash
   /** SimHash fingerprints + top-8-bit buckets, in the md5-prefix spelling
@@ -162,15 +170,20 @@ object Queries2 {
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
     Similarity.knnJoin(e, "vec_id", "embedding", queries, "q_id", "qvec", 5)
   }
+  /** Exact cosine kNN rows `(q_id, vec_id, sim, <rk>)` of every vector
+    * matching `cond` (as `q`) against all others (q19, q131, q132). */
+  private[graft] def knnRankedSql(rk: String, cond: String): String =
+    s"""  SELECT q_id, vec_id, sim,
+       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS $rk
+       |  FROM (
+       |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+       |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
+       |    FROM embeddings e JOIN embeddings q
+       |      ON $cond AND e.vec_id != q.vec_id) p) r""".stripMargin
+
   val q19Sql: String =
-    """SELECT q_id, vec_id, sim, rank FROM (
-      |  SELECT q_id, vec_id, sim,
-      |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-      |  FROM (
-      |    SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-      |      round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-      |    FROM embeddings e JOIN embeddings q
-      |      ON q.vec_id < 5 AND e.vec_id != q.vec_id) p) r
+    s"""SELECT q_id, vec_id, sim, rank FROM (
+      |${knnRankedSql("rank", "q.vec_id < 5")}
       |WHERE rank <= 5""".stripMargin
 
   // --------------------------------------------------------- text stats
@@ -337,19 +350,27 @@ object Queries2 {
   /** Gap-based sessionization (30-min idle timeout) + per-session stats. */
   val q28Sessionize: Q = (spark, dir) =>
     Sessionize.sessionStats(Tables.events(spark, dir), "user_id", "ts", "event_id", "value", 30)
+  /** The 30-minute gap flag `nw` per event as CTE `s` (`cols` carried). */
+  private[graft] def sessionGapCte(cols: String): String =
+    s"""s AS (
+       |  SELECT $cols,
+       |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+       |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+       |         THEN 1 ELSE 0 END AS nw
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))""".stripMargin
+
+  /** The 0-based `session_idx` per event of `s` as CTE `s2` (q28, q46). */
+  private[graft] def sessionIdxCte(cols: String): String =
+    s"""s2 AS (
+       |  SELECT $cols,
+       |    (sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS session_idx
+       |  FROM s)""".stripMargin
+
   val q28Sql: String =
-    """WITH s AS (
-      |  SELECT user_id, ts, event_id, value,
-      |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS nw
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |s2 AS (
-      |  SELECT user_id, ts, value,
-      |    (sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS session_idx
-      |  FROM s)
+    s"""WITH ${sessionGapCte("user_id, ts, event_id, value")},
+      |${sessionIdxCte("user_id, ts, value")}
       |SELECT user_id, session_idx, count(*) AS n_events,
       | min(epoch_us(ts))::BIGINT AS start_us, max(epoch_us(ts))::BIGINT AS end_us,
       | sum(round(value * 10000)::BIGINT)::BIGINT AS value_e4
@@ -365,8 +386,10 @@ object Queries2 {
         Tables.documents(spark, dir), "doc_id", query, 0.4, 20)
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
-  val q29Sql: String =
-    """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 7),
+  /** q29/q42's context ids `ids`: the top-1 hit for vec 7 at cosine
+    * 0.4 plus up to 20 of its cluster neighbours. */
+  private[graft] def ragContextIdsCtes: String =
+    """q AS (SELECT embedding FROM embeddings WHERE vec_id = 7),
       |sc AS (SELECT e.vec_id, e.label,
       |  round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
       |  FROM embeddings e, q),
@@ -375,7 +398,10 @@ object Queries2 {
       |nb AS (SELECT e.vec_id FROM embeddings e JOIN top1 t
       |       ON e.label = t.label AND e.vec_id != t.vec_id
       |       ORDER BY e.vec_id LIMIT 20),
-      |ids AS (SELECT vec_id FROM top1 UNION SELECT vec_id FROM nb)
+      |ids AS (SELECT vec_id FROM top1 UNION SELECT vec_id FROM nb)""".stripMargin
+
+  val q29Sql: String =
+    s"""WITH $ragContextIdsCtes
       |SELECT d.doc_id, d.lang, d.n_chars
       |FROM documents d JOIN ids ON d.doc_id = ids.vec_id""".stripMargin
 

@@ -18,8 +18,6 @@ import graft.ops.{Graph, Linalg, Mixture, Scrub, Similarity, Sketch}
   */
 object Queries20 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------------- power iteration
   private val PiRounds = 8
 
@@ -31,8 +29,11 @@ object Queries20 {
         "embedding", PiRounds)
       .orderBy("d")
 
-  val q181Sql: String = {
-    val rounds = (1 to PiRounds).map { r =>
+  /** The integer power-iteration CTEs over the centered, quantized
+    * embedding matrix `x`: mean `mu`, md5 start vector `v0` and rounds
+    * `s1/w1/v1 … vN` (q181, q186; the SQL twin of [[graft.ops.Linalg.iterate]]). */
+  private[graft] def powerIterationCtes(n: Int): String = {
+    val rounds = (1 to n).map { r =>
       s"""s$r AS MATERIALIZED (SELECT x.vec_id,
          |    (sum(x.e * v.v)::BIGINT // 1000)::BIGINT AS s
          |  FROM x JOIN v${r - 1} v ON v.d = x.d GROUP BY 1),
@@ -43,7 +44,7 @@ object Queries20 {
          |       1))::BIGINT AS v
          |  FROM w$r)""".stripMargin
     }.mkString(",\n")
-    s"""WITH x0 AS MATERIALIZED (
+    s"""x0 AS MATERIALIZED (
        |  SELECT vec_id, j - 1 AS d, floor(e::DOUBLE * 1000 + 0.5)::BIGINT AS q
        |  FROM (SELECT vec_id, generate_subscripts(embedding, 1) AS j,
        |               unnest(embedding) AS e FROM embeddings)),
@@ -57,7 +58,11 @@ object Queries20 {
        |    ((('0x' || substr(md5('pi:' || d), 1, 8))::BIGINT % 2000001)
        |       - 1000000)::BIGINT AS v
        |  FROM mu),
-       |$rounds,
+       |$rounds""".stripMargin
+  }
+
+  val q181Sql: String =
+    s"""WITH ${powerIterationCtes(PiRounds)},
        |c AS (SELECT sum((a.v // 1000) * (b.v // 1000))::BIGINT AS ab,
        |    sum((a.v // 1000) * (a.v // 1000))::BIGINT AS aa,
        |    sum((b.v // 1000) * (b.v // 1000))::BIGINT AS bb
@@ -66,7 +71,6 @@ object Queries20 {
        |  (ab * ab // greatest(aa, 1) * 1000000
        |     // greatest(bb, 1))::BIGINT AS cos2_ppm
        |FROM v$PiRounds v, c ORDER BY v.d""".stripMargin
-  }
 
   // ------------------------------------------------ triangle counting
   /** Triangle counts and local clustering coefficient per node of the
@@ -236,9 +240,6 @@ object Queries20 {
     val m = 1 << HllB
     val r = 32 - HllB + 1
     val alpha = Sketch.hllAlphaE6(m)
-    val tailMask = (1L << (32 - HllB)) - 1L
-    val lcRows = Sketch.linearCountTable(m)
-      .map { case (v, e) => s"($v, $e)" }.mkString(", ")
     // estimator body shared by the per-source and merged branches: input
     // rel must provide (source, reg, mreg) DENSE over all m registers
     def estCte(regRel: String, out: String): String =
@@ -254,24 +255,8 @@ object Queries20 {
          |     ELSE (($alpha::BIGINT * ${m.toLong * m} * ${1L << r}) // a.s
          |          // 1000000) END)::BIGINT AS hll_estimate
          |  FROM ${out}_agg a LEFT JOIN lc l ON l.v = a.n_zero)""".stripMargin
-    s"""WITH occ AS (SELECT source, unnest(
-       |    string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |  FROM documents),
-       |h AS (SELECT source,
-       |    ('0x' || substr(md5('0:' || w), 1, 8))::BIGINT AS hv
-       |  FROM occ),
-       |rk AS (SELECT source, hv >> ${32 - HllB} AS reg,
-       |    (CASE WHEN (hv & $tailMask) = 0 THEN $r
-       |          ELSE $r - length(bin(hv & $tailMask)) END)::BIGINT AS rank
-       |  FROM h),
-       |mx AS (SELECT source, reg, max(rank)::BIGINT AS mreg
-       |  FROM rk GROUP BY 1, 2),
-       |dense AS (SELECT d.source, d.reg, coalesce(m.mreg, 0)::BIGINT AS mreg
-       |  FROM (SELECT source, g.reg
-       |        FROM (SELECT DISTINCT source FROM documents),
-       |             unnest(generate_series(0, ${m - 1})) AS g(reg)) d
-       |  LEFT JOIN mx m ON m.source = d.source AND m.reg = d.reg),
-       |lc AS (SELECT * FROM (VALUES $lcRows) AS t(v, est)),
+    s"""WITH ${Queries18.hllRegisterCtes(HllB)},
+       |${Queries18.hllLinearCountCte(m)},
        |${estCte("dense", "est_s")},
        |mrg AS (SELECT 'merged' AS source, reg, max(mreg)::BIGINT AS mreg
        |  FROM dense GROUP BY 2),

@@ -17,8 +17,6 @@ import graft.ops.{Graph, Linalg, Shard, Similarity, Vocab}
   */
 object Queries21 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------------- all-but-the-top
   private val PiRounds = 8
 
@@ -28,33 +26,8 @@ object Queries21 {
     Linalg.allButTop(Tables.embeddings(spark, dir), "vec_id", "embedding",
       PiRounds)
 
-  val q186Sql: String = {
-    val rounds = (1 to PiRounds).map { r =>
-      s"""s$r AS MATERIALIZED (SELECT x.vec_id,
-         |    (sum(x.e * v.v)::BIGINT // 1000)::BIGINT AS s
-         |  FROM x JOIN v${r - 1} v ON v.d = x.d GROUP BY 1),
-         |w$r AS MATERIALIZED (SELECT x.d, sum(x.e * s$r.s)::BIGINT AS w
-         |  FROM x JOIN s$r ON s$r.vec_id = x.vec_id GROUP BY 1),
-         |v$r AS MATERIALIZED (SELECT d,
-         |    (w // greatest((SELECT max(abs(w)) FROM w$r) // 1000000,
-         |       1))::BIGINT AS v
-         |  FROM w$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH x0 AS MATERIALIZED (
-       |  SELECT vec_id, j - 1 AS d, floor(e::DOUBLE * 1000 + 0.5)::BIGINT AS q
-       |  FROM (SELECT vec_id, generate_subscripts(embedding, 1) AS j,
-       |               unnest(embedding) AS e FROM embeddings)),
-       |mu AS MATERIALIZED (SELECT d,
-       |    ((s - ((s % n + n) % n)) / n)::BIGINT AS mu
-       |  FROM (SELECT d, sum(q)::BIGINT AS s, count(*)::BIGINT AS n
-       |        FROM x0 GROUP BY 1)),
-       |x AS MATERIALIZED (SELECT x0.vec_id, x0.d, (x0.q - mu.mu)::BIGINT AS e
-       |  FROM x0 JOIN mu ON mu.d = x0.d),
-       |v0 AS MATERIALIZED (SELECT d,
-       |    ((('0x' || substr(md5('pi:' || d), 1, 8))::BIGINT % 2000001)
-       |       - 1000000)::BIGINT AS v
-       |  FROM mu),
-       |$rounds,
+  val q186Sql: String =
+    s"""WITH ${Queries20.powerIterationCtes(PiRounds)},
        |vv AS (SELECT sum(v * v)::BIGINT AS vv FROM v$PiRounds),
        |cc AS MATERIALIZED (SELECT x.vec_id, sum(x.e * v.v)::BIGINT AS c
        |  FROM x JOIN v$PiRounds v ON v.d = x.d GROUP BY 1),
@@ -81,7 +54,6 @@ object Queries21 {
        |     // greatest(tt.total_var_q // 1000000, 1))::BIGINT
        |    AS top_share_ppm
        |FROM bf, af, vv, tt""".stripMargin
-  }
 
   // --------------------------------------------------- collocations
   private val ColMinCount = 5L

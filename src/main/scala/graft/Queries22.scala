@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,8 +12,6 @@ import graft.ops.{Dedup, Embed, Shard}
   * space (q193) and asymmetric containment near-dup detection (q194).
   */
 object Queries22 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------- shuffle quality
   private val SqEpochs = 3

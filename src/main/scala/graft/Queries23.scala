@@ -16,8 +16,6 @@ import graft.ops.{Decontaminate, Dedup, Similarity}
   */
 object Queries23 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------------ mutual-kNN filter
   private val MutualM = 3
 
@@ -131,29 +129,14 @@ object Queries23 {
         "text", SpanK)
       .orderBy("decile")
 
-  val q197Sql: String = {
-    val k = SpanK
-    s"""WITH t AS (SELECT doc_id,
-       |    string_split_regex(lower(trim(text)), '\\s+') AS toks
-       |  FROM documents),
-       |sp AS (SELECT doc_id, i AS pos,
-       |    md5(array_to_string(toks[i : i + ${k - 1}], ' ')) AS fp
-       |  FROM (SELECT doc_id, toks,
-       |          unnest(generate_series(1, len(toks) - ${k - 1})) AS i
-       |        FROM t WHERE len(toks) >= $k)),
-       |ne AS (SELECT doc_id, pos, fp,
-       |    row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn
-       |  FROM sp),
-       |nd AS (SELECT fp, count(DISTINCT doc_id) AS ndocs FROM sp GROUP BY fp),
-       |cut AS (SELECT ne.doc_id, ne.pos FROM ne JOIN nd USING (fp)
-       |  WHERE nd.ndocs > 1 AND ne.rn > 1),
+  val q197Sql: String =
+    s"""WITH ${Queries9.spanCutCtes(SpanK)},
        |nt AS (SELECT doc_id, len(toks)::BIGINT AS n FROM t)
        |SELECT ((cut.pos - 1) * 10 // nt.n)::BIGINT AS decile,
        |  count(*)::BIGINT AS n_spans,
        |  count(DISTINCT cut.doc_id)::BIGINT AS n_docs
        |FROM cut JOIN nt USING (doc_id)
        |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ------------------------------------------------ dedup-tier Venn
   private val VennHashes = 12

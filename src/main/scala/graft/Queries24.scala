@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -12,8 +11,6 @@ import graft.ops.{Dedup, Scrub, Sketch, Vocab}
   * wave-19/21/22 audit family into one artifact (q200).
   */
 object Queries24 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------ greedy coverage
   private val CovK = 8

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -12,8 +11,6 @@ import graft.ops.{Analyze, Series}
   * statistics profile (q203).
   */
 object Queries25 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------- cohort matrix
   /** Weekly cohort retention over the event log — see

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -10,8 +9,6 @@ import graft.ops.{Graph, Series, Similarity}
   * and personalized PageRank curation from a trusted seed slice (q205).
   */
 object Queries26 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ----------------------------------------------- funnel conversion
   private val FunnelPairs =
@@ -67,10 +64,7 @@ object Queries26 {
   }
 
   private def pprRoundSql(k: Int): String =
-    s"""c$k AS MATERIALIZED (SELECT k3.dst AS v,
-       |    sum(((r.r * 17) // 20) // od.od)::BIGINT AS c
-       |  FROM r${k - 1} r JOIN k3 ON k3.src = r.v JOIN od ON od.src = k3.src
-       |  GROUP BY 1),
+    s"""${Queries11.prContribCte(k)},
        |r$k AS MATERIALIZED (SELECT n.v,
        |    ((CASE WHEN n.v % $PprSeedMod = 0
        |        THEN 3000000000 // (20 * (SELECT n FROM ns)) ELSE 0 END)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +11,6 @@ import graft.ops.Quantiles
   * user-base health table next to q201's cohort matrix.
   */
 object Queries27 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
 

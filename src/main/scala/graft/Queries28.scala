@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -13,8 +12,6 @@ import graft.ops.{Basket, Delta, Journey}
   * dimension build (q210).
   */
 object Queries28 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val DayUs = 86400000000L
 

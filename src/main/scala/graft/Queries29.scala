@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -13,8 +12,6 @@ import graft.ops.{Audit, Journey}
   * with a lookback deadline (q215).
   */
 object Queries29 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Benford audit of lineitem extended prices (integer cents — Benford
     * is scale-invariant, so the 1e-2 units audit the amounts). */
@@ -89,13 +86,7 @@ object Queries29 {
       .orderBy("path")
 
   val q214Sql: String =
-    """WITH s AS (
-      |  SELECT user_id, ts, event_id, event_type,
-      |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS nw
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+    s"""WITH ${Queries2.sessionGapCte("user_id, ts, event_id, event_type")},
       |s2 AS (
       |  SELECT user_id, ts, event_id, event_type,
       |    (sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id

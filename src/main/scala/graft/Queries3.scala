@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
@@ -14,8 +13,6 @@ import graft.streaming.Stream
   * assembly, repetition/pattern quality signals. Same determinism rules as
   * [[Queries]]. */
 object Queries3 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------------------------- U5
   /** Stringified-list round trip (the reference's `ast.literal_eval` repair
@@ -50,13 +47,7 @@ object Queries3 {
   val q34SessionWindow: Q = (spark, dir) =>
     Stream.sessionWindowStats(Tables.events(spark, dir), "user_id", "ts", "value", "30 minutes")
   val q34Sql: String =
-    """WITH s AS (
-      |  SELECT user_id, ts, value,
-      |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS nw
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+    s"""WITH ${Queries2.sessionGapCte("user_id, ts, value")},
       |s2 AS (
       |  SELECT user_id, ts, value,
       |    sum(nw) OVER (PARTITION BY user_id ORDER BY ts
@@ -208,12 +199,7 @@ object Queries3 {
          |WHERE sim >= 0.0 ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
     finally spark.catalog.dropTempView(view)
   }
-  val q41Sql: String =
-    """SELECT vec_id, sim FROM (
-      |  SELECT e.vec_id,
-      |    round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-      |  FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 7) q) v
-      |WHERE sim >= 0.0 ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
+  val q41Sql: String = Queries2.q18Sql
 
   // ------------------------------------------------------ RAG prompt
   /** End-of-pipeline prompt assembly over the q29 context set: one
@@ -227,16 +213,7 @@ object Queries3 {
       "What does the corpus say?", history = Seq("Q: earlier?", "A: earlier answer."))
   }
   val q42Sql: String =
-    """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 7),
-      |sc AS (SELECT e.vec_id, e.label,
-      |  round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS sim
-      |  FROM embeddings e, q),
-      |top1 AS (SELECT vec_id, label FROM sc WHERE sim >= 0.4
-      |         ORDER BY sim DESC, vec_id LIMIT 1),
-      |nb AS (SELECT e.vec_id FROM embeddings e JOIN top1 t
-      |       ON e.label = t.label AND e.vec_id != t.vec_id
-      |       ORDER BY e.vec_id LIMIT 20),
-      |ids AS (SELECT vec_id FROM top1 UNION SELECT vec_id FROM nb),
+    s"""WITH ${Queries2.ragContextIdsCtes},
       |ctx AS (SELECT coalesce(string_agg(d.text, chr(10) || '---' || chr(10) ORDER BY d.doc_id), '') AS c
       |        FROM documents d JOIN ids ON d.doc_id = ids.vec_id)
       |SELECT 'Context:' || chr(10) || c || chr(10) || chr(10)
@@ -329,18 +306,8 @@ object Queries3 {
         col("session_idx"), col("start_us"), col("end_us"))
   }
   val q46Sql: String =
-    """WITH s AS (
-      |  SELECT user_id, ts, event_id, value,
-      |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS nw
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |s2 AS (
-      |  SELECT user_id, ts,
-      |    (sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS session_idx
-      |  FROM s),
+    s"""WITH ${Queries2.sessionGapCte("user_id, ts, event_id, value")},
+      |${Queries2.sessionIdxCte("user_id, ts")},
       |iv AS (SELECT user_id, session_idx, min(epoch_us(ts))::BIGINT AS start_us,
       |         max(epoch_us(ts))::BIGINT AS end_us
       |       FROM s2 GROUP BY 1, 2)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -14,8 +13,6 @@ import graft.ops.{Audit, Journey, Series}
   */
 object Queries30 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** ABC classification of parts by lineitem revenue (integer cents) —
     * which SKUs carry the business; 80/95 cuts. */
   val q216AbcParts: Q = (spark, dir) =>
@@ -25,10 +22,15 @@ object Queries30 {
       "l_partkey", "rev_e2")
       .orderBy("rank")
 
-  val q216Sql: String =
-    """WITH per AS (SELECT l_partkey,
+  /** Integer-cent revenue per part, `per(l_partkey, value)` (q216, q236,
+    * q239). */
+  private[graft] def partRevenueCte: String =
+    """per AS (SELECT l_partkey,
       |    sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS value
-      |  FROM lineitem GROUP BY 1),
+      |  FROM lineitem GROUP BY 1)""".stripMargin
+
+  val q216Sql: String =
+    s"""WITH $partRevenueCte,
       |r AS (SELECT l_partkey, value,
       |    row_number() OVER (ORDER BY value DESC, l_partkey ASC)::BIGINT
       |      AS rank,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -12,8 +11,6 @@ import graft.ops.{Audit, Dedup, Preference, Vocab}
   * (q224), and the vector-store integrity audit (q225).
   */
 object Queries31 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Template floods per source: skeleton = digits→0, case/whitespace
     * folded — the synthetic-flood canary exact dedup cannot see. */
@@ -67,11 +64,7 @@ object Queries31 {
     * presentation order), win share per 0.1-quality margin bucket —
     * unbiased collection reads ≈500000 ppm everywhere. */
   val q223PositionBias: Q = (spark, dir) => {
-    val cand = Tables.documents(spark, dir).select(
-      (col("doc_id") % 25L).as("prompt_id"), col("doc_id"),
-      graft.functions.TextFns.qualityScoreMicro(col("text")).as("quality_e6"))
-    val pairs = Preference.pairsFromRanked(cand, "prompt_id", "doc_id",
-      "quality_e6", minMargin = 10000L, maxPairs = 4)
+    val pairs = Queries13.qualityPairs(Tables.documents(spark, dir))
     val withFirst = pairs.withColumn("first_win",
       substring(md5(concat(col("chosen_id").cast("string"), lit("_"),
         col("rejected_id").cast("string"))), 1, 1) < lit("8"))

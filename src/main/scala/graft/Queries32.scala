@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.{Delta, Quantiles, RankEval, Retrieval}
+import graft.ops.{Delta, Quantiles, RankEval}
 
 /** Thirty-second query wave: cross-source score calibration (q226),
   * per-token release drift (q227), and rerank agreement (q228).
   */
 object Queries32 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Pooled-decile mix of each source's quality scores — the
     * score-calibration table (q189 picks one cutoff per group; this
@@ -89,15 +86,10 @@ object Queries32 {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val queries = d.filter(col("doc_id") % 50 === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val p = Retrieval.postings(d, "doc_id", "text")
-    val lex = Retrieval.bm25RankFrom(p, "doc_id",
-        queries, "q_id", "q_text", k = 20)
+    val lex = Queries11.bm25TopK(d, 20)
       .select(col("q_id"), col("doc_id").as("vec_id"),
         col("rank").as("rank_lex"))
-    val qv = e.filter(col("vec_id") % 50 === 7L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
+    val qv = Queries11.vecQueries(e)
     val scored = lex
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(qv, Seq("q_id"))

@@ -13,8 +13,6 @@ import graft.ops.{Audit, Dedup, Mixture}
   */
 object Queries33 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val Buckets = 64
 
   /** Uniformity audit of the q56 hash splitter over the lineitem

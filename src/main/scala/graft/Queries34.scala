@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFns, TextFns}
@@ -12,8 +11,6 @@ import graft.ops.{Dedup, Skew}
   * pre-flight audit (q233).
   */
 object Queries34 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Dedup policy ROI: documents and tokens removed per whole-doc tier
     * of increasing aggression — exact md5, digit-folded skeleton (q221),

@@ -18,8 +18,6 @@ import graft.ops.{Audit, Mixture, Quantiles, RankEval, Retrieval}
   */
 object Queries35 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q142's passage retrieval with ultra-high-df terms (> 30% of
     * passages) dropped from the probe — the deploy-scale spelling: a
     * stopword's postings list is corpus-sized, so it dominates both the
@@ -82,17 +80,20 @@ object Queries35 {
       "l_partkey", "rev_e2", nBuckets = 20)
       .orderBy("bucket")
 
-  val q236Sql: String =
-    """WITH per AS (SELECT l_partkey,
-      |    sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS value
-      |  FROM lineitem GROUP BY 1),
-      |nn AS (SELECT count(*)::BIGINT AS n, sum(value) AS tot FROM per),
-      |r AS (SELECT value,
+  /** Each part's revenue rank and running revenue `r` over `per`, in
+    * descending order (q236, q239). */
+  private def revenueRankCte: String =
+    """r AS (SELECT value,
       |    row_number() OVER (ORDER BY value DESC, l_partkey ASC)::BIGINT
       |      AS rank,
       |    sum(value) OVER (ORDER BY value DESC, l_partkey ASC
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
-      |  FROM per),
+      |  FROM per)""".stripMargin
+
+  val q236Sql: String =
+    s"""WITH ${Queries30.partRevenueCte},
+      |nn AS (SELECT count(*)::BIGINT AS n, sum(value) AS tot FROM per),
+      |$revenueRankCte,
       |b AS (SELECT ((rank * 20 + nn.n - 1) // nn.n)::BIGINT AS bucket,
       |    value, cum, nn.tot FROM r CROSS JOIN nn)
       |SELECT bucket, count(*)::BIGINT AS n_entities,
@@ -175,16 +176,9 @@ object Queries35 {
       .orderBy("threshold_ppm")
 
   val q239Sql: String =
-    """WITH per AS (SELECT l_partkey,
-      |    sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS value
-      |  FROM lineitem GROUP BY 1),
+    s"""WITH ${Queries30.partRevenueCte},
       |tot AS (SELECT sum(value) AS t FROM per),
-      |r AS (SELECT value,
-      |    row_number() OVER (ORDER BY value DESC, l_partkey ASC)::BIGINT
-      |      AS rank,
-      |    sum(value) OVER (ORDER BY value DESC, l_partkey ASC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
-      |  FROM per),
+      |$revenueRankCte,
       |th AS (SELECT tp::BIGINT AS threshold_ppm,
       |    ((tot.t * tp + 999999) // 1000000)::BIGINT AS target
       |  FROM (VALUES (500000), (800000), (900000), (990000)) v(tp)
@@ -238,27 +232,15 @@ object Queries35 {
     * integers either way). */
   private[graft] def cutoffAgreement(spark: SparkSession, dir: String,
       queryMod: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sd = Queries12.sentenced(Tables.documents(spark, dir))
-    val passages = graft.ops.Chunk.sentenceChunks(sd, "doc_id", "text", 16)
-      .select((col("doc_id") * 10000L + col("chunk_id")).as("passage_id"),
-        col("chunk"))
-    val queries = sd.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val p = Retrieval.postings(passages, "passage_id", "chunk")
+    val (p, queries) = Queries12.passagePostings(spark, dir, queryMod)
     // scored by BOTH routes; the checkpoint DECLARES its doc partitioning
     // (graftbridge), so each route is one exchange-free stage over it
     val wt = Retrieval.bm25WeightTableCheckpointed(p, "passage_id")
     val qterms = Retrieval.queryTerms(queries, "q_id", "q_text")
       .localCheckpoint(false) // probes BOTH routes
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_e6").desc, col("passage_id").asc)
     def route(maxDfPpm: Option[Long]): DataFrame =
-      Retrieval.bm25ScoresFromWeights(wt, "passage_id", qterms, "q_id",
-          maxDfPpm = maxDfPpm)
-        .filter(expr("passage_id div 10000L") =!= col("q_id"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
+      Queries12.top5Passages(Retrieval.bm25ScoresFromWeights(wt,
+          "passage_id", qterms, "q_id", maxDfPpm = maxDfPpm))
         .select(col("q_id"), col("passage_id"))
     RankEval.overlapAtK(route(None), route(Some(300000L)),
         "q_id", "passage_id")
@@ -282,14 +264,7 @@ object Queries35 {
     s"""WITH ${Queries12.passageScoreCtes(None, queryMod)},
        |dfc_cut AS MATERIALIZED (SELECT f.term, f.df FROM dfreq f CROSS JOIN st
        |  WHERE f.df * 1000000 <= 300000 * st.n_docs),
-       |wt_cut AS MATERIALIZED (SELECT t.passage_id, t.term,
-       |    floor(
-       |      ln(((st.n_docs::DOUBLE - f.df::DOUBLE) + 0.5) / (f.df::DOUBLE + 0.5) + 1.0)
-       |      * ((t.tf::DOUBLE * (1.2 + 1.0))
-       |         / (t.tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (l.dl::DOUBLE / st.avgdl))))
-       |      * 1e6 + 0.5)::BIGINT AS c_e6
-       |  FROM tf t JOIN dfc_cut f USING (term)
-       |  JOIN dl l ON l.passage_id = t.passage_id CROSS JOIN st),
+       |${Queries11.bm25WeightCte("wt_cut", "passage_id", "dfc_cut")},
        |sc_cut AS (SELECT q.q_id, w.passage_id, sum(w.c_e6)::BIGINT AS score_e6
        |  FROM qt q JOIN wt_cut w USING (term)
        |  WHERE w.passage_id != q.q_id AND w.passage_id // 10000 != q.q_id

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Thirty-sixth query wave (round 14): the DEPLOY spelling of the
   * passage-RAG capstone — q143's end-to-end context assembly with the
@@ -10,8 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * q143 stays registered uncut as the audit reference.
   */
 object Queries36 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Passage-RAG serving under the 300000-ppm df cutoff: ranked passages
     * → 48-token context budget → assembled prompt, with the stopword

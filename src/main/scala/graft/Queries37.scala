@@ -15,8 +15,6 @@ import graft.ops.{Batch, Mixture, Shard}
   */
 object Queries37 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-document (lang, tokens, unique-token-ratio quality score) — the
     * q235 scoring spelling, shared by the wave's corpus-shaped inputs. */
   private def scoredDocs(spark: SparkSession, dir: String): DataFrame =
@@ -77,14 +75,16 @@ object Queries37 {
     * kept — they pad like anything else). On the fixture the sorted
     * policy cuts the padded-compute share ~17×.
     * [[graft.ops.Batch.paddingWaste]]. */
-  val q245LengthBatching: Q = (spark, dir) => {
-    val lens = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(array_remove(graft.functions.TextFns.wordTokens(col("text")), ""))
-          .cast("long").as("n_tok"))
-    Batch.paddingWaste(lens, "doc_id", "n_tok", batchSize = 16)
+  val q245LengthBatching: Q = (spark, dir) =>
+    Batch.paddingWaste(tokenLengths(Tables.documents(spark, dir)),
+        "doc_id", "n_tok", batchSize = 16)
       .orderBy("policy")
-  }
+
+  /** Each document's non-empty word-token count `n_tok` (q245, q246). */
+  private def tokenLengths(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(array_remove(graft.functions.TextFns.wordTokens(col("text")), ""))
+        .cast("long").as("n_tok"))
 
   val q245Sql: String =
     """WITH lens AS (SELECT doc_id,
@@ -115,14 +115,10 @@ object Queries37 {
     * document-masked attention FLOPs over q62-packed sequences in
     * deterministic loader order — on the fixture masking saves ~87% of
     * the attention compute. [[graft.ops.Batch.attentionCost]]. */
-  val q246AttentionCost: Q = (spark, dir) => {
-    val lens = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(array_remove(graft.functions.TextFns.wordTokens(col("text")), ""))
-          .cast("long").as("n_tok"))
-      .filter(col("n_tok") > 0L)
-    Batch.attentionCost(lens, "doc_id", "n_tok", seqLen = 512)
-  }
+  val q246AttentionCost: Q = (spark, dir) =>
+    Batch.attentionCost(
+      tokenLengths(Tables.documents(spark, dir)).filter(col("n_tok") > 0L),
+      "doc_id", "n_tok", seqLen = 512)
 
   val q246Sql: String =
     """WITH lens AS (SELECT doc_id,
@@ -157,14 +153,29 @@ object Queries37 {
         "doc_id", nOld = 64, nNew = 80)
       .orderBy("scheme")
 
+  /** Rendezvous shard of every id of `ids` before (64) and after (80) the
+    * grow, as `mv(<k>, rdv_old, rdv_new)`; `kStr` is the id as text
+    * (q247, q254, q269). */
+  private[graft] def rendezvousMovesCte(k: String, kStr: String): String =
+    s"""mv AS (SELECT i.$k,
+       |    arg_max(t.s, md5($kStr || ':' || t.s::VARCHAR))
+       |      FILTER (WHERE t.s < 64) AS rdv_old,
+       |    arg_max(t.s, md5($kStr || ':' || t.s::VARCHAR))
+       |      AS rdv_new
+       |  FROM ids i CROSS JOIN range(80) t(s) GROUP BY i.$k)""".stripMargin
+
+  /** The moved share per scheme from `u(scheme, n_docs, n_moved)`. */
+  private[graft] def movedPpmSelect: String =
+    """SELECT scheme, n_docs, n_moved,
+      |  (CASE WHEN n_docs <= 0 THEN 0
+      |        WHEN n_moved <= 9223372036854
+      |          THEN n_moved * 1000000 // n_docs
+      |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
+      |FROM u ORDER BY scheme""".stripMargin
+
   val q247Sql: String =
-    """WITH ids AS (SELECT doc_id FROM documents),
-      |mv AS (SELECT i.doc_id,
-      |    arg_max(t.s, md5(i.doc_id::VARCHAR || ':' || t.s::VARCHAR))
-      |      FILTER (WHERE t.s < 64) AS rdv_old,
-      |    arg_max(t.s, md5(i.doc_id::VARCHAR || ':' || t.s::VARCHAR))
-      |      AS rdv_new
-      |  FROM ids i CROSS JOIN range(80) t(s) GROUP BY i.doc_id),
+    s"""WITH ids AS (SELECT doc_id FROM documents),
+      |${rendezvousMovesCte("doc_id", "i.doc_id::VARCHAR")},
       |md AS (SELECT doc_id,
       |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT AS hv
       |  FROM ids),
@@ -176,12 +187,7 @@ object Queries37 {
       |  FROM mv JOIN md USING (doc_id)),
       |u AS (SELECT 'mod' AS scheme, n_docs, mod_moved AS n_moved FROM g
       |  UNION ALL SELECT 'rendezvous', n_docs, rdv_moved FROM g)
-      |SELECT scheme, n_docs, n_moved,
-      |  (CASE WHEN n_docs <= 0 THEN 0
-      |        WHEN n_moved <= 9223372036854
-      |          THEN n_moved * 1000000 // n_docs
-      |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
-      |FROM u ORDER BY scheme""".stripMargin
+      |$movedPpmSelect""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q244_anneal_schedule", q244AnnealSchedule, q244Sql),

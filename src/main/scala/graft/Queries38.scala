@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.{Mixture, Multimodal, Shard}
-import graft.functions.HashFns
 
 /** Thirty-eighth query wave: export/maintenance ops around the shipped
   * corpus — incremental-export manifest reconciliation (q248), byte-level
@@ -13,8 +12,6 @@ import graft.functions.HashFns
   * length-band mix planner (q250).
   */
 object Queries38 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def tokCount = size(array_remove(
     graft.functions.TextFns.wordTokens(col("text")), "")).cast("long")
@@ -104,10 +101,7 @@ object Queries38 {
   private[graft] def q249SqlSliced(m: Long, r: Long): String =
     q249SqlWhere(s" WHERE doc_id % $m = $r")
 
-  private def q249SqlWhere(docFilter: String): String = {
-    val perms = HashFns.minHashCoeffs(12).map { case (a, b) =>
-      s"list_min(list_transform(hb, h -> ($a * h + $b) % ${HashFns.MinHashP}))"
-    }.mkString(",\n       ")
+  private def q249SqlWhere(docFilter: String): String =
     s"""WITH t AS (SELECT doc_id AS id, hex(text::BLOB) AS hx
        |  FROM documents$docFilter),
        |sh AS (SELECT id,
@@ -116,25 +110,8 @@ object Queries38 {
        |              generate_series(1, len(hx) - 31, 2),
        |              i -> substr(hx, i::INT, 32))) END AS sh
        |  FROM t),
-       |hbs AS (SELECT id, list_transform(sh,
-       |          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT % ${HashFns.MinHashP}) AS hb
-       |        FROM sh),
-       |mh AS (SELECT id, [$perms] AS sig
-       |       FROM hbs),
-       |bands AS (SELECT id, b,
-       |            array_to_string(list_slice(sig, b*3 + 1, b*3 + 3), '_') AS bsig
-       |          FROM mh, unnest(generate_series(0, 3)) AS u(b)),
-       |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-       |         FROM bands a JOIN bands c ON a.b = c.b AND a.bsig = c.bsig
-       |           AND a.id < c.id)
-       |SELECT id_a, id_b, jaccard FROM (
-       |  SELECT id_a, id_b,
-       |    round(len(list_intersect(x.sh, y.sh))::DOUBLE
-       |          / len(list_distinct(list_concat(x.sh, y.sh))), 6) AS jaccard
-       |  FROM cand JOIN sh x ON x.id = cand.id_a
-       |            JOIN sh y ON y.id = cand.id_b) v
-       |WHERE jaccard >= 0.5""".stripMargin
-  }
+       |${Queries2.minHashCandCtes("id")}
+       |${Queries2.minHashJaccardSelect("id", "0.5")}""".stripMargin
 
   /** Long-context mix planner: power-of-two token-length bands vs a
     * target token-share distribution (the long bands upweighted; the

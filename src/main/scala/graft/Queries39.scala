@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.{Rag, Retrieval}
+import graft.ops.Rag
 
 /** Thirty-ninth query wave: RAG GROUNDEDNESS governance — the serving-side
   * audit the q143 family feeds: does the generated answer actually come
@@ -17,18 +17,14 @@ import graft.ops.{Rag, Retrieval}
   */
 object Queries39 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** (answers, context) for the groundedness pair: BM25 top-3 context
     * over the q130 query sample; answer = first 12 tokens of the top-1
     * doc + last 6 tokens of the query doc. */
   private[graft] def groundednessInputs(spark: SparkSession, dir: String,
       queryMod: Long = 50L): (DataFrame, DataFrame) = {
     val d = Tables.documents(spark, dir)
-    val queries = d.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    val ranked = Retrieval.bm25Rank(d, "doc_id", "text",
-      queries, "q_id", "q_text", k = 3)
+    val queries = Queries11.textQueries(d, queryMod)
+    val ranked = Queries11.bm25TopK(d, 3, queryMod)
     // ONE probe: the ranked context (with text and rank) is pinned and
     // feeds the answer synthesis AND both audits — joining `ranked` again
     // for the top-1 would re-run the whole BM25 probe
@@ -111,6 +107,25 @@ object Queries39 {
        |perdoc AS (SELECT q_id, doc_id, count(*)::BIGINT AS cnt
        |  FROM hits GROUP BY 1, 2)""".stripMargin
 
+  /** The per-query groundedness row over `ans`, `tot`, `sup` and the
+    * top citation `top`, whose reported id column is `topDoc` (q251,
+    * q265). */
+  private[graft] def groundednessSelect(topDoc: String): String =
+    s"""SELECT a.q_id,
+       |  coalesce(t.n_spans, 0)::BIGINT AS n_spans,
+       |  coalesce(s.n_supported, 0)::BIGINT AS n_supported,
+       |  (CASE WHEN coalesce(t.n_spans, 0) > 0
+       |        THEN (t.n_spans - coalesce(s.n_supported, 0)) * 1000000
+       |             // t.n_spans
+       |        ELSE 0 END)::BIGINT AS unsupported_ppm,
+       |  $topDoc,
+       |  (CASE WHEN coalesce(s.n_supported, 0) > 0
+       |        THEN p.cnt * 1000000 // s.n_supported
+       |        ELSE 0 END)::BIGINT AS top_share_ppm
+       |FROM ans a LEFT JOIN tot t USING (q_id)
+       |  LEFT JOIN sup s USING (q_id) LEFT JOIN top p USING (q_id)
+       |ORDER BY a.q_id""".stripMargin
+
   val q251Sql: String = q251SqlWith(50L)
 
   private[graft] def q251SqlWith(queryMod: Long): String =
@@ -118,20 +133,7 @@ object Queries39 {
        |top AS (SELECT q_id, doc_id, cnt FROM (
        |  SELECT q_id, doc_id, cnt, row_number() OVER (PARTITION BY q_id
        |    ORDER BY cnt DESC, doc_id ASC) AS rn FROM perdoc) WHERE rn = 1)
-       |SELECT a.q_id,
-       |  coalesce(t.n_spans, 0)::BIGINT AS n_spans,
-       |  coalesce(s.n_supported, 0)::BIGINT AS n_supported,
-       |  (CASE WHEN coalesce(t.n_spans, 0) > 0
-       |        THEN (t.n_spans - coalesce(s.n_supported, 0)) * 1000000
-       |             // t.n_spans
-       |        ELSE 0 END)::BIGINT AS unsupported_ppm,
-       |  coalesce(p.doc_id, -1)::BIGINT AS top_doc,
-       |  (CASE WHEN coalesce(s.n_supported, 0) > 0
-       |        THEN p.cnt * 1000000 // s.n_supported
-       |        ELSE 0 END)::BIGINT AS top_share_ppm
-       |FROM ans a LEFT JOIN tot t USING (q_id)
-       |  LEFT JOIN sup s USING (q_id) LEFT JOIN top p USING (q_id)
-       |ORDER BY a.q_id""".stripMargin
+       |${groundednessSelect("coalesce(p.doc_id, -1)::BIGINT AS top_doc")}""".stripMargin
 
   /** Citation-level attribution: each context document's share of the
     * supported answer spans (redundant support visible — shares can sum

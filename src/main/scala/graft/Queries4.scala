@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,6 @@ import graft.ops.{Components, Similarity}
   * window carries a total-order tiebreak, derived ints cast to long.
   */
 object Queries4 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // -------------------------------------------------------- rollup / cube
   /** Multi-level aggregate: order counts and exact-cents revenue by
@@ -81,15 +79,22 @@ object Queries4 {
       Queries3.rpPlanes, Queries3.rpBits, threshold = 0.35)
     Components.dedupClusters(emb.select("vec_id"), "vec_id", pairs, "id_a", "id_b")
   }
-  val q52Sql: String =
-    s"""WITH RECURSIVE ${Queries3.rpPairsCteBody},
-       |e AS (SELECT id_a AS s, id_b AS t FROM pairs
+  /** Connected components of the undirected `pairs(id_a, id_b)` graph
+    * as a recursive reachability closure from every `vec_id` of
+    * `seedRel`: `comp(vec_id, component)`, component = min reachable id
+    * (q52, q104, and Queries6's cluster labels). */
+  private[graft] def componentCtes(seedRel: String): String =
+    s"""e AS (SELECT id_a AS s, id_b AS t FROM pairs
        |      UNION ALL SELECT id_b AS s, id_a AS t FROM pairs),
        |reach AS (
-       |  SELECT vec_id AS id, vec_id AS lbl FROM embeddings
+       |  SELECT vec_id AS id, vec_id AS lbl FROM $seedRel
        |  UNION
        |  SELECT e.t AS id, reach.lbl FROM reach JOIN e ON e.s = reach.id),
-       |comp AS (SELECT id AS vec_id, min(lbl) AS component FROM reach GROUP BY id)
+       |comp AS (SELECT id AS vec_id, min(lbl) AS component FROM reach GROUP BY id)""".stripMargin
+
+  val q52Sql: String =
+    s"""WITH RECURSIVE ${Queries3.rpPairsCteBody},
+       |${componentCtes("embeddings")}
        |SELECT vec_id, component,
        | (count(*) OVER (PARTITION BY component))::BIGINT AS comp_size,
        | vec_id = component AS is_canonical

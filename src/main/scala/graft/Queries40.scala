@@ -13,8 +13,6 @@ import graft.ops.{Rag, Shard}
   */
 object Queries40 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-document jump-consistent-hash shard assignment at 64 shards —
     * the deploy spelling for four-digit shard counts (O(log n) LCG steps
     * per row vs rendezvous's O(n) digests). Pure integer/IEEE-double
@@ -76,39 +74,39 @@ object Queries40 {
         "doc_id", nOld = 64, nNew = 80)
       .orderBy("scheme")
 
-  val q254Sql: String =
-    s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
-       |${jumpCteSql("j64", 64)},
-       |${jumpCteSql("j80", 80)},
-       |jf AS (SELECT x.doc_id, x.b AS sj_old, y.b AS sj_new
-       |  FROM (SELECT doc_id, b FROM j64 WHERE j >= 64) x
-       |  JOIN (SELECT doc_id, b FROM j80 WHERE j >= 80) y USING (doc_id)),
-       |mv AS (SELECT i.doc_id,
-       |    arg_max(t.s, md5(i.doc_id::VARCHAR || ':' || t.s::VARCHAR))
-       |      FILTER (WHERE t.s < 64) AS rdv_old,
-       |    arg_max(t.s, md5(i.doc_id::VARCHAR || ':' || t.s::VARCHAR))
-       |      AS rdv_new
-       |  FROM ids i CROSS JOIN range(80) t(s) GROUP BY i.doc_id),
-       |md AS (SELECT doc_id,
-       |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT AS hv
-       |  FROM ids),
-       |g AS (SELECT count(*)::BIGINT AS n_docs,
+  /** Jump shard of every id before and after the grow, as
+    * `jf(<k>, sj_old, sj_new)` over the `j64`/`j80` jump CTEs. */
+  private[graft] def jumpMovesCte(k: String): String =
+    s"""jf AS (SELECT x.$k, x.b AS sj_old, y.b AS sj_new
+       |  FROM (SELECT $k, b FROM j64 WHERE j >= 64) x
+       |  JOIN (SELECT $k, b FROM j80 WHERE j >= 80) y USING ($k))""".stripMargin
+
+  /** The moved share per scheme (mod from `md`'s `hv`, rendezvous from
+    * `mv`, jump from `jf`), joined on the id column `k` (q254, q269). */
+  private[graft] def threeSchemeMovesSql(k: String): String =
+    s"""g AS (SELECT count(*)::BIGINT AS n_docs,
        |    sum(CASE WHEN (hv % 64) <> (hv % 80) THEN 1 ELSE 0 END)::BIGINT
        |      AS mod_moved,
        |    sum(CASE WHEN rdv_old <> rdv_new THEN 1 ELSE 0 END)::BIGINT
        |      AS rdv_moved,
        |    sum(CASE WHEN sj_old <> sj_new THEN 1 ELSE 0 END)::BIGINT
        |      AS jmp_moved
-       |  FROM mv JOIN md USING (doc_id) JOIN jf USING (doc_id)),
+       |  FROM mv JOIN md USING ($k) JOIN jf USING ($k)),
        |u AS (SELECT 'mod' AS scheme, n_docs, mod_moved AS n_moved FROM g
        |  UNION ALL SELECT 'rendezvous', n_docs, rdv_moved FROM g
        |  UNION ALL SELECT 'jump', n_docs, jmp_moved FROM g)
-       |SELECT scheme, n_docs, n_moved,
-       |  (CASE WHEN n_docs <= 0 THEN 0
-       |        WHEN n_moved <= 9223372036854
-       |          THEN n_moved * 1000000 // n_docs
-       |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
-       |FROM u ORDER BY scheme""".stripMargin
+       |${Queries37.movedPpmSelect}""".stripMargin
+
+  val q254Sql: String =
+    s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
+       |${jumpCteSql("j64", 64)},
+       |${jumpCteSql("j80", 80)},
+       |${jumpMovesCte("doc_id")},
+       |${Queries37.rendezvousMovesCte("doc_id", "i.doc_id::VARCHAR")},
+       |md AS (SELECT doc_id,
+       |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT AS hv
+       |  FROM ids),
+       |${threeSchemeMovesSql("doc_id")}""".stripMargin
 
   /** Span-size sweep of the groundedness rollup over the q251 inputs:
     * n ∈ {3, 4, 5} in one plan — how the extractive-hallucination ppm

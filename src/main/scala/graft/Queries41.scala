@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.{Retrieval, Shard}
+import graft.ops.Shard
 
 /** Forty-first query wave: BM25 on a ZIPFIAN token distribution as a
   * first-class CORRECTNESS target (q256 — the r14 verdict's item 8: the
@@ -14,8 +14,6 @@ import graft.ops.{Retrieval, Shard}
   * shard-balance audit (q257).
   */
 object Queries41 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Zipf vocabulary size for the q256 remap (matches GenScale's). */
   private val ZipfV = 20000
@@ -80,14 +78,11 @@ object Queries41 {
   val q256Bm25Zipf: Q = (spark, dir) => q256With(spark, dir, 50L)
 
   private[graft] def q256With(spark: SparkSession, dir: String,
-      queryMod: Long): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .select(col("doc_id"), zipfText(col("doc_id"), col("text")).as("text"))
-    val queries = d.filter(col("doc_id") % queryMod === 7L)
-      .select(col("doc_id").as("q_id"), col("text").as("q_text"))
-    Retrieval.bm25Rank(d, "doc_id", "text", queries, "q_id", "q_text", k = 10)
+      queryMod: Long): DataFrame =
+    Queries11.bm25TopK(Tables.documents(spark, dir)
+        .select(col("doc_id"), zipfText(col("doc_id"), col("text")).as("text")),
+        10, queryMod)
       .orderBy("q_id", "rank")
-  }
 
   val q256Sql: String = q256SqlWith(50L)
 
@@ -105,6 +100,21 @@ object Queries41 {
         Tables.documents(spark, dir).select(col("doc_id")),
         "doc_id", numShards = 64)
       .orderBy("scheme")
+
+  /** Per-scheme shard loads of `asg(scheme, shard)` at 64 shards and the
+    * peak load factor (q257, q264). */
+  private[graft] def shardBalanceSql: String =
+    s"""h AS (SELECT scheme, shard, count(*)::BIGINT AS c
+       |  FROM asg GROUP BY 1, 2),
+       |g AS (SELECT scheme, count(*)::BIGINT AS n_shards_used,
+       |    min(c)::BIGINT AS min_docs, max(c)::BIGINT AS max_docs,
+       |    sum(c)::BIGINT AS n FROM h GROUP BY 1)
+       |SELECT scheme, n_shards_used, min_docs, max_docs,
+       |  (CASE WHEN n <= 0 THEN 0
+       |        WHEN max_docs <= ${Long.MaxValue / (64L * 1000000L)}
+       |          THEN max_docs * 64 * 1000000 // n
+       |        ELSE max_docs * 64 // (n // 1000000) END)::BIGINT AS peak_ppm
+       |FROM g ORDER BY scheme""".stripMargin
 
   val q257Sql: String =
     s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
@@ -128,17 +138,7 @@ object Queries41 {
        |  FROM ids i CROSS JOIN range(64) t(s) GROUP BY i.doc_id
        |  UNION ALL
        |  SELECT 'jump', b FROM jmp WHERE j >= 64),
-       |h AS (SELECT scheme, shard, count(*)::BIGINT AS c
-       |  FROM asg GROUP BY 1, 2),
-       |g AS (SELECT scheme, count(*)::BIGINT AS n_shards_used,
-       |    min(c)::BIGINT AS min_docs, max(c)::BIGINT AS max_docs,
-       |    sum(c)::BIGINT AS n FROM h GROUP BY 1)
-       |SELECT scheme, n_shards_used, min_docs, max_docs,
-       |  (CASE WHEN n <= 0 THEN 0
-       |        WHEN max_docs <= ${Long.MaxValue / (64L * 1000000L)}
-       |          THEN max_docs * 64 * 1000000 // n
-       |        ELSE max_docs * 64 // (n // 1000000) END)::BIGINT AS peak_ppm
-       |FROM g ORDER BY scheme""".stripMargin
+       |$shardBalanceSql""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q256_bm25_zipf", q256Bm25Zipf, q256Sql),

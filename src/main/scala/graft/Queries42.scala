@@ -15,8 +15,6 @@ import graft.ops.{RankEval, Similarity}
   */
 object Queries42 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Brute-force top-10 by cosine at an optional prefix truncation —
     * the q19 exact-kNN route (bounded query sample broadcast through the
     * corpus; at deploy scale the IVF/PQ routes q37/q151 replace the
@@ -30,10 +28,6 @@ object Queries42 {
       cut(queries, "qvec"), "q_id", "qvec", k = 10)
   }
 
-  private def querySample(emb: DataFrame, queryMod: Long): DataFrame =
-    emb.filter(col("vec_id") % queryMod === 7L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-
   /** Per-query top-10 overlap between the full-dim index and a 16-dim
     * prefix index. [[graft.ops.RankEval.overlapAtK]] columns: n_a is the
     * full-dim reference, containment_ppm the share the prefix retained. */
@@ -42,7 +36,7 @@ object Queries42 {
   private[graft] def q258With(spark: SparkSession, dir: String,
       queryMod: Long): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val qs = querySample(emb, queryMod)
+    val qs = Queries11.vecQueries(emb, queryMod)
     // both routes pinned: overlapAtK's n_a/n_b/common branches each
     // consume their input, and Catalyst shares no subtrees — unpinned,
     // every brute-force scan would run twice (review-pass finding)
@@ -66,12 +60,10 @@ object Queries42 {
        |    ON q.vec_id % $queryMod = 7 AND e.vec_id != q.vec_id)
        |  WHERE rank <= 10)""".stripMargin
 
-  val q258Sql: String = q258SqlWith(50L)
-
-  private[graft] def q258SqlWith(queryMod: Long): String =
-    s"""WITH ${knnCteSql("fa", "", queryMod)},
-       |${knnCteSql("fb", "[1:16]", queryMod)},
-       |na AS (SELECT q_id, count(*)::BIGINT AS n_a FROM fa GROUP BY 1),
+  /** Per-query overlap of the top-10 shortlists `fa` and `fb`, in
+    * [[graft.ops.RankEval.overlapAtK]]'s columns (q258, q267). */
+  private def overlapSql: String =
+    s"""na AS (SELECT q_id, count(*)::BIGINT AS n_a FROM fa GROUP BY 1),
        |nb AS (SELECT q_id, count(*)::BIGINT AS n_b FROM fb GROUP BY 1),
        |cm AS (SELECT q_id, count(*)::BIGINT AS n_common
        |  FROM fa JOIN fb USING (q_id, vec_id) GROUP BY 1)
@@ -89,6 +81,13 @@ object Queries42 {
        |FROM na FULL OUTER JOIN nb USING (q_id) LEFT JOIN cm USING (q_id)
        |ORDER BY q_id""".stripMargin
 
+  val q258Sql: String = q258SqlWith(50L)
+
+  private[graft] def q258SqlWith(queryMod: Long): String =
+    s"""WITH ${knnCteSql("fa", "", queryMod)},
+       |${knnCteSql("fb", "[1:16]", queryMod)},
+       |$overlapSql""".stripMargin
+
   /** Prefix-dim SWEEP against one pinned full-dim reference: pooled
     * top-10 containment at dims {8, 16, 32} — the MRL quality curve in
     * one plan (the reference shortlist is computed once and joined by
@@ -101,7 +100,7 @@ object Queries42 {
   private[graft] def q259With(spark: SparkSession, dir: String,
       queryMod: Long): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val qs = querySample(emb, queryMod)
+    val qs = Queries11.vecQueries(emb, queryMod)
     // the full-dim reference shortlist is shared by every truncation —
     // pinned, or each overlap branch re-runs the full-dim scan
     val full = route(emb, qs, None).localCheckpoint(false)
@@ -173,7 +172,7 @@ object Queries42 {
       queryMod: Long): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val qs = querySample(emb, queryMod)
+    val qs = Queries11.vecQueries(emb, queryMod)
     // both routes pinned: overlapAtK consumes each side several times
     // (n_a/n_b/common branches) — the q258 rule
     RankEval.overlapAtK(
@@ -217,23 +216,7 @@ object Queries42 {
        |  WHERE vec_id % $queryMod = 7),
        |${ivfRouteCteSql("fa", "cf", "")},
        |${ivfRouteCteSql("fb", "ct", "[1:16]")},
-       |na AS (SELECT q_id, count(*)::BIGINT AS n_a FROM fa GROUP BY 1),
-       |nb AS (SELECT q_id, count(*)::BIGINT AS n_b FROM fb GROUP BY 1),
-       |cm AS (SELECT q_id, count(*)::BIGINT AS n_common
-       |  FROM fa JOIN fb USING (q_id, vec_id) GROUP BY 1)
-       |SELECT q_id, coalesce(n_a, 0)::BIGINT AS n_a,
-       |  coalesce(n_b, 0)::BIGINT AS n_b,
-       |  coalesce(n_common, 0)::BIGINT AS n_common,
-       |  (CASE WHEN coalesce(n_a, 0) + coalesce(n_b, 0)
-       |          - coalesce(n_common, 0) = 0 THEN null
-       |        ELSE coalesce(n_common, 0) * 1000000
-       |          // (coalesce(n_a, 0) + coalesce(n_b, 0)
-       |             - coalesce(n_common, 0)) END)::BIGINT AS jaccard_ppm,
-       |  (CASE WHEN coalesce(n_a, 0) = 0 THEN null
-       |        ELSE coalesce(n_common, 0) * 1000000
-       |          // n_a END)::BIGINT AS containment_ppm
-       |FROM na FULL OUTER JOIN nb USING (q_id) LEFT JOIN cm USING (q_id)
-       |ORDER BY q_id""".stripMargin
+       |$overlapSql""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q258_matryoshka_overlap", q258MatryoshkaOverlap, q258Sql),

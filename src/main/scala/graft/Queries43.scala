@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -27,8 +27,6 @@ import graft.functions.UrlFns
   * 2·3·5·7 = 210 per source, so real duplicate mass exists at every SF.
   */
 object Queries43 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def synthUrl(d: Column, source: Column): Column =
     concat(lit("HTTPS://WWW."), source, lit(".Example"),

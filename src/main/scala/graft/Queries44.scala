@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.functions.HashFns
 import graft.ops.Dedup
 
 /** Forty-fourth query wave: TF-WEIGHTED near-dup verification — the
@@ -14,8 +13,6 @@ import graft.ops.Dedup
   * BOTH metrics per pair makes the divergence auditable.
   */
 object Queries44 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Weighted-Jaccard near-dup pairs at wj >= 0.6 over the q14 banding
     * (12 hashes × 4 bands). [[graft.ops.Dedup.weightedJaccardPairs]]. */
@@ -41,23 +38,10 @@ object Queries44 {
 
   val q262Sql: String = q262SqlWhere("docs AS (SELECT * FROM documents)")
 
-  private def q262SqlWhere(docsCte: String): String = {
-    val perms = HashFns.minHashCoeffs(12).map { case (a, b) =>
-      s"list_min(list_transform(hb, h -> ($a * h + $b) % ${HashFns.MinHashP}))"
-    }.mkString(",\n       ")
+  private def q262SqlWhere(docsCte: String): String =
     s"""WITH $docsCte,
        |${Queries2.shinglesCteFrom("docs")},
-       |hbs AS (SELECT doc_id, list_transform(sh,
-       |          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT % ${HashFns.MinHashP}) AS hb
-       |        FROM sh),
-       |mh AS (SELECT doc_id, [$perms] AS sig
-       |       FROM hbs),
-       |bands AS (SELECT doc_id, b,
-       |            array_to_string(list_slice(sig, b*3 + 1, b*3 + 3), '_') AS bsig
-       |          FROM mh, unnest(generate_series(0, 3)) AS u(b)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-       |         FROM bands a JOIN bands c ON a.b = c.b AND a.bsig = c.bsig
-       |           AND a.doc_id < c.doc_id),
+       |${Queries2.minHashCandCtes("doc_id")},
        |cj AS MATERIALIZED (SELECT id_a, id_b,
        |    round(len(list_intersect(x.sh, y.sh))::DOUBLE
        |          / len(list_distinct(list_concat(x.sh, y.sh))), 6)
@@ -86,7 +70,6 @@ object Queries44 {
        |    JOIN lq la ON la.doc_id = c.id_a
        |    JOIN lq lb ON lb.doc_id = c.id_b) v
        |WHERE wj_ppm >= 600000 ORDER BY id_a, id_b""".stripMargin
-  }
 
   /** MULTISET-faithful banded near-dup pairs: MinHash over the quantized
     * repeated-shingle expansion (`term#1 … term#min(tf,8)`), so the
@@ -118,10 +101,7 @@ object Queries44 {
 
   val q268Sql: String = q268SqlWhere("docs AS (SELECT * FROM documents)")
 
-  private def q268SqlWhere(docsCte: String): String = {
-    val perms = HashFns.minHashCoeffs(12).map { case (a, b) =>
-      s"list_min(list_transform(hb, h -> ($a * h + $b) % ${HashFns.MinHashP}))"
-    }.mkString(",\n       ")
+  private def q268SqlWhere(docsCte: String): String =
     s"""WITH $docsCte,
        |tfq AS (SELECT doc_id, t AS term, count(*)::BIGINT AS tf
        |  FROM (SELECT doc_id, unnest(list_filter(
@@ -133,25 +113,8 @@ object Queries44 {
        |  FROM (SELECT doc_id, term,
        |          unnest(generate_series(1, least(tf, 8))) AS k FROM tfq)
        |  GROUP BY doc_id),
-       |hbs AS (SELECT doc_id, list_transform(sh,
-       |          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT % ${HashFns.MinHashP}) AS hb
-       |        FROM sh),
-       |mh AS (SELECT doc_id, [$perms] AS sig
-       |       FROM hbs),
-       |bands AS (SELECT doc_id, b,
-       |            array_to_string(list_slice(sig, b*3 + 1, b*3 + 3), '_') AS bsig
-       |          FROM mh, unnest(generate_series(0, 3)) AS u(b)),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-       |         FROM bands a JOIN bands c ON a.b = c.b AND a.bsig = c.bsig
-       |           AND a.doc_id < c.doc_id)
-       |SELECT id_a, id_b, jaccard FROM (
-       |  SELECT id_a, id_b,
-       |    round(len(list_intersect(x.sh, y.sh))::DOUBLE
-       |          / len(list_distinct(list_concat(x.sh, y.sh))), 6) AS jaccard
-       |  FROM cand JOIN sh x ON x.doc_id = cand.id_a
-       |            JOIN sh y ON y.doc_id = cand.id_b) v
-       |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin
-  }
+       |${Queries2.minHashCandCtes("doc_id")}
+       |${Queries2.minHashJaccardSelect("doc_id", "0.6 ORDER BY id_a, id_b")}""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q262_weighted_jaccard", q262WeightedJaccard, q262Sql),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -18,8 +18,6 @@ import graft.ops.Shard
   * balance-checked on the key type it will actually deploy against.
   */
 object Queries45 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The synthetic string key both queries shard on: `source:doc_id` —
     * unique per document, non-numeric, and spelled identically in the
@@ -74,17 +72,7 @@ object Queries45 {
        |  FROM ids i CROSS JOIN range(64) t(s) GROUP BY i.key
        |  UNION ALL
        |  SELECT 'jump', b FROM jmp WHERE j >= 64),
-       |h AS (SELECT scheme, shard, count(*)::BIGINT AS c
-       |  FROM asg GROUP BY 1, 2),
-       |g AS (SELECT scheme, count(*)::BIGINT AS n_shards_used,
-       |    min(c)::BIGINT AS min_docs, max(c)::BIGINT AS max_docs,
-       |    sum(c)::BIGINT AS n FROM h GROUP BY 1)
-       |SELECT scheme, n_shards_used, min_docs, max_docs,
-       |  (CASE WHEN n <= 0 THEN 0
-       |        WHEN max_docs <= ${Long.MaxValue / (64L * 1000000L)}
-       |          THEN max_docs * 64 * 1000000 // n
-       |        ELSE max_docs * 64 // (n // 1000000) END)::BIGINT AS peak_ppm
-       |FROM g ORDER BY scheme""".stripMargin
+       |${Queries41.shardBalanceSql}""".stripMargin
 
   /** Three-scheme resharding-stability report over the STRING key for a
     * 64 → 80 grow — q254's report on the string deploy path, completing
@@ -103,33 +91,10 @@ object Queries45 {
        |  SELECT $strKeySql AS key, $hashedKeySql AS hk FROM documents),
        |${Queries40.jumpCteSqlOn("j64", 64, "key", "hk")},
        |${Queries40.jumpCteSqlOn("j80", 80, "key", "hk")},
-       |jf AS (SELECT x.key, x.b AS sj_old, y.b AS sj_new
-       |  FROM (SELECT key, b FROM j64 WHERE j >= 64) x
-       |  JOIN (SELECT key, b FROM j80 WHERE j >= 80) y USING (key)),
-       |mv AS (SELECT i.key,
-       |    arg_max(t.s, md5(i.key || ':' || t.s::VARCHAR))
-       |      FILTER (WHERE t.s < 64) AS rdv_old,
-       |    arg_max(t.s, md5(i.key || ':' || t.s::VARCHAR))
-       |      AS rdv_new
-       |  FROM ids i CROSS JOIN range(80) t(s) GROUP BY i.key),
+       |${Queries40.jumpMovesCte("key")},
+       |${Queries37.rendezvousMovesCte("key", "i.key")},
        |md AS (SELECT key, hk AS hv FROM ids),
-       |g AS (SELECT count(*)::BIGINT AS n_docs,
-       |    sum(CASE WHEN (hv % 64) <> (hv % 80) THEN 1 ELSE 0 END)::BIGINT
-       |      AS mod_moved,
-       |    sum(CASE WHEN rdv_old <> rdv_new THEN 1 ELSE 0 END)::BIGINT
-       |      AS rdv_moved,
-       |    sum(CASE WHEN sj_old <> sj_new THEN 1 ELSE 0 END)::BIGINT
-       |      AS jmp_moved
-       |  FROM mv JOIN md USING (key) JOIN jf USING (key)),
-       |u AS (SELECT 'mod' AS scheme, n_docs, mod_moved AS n_moved FROM g
-       |  UNION ALL SELECT 'rendezvous', n_docs, rdv_moved FROM g
-       |  UNION ALL SELECT 'jump', n_docs, jmp_moved FROM g)
-       |SELECT scheme, n_docs, n_moved,
-       |  (CASE WHEN n_docs <= 0 THEN 0
-       |        WHEN n_moved <= 9223372036854
-       |          THEN n_moved * 1000000 // n_docs
-       |        ELSE n_moved // (n_docs // 1000000) END)::BIGINT AS moved_ppm
-       |FROM u ORDER BY scheme""".stripMargin
+       |${Queries40.threeSchemeMovesSql("key")}""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q263_jump_shard_str", q263JumpShardStr, q263Sql),

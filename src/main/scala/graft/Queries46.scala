@@ -17,8 +17,6 @@ import graft.ops.{Ids, Rag}
   */
 object Queries46 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Groundedness audit over string-keyed context: the q251 inputs with
     * the context doc identity re-keyed as `doc-<id>` strings, routed
     * through [[graft.ops.Ids.surrogateKey]] (dense numeric surrogate,
@@ -60,20 +58,8 @@ object Queries46 {
        |  SELECT q_id, doc_id, cnt, row_number() OVER (PARTITION BY q_id
        |    ORDER BY cnt DESC, 'doc-' || doc_id::VARCHAR ASC) AS rn
        |  FROM perdoc) WHERE rn = 1)
-       |SELECT a.q_id,
-       |  coalesce(t.n_spans, 0)::BIGINT AS n_spans,
-       |  coalesce(s.n_supported, 0)::BIGINT AS n_supported,
-       |  (CASE WHEN coalesce(t.n_spans, 0) > 0
-       |        THEN (t.n_spans - coalesce(s.n_supported, 0)) * 1000000
-       |             // t.n_spans
-       |        ELSE 0 END)::BIGINT AS unsupported_ppm,
-       |  coalesce('doc-' || p.doc_id::VARCHAR, '-') AS top_doc_key,
-       |  (CASE WHEN coalesce(s.n_supported, 0) > 0
-       |        THEN p.cnt * 1000000 // s.n_supported
-       |        ELSE 0 END)::BIGINT AS top_share_ppm
-       |FROM ans a LEFT JOIN tot t USING (q_id)
-       |  LEFT JOIN sup s USING (q_id) LEFT JOIN top p USING (q_id)
-       |ORDER BY a.q_id""".stripMargin
+       |${Queries39.groundednessSelect(
+         "coalesce('doc-' || p.doc_id::VARCHAR, '-') AS top_doc_key")}""".stripMargin
 
   /** The helper itself, oracle-checked: dense 0-based surrogates in total
     * string-key order over the documents table. Keys are unique per doc

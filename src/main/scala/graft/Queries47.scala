@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -22,8 +22,6 @@ import graft.functions.UrlFns
   * host fold, unlike the path where it stays uppercase) oracle-visible.
   */
 object Queries47 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Synthetic lowercase hosts, one PSL rule class per `doc_id % 7` arm
     * (7 is coprime with the q270 slice modulus 10, so the slice hits

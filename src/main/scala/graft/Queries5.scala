@@ -23,8 +23,6 @@ import graft.io.Tables
   */
 object Queries5 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------------------------- cube
   /** CUBE over (returnflag, linestatus): all four grouping sets in one
     * Expand + one shuffle — the full grouping-sets family alongside q50's
@@ -100,8 +98,17 @@ object Queries5 {
     * pretraining pipeline turns variable-length documents into fixed-size
     * sequences. Packing is per-source so the window parallelizes across
     * shards instead of serializing the corpus through one task. */
-  val q62PackChunks: Q = (spark, dir) => {
-    val d = Tables.documents(spark, dir)
+  val q62PackChunks: Q = (spark, dir) =>
+    chunkCumTokens(Tables.documents(spark, dir))
+      .select(col("source"), expr("(cum_tok - n_tok) div 256").as("pack_id"), col("n_tok"))
+      .groupBy(col("source"), col("pack_id"))
+      .agg(count(lit(1)).as("n_chunks"), sum(col("n_tok")).as("n_tokens"))
+      .select(col("source"), col("pack_id"), col("n_chunks"), col("n_tokens"),
+        expr("(n_tokens * 1000000) div 256").as("fill_ppm"))
+
+  /** Each 64-token chunk's `n_tok` and its running token sum `cum_tok`
+    * within its source, in (doc_id, chunk_id) order (q62, q129). */
+  private[graft] def chunkCumTokens(d: DataFrame): DataFrame = {
     val ch = graft.ops.Chunk.tokenChunks(d, "doc_id", "text", 64, 64)
       .select(col("doc_id"), col("chunk_id"),
         size(split(col("chunk"), " ")).cast("long").as("n_tok"))
@@ -110,14 +117,11 @@ object Queries5 {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ch.join(d.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), col("n_tok"), sum(col("n_tok")).over(w).as("cum_tok"))
-      .select(col("source"), expr("(cum_tok - n_tok) div 256").as("pack_id"), col("n_tok"))
-      .groupBy(col("source"), col("pack_id"))
-      .agg(count(lit(1)).as("n_chunks"), sum(col("n_tok")).as("n_tokens"))
-      .select(col("source"), col("pack_id"), col("n_chunks"), col("n_tokens"),
-        expr("(n_tokens * 1000000) div 256").as("fill_ppm"))
   }
-  val q62Sql: String =
-    """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk FROM documents),
+
+  /** [[chunkCumTokens]] as oracle CTEs: chunks `c`, running sums `j`. */
+  private[graft] def chunkCumTokensCtes: String =
+    """t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk FROM documents),
       |c AS (
       |  SELECT doc_id, ((i - 1) // 64)::BIGINT AS chunk_id,
       |    len(string_split(array_to_string(list_slice(tk, i::INT, (i + 63)::INT), ' '), ' '))::BIGINT AS n_tok
@@ -126,7 +130,10 @@ object Queries5 {
       |  SELECT d.source, c.n_tok,
       |    sum(c.n_tok) OVER (PARTITION BY d.source ORDER BY c.doc_id, c.chunk_id
       |                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
-      |  FROM c JOIN documents d ON d.doc_id = c.doc_id)
+      |  FROM c JOIN documents d ON d.doc_id = c.doc_id)""".stripMargin
+
+  val q62Sql: String =
+    s"""WITH $chunkCumTokensCtes
       |SELECT source, ((cum_tok - n_tok) // 256)::BIGINT AS pack_id,
       |  count(*) AS n_chunks, sum(n_tok)::BIGINT AS n_tokens,
       |  ((sum(n_tok)::BIGINT * 1000000) // 256)::BIGINT AS fill_ppm

@@ -16,8 +16,6 @@ import graft.io.{ChildClient, PageClient, PagedConfig, PagedSource, Tables}
   */
 object Queries6 {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Unified landing schema for ingested "posts" (SURVEY §1.4, P12
     * projection-with-defaults at ingest). */
   private val postSchema = StructType(Seq(
@@ -165,13 +163,7 @@ object Queries6 {
     * [[graft.ops.Embed.densityClusters]]. ONE spelling shared by the q81
     * and q83 oracles so the noise rule can never silently diverge. */
   private def ccLabCte(seedRel: String, minClusterSize: Int): String =
-    s"""e AS (SELECT id_a AS s, id_b AS t FROM pairs
-       |      UNION ALL SELECT id_b AS s, id_a AS t FROM pairs),
-       |reach AS (
-       |  SELECT vec_id AS id, vec_id AS lbl FROM $seedRel
-       |  UNION
-       |  SELECT e.t AS id, reach.lbl FROM reach JOIN e ON e.s = reach.id),
-       |comp AS (SELECT id AS vec_id, min(lbl) AS component FROM reach GROUP BY id),
+    s"""${Queries4.componentCtes(seedRel)},
        |sized AS (SELECT vec_id, component,
        |            count(*) OVER (PARTITION BY component) AS comp_size FROM comp),
        |lab AS (SELECT vec_id,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -17,8 +16,6 @@ import graft.ops.Vocab
   * oracle.
   */
 object Queries7 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Tokenization spelled identically in Spark and DuckDB oracle SQL:
     * lowercased whitespace split with blank tokens dropped. */
@@ -98,15 +95,20 @@ object Queries7 {
         sum(graft.functions.TextFns.tokenCount(col("text"))).as("tokens"))
       .orderBy("split", "lang")
 
-  val q92Sql: String =
-    """WITH a AS (SELECT lang, text,
-      |    CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
+  /** The md5 split assignment (train below f0, val below f8, else test)
+    * as a select item named `split`. */
+  private[graft] def splitCaseSql: String =
+    """CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
       |         WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f8' THEN 'val'
-      |         ELSE 'test' END AS split
+      |         ELSE 'test' END AS split""".stripMargin
+
+  val q92Sql: String =
+    s"""WITH a AS (SELECT lang, text,
+      |    $splitCaseSql
       |  FROM documents)
       |SELECT split, lang, count(*)::BIGINT AS docs,
       |  sum(CASE WHEN length(trim(text)) = 0 THEN 0
-      |           ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS tokens
+      |           ELSE len(string_split_regex(trim(text), '\\s+')) END)::BIGINT AS tokens
       |FROM a GROUP BY split, lang ORDER BY split, lang""".stripMargin
 
   // ------------------------------------------------ repeated-span signal
@@ -259,13 +261,11 @@ object Queries7 {
     Vocab.crossSplitLeaks(Tables.documents(spark, dir), "doc_id", "text", n = 5)
 
   val q97Sql: String =
-    """WITH a AS (SELECT text,
-      |    CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
-      |         WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f8' THEN 'val'
-      |         ELSE 'test' END AS split
+    s"""WITH a AS (SELECT text,
+      |    $splitCaseSql
       |  FROM documents),
       |tok AS (SELECT split,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM a),
+      |    string_split_regex(lower(trim(text)), '\\s+') AS toks FROM a),
       |spans AS (SELECT DISTINCT split, array_to_string(toks[i : i + 4], ' ') AS span
       |  FROM (SELECT split, toks, unnest(generate_series(1, len(toks) - 4)) AS i
       |        FROM tok WHERE len(toks) >= 5)),
@@ -372,23 +372,21 @@ object Queries7 {
   }
 
   val q98Sql: String =
-    """WITH a AS (SELECT doc_id, lang, text,
-      |    CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
-      |         WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f8' THEN 'val'
-      |         ELSE 'test' END AS split,
+    s"""WITH a AS (SELECT doc_id, lang, text,
+      |    $splitCaseSql,
       |    CASE WHEN length(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
+      |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS tok
       |  FROM documents),
       |base AS (SELECT split, lang, count(*)::BIGINT AS docs,
       |    sum(tok)::BIGINT AS tokens FROM a GROUP BY split, lang),
-      |w AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
+      |w AS (SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
       |  FROM documents),
       |counts AS (SELECT word, count(*)::BIGINT AS cnt FROM w WHERE word <> ''
       |  GROUP BY word),
       |tot AS (SELECT sum(cnt)::BIGINT AS total FROM counts),
       |top AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word ASC) AS rk
       |  FROM counts ORDER BY cnt DESC, word ASC LIMIT 16),
-      |toks2 AS (SELECT split, string_split_regex(lower(trim(text)), '\s+') AS toks
+      |toks2 AS (SELECT split, string_split_regex(lower(trim(text)), '\\s+') AS toks
       |  FROM a),
       |spans AS (SELECT split, array_to_string(toks[i : i + 4], ' ') AS span
       |  FROM (SELECT split, toks, unnest(generate_series(1, len(toks) - 4)) AS i
@@ -406,7 +404,7 @@ object Queries7 {
       |  FROM rls GROUP BY doc_id),
       |rsp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
       |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-      |        FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
+      |        FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
       |              FROM documents)
       |        WHERE len(toks) >= 2)),
       |rsc AS (SELECT doc_id, span, count(*) AS c FROM rsp GROUP BY doc_id, span),

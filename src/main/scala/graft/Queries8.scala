@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -16,8 +16,6 @@ import graft.ops.{Delta, Scrub}
   * match).
   */
 object Queries8 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ------------------------------------------------ unicode normalization
   /** Unicode-NFC ingest audit over a deterministically DECOMPOSED copy of
@@ -73,22 +71,27 @@ object Queries8 {
     * shuffling ~50 bytes/doc, then a tiny rollup. */
   val q100ReleaseDelta: Q = (spark, dir) => {
     val cur = Tables.documents(spark, dir)
-    val prev = cur.filter(col("doc_id") % 11 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 7 === 3, concat(col("text"), lit(" [v1]")))
-          .otherwise(col("text")).as("text"),
-        col("source"))
-      .unionByName(cur.filter(col("doc_id") % 13 === 5)
-        // offset is 1e12: far outside any GenScale copy-offset id space, so
-        // the synthetic 'removed' class survives on 8x/64x scaled fixtures
-        .select((col("doc_id") + 1000000000000L).as("doc_id"), col("text"),
-          col("source")))
-    Delta.releaseDiff(prev, cur.select(col("doc_id"), col("text"),
-        col("source")), "doc_id", Seq("text"), Seq("source"))
+    Delta.releaseDiff(previousRelease(cur, col("source")),
+        cur.select(col("doc_id"), col("text"), col("source")),
+        "doc_id", Seq("text"), Seq("source"))
       .groupBy(col("status"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("status", "source")
   }
+
+  /** The synthetic previous release of `cur` (q100, q140): ids ≡ 0
+    * (mod 11) absent, ids ≡ 3 (mod 7) with edited text, and ids ≡ 5
+    * (mod 13) present under a 1e12 offset — far outside any GenScale
+    * copy-offset id space, so the 'removed' class survives on 8x/64x
+    * scaled fixtures; `carry` columns ride along. */
+  private[graft] def previousRelease(cur: DataFrame, carry: Column*): DataFrame =
+    cur.filter(col("doc_id") % 11 =!= 0)
+      .select(Seq(col("doc_id"),
+        when(col("doc_id") % 7 === 3, concat(col("text"), lit(" [v1]")))
+          .otherwise(col("text")).as("text")) ++ carry: _*)
+      .unionByName(cur.filter(col("doc_id") % 13 === 5)
+        .select(Seq((col("doc_id") + 1000000000000L).as("doc_id"), col("text"))
+          ++ carry: _*))
 
   val q100Sql: String =
     """WITH prev AS (
@@ -119,35 +122,61 @@ object Queries8 {
       Tables.documents(spark, dir), "doc_id", "text")
       .orderBy("doc_id")
 
-  val q101Sql: String =
-    """WITH l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-      |  FROM documents),
-      |ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
+  /** Gopher duplicate-line CTEs over `l(doc_id, line)`: per-(doc, line)
+    * counts `ls` and per-doc duplicate line/char totals `la`. */
+  private[graft] def lineDupCtes: String =
+    """ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
       |  FROM l GROUP BY doc_id, line),
       |la AS (SELECT doc_id, sum(c) AS n_lines, sum(c - 1) AS dup_lines,
       |    sum((c - 1) * len) AS dup_chars, sum(c * len) AS tot_chars
-      |  FROM ls GROUP BY doc_id),
-      |tok AS (SELECT doc_id,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
-      |sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
-      |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-      |        FROM tok WHERE len(toks) >= 2)),
-      |sc AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
-      |top AS (SELECT doc_id, c, span FROM (
-      |    SELECT doc_id, c, span,
-      |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
-      |    FROM sc) WHERE rk = 1),
-      |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM documents)
-      |SELECT b.doc_id,
-      |  (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
-      |  (CASE WHEN la.tot_chars = 0 THEN 0
-      |        ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT
-      |    AS dup_line_char_ppm,
-      |  (CASE WHEN t.c IS NULL OR b.n_norm = 0 THEN 0
-      |        ELSE t.c * length(t.span) * 1000000 // b.n_norm END)::BIGINT
-      |    AS top_bigram_ppm
-      |FROM base b JOIN la USING (doc_id) LEFT JOIN top t USING (doc_id)
-      |ORDER BY b.doc_id""".stripMargin
+      |  FROM ls GROUP BY doc_id)""".stripMargin
+
+  /** Most-frequent-bigram CTEs over `tok(doc_id, toks)`: bigram spans `sp`,
+    * their per-doc counts (named `sc`) and each doc's top span (`top`). */
+  private[graft] def topBigramCtes(tok: String, sc: String, top: String): String =
+    s"""sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
+       |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
+       |        FROM $tok WHERE len(toks) >= 2)),
+       |$sc AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
+       |$top AS (SELECT doc_id, c, span FROM (
+       |    SELECT doc_id, c, span,
+       |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
+       |    FROM $sc) WHERE rk = 1)""".stripMargin
+
+  /** The per-doc repetition signals `sig` (ppm) from `base`, `la` and the
+    * top-bigram CTE `top` joined as `t`; `cols` extends the select list. */
+  private[graft] def repetitionSigCte(cols: String, top: String, t: String): String =
+    s"""sig AS (SELECT b.doc_id$cols,
+       |    (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
+       |    (CASE WHEN la.tot_chars = 0 THEN 0
+       |          ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT AS dup_line_char_ppm,
+       |    (CASE WHEN $t.c IS NULL OR b.n_norm = 0 THEN 0
+       |          ELSE $t.c * length($t.span) * 1000000 // b.n_norm END)::BIGINT AS top_bigram_ppm
+       |  FROM base b JOIN la USING (doc_id) LEFT JOIN $top $t USING (doc_id))""".stripMargin
+
+  /** q101/q102's shared oracle prefix: line duplication and top bigram of
+    * every document. */
+  private def repetitionCtes: String =
+    s"""l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
+       |  FROM documents),
+       |$lineDupCtes,
+       |tok AS (SELECT doc_id,
+       |    string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents),
+       |${topBigramCtes("tok", "sc", "top")}""".stripMargin
+
+  val q101Sql: String =
+    s"""WITH $repetitionCtes,
+       |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM documents)
+       |SELECT b.doc_id,
+       |  (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
+       |  (CASE WHEN la.tot_chars = 0 THEN 0
+       |        ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT
+       |    AS dup_line_char_ppm,
+       |  (CASE WHEN t.c IS NULL OR b.n_norm = 0 THEN 0
+       |        ELSE t.c * length(t.span) * 1000000 // b.n_norm END)::BIGINT
+       |    AS top_bigram_ppm
+       |FROM base b JOIN la USING (doc_id) LEFT JOIN top t USING (doc_id)
+       |ORDER BY b.doc_id""".stripMargin
 
   /** Repetition GATE pass/fail rates per source (thresholds from the
     * published rule: 30% duplicate lines, 20% duplicate-line chars, 18%
@@ -160,39 +189,17 @@ object Queries8 {
       .orderBy("source")
 
   val q102Sql: String =
-    """WITH l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-      |  FROM documents),
-      |ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-      |  FROM l GROUP BY doc_id, line),
-      |la AS (SELECT doc_id, sum(c) AS n_lines, sum(c - 1) AS dup_lines,
-      |    sum((c - 1) * len) AS dup_chars, sum(c * len) AS tot_chars
-      |  FROM ls GROUP BY doc_id),
-      |tok AS (SELECT doc_id,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
-      |sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
-      |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-      |        FROM tok WHERE len(toks) >= 2)),
-      |sc AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
-      |top AS (SELECT doc_id, c, span FROM (
-      |    SELECT doc_id, c, span,
-      |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
-      |    FROM sc) WHERE rk = 1),
-      |base AS (SELECT doc_id, source, length(lower(trim(text))) AS n_norm
-      |  FROM documents),
-      |sig AS (SELECT b.doc_id, b.source,
-      |    (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
-      |    (CASE WHEN la.tot_chars = 0 THEN 0
-      |          ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT AS dup_line_char_ppm,
-      |    (CASE WHEN t.c IS NULL OR b.n_norm = 0 THEN 0
-      |          ELSE t.c * length(t.span) * 1000000 // b.n_norm END)::BIGINT AS top_bigram_ppm
-      |  FROM base b JOIN la USING (doc_id) LEFT JOIN top t USING (doc_id))
-      |SELECT source, count(*)::BIGINT AS n_docs,
-      |  sum(CASE WHEN dup_line_ppm > 300000 THEN 1 ELSE 0 END)::BIGINT AS fail_dup_line,
-      |  sum(CASE WHEN dup_line_char_ppm > 200000 THEN 1 ELSE 0 END)::BIGINT AS fail_dup_line_char,
-      |  sum(CASE WHEN top_bigram_ppm > 180000 THEN 1 ELSE 0 END)::BIGINT AS fail_top_bigram,
-      |  sum(CASE WHEN dup_line_ppm <= 300000 AND dup_line_char_ppm <= 200000
-      |            AND top_bigram_ppm <= 180000 THEN 1 ELSE 0 END)::BIGINT AS n_pass
-      |FROM sig GROUP BY source ORDER BY source""".stripMargin
+    s"""WITH $repetitionCtes,
+       |base AS (SELECT doc_id, source, length(lower(trim(text))) AS n_norm
+       |  FROM documents),
+       |${repetitionSigCte(", b.source", "top", "t")}
+       |SELECT source, count(*)::BIGINT AS n_docs,
+       |  sum(CASE WHEN dup_line_ppm > 300000 THEN 1 ELSE 0 END)::BIGINT AS fail_dup_line,
+       |  sum(CASE WHEN dup_line_char_ppm > 200000 THEN 1 ELSE 0 END)::BIGINT AS fail_dup_line_char,
+       |  sum(CASE WHEN top_bigram_ppm > 180000 THEN 1 ELSE 0 END)::BIGINT AS fail_top_bigram,
+       |  sum(CASE WHEN dup_line_ppm <= 300000 AND dup_line_char_ppm <= 200000
+       |            AND top_bigram_ppm <= 180000 THEN 1 ELSE 0 END)::BIGINT AS n_pass
+       |FROM sig GROUP BY source ORDER BY source""".stripMargin
 
   // ------------------------------------------------ bloom decontamination
   /** Two-phase bloom-prefiltered decontamination drop list: train docs
@@ -208,22 +215,26 @@ object Queries8 {
       Tables.documents(spark, dir), "doc_id", "text", n = 5)
       .orderBy("doc_id")
 
+  /** q103/q106's shared oracle prefix: split-assigned documents `a`
+    * (`doc_id, text` plus `cols`), their tokens and distinct word 5-gram
+    * `spans` per (doc, split). */
+  private def splitSpanCtes(cols: String): String =
+    s"""a AS (SELECT doc_id, text$cols,
+       |    ${Queries7.splitCaseSql}
+       |  FROM documents),
+       |tok AS (SELECT doc_id, split,
+       |    string_split_regex(lower(trim(text)), '\\s+') AS toks FROM a),
+       |spans AS (SELECT DISTINCT doc_id, split, array_to_string(toks[i : i + 4], ' ') AS span
+       |  FROM (SELECT doc_id, split, toks, unnest(generate_series(1, len(toks) - 4)) AS i
+       |        FROM tok WHERE len(toks) >= 5))""".stripMargin
+
   val q103Sql: String =
-    """WITH a AS (SELECT doc_id, text,
-      |    CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
-      |         WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f8' THEN 'val'
-      |         ELSE 'test' END AS split
-      |  FROM documents),
-      |tok AS (SELECT doc_id, split,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM a),
-      |spans AS (SELECT DISTINCT doc_id, split, array_to_string(toks[i : i + 4], ' ') AS span
-      |  FROM (SELECT doc_id, split, toks, unnest(generate_series(1, len(toks) - 4)) AS i
-      |        FROM tok WHERE len(toks) >= 5)),
-      |tr AS (SELECT DISTINCT doc_id, span FROM spans WHERE split = 'train'),
-      |ev AS (SELECT DISTINCT span FROM spans WHERE split <> 'train')
-      |SELECT doc_id, count(*)::BIGINT AS n_leaked_spans
-      |FROM tr WHERE span IN (SELECT span FROM ev)
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    s"""WITH ${splitSpanCtes("")},
+       |tr AS (SELECT DISTINCT doc_id, span FROM spans WHERE split = 'train'),
+       |ev AS (SELECT DISTINCT span FROM spans WHERE split <> 'train')
+       |SELECT doc_id, count(*)::BIGINT AS n_leaked_spans
+       |FROM tr WHERE span IN (SELECT span FROM ev)
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------ canonical survivors
   /** Quality-aware dedup survivor selection: near-dup clusters (q52's
@@ -261,13 +272,7 @@ object Queries8 {
     * (`tools/VerifyScaled`). */
   def q104SqlWith(planes: Array[Array[Double]], bits: Int): String =
     s"""WITH RECURSIVE ${Queries3.rpPairsCte("embeddings", 0.35, planes, bits)},
-       |e AS (SELECT id_a AS s, id_b AS t FROM pairs
-       |      UNION ALL SELECT id_b AS s, id_a AS t FROM pairs),
-       |reach AS (
-       |  SELECT vec_id AS id, vec_id AS lbl FROM embeddings
-       |  UNION
-       |  SELECT e.t AS id, reach.lbl FROM reach JOIN e ON e.s = reach.id),
-       |comp AS (SELECT id AS vec_id, min(lbl) AS component FROM reach GROUP BY id),
+       |${Queries4.componentCtes("embeddings")},
        |qs AS (SELECT doc_id AS vec_id, ${Queries2.QualitySqlExpr} AS quality_e6
        |  FROM documents),
        |m AS (SELECT c.vec_id, c.component, qs.quality_e6
@@ -327,42 +332,16 @@ object Queries8 {
   }
 
   val q106Sql: String =
-    """WITH a AS (SELECT doc_id, text, source,
-      |    CASE WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f0' THEN 'train'
-      |         WHEN substring(md5(doc_id::VARCHAR), 1, 2) < 'f8' THEN 'val'
-      |         ELSE 'test' END AS split
-      |  FROM documents),
-      |tok AS (SELECT doc_id, split,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM a),
-      |spans AS (SELECT DISTINCT doc_id, split, array_to_string(toks[i : i + 4], ' ') AS span
-      |  FROM (SELECT doc_id, split, toks, unnest(generate_series(1, len(toks) - 4)) AS i
-      |        FROM tok WHERE len(toks) >= 5)),
+    s"""WITH ${splitSpanCtes(", source")},
       |ev AS (SELECT DISTINCT span FROM spans WHERE split <> 'train'),
       |dropl AS (SELECT DISTINCT doc_id FROM spans
       |  WHERE split = 'train' AND span IN (SELECT span FROM ev)),
       |t AS (SELECT doc_id, text, source FROM a WHERE split = 'train'),
       |l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM a),
-      |ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-      |  FROM l GROUP BY doc_id, line),
-      |la AS (SELECT doc_id, sum(c) AS n_lines, sum(c - 1) AS dup_lines,
-      |    sum((c - 1) * len) AS dup_chars, sum(c * len) AS tot_chars
-      |  FROM ls GROUP BY doc_id),
-      |sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
-      |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-      |        FROM tok WHERE len(toks) >= 2)),
-      |sc AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
-      |top AS (SELECT doc_id, c, span FROM (
-      |    SELECT doc_id, c, span,
-      |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
-      |    FROM sc) WHERE rk = 1),
+      |$lineDupCtes,
+      |${topBigramCtes("tok", "sc", "top")},
       |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM a),
-      |sig AS (SELECT b.doc_id,
-      |    (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
-      |    (CASE WHEN la.tot_chars = 0 THEN 0
-      |          ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT AS dup_line_char_ppm,
-      |    (CASE WHEN tp.c IS NULL OR b.n_norm = 0 THEN 0
-      |          ELSE tp.c * length(tp.span) * 1000000 // b.n_norm END)::BIGINT AS top_bigram_ppm
-      |  FROM base b JOIN la USING (doc_id) LEFT JOIN top tp USING (doc_id)),
+      |${repetitionSigCte("", "top", "tp")},
       |gf AS (SELECT doc_id FROM sig
       |  WHERE dup_line_ppm > 300000 OR dup_line_char_ppm > 200000
       |     OR top_bigram_ppm > 180000),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -16,8 +16,6 @@ import graft.ops.{Classify, Dedup, Mixture, Vocab}
   * Zipf regression (a ≤200-point double OLS).
   */
 object Queries9 {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val stopsSqlList: String =
     TextFns.Stopwords.map(s => s"'$s'").mkString(", ")
@@ -38,8 +36,10 @@ object Queries9 {
         carryCols = Seq("source"))
       .orderBy("doc_id")
 
-  val q108Sql: String =
-    s"""WITH t AS (SELECT doc_id, source, length(text) AS n_chars,
+  /** The classifier's feature CTEs: tokens and raw counts `t`, word and
+    * stopword counts `f`, integer ppm features `g` (q108, q113, q118). */
+  private def featureCtes: String =
+    s"""t AS (SELECT doc_id, source, length(text) AS n_chars,
        |    length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')) AS punct_chars,
        |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digit_chars,
        |    string_split_regex(lower(trim(text)), '\\s+') AS toks
@@ -52,7 +52,50 @@ object Queries9 {
        |    stop_hits * 1000000 // n_words AS stop_ppm,
        |    punct_chars * 1000000 // greatest(n_chars, 1) AS punct_ppm,
        |    digit_chars * 1000000 // greatest(n_chars, 1) AS digit_ppm
-       |  FROM f),
+       |  FROM f)""".stripMargin
+
+  /** q113/q118's classifier CTE `cls`: the logit cast to BIGINT, then
+    * `tail` (its alias, or a comparison and alias). */
+  private def clsCte(tail: String): String =
+    s"""cls AS (SELECT doc_id, source,
+       |    (${M.bias} + ${M.wStopPpm} * stop_ppm + ${M.wPunctPpm} * punct_ppm
+       |      + ${M.wDigitPpm} * digit_ppm
+       |      + ${M.wWordCap} * least(n_words, ${M.wordCap}))::BIGINT$tail
+       |  FROM g)""".stripMargin
+
+  /** q113/q118's repetition signals `sig` over the classifier's tokens `t`
+    * (the Queries8 gate CTEs with their names in this wave). */
+  private def gateSigCtes: String =
+    s"""l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM documents),
+       |${Queries8.lineDupCtes},
+       |${Queries8.topBigramCtes("t", "scnt", "topb")},
+       |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM documents),
+       |${Queries8.repetitionSigCte("", "topb", "tb")}""".stripMargin
+
+  /** The DSIR CTEs from bigrams of `tok(doc_id, source, toks)` to per-doc
+    * bigram counts and value-sorted log-ratio sums `w` (q112, q113). */
+  private def dsirCtes(tok: String): String =
+    s"""bg AS (SELECT doc_id, source, array_to_string(toks[i : i + 1], ' ') AS bg
+       |  FROM (SELECT doc_id, source, toks, unnest(generate_series(1, len(toks) - 1)) AS i
+       |        FROM $tok WHERE len(toks) >= 2)),
+       |bb AS (SELECT doc_id, source,
+       |    ('0x' || substring(md5(bg), 1, 4))::BIGINT % 256 AS bucket FROM bg),
+       |m AS (SELECT doc_id, bucket, count(*) AS m FROM bb GROUP BY doc_id, bucket),
+       |model AS (SELECT bucket,
+       |    sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ct,
+       |    sum(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS cr
+       |  FROM bb GROUP BY bucket),
+       |tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM model),
+       |contrib AS (SELECT m.doc_id, m.m,
+       |    m.m * ln((model.ct + 1.0) / (model.cr + 1.0)) AS c
+       |  FROM m JOIN model USING (bucket)),
+       |w AS (SELECT doc_id, sum(m)::BIGINT AS n_bigrams,
+       |    list_reduce(list_prepend(0.0::DOUBLE, list_sort(list(c))),
+       |                (a, b) -> a + b) AS s
+       |  FROM contrib GROUP BY doc_id)""".stripMargin
+
+  val q108Sql: String =
+    s"""WITH $featureCtes,
        |h AS (SELECT *,
        |    ${M.bias} + ${M.wStopPpm} * stop_ppm + ${M.wPunctPpm} * punct_ppm
        |      + ${M.wDigitPpm} * digit_ppm
@@ -157,26 +200,9 @@ object Queries9 {
       .orderBy("doc_id")
 
   val q112Sql: String =
-    """WITH tok AS (SELECT doc_id, source,
-      |    string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
-      |bg AS (SELECT doc_id, source, array_to_string(toks[i : i + 1], ' ') AS bg
-      |  FROM (SELECT doc_id, source, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-      |        FROM tok WHERE len(toks) >= 2)),
-      |bb AS (SELECT doc_id, source,
-      |    ('0x' || substring(md5(bg), 1, 4))::BIGINT % 256 AS bucket FROM bg),
-      |m AS (SELECT doc_id, bucket, count(*) AS m FROM bb GROUP BY doc_id, bucket),
-      |model AS (SELECT bucket,
-      |    sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ct,
-      |    sum(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS cr
-      |  FROM bb GROUP BY bucket),
-      |tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM model),
-      |contrib AS (SELECT m.doc_id, m.m,
-      |    m.m * ln((model.ct + 1.0) / (model.cr + 1.0)) AS c
-      |  FROM m JOIN model USING (bucket)),
-      |w AS (SELECT doc_id, sum(m)::BIGINT AS n_bigrams,
-      |    list_reduce(list_prepend(0.0::DOUBLE, list_sort(list(c))),
-      |                (a, b) -> a + b) AS s
-      |  FROM contrib GROUP BY doc_id)
+    s"""WITH tok AS (SELECT doc_id, source,
+      |    string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents),
+      |${dsirCtes("tok")}
       |SELECT d.doc_id, d.source,
       |  coalesce(w.n_bigrams, 0)::BIGINT AS n_bigrams,
       |  coalesce(w.s + w.n_bigrams * ln((tot.nr + 256.0) / (tot.nt + 256.0)), 0.0) AS weight
@@ -275,68 +301,13 @@ object Queries9 {
   }
 
   val q113Sql: String =
-    s"""WITH t AS (SELECT doc_id, source, length(text) AS n_chars,
-       |    length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')) AS punct_chars,
-       |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digit_chars,
-       |    string_split_regex(lower(trim(text)), '\\s+') AS toks
-       |  FROM documents),
-       |f AS (SELECT doc_id, source, n_chars, punct_chars, digit_chars,
-       |    len(toks) AS n_words,
-       |    len(list_filter(toks, t -> list_contains([$stopsSqlList], t))) AS stop_hits
-       |  FROM t),
-       |g AS (SELECT doc_id, source, n_words,
-       |    stop_hits * 1000000 // n_words AS stop_ppm,
-       |    punct_chars * 1000000 // greatest(n_chars, 1) AS punct_ppm,
-       |    digit_chars * 1000000 // greatest(n_chars, 1) AS digit_ppm
-       |  FROM f),
-       |cls AS (SELECT doc_id, source,
-       |    (${M.bias} + ${M.wStopPpm} * stop_ppm + ${M.wPunctPpm} * punct_ppm
-       |      + ${M.wDigitPpm} * digit_ppm
-       |      + ${M.wWordCap} * least(n_words, ${M.wordCap}))::BIGINT AS logit_e6
-       |  FROM g),
-       |l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM documents),
-       |ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-       |  FROM l GROUP BY doc_id, line),
-       |la AS (SELECT doc_id, sum(c) AS n_lines, sum(c - 1) AS dup_lines,
-       |    sum((c - 1) * len) AS dup_chars, sum(c * len) AS tot_chars
-       |  FROM ls GROUP BY doc_id),
-       |sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
-       |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-       |        FROM t WHERE len(toks) >= 2)),
-       |scnt AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
-       |topb AS (SELECT doc_id, c, span FROM (
-       |    SELECT doc_id, c, span,
-       |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
-       |    FROM scnt) WHERE rk = 1),
-       |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM documents),
-       |sig AS (SELECT b.doc_id,
-       |    (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
-       |    (CASE WHEN la.tot_chars = 0 THEN 0
-       |          ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT AS dup_line_char_ppm,
-       |    (CASE WHEN tb.c IS NULL OR b.n_norm = 0 THEN 0
-       |          ELSE tb.c * length(tb.span) * 1000000 // b.n_norm END)::BIGINT AS top_bigram_ppm
-       |  FROM base b JOIN la USING (doc_id) LEFT JOIN topb tb USING (doc_id)),
+    s"""WITH $featureCtes,
+       |${clsCte(" AS logit_e6")},
+       |$gateSigCtes,
        |gate AS (SELECT doc_id FROM sig
        |  WHERE dup_line_ppm <= 300000 AND dup_line_char_ppm <= 200000
        |    AND top_bigram_ppm <= 180000),
-       |bg AS (SELECT doc_id, source, array_to_string(toks[i : i + 1], ' ') AS bg
-       |  FROM (SELECT doc_id, source, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-       |        FROM t WHERE len(toks) >= 2)),
-       |bb AS (SELECT doc_id, source,
-       |    ('0x' || substring(md5(bg), 1, 4))::BIGINT % 256 AS bucket FROM bg),
-       |m AS (SELECT doc_id, bucket, count(*) AS m FROM bb GROUP BY doc_id, bucket),
-       |model AS (SELECT bucket,
-       |    sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS ct,
-       |    sum(CASE WHEN source <> 'src0' THEN 1 ELSE 0 END) AS cr
-       |  FROM bb GROUP BY bucket),
-       |tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM model),
-       |contrib AS (SELECT m.doc_id, m.m,
-       |    m.m * ln((model.ct + 1.0) / (model.cr + 1.0)) AS c
-       |  FROM m JOIN model USING (bucket)),
-       |w AS (SELECT doc_id, sum(m)::BIGINT AS n_bigrams,
-       |    list_reduce(list_prepend(0.0::DOUBLE, list_sort(list(c))),
-       |                (a, b) -> a + b) AS s
-       |  FROM contrib GROUP BY doc_id),
+       |${dsirCtes("t")},
        |dsir AS (SELECT d.doc_id,
        |    floor(coalesce(w.s + w.n_bigrams * ln((tot.nr + 256.0) / (tot.nt + 256.0)), 0.0)
        |          * 1000000.0 + 0.5)::BIGINT AS weight_e6
@@ -378,47 +349,9 @@ object Queries9 {
   }
 
   val q118Sql: String =
-    s"""WITH t AS (SELECT doc_id, source, length(text) AS n_chars,
-       |    length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')) AS punct_chars,
-       |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digit_chars,
-       |    string_split_regex(lower(trim(text)), '\\s+') AS toks
-       |  FROM documents),
-       |f AS (SELECT doc_id, source, n_chars, punct_chars, digit_chars,
-       |    len(toks) AS n_words,
-       |    len(list_filter(toks, t -> list_contains([$stopsSqlList], t))) AS stop_hits
-       |  FROM t),
-       |g AS (SELECT doc_id, source, n_words,
-       |    stop_hits * 1000000 // n_words AS stop_ppm,
-       |    punct_chars * 1000000 // greatest(n_chars, 1) AS punct_ppm,
-       |    digit_chars * 1000000 // greatest(n_chars, 1) AS digit_ppm
-       |  FROM f),
-       |cls AS (SELECT doc_id, source,
-       |    (${M.bias} + ${M.wStopPpm} * stop_ppm + ${M.wPunctPpm} * punct_ppm
-       |      + ${M.wDigitPpm} * digit_ppm
-       |      + ${M.wWordCap} * least(n_words, ${M.wordCap}))::BIGINT > 0 AS ckeep
-       |  FROM g),
-       |l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM documents),
-       |ls AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-       |  FROM l GROUP BY doc_id, line),
-       |la AS (SELECT doc_id, sum(c) AS n_lines, sum(c - 1) AS dup_lines,
-       |    sum((c - 1) * len) AS dup_chars, sum(c * len) AS tot_chars
-       |  FROM ls GROUP BY doc_id),
-       |sp AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS span
-       |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-       |        FROM t WHERE len(toks) >= 2)),
-       |scnt AS (SELECT doc_id, span, count(*) AS c FROM sp GROUP BY doc_id, span),
-       |topb AS (SELECT doc_id, c, span FROM (
-       |    SELECT doc_id, c, span,
-       |      row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, span ASC) AS rk
-       |    FROM scnt) WHERE rk = 1),
-       |base AS (SELECT doc_id, length(lower(trim(text))) AS n_norm FROM documents),
-       |sig AS (SELECT b.doc_id,
-       |    (la.dup_lines * 1000000 // la.n_lines)::BIGINT AS dup_line_ppm,
-       |    (CASE WHEN la.tot_chars = 0 THEN 0
-       |          ELSE la.dup_chars * 1000000 // la.tot_chars END)::BIGINT AS dup_line_char_ppm,
-       |    (CASE WHEN tb.c IS NULL OR b.n_norm = 0 THEN 0
-       |          ELSE tb.c * length(tb.span) * 1000000 // b.n_norm END)::BIGINT AS top_bigram_ppm
-       |  FROM base b JOIN la USING (doc_id) LEFT JOIN topb tb USING (doc_id)),
+    s"""WITH $featureCtes,
+       |${clsCte(" > 0 AS ckeep")},
+       |$gateSigCtes,
        |gv AS (SELECT doc_id,
        |    (dup_line_ppm <= 300000 AND dup_line_char_ppm <= 200000
        |     AND top_bigram_ppm <= 180000) AS gpass
@@ -453,19 +386,26 @@ object Queries9 {
         "vec_id", "embedding", semPlanes, SemBits)
       .orderBy("vec_id")
 
-  val q115Sql: String = {
+  /** The SemDeDup bucket CTEs: quantized vectors `q0`, their sign-RP
+    * bucket `k`, per-dimension quantized coordinates (named `e`) and
+    * bucket sizes `nb` (q115, q117). */
+  private def semBucketCtes(e: String): String = {
     val keyExpr = (0 until SemBits).map { b =>
       val plane = semPlanes(b).map(_.toInt).mkString("[", ",", "]")
       s"(CASE WHEN list_dot_product(qv, $plane::DOUBLE[]) >= 0 THEN ${1 << b} ELSE 0 END)"
     }.mkString(" + ")
-    s"""WITH q0 AS (SELECT vec_id, embedding,
+    s"""q0 AS (SELECT vec_id, embedding,
        |    list_transform(embedding, x -> floor(x::DOUBLE * 1000 + 0.5)) AS qv
        |  FROM embeddings),
        |k AS (SELECT vec_id, embedding, ($keyExpr)::BIGINT AS bucket FROM q0),
-       |e AS (SELECT vec_id, bucket, d,
+       |$e AS (SELECT vec_id, bucket, d,
        |    floor(embedding[d]::DOUBLE * 1000 + 0.5)::BIGINT AS qd
        |  FROM k, unnest(generate_series(1, len(embedding))) AS g(d)),
-       |nb AS (SELECT bucket, count(*)::BIGINT AS n_members FROM k GROUP BY bucket),
+       |nb AS (SELECT bucket, count(*)::BIGINT AS n_members FROM k GROUP BY bucket)""".stripMargin
+  }
+
+  val q115Sql: String =
+    s"""WITH ${semBucketCtes("e")},
        |s AS (SELECT bucket, d, sum(qd)::BIGINT AS sd FROM e GROUP BY bucket, d),
        |dist AS (SELECT e.vec_id, e.bucket, nb.n_members,
        |    sum((nb.n_members * e.qd - s.sd) * (nb.n_members * e.qd - s.sd))::BIGINT AS dist2
@@ -479,7 +419,6 @@ object Queries9 {
        |  d.vec_id = k2.keep_id AS keep
        |FROM dist d JOIN keep k2 USING (bucket)
        |ORDER BY d.vec_id""".stripMargin
-  }
 
   // ------------------------------------------------ embedding dispersion
   /** Per-label embedding dispersion (mean pairwise squared distance in
@@ -491,22 +430,28 @@ object Queries9 {
         Tables.embeddings(spark, dir), "label", "embedding")
       .orderBy("label")
 
+  /** Closed-form mean pairwise squared distance per `grp` from the
+    * quantized coordinates `rel(grp, d, q)`; `g` names the totals CTE
+    * (q116, q117). */
+  private def dispersionSql(grp: String, rel: String, g: String): String =
+    s"""byd AS (SELECT $grp, d, sum(q * q)::BIGINT AS sq, sum(q)::BIGINT AS s,
+       |    count(*)::BIGINT AS n
+       |  FROM $rel GROUP BY $grp, d),
+       |$g AS (SELECT $grp, any_value(n) AS n, sum(sq)::BIGINT AS a,
+       |    sum(s * s)::BIGINT AS b
+       |  FROM byd GROUP BY $grp)
+       |SELECT $grp, n,
+       |  (2 * n * a - 2 * b)::BIGINT AS pair_dist2_sum,
+       |  CASE WHEN n <= 1 THEN 0
+       |       ELSE (((2 * n * a - 2 * b)::HUGEINT * 1000000)
+       |             // (n * (n - 1)))::BIGINT END AS mean_dist2_e6
+       |FROM $g ORDER BY $grp""".stripMargin
+
   val q116Sql: String =
-    """WITH e AS (SELECT label, vec_id, d,
+    s"""WITH e AS (SELECT label, vec_id, d,
       |    floor(embedding[d]::DOUBLE * 1000 + 0.5)::BIGINT AS q
       |  FROM embeddings, unnest(generate_series(1, len(embedding))) AS g(d)),
-      |byd AS (SELECT label, d, sum(q * q)::BIGINT AS sq, sum(q)::BIGINT AS s,
-      |    count(*)::BIGINT AS n
-      |  FROM e GROUP BY label, d),
-      |g AS (SELECT label, any_value(n) AS n, sum(sq)::BIGINT AS a,
-      |    sum(s * s)::BIGINT AS b
-      |  FROM byd GROUP BY label)
-      |SELECT label, n,
-      |  (2 * n * a - 2 * b)::BIGINT AS pair_dist2_sum,
-      |  CASE WHEN n <= 1 THEN 0
-      |       ELSE (((2 * n * a - 2 * b)::HUGEINT * 1000000)
-      |             // (n * (n - 1)))::BIGINT END AS mean_dist2_e6
-      |FROM g ORDER BY label""".stripMargin
+      |${dispersionSql("label", "e", "g")}""".stripMargin
 
   // ----------------------------------------- semantic thinning capstone
   /** The SemDeDup before/after report as ONE plan: corpus-level embedding
@@ -530,19 +475,8 @@ object Queries9 {
       .orderBy("phase")
   }
 
-  val q117Sql: String = {
-    val keyExpr = (0 until SemBits).map { b =>
-      val plane = semPlanes(b).map(_.toInt).mkString("[", ",", "]")
-      s"(CASE WHEN list_dot_product(qv, $plane::DOUBLE[]) >= 0 THEN ${1 << b} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH q0 AS (SELECT vec_id, embedding,
-       |    list_transform(embedding, x -> floor(x::DOUBLE * 1000 + 0.5)) AS qv
-       |  FROM embeddings),
-       |k AS (SELECT vec_id, embedding, ($keyExpr)::BIGINT AS bucket FROM q0),
-       |ed AS (SELECT vec_id, bucket, d,
-       |    floor(embedding[d]::DOUBLE * 1000 + 0.5)::BIGINT AS qd
-       |  FROM k, unnest(generate_series(1, len(embedding))) AS g(d)),
-       |nb AS (SELECT bucket, count(*)::BIGINT AS n_members FROM k GROUP BY bucket),
+  val q117Sql: String =
+    s"""WITH ${semBucketCtes("ed")},
        |sb AS (SELECT bucket, d, sum(qd)::BIGINT AS sd FROM ed GROUP BY bucket, d),
        |dist AS (SELECT ed.vec_id, ed.bucket,
        |    sum((nb.n_members * ed.qd - sb.sd) * (nb.n_members * ed.qd - sb.sd))::BIGINT AS dist2
@@ -559,19 +493,7 @@ object Queries9 {
        |pe AS (SELECT phase, vec_id, d,
        |    floor(embedding[d]::DOUBLE * 1000 + 0.5)::BIGINT AS q
        |  FROM ph, unnest(generate_series(1, len(embedding))) AS g(d)),
-       |byd AS (SELECT phase, d, sum(q * q)::BIGINT AS sq, sum(q)::BIGINT AS s,
-       |    count(*)::BIGINT AS n
-       |  FROM pe GROUP BY phase, d),
-       |gg AS (SELECT phase, any_value(n) AS n, sum(sq)::BIGINT AS a,
-       |    sum(s * s)::BIGINT AS b
-       |  FROM byd GROUP BY phase)
-       |SELECT phase, n,
-       |  (2 * n * a - 2 * b)::BIGINT AS pair_dist2_sum,
-       |  CASE WHEN n <= 1 THEN 0
-       |       ELSE (((2 * n * a - 2 * b)::HUGEINT * 1000000)
-       |             // (n * (n - 1)))::BIGINT END AS mean_dist2_e6
-       |FROM gg ORDER BY phase""".stripMargin
-  }
+       |${dispersionSql("phase", "pe", "gg")}""".stripMargin
 
   // ------------------------------------------------ cross-doc span dedup
   /** Cross-document repeated-span dedup (Lee et al. 2022 suffix-array
@@ -587,9 +509,11 @@ object Queries9 {
 
   private val SpanK = 8
 
-  val q119Sql: String = {
-    val k = SpanK
-    s"""WITH t AS (SELECT doc_id,
+  /** Cross-document k-token span CTEs over tokens `t`: span fingerprints
+    * `sp`, their corpus order `ne` and document counts `nd`, and the
+    * non-first occurrences of multi-document spans `cut` (q119, q197). */
+  private[graft] def spanCutCtes(k: Int): String =
+    s"""t AS (SELECT doc_id,
        |    string_split_regex(lower(trim(text)), '\\s+') AS toks
        |  FROM documents),
        |sp AS (SELECT doc_id, i AS pos,
@@ -602,7 +526,11 @@ object Queries9 {
        |  FROM sp),
        |nd AS (SELECT fp, count(DISTINCT doc_id) AS ndocs FROM sp GROUP BY fp),
        |cut AS (SELECT ne.doc_id, ne.pos FROM ne JOIN nd USING (fp)
-       |  WHERE nd.ndocs > 1 AND ne.rn > 1),
+       |  WHERE nd.ndocs > 1 AND ne.rn > 1)""".stripMargin
+
+  val q119Sql: String = {
+    val k = SpanK
+    s"""WITH ${spanCutCtes(k)},
        |cov AS (SELECT DISTINCT doc_id, p FROM (
        |    SELECT doc_id, pos + unnest(generate_series(0, ${k - 1})) AS p
        |    FROM cut)),

@@ -57,8 +57,7 @@ object SparkEntry {
 
 /** One registered query: its name, its Spark plan over a fixture dir, and
   * the DuckDB SQL the oracle compare runs on the same parquet tables. */
-final case class QueryDef(name: String,
-    run: (SparkSession, String) => DataFrame, oracleSql: String)
+final case class QueryDef(name: String, run: Q, oracleSql: String)
 
 object QueryDef {
   /** Index by name. A duplicate name throws: a later wave must not

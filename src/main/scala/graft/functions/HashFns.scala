@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Portable (engine-agnostic) hashing built on md5, for operators whose
   * results must be reproducible by the DuckDB oracle (which lacks xxhash64).
-  * Perf-critical paths keep the xxhash64 variants in [[VectorFns]]; these md5
-  * forms are the correctness-checkable spellings of the same algorithms.
+  * The xxhash64 SimHash ([[VectorFns.simHash]]) is the Spark-only fast
+  * spelling; these md5 forms are the correctness-checkable ones.
   * Everything here is a composition of codegen'd built-ins — no UDFs.
   */
 object HashFns {

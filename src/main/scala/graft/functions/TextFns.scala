@@ -81,7 +81,7 @@ object TextFns {
     * imperatively — its n=1 output IS this token stream, cross-checked in
     * VocabSpec. DuckDB oracles mirror it as
     * `string_split_regex(lower(trim(text)), '\s+')`. Consumers:
-    * [[stopwordRatio]], [[langHits]], Vocab/DSIR, Classify features,
+    * [[stopwordRatio]], Vocab/DSIR, Classify features,
     * crossDocSpanDedup. */
   def wordTokens(c: Column): Column = split(lower(trim(c)), "\\s+")
 
@@ -98,17 +98,10 @@ object TextFns {
   }
 
   /** Composite quality score in [0,1]: blend of length, punctuation and
-    * stopword signals (training-data quality-scoring extension). */
-  def qualityScore(c: Column): Column = {
-    val lenScore = least(length(c).cast("double") / lit(500.0), lit(1.0))
-    val punctPenalty = greatest(lit(1.0) - punctRatio(c) * 5.0, lit(0.0))
-    val stopScore = least(stopwordRatio(c) * 5.0, lit(1.0))
-    round(lenScore * 0.4 + punctPenalty * 0.3 + stopScore * 0.3, 6)
-  }
-
-  /** [[qualityScore]] in integer micro-units via floor(x*1e6 + 0.5) — the
-    * same IEEE double ops in any engine, so oracle hash-comparable with no
-    * round-half-way ambiguity (Spark HALF_UP vs DuckDB's libm rounding). */
+    * stopword signals (training-data quality-scoring extension), in
+    * integer micro-units via floor(x*1e6 + 0.5) — the same IEEE double ops
+    * in any engine, so oracle hash-comparable with no round-half-way
+    * ambiguity (Spark HALF_UP vs DuckDB's libm rounding). */
   def qualityScoreMicro(c: Column): Column = {
     val lenScore = least(length(c).cast("double") / lit(500.0), lit(1.0))
     val punctPenalty = greatest(lit(1.0) - punctRatio(c) * 5.0, lit(0.0))
@@ -153,17 +146,6 @@ object TextFns {
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "ein"),
     "es" -> Seq("el", "los", "es", "una", "por", "que", "para"),
     "zh" -> Seq("的", "是", "了", "在", "我", "不", "人"))
-
-  /** Per-language marker-hit counts over whitespace tokens — one
-    * `size(filter(...))` per language. Project these ONCE (as columns),
-    * then pick with [[langPick]]: inlining them into the pick chain would
-    * evaluate each count ~(n_langs − 1) times per row. */
-  def langHits(c: Column): Seq[(String, Column)] = {
-    val toks = wordTokens(c)
-    LangMarkers.map { case (lang, markers) =>
-      lang -> size(filter(toks, t => t.isin(markers: _*)))
-    }
-  }
 
   /** Priority-chain pick over already-projected hit-count columns: the
     * first language (in [[LangMarkers]] order) whose count is positive and

@@ -65,14 +65,6 @@ object VectorFns {
   def simHash(tokens: Column): Column =
     simHashFromHashes(transform(tokens, t => xxhash64(t)), 64)
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * minimum of xxhash64(seed, element) over the shingle array. Returns
-    * array<long> of length `numHashes`. */
-  def minHashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingles, s => xxhash64(lit(seed), s)))
-    }: _*)
-
   /** Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

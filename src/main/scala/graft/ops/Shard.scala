@@ -192,22 +192,11 @@ object Shard {
     * survivors). That is the property a 100 TB shard layout needs: going
     * 1024 → 1280 shards rewrites 20% of the bytes, not 99%.
     *
-    * Cost is numShards digests per row, map-side (no shuffle); for the
-    * oracle-free deploy path use [[rendezvousShardFast]] (one xxhash64
-    * per shard — Spark-specific, not engine-portable). */
+    * Cost is numShards digests per row, map-side (no shuffle). */
   def rendezvousShard(id: Column, numShards: Int): Column = {
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
     val arr = transform(sequence(lit(0), lit(numShards - 1)),
       s => md5(concat(id.cast("string"), lit(":"), s.cast("string"))))
-    (array_position(arr, array_max(arr)) - 1L).cast("long")
-  }
-
-  /** xxhash64 spelling of [[rendezvousShard]] — the fast path for the
-    * real export (not oracle-comparable: xxhash64 is Spark-specific). */
-  def rendezvousShardFast(id: Column, numShards: Int): Column = {
-    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
-    val arr = transform(sequence(lit(0), lit(numShards - 1)),
-      s => xxhash64(id.cast("string"), s))
     (array_position(arr, array_max(arr)) - 1L).cast("long")
   }
 

@@ -1,7 +1,5 @@
 package graft.schema
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.types._
 
 /** Explicit schemas for the unified data model (SURVEY.md §1.4).
@@ -36,19 +34,4 @@ object Schemas {
     StructField("score", LongType, nullable = true),
     StructField("created_utc", TimestampType, nullable = true),
     StructField("parent_post_id", StringType, nullable = false)))
-
-  /** Vector-index row — the engine's Parquet replacement for the Qdrant
-    * collection (reference: PLATFORM-contextual-Chunking.py:137-151). */
-  val vectorIndex: StructType = StructType(Seq(
-    StructField("vec_id", LongType, nullable = false),
-    StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false),
-    StructField("id_post", StringType, nullable = true)))
 }
-
-/** Typed rows for Dataset[T] use where compile-time safety helps. */
-case class Post(platform: String, community: String, id_post: String,
-    title: String, body: String, score: java.lang.Long,
-    date: Timestamp, link: String, num_comments: java.lang.Long)
-
-case class Comment(id_comment: String, body: String, score: java.lang.Long,
-    created_utc: Timestamp, parent_post_id: String)

@@ -143,7 +143,7 @@ object PlanAudit {
     * and compares the rows to the committed `PLAN_CENSUS.txt`; the main
     * above prints it. */
   def runAudit(spark: SparkSession, sfDir: String,
-      queries: Map[String, graft.Queries.Q] = graft.SparkEntry.queries)
+      queries: Map[String, graft.Q] = graft.SparkEntry.queries)
       : Seq[(String, String)] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // frame CONSTRUCTION can throw too (eager checkpoint inputs) — that

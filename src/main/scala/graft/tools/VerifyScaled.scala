@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, size}
 
 import graft._
@@ -30,8 +30,6 @@ import graft.ops.{Dedup, Similarity}
   * the slow half of the check.
   */
 object VerifyScaled {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The fixture-derived knobs the [[overrides]] spell their plans and
     * oracle SQL at: LSH band bits and random planes for the embedding
     * count, SimHash bucket bits for the document count, and the BM25
@@ -67,7 +65,7 @@ object VerifyScaled {
 
   /** Scale spellings keyed by the registered query they replace, or by a
     * `name_suffix` variant they add: (plan, oracle SQL) at a [[Scale]]. */
-  val overrides: Map[String, Scale => (Q, String)] = Map(
+  val overrides: Map[String, Scale => (graft.Q, String)] = Map(
     // the LSH-graph capstones at deployment-correct resolution: bits from
     // lshBitsFor(n) keep bucket occupancy constant at any k×, so
     // candidate work stays linear in n

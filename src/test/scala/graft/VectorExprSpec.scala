@@ -74,9 +74,15 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(k1.forall { case (_, ks) => ks.length == 3 && ks.forall(k => k >= 0 && k < 16) })
     assert(k1 == keys()) // deterministic across plans/runs
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    val prevMode = spark.conf.get("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // without NO_CODEGEN, projections still compile the expression's code
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try assert(k1 == keys()) // interpreted eval matches codegen
-    finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", prev)
+      spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
+    }
   }
 
   test("rpLshNearDup pairs are a subset of the exact near-dup pairs at the same threshold") {
@@ -93,7 +99,10 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks {
   test("CosineSim works in interpreted (non-codegen) eval too") {
     // force interpreted path by evaluating through a filter on a tiny plan
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    val prevMode = spark.conf.get("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // without NO_CODEGEN, projections still compile the expression's code
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
       val df = randVecs(20, 8, 3L).toDF("id", "v")
       val out = df.as("a").join(df.as("b"), $"a.id" < $"b.id")
@@ -104,6 +113,9 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks {
         assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
           java.lang.Double.doubleToLongBits(r.getDouble(1)))
       }
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", prev)
+      spark.conf.set("spark.sql.codegen.factoryMode", prevMode)
+    }
   }
 }

@@ -180,13 +180,5 @@ class Wave37Spec extends SparkSpec {
     assert(moved.filter(col("nw") < 4).count() == 0L)
     // shards in range
     assert(both.filter(col("nw") < 0 || col("nw") > 7).count() == 0L)
-    // fast spelling agrees with itself across partitionings (determinism)
-    val f1 = ids.repartition(3)
-      .select(Shard.rendezvousShardFast(col("doc_id"), 8).as("s"))
-      .groupBy("s").count().orderBy("s").as[(Long, Long)].collect().toSeq
-    val f2 = ids.repartition(7)
-      .select(Shard.rendezvousShardFast(col("doc_id"), 8).as("s"))
-      .groupBy("s").count().orderBy("s").as[(Long, Long)].collect().toSeq
-    assert(f1 == f2)
   }
 }
