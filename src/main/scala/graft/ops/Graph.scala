@@ -36,9 +36,8 @@ object Graph {
     *
     * Scale shape: the edge list is the big side and is touched once per
     * round through an equi-join on `srcCol`; the rank frame is |V| rows.
-    * Lineage is cut every round (lazy localCheckpoint, the [[Components]]
-    * discipline) so deep iteration counts neither replan nor re-execute
-    * the whole chain per action.
+    * Lineage is cut every round (lazy localCheckpoint) so deep iteration
+    * counts neither replan nor re-execute the whole chain per action.
     *
     * Output: (node, rank_ppb, in_degree, out_degree). */
   def pageRankPpb(edges: DataFrame, srcCol: String, dstCol: String,
