@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
@@ -9,7 +12,8 @@ import graft.functions.VectorFns
 /** The fused codegen kernels must be BITWISE identical to the HOF reference
   * forms (same left-to-right double accumulation) — the oracle hash-compare
   * depends on it. */
-class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks {
+class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def randVecs(n: Int, dim: Int, seed: Long): Seq[(Long, Seq[Float])] = {
@@ -94,6 +98,72 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(rp.nonEmpty, "LSH should surface at least one candidate pair on the fixture")
     assert(rp.subsetOf(exact), "every LSH-verified pair must be an exact pair")
+  }
+
+  /** The all-tables spelling of [[ops.Similarity.rpLshNearDup]]: join on
+    * every (table, bucket), `distinct` the pairs, verify. */
+  private def rpLshAllTables(e: DataFrame, threshold: Double): DataFrame = {
+    val keyed = e.select(col("vec_id"), posexplode(VectorExprs.signRpBuckets(
+      col("embedding"), Queries3.rpPlanes, Queries3.rpBits, 1000.0)).as(Seq("t", "key")))
+    val cand = keyed.select(col("t"), col("key"), col("vec_id").as("id_a"))
+      .join(keyed.select(col("t"), col("key"), col("vec_id").as("id_b")), Seq("t", "key"))
+      .filter(col("id_a") < col("id_b"))
+    val emb = e.select(col("vec_id"), col("embedding"))
+    cand.select(col("id_a"), col("id_b")).distinct()
+      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("vec_a")), Seq("id_a"))
+      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("vec_b")), Seq("id_b"))
+      .withColumn("sim", round(VectorExprs.cosine(col("vec_a"), col("vec_b")), 6))
+      .filter(col("sim") >= threshold)
+      .select(col("id_a"), col("id_b"), col("sim"))
+  }
+
+  test("rpLshNearDup emits each candidate once, from its first shared table") {
+    val e = io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    // sim >= -2 keeps every candidate, so the output IS the candidate set
+    val got = ops.Similarity.rpLshNearDup(e, "vec_id", "embedding",
+      Queries3.rpPlanes, Queries3.rpBits, -2.0).as[(Long, Long, Double)].collect()
+    val want = rpLshAllTables(e, -2.0).as[(Long, Long, Double)].collect()
+    assert(got.sorted.toSeq == want.sorted.toSeq)
+    // the fixture has pairs sharing a bucket in several tables, which the
+    // first-table rule must emit once
+    val keys = e.select(col("vec_id"), VectorExprs.signRpBuckets(
+        col("embedding"), Queries3.rpPlanes, Queries3.rpBits, 1000.0).as("k"))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(want.exists { case (a, b, _) => keys(a).zip(keys(b)).count(p => p._1 == p._2) > 1 })
+  }
+
+  test("rpLshNearDup pins its bucket and verify exchanges to the shuffle parallelism") {
+    val e = io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect()
+      collect(df.queryExecution.executedPlan) { case x: ShuffleExchangeExec => x }
+    }
+    def pinned(xs: Seq[ShuffleExchangeExec]): Set[(Seq[String], Int)] = xs.collect {
+      case x if x.shuffleOrigin == REPARTITION_BY_NUM =>
+        val p = x.outputPartitioning.asInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
+        (p.expressions.map(_.references.head.name), p.numPartitions)
+    }.toSet
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val want = Set((Seq("t", "key"), n), (Seq("id_a"), n))
+    def rp = ops.Similarity.rpLshNearDup(e, "vec_id", "embedding",
+      Queries3.rpPlanes, Queries3.rpBits, 0.3)
+    // broadcast scale (this fixture): the two pinned exchanges and nothing
+    // else — one more than the all-tables spelling, whose bucket join
+    // broadcasts straight from the scan and whose only exchange is the
+    // `distinct`'s
+    val small = shuffles(rp)
+    assert(pinned(small) == want && small.size == 2, small)
+    assert(shuffles(rpLshAllTables(e, 0.3)).size == 1)
+    // shuffle-join scale: the (id_a) pin is the verify join's own
+    // partitioning, so the new spelling has one exchange fewer
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val big = shuffles(rp)
+      assert(pinned(big) == want, big)
+      assert(big.size < shuffles(rpLshAllTables(e, 0.3)).size, big)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("CosineSim works in interpreted (non-codegen) eval too") {
