@@ -1,11 +1,15 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Codegen'd dense-vector kernels over `array<float>` / `array<double>`.
   *
@@ -35,6 +39,11 @@ object VectorExprs {
       bitsPerTable: Int, quantScale: Double): Column =
     ExpressionUtils.column(SignRpBuckets(ExpressionUtils.expression(vec),
       planes, bitsPerTable, quantScale))
+
+  /** Column wrapper for [[BucketPairs]]. */
+  def bucketPairs(members: Column, table: Column, floor: Double): Column =
+    ExpressionUtils.column(BucketPairs(ExpressionUtils.expression(members),
+      ExpressionUtils.expression(table), floor))
 
   /** Deterministic ±1 (Rademacher) hyperplanes, `numPlanes × dim`, from a
     * seeded java LCG — reproducible across JVMs and inlinable into oracle
@@ -71,58 +80,78 @@ trait VectorKernel { self: BinaryExpression =>
 
 /** Fused cosine similarity: dot(a,b) / (||a|| * ||b||); 0.0 when either norm
   * is 0 (matches VectorFns.cosine / the reference's Qdrant COSINE metric,
-  * reference: PLATFORM-contextual-Chunking.py:137-144). */
+  * reference: PLATFORM-contextual-Chunking.py:137-144).
+  *
+  * The generated code calls [[CosineSim.eval]]: one small static loop that
+  * the JIT compiles once and every query shares, where a loop spelled into
+  * each whole-stage method is compiled anew per generated class (and not at
+  * all once the method outgrows the JIT's size limit — an LSH verify join
+  * runs it a few hundred thousand times per flow). */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression with VectorKernel {
+
+  private def isFloat(e: Expression) = elemGetter(e) == "getFloat"
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
+    if (a.numElements() != b.numElements() || CosineSim.anyNull(a) || CosineSim.anyNull(b)) null
+    else CosineSim.eval(a, isFloat(left), b, isFloat(right))
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the companion's module instance: its `eval` gets no static forwarder,
+    // the class's own `eval(InternalRow)` holds the name
+    val k = CosineSim.getClass.getName + ".MODULE$"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |if ($a.numElements() != $b.numElements() || $k.anyNull($a) || $k.anyNull($b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = $k.eval($a, ${isFloat(left)}, $b, ${isFloat(right)});
+         |}
+       """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSim {
+
+  /** Whether any element of `a` is null. An `UnsafeArrayData` answers from
+    * its null bitmap, a word per 64 elements. */
+  def anyNull(a: ArrayData): Boolean = a match {
+    case u: UnsafeArrayData =>
+      val words = (u.numElements() + 63) / 64
+      var i = 0
+      while (i < words) {
+        if (Platform.getLong(u.getBaseObject, u.getBaseOffset + 8L + 8L * i) != 0L) return true
+        i += 1
+      }
+      false
+    case _ =>
+      var i = 0
+      while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+      false
+  }
+
+  /** Cosine of two equal-length, null-free arrays, accumulated left to right
+    * in double (`aFloat`/`bFloat`: element type float, else double). */
+  def eval(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = elemAt(a, left, i); val y = elemAt(b, right, i)
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (getA, getB) = (elemGetter(left), elemGetter(right))
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val denom = ctx.freshName("denom")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    final double $x = (double) $a.$getA($i);
-         |    final double $y = (double) $b.$getB($i);
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    final double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |    ${ev.value} = $denom == 0.0 ? 0.0 : $dot / $denom;
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Sign-random-projection LSH bucket keys — the deterministic, engine-
@@ -137,9 +166,10 @@ case class CosineSim(left: Expression, right: Expression)
   * Output: one key per table; key = bitmask of `dot(q, plane) >= 0` over
   * that table's `bitsPerTable` consecutive planes.
   *
-  * One fused pass per row (quantize once, then planes × dim multiply-adds),
-  * generated into whole-stage codegen; planes ride along as a reference
-  * object, not a per-row literal.
+  * One fused pass per row (quantize once, then planes × dim multiply-adds)
+  * in [[SignRpBuckets.keys]], which the generated code calls: a static loop
+  * the JIT compiles once for every query, as [[CosineSim.eval]] is. Planes
+  * ride along as a reference object, not a per-row literal.
   */
 case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
     bitsPerTable: Int, quantScale: Double)
@@ -147,27 +177,47 @@ case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
   require(planes.nonEmpty && planes.length % bitsPerTable == 0,
     s"planes(${planes.length}) must be a multiple of bitsPerTable($bitsPerTable)")
 
-  private val numTables = planes.length / bitsPerTable
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  private def elemAt(a: ArrayData, i: Int): Double = child.dataType match {
-    case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-    case ArrayType(DoubleType, _) => a.getDouble(i)
+  private def isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case ArrayType(DoubleType, _) => false
     case t => throw new IllegalArgumentException(s"bad element type $t")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SignRpBuckets.keys(input.asInstanceOf[ArrayData], isFloat, planes, bitsPerTable, quantScale)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
+    val k = SignRpBuckets.getClass.getName + ".MODULE$"
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""
+         |${ev.value} = $k.keys($a, $isFloat, $planesRef, $bitsPerTable, ${quantScale}D);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SignRpBuckets {
+
+  /** One key per table of `bitsPerTable` planes; null when `a` holds a null
+    * element (`isFloat`: element type float, else double). */
+  def keys(a: ArrayData, isFloat: Boolean, planes: Array[Array[Double]], bitsPerTable: Int,
+      quantScale: Double): ArrayData = {
     val n = a.numElements()
     val q = new Array[Double](n)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
-      q(i) = math.floor(elemAt(a, i) * quantScale + 0.5)
+      q(i) = math.floor((if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)) * quantScale + 0.5)
       i += 1
     }
+    val numTables = planes.length / bitsPerTable
     val keys = new Array[Long](numTables)
     var t = 0
     while (t < numTables) {
@@ -185,51 +235,87 @@ case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
       keys(t) = key
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(keys)
+    UnsafeArrayData.fromPrimitiveArray(keys)
+  }
+}
+
+/** The near pairs of one sign-RP LSH bucket, for
+  * [[graft.ops.Similarity.rpLshNearDup]]. `members` is the bucket's
+  * `array<struct<id, keys, vec>>` (id of any ordered type, the vector's
+  * per-table key array, the vector); `table` is the bucket's table index.
+  * Returns `array<struct<id_a, id_b, cos>>`: every member pair with
+  * id_a < id_b whose key arrays agree at no table below `table` (so a pair
+  * sharing buckets in several tables is compared only in the first), whose
+  * vectors are null-free and of one length, and whose [[CosineSim]] value is
+  * at least `floor`. The cosine is [[CosineSim.eval]], bit for bit.
+  *
+  * Called once per bucket, so it is evaluated, not generated: the pairwise
+  * loop is compiled code that every query shares. */
+case class BucketPairs(members: Expression, table: Expression, floor: Double)
+    extends BinaryExpression with CodegenFallback {
+
+  override def left: Expression = members
+  override def right: Expression = table
+
+  private def memberType = members.dataType.asInstanceOf[ArrayType].elementType
+    .asInstanceOf[StructType]
+  private lazy val idType = memberType.head.dataType
+  private lazy val idOrdering = PhysicalDataType.ordering(idType)
+  private lazy val vecFloat = memberType(2).dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getter = child.dataType match {
-      case ArrayType(FloatType, _) => "getFloat"
-      case ArrayType(DoubleType, _) => "getDouble"
-      case t => throw new IllegalArgumentException(s"bad element type $t")
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("id_a", idType), StructField("id_b", idType),
+    StructField("cos", DoubleType, nullable = false))), containsNull = false)
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(m: Any, t: Any): Any = {
+    val arr = m.asInstanceOf[ArrayData]
+    val tbl = t.asInstanceOf[Int]
+    val n = arr.numElements()
+    val ids = new Array[Any](n)
+    val keys = new Array[ArrayData](n)
+    val vecs = new Array[ArrayData](n)
+    var i = 0
+    while (i < n) {
+      val r = arr.getStruct(i, 3)
+      ids(i) = if (r.isNullAt(0)) null else r.get(0, idType)
+      keys(i) = r.getArray(1)
+      val v = if (r.isNullAt(2)) null else r.getArray(2)
+      vecs(i) = if (v == null || CosineSim.anyNull(v)) null else v
+      i += 1
     }
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val q = ctx.freshName("q"); val keys = ctx.freshName("keys")
-      val t = ctx.freshName("t"); val b = ctx.freshName("b")
-      val p = ctx.freshName("p"); val dot = ctx.freshName("dot")
-      val j = ctx.freshName("j"); val d = ctx.freshName("d")
-      val key = ctx.freshName("key")
-      s"""
-         |final int $n = $a.numElements();
-         |final double[] $q = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $q[$i] = java.lang.Math.floor(((double) $a.$getter($i)) * ${quantScale}D + 0.5D);
-         |}
-         |if (!${ev.isNull}) {
-         |  final long[] $keys = new long[$numTables];
-         |  for (int $t = 0; $t < $numTables; $t++) {
-         |    long $key = 0L;
-         |    for (int $b = 0; $b < $bitsPerTable; $b++) {
-         |      final double[] $p = $planesRef[$t * $bitsPerTable + $b];
-         |      final int $d = java.lang.Math.min($n, $p.length);
-         |      double $dot = 0.0;
-         |      for (int $j = 0; $j < $d; $j++) $dot += $q[$j] * $p[$j];
-         |      if ($dot >= 0.0) $key |= (1L << $b);
-         |    }
-         |    $keys[$t] = $key;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-         |}
-       """.stripMargin
-    })
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n) {
+        if (ids(i) != null && ids(j) != null && vecs(i) != null && vecs(j) != null &&
+            vecs(i).numElements() == vecs(j).numElements()) {
+          val c = idOrdering.compare(ids(i), ids(j))
+          if (c != 0) {
+            val a = if (c < 0) i else j
+            val b = i + j - a
+            var k = 0
+            while (k < tbl && keys(a).getLong(k) != keys(b).getLong(k)) k += 1
+            if (k == tbl) {
+              val cos = CosineSim.eval(vecs(a), vecFloat, vecs(b), vecFloat)
+              if (cos >= floor) out += InternalRow(ids(a), ids(b), cos)
+            }
+          }
+        }
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray[Any])
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(members = newLeft, table = newRight)
 }
 
 /** Fused dot product: sum_i a_i * b_i (double, left-to-right). */

@@ -252,41 +252,40 @@ object Similarity {
   /** Sign-random-projection LSH near-dup — the deterministic scale path for
     * "find similar pairs with no coarse label": bucket each vector by the
     * sign pattern of `bitsPerTable` seeded ±1 hyperplane projections
-    * (numTables independent tables), generate candidate pairs only within a
-    * (table, bucket) — an EQUI-join, shuffled on the bucket key, never a
-    * cross product — then verify candidates with exact cosine.
+    * (numTables independent tables), compare vectors only within a
+    * (table, bucket) — grouped by the bucket key, never a cross product —
+    * and keep the pairs whose exact cosine reaches `threshold`.
     *
     * Unlike [[brpLshNearDup]] (MLlib, Gaussian planes no other engine can
     * reproduce) this is hash-checkable end-to-end against DuckDB: the
     * bucket keys come from exact integer arithmetic ([[graft.expr.SignRpBuckets]]).
     *
-    * Each candidate pair is emitted once, by the FIRST table in which its
-    * two vectors share a bucket: every exploded row carries its vector's
-    * whole key array, and the bucket join keeps a pair only where `t` is
-    * the lowest index at which the arrays agree. That is exactly the set a
-    * `distinct` over all colliding tables would keep (`idCol` is a key, as
-    * the verify join already assumes), with no aggregation: the candidate
-    * frame needs no dedupe exchange, and no map-side combine whose effect
-    * depends on which task saw which table.
+    * Plan: one exchange. Each vector's row is exploded once per table,
+    * carrying its id, its whole key array and the vector, and repartitioned
+    * on (t, key); the bucket's members are collected on that same
+    * partitioning, and [[graft.expr.BucketPairs]] compares them pairwise in
+    * one compiled loop per bucket. A pair is compared only in the FIRST
+    * table where its two key arrays agree, so each pair is verified once —
+    * the set a `distinct` over every colliding table would keep — and the
+    * kernel returns only pairs with cosine ≥ threshold − 1e-6, which
+    * `round(·, 6)` then filters exactly: rounding to 6 places moves a value
+    * by at most 5e-7. No candidate frame exists: the kernel replaces a
+    * bucket self-join (occupancy² joined rows per bucket) and a verify join
+    * that looked both vectors up per candidate, which together ran every
+    * candidate through freshly generated code on every query (327,567 of
+    * them per `pipeline_scaled` flow, to keep 997).
     *
-    * Both exchanges carry an explicit partition count (the session's
-    * shuffle parallelism): the (t, key) repartition that both join sides
-    * read, and an (id_a) repartition in front of the cosine verify.
-    * Their bytes are small — N·tables key rows, one row per distinct
-    * candidate — while their WORK is per-bucket occupancy² candidates and a
-    * full-vector cosine per candidate, which AQE's byte-based coalescing
-    * cannot see: left adaptive, the `pipeline_scaled` fixture's join ran on
-    * 1 task and its 327,567-candidate verify on 2. Same pattern and
-    * rationale as [[Retrieval.bm25ScoresTerms]]'s doc repartition. The
-    * verify exchange is keyed by `id_a` alone: that is the verify join's
-    * own key, so at shuffle-join scale it replaces the join's exchange
-    * instead of adding one, and it keeps a vector's candidates in one
-    * block, which compresses better (12.6 M candidates of the 8× sf0.1
-    * fixture: 70.5 MB written, against 81.2 MB keyed by (id_a, id_b)).
+    * The exchange carries an explicit partition count, the session's
+    * shuffle parallelism: its bytes are N·tables vector rows, while its
+    * work is occupancy² comparisons per bucket, which AQE's byte-based
+    * coalescing cannot see (left adaptive, the `pipeline_scaled` fixture's
+    * candidate join ran on 1 task). Same pattern and rationale as
+    * [[Retrieval.bm25ScoresTerms]]'s doc repartition.
     *
-    * At 100 TB: candidates per bucket scale with collision probability
-    * (1 - θ/π)^bits — tune bits up to keep buckets bounded; the verify join
-    * re-reads only candidate ids (a semi-join-shaped probe of the index).
+    * At 100 TB: comparisons per bucket scale with collision probability
+    * (1 - θ/π)^bits — tune bits up to keep buckets bounded ([[lshBitsFor]]);
+    * the shuffle is N·tables vectors, against a candidate join's
+    * candidates × vector lookups.
     */
   def rpLshNearDup(df: DataFrame, idCol: String, vecCol: String,
       planes: Array[Array[Double]], bitsPerTable: Int, threshold: Double,
@@ -296,27 +295,20 @@ object Similarity {
     // explode the table indices, not the key array: a generator over the
     // `keys` column gets `size(keys) > 0` inferred and pushed below the
     // projection, hashing every vector three times
-    val keyed = df.select(col(idCol), graft.expr.VectorExprs.signRpBuckets(
+    val buckets = df.filter(col(idCol).isNotNull)
+      .select(col(idCol).as("id"), col(vecCol).as("vec"), graft.expr.VectorExprs.signRpBuckets(
         col(vecCol), planes, bitsPerTable, quantScale).as("keys"))
-      .select(col(idCol), col("keys"), explode(lit((0 until tables).toArray)).as("t"))
+      .select(col("id"), col("keys"), col("vec"), explode(lit((0 until tables).toArray)).as("t"))
       .withColumn("key", col("keys")(col("t")))
+      .filter(col("key").isNotNull)
       .repartition(shufN, col("t"), col("key"))
-    val a = keyed.select(col("t"), col("key"), col(idCol).as("id_a"), col("keys").as("keys_a"))
-    val b = keyed.select(col("t"), col("key"), col(idCol).as("id_b"), col("keys").as("keys_b"))
-    val firstShared = (1 until tables).foldLeft(
-        when(col("keys_a")(0) === col("keys_b")(0), lit(0))) { (w, i) =>
-      w.when(col("keys_a")(i) === col("keys_b")(i), lit(i)) }
-    val cand = a.join(b, Seq("t", "key"))
-      .filter(col("id_a") < col("id_b") && col("t") === firstShared)
-      .select(col("id_a"), col("id_b"))
-      .repartition(shufN, col("id_a"))
-    val emb = df.select(col(idCol), col(vecCol))
-    cand
-      .join(emb.select(col(idCol).as("id_a"), col(vecCol).as("vec_a")), Seq("id_a"))
-      .join(emb.select(col(idCol).as("id_b"), col(vecCol).as("vec_b")), Seq("id_b"))
-      .withColumn("sim", round(graft.expr.VectorExprs.cosine(col("vec_a"), col("vec_b")), 6))
+      .groupBy(col("t"), col("key"))
+      .agg(collect_list(struct(col("id"), col("keys"), col("vec"))).as("members"))
+    buckets
+      .select(explode(graft.expr.VectorExprs.bucketPairs(col("members"), col("t"),
+        threshold - 1e-6)).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), round(col("p.cos"), 6).as("sim"))
       .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
   }
 
   /** SemDeDup-inspired bucket-level semantic thinning (Abbas et al. 2023,

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.expr.VectorExprs
@@ -132,38 +134,54 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     assert(want.exists { case (a, b, _) => keys(a).zip(keys(b)).count(p => p._1 == p._2) > 1 })
   }
 
-  test("rpLshNearDup pins its bucket and verify exchanges to the shuffle parallelism") {
+  test("rpLshNearDup runs on one (t, key) exchange pinned to the shuffle parallelism") {
     val e = io.Tables.embeddings(spark, "/root/testdata/sf0.001")
     def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
       df.collect()
       collect(df.queryExecution.executedPlan) { case x: ShuffleExchangeExec => x }
     }
-    def pinned(xs: Seq[ShuffleExchangeExec]): Set[(Seq[String], Int)] = xs.collect {
-      case x if x.shuffleOrigin == REPARTITION_BY_NUM =>
-        val p = x.outputPartitioning.asInstanceOf[
-          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
-        (p.expressions.map(_.references.head.name), p.numPartitions)
-    }.toSet
+    def pinned(xs: Seq[ShuffleExchangeExec]): Set[(Seq[String], Int)] =
+      xs.filter(_.shuffleOrigin == REPARTITION_BY_NUM).map(_.outputPartitioning).collect {
+        case p: HashPartitioning => (p.expressions.map(_.references.head.name), p.numPartitions)
+      }.toSet
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val want = Set((Seq("t", "key"), n), (Seq("id_a"), n))
     def rp = ops.Similarity.rpLshNearDup(e, "vec_id", "embedding",
       Queries3.rpPlanes, Queries3.rpBits, 0.3)
-    // broadcast scale (this fixture): the two pinned exchanges and nothing
-    // else — one more than the all-tables spelling, whose bucket join
-    // broadcasts straight from the scan and whose only exchange is the
-    // `distinct`'s
+    // broadcast scale (this fixture): the bucket exchange and nothing else,
+    // as many as the all-tables spelling, whose bucket join broadcasts
+    // straight from the scan and whose only exchange is the `distinct`'s
     val small = shuffles(rp)
-    assert(pinned(small) == want && small.size == 2, small)
+    assert(pinned(small) == Set((Seq("t", "key"), n)) && small.size == 1, small)
     assert(shuffles(rpLshAllTables(e, 0.3)).size == 1)
-    // shuffle-join scale: the (id_a) pin is the verify join's own
-    // partitioning, so the new spelling has one exchange fewer
+    // shuffle-join scale: still the one exchange, where the all-tables
+    // spelling shuffles for its bucket join, its `distinct` and both
+    // verify joins
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val big = shuffles(rp)
-      assert(pinned(big) == want, big)
-      assert(big.size < shuffles(rpLshAllTables(e, 0.3)).size, big)
+      assert(pinned(big) == Set((Seq("t", "key"), n)) && big.size == 1, big)
+      assert(shuffles(rpLshAllTables(e, 0.3)).size > 1)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("BucketPairs orders ids, skips equal and null members, and keeps the first table") {
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("keys", ArrayType(LongType)), StructField("vec", ArrayType(DoubleType))))
+    val v = Seq(1.0, 0.0)
+    val members = Seq(
+      Row("b", Seq(7L, 5L), v), Row("a", Seq(8L, 5L), v), // first share table 1
+      Row("c", Seq(7L, 5L), v),                             // shares table 0 with "b"
+      Row("a", Seq(9L, 5L), v), Row(null, Seq(1L, 5L), v), Row("d", Seq(2L, 5L), null),
+      Row("e", Seq(3L, 5L), Seq(-1.0, 0.0)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(members, 1))),
+      StructType(Seq(StructField("m", ArrayType(schema)), StructField("t", IntegerType))))
+    def pairs(floor: Double) = df.select(explode(VectorExprs.bucketPairs(col("m"), col("t"),
+      floor)).as("p")).select("p.*").as[(String, String, Double)].collect().sorted.toSeq
+    // (b, c) agree at table 0, so table 1 skips them; the two "a" rows pair
+    // with everyone but each other; null ids and null vectors pair with none
+    assert(pairs(0.5) == Seq(("a", "b", 1.0), ("a", "b", 1.0), ("a", "c", 1.0), ("a", "c", 1.0)))
+    assert(pairs(-2.0).count(_._2 == "e") == 4 && pairs(-2.0).forall(_._3 >= -1.0))
   }
 
   test("CosineSim works in interpreted (non-codegen) eval too") {
