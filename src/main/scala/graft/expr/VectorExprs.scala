@@ -82,11 +82,11 @@ trait VectorKernel { self: BinaryExpression =>
   * is 0 (matches VectorFns.cosine / the reference's Qdrant COSINE metric,
   * reference: PLATFORM-contextual-Chunking.py:137-144).
   *
-  * The generated code calls [[CosineSim.eval]]: one small static loop that
-  * the JIT compiles once and every query shares, where a loop spelled into
-  * each whole-stage method is compiled anew per generated class (and not at
-  * all once the method outgrows the JIT's size limit — an LSH verify join
-  * runs it a few hundred thousand times per flow). */
+  * The generated code calls [[CosineSim.eval]]: one static loop that the
+  * JIT compiles once and every query shares. A loop spelled into each
+  * whole-stage method starts interpreted in every newly generated class,
+  * and a job that outgrows Spark's codegen cache generates its classes
+  * afresh on every run. */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression with VectorKernel {
 
@@ -260,7 +260,7 @@ case class BucketPairs(members: Expression, table: Expression, floor: Double)
   private def memberType = members.dataType.asInstanceOf[ArrayType].elementType
     .asInstanceOf[StructType]
   private lazy val idType = memberType.head.dataType
-  private lazy val idOrdering = PhysicalDataType.ordering(idType)
+  @transient private lazy val idOrdering = PhysicalDataType.ordering(idType)
   private lazy val vecFloat = memberType(2).dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false

@@ -90,8 +90,8 @@ import org.apache.spark.sql.functions._
   * Lineage: the star windows reference their input twice (small-star's
   * union branches), so the logical tree would double per round; the eager
   * per-round `localCheckpoint` truncates it. The input pair plan is
-  * checkpointed once too, so an expensive upstream pair plan — e.g. an LSH
-  * self-join — runs exactly once, not once per round. There is no lazy
+  * checkpointed once too, so an expensive upstream pair plan — e.g. the LSH
+  * bucket comparison — runs exactly once, not once per round. There is no lazy
   * intermediate checkpoint: large-star's window runs once per round inside
   * the one checkpoint job (the reused exchange feeds both small-star
   * branches), so nothing recomputes it. On a multi-node cluster prefer
