@@ -120,7 +120,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
   }
 
   test("rpLshNearDup emits each candidate once, from its first shared table") {
-    val e = io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val e = io.Tables.embeddings(spark, sfDir)
     // sim >= -2 keeps every candidate, so the output IS the candidate set
     val got = ops.Similarity.rpLshNearDup(e, "vec_id", "embedding",
       Queries3.rpPlanes, Queries3.rpBits, -2.0).as[(Long, Long, Double)].collect()
@@ -135,7 +135,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
   }
 
   test("rpLshNearDup runs on one (t, key) exchange pinned to the shuffle parallelism") {
-    val e = io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val e = io.Tables.embeddings(spark, sfDir)
     def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
       df.collect()
       collect(df.queryExecution.executedPlan) { case x: ShuffleExchangeExec => x }
