@@ -12,17 +12,13 @@ import graft.streaming.Stream
   * plumbing, clustering. Same determinism rules as [[Queries]].
   *
   * Every query carries a DuckDB oracle — including q31, whose k-means is
-  * the integer-exact Lloyd's spelling (the MLlib estimator surface stays
-  * in graft.ops.Embed.kmeansLabels, invariant-tested).
+  * the integer-exact Lloyd's spelling.
   */
 object Queries2 {
 
   /** DuckDB spelling of [[graft.ops.Dedup.normalized]]. */
   private[graft] val NormSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
 
-  /** DuckDB word-bigram shingles CTE body over `documents` (mirrors
-    * TextFns.wordShingles(text, 2): normalized single-space tokens,
-    * adjacent pairs, distinct). */
   /** [[ShinglesCte]] parameterized on its source relation (the
     * bm25CtesFromTok pattern) — callers that shingle a restricted CTE
     * (q262's id slice) pass its name instead of post-hoc string surgery
@@ -36,6 +32,9 @@ object Queries2 {
        |              i -> tk[i::INT] || ' ' || tk[(i + 1)::INT])) END AS sh
        |  FROM t)""".stripMargin
 
+  /** DuckDB word-bigram shingles CTE body over `documents` (mirrors
+    * TextExprs.wordShingles(text, 2): normalized single-space tokens,
+    * adjacent pairs, distinct). */
   private[graft] val ShinglesCte = shinglesCteFrom("documents")
 
   // ------------------------------------------------------------- U3/dedup
@@ -89,8 +88,7 @@ object Queries2 {
 
   // -------------------------------------------------------------- SimHash
   /** SimHash fingerprints + top-8-bit buckets, in the md5-prefix spelling
-    * DuckDB can recompute exactly (the xxhash64 perf path is
-    * [[graft.ops.Dedup.simHashFingerprints]], invariant-tested). */
+    * DuckDB can recompute exactly. */
   val q15SimHash: Q = (spark, dir) =>
     Dedup.simHashFingerprintsMd5(Tables.documents(spark, dir), "doc_id", "text")
   /** [[SimHashCte]] at a caller-chosen bucket resolution — the scale
@@ -420,11 +418,10 @@ object Queries2 {
   /** Seeded k-means labels as an engine-exact integer Lloyd's iteration
     * (k = 10, 4 assignment rounds, clusters initialized from the 10
     * vec_ids first in md5-hash order — a portable hash scatter both
-    * engines spell identically) — see [[graft.ops.Embed.lloydQuantized]]. The
-    * MLlib surface ([[graft.ops.Embed.kmeansLabels]]) remains the
-    * estimator form (invariant-tested in InvariantSpec); this spelling is
-    * the one a SQL oracle can mirror round for round, which gives the
-    * clustering family full hash coverage instead of a rows-only check. */
+    * engines spell identically) — see [[graft.ops.Embed.lloydQuantized]].
+    * Unlike an MLlib estimator, this spelling is one a SQL oracle can
+    * mirror round for round, which gives the clustering family full hash
+    * coverage instead of a rows-only check. */
   val q31KMeans: Q = (spark, dir) =>
     Embed.lloydQuantized(Tables.embeddings(spark, dir), "vec_id", "embedding",
         k = 10, rounds = 4)

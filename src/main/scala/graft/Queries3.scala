@@ -317,17 +317,13 @@ object Queries3 {
       | AND epoch_us(e.ts) BETWEEN iv.start_us AND iv.end_us
       |WHERE e.event_type = 'error'""".stripMargin
 
-  // ---------------------------------------------------- BRP-LSH dedup
-  /** MLlib BucketedRandomProjectionLSH near-dup candidates (seeded;
-    * rows-only driver check — MLlib's random hyperplanes aren't
-    * SQL-reproducible — plus a recall invariant spec vs the exact form). */
+  // ---------------------------------------------------- sign-RP LSH dedup
   /** Sign-random-projection LSH near-dup pairs: banded ±1-hyperplane
     * sign bits over integer-quantized vectors, candidates within a
     * (table, bucket) equi-join, exact cosine verify ≥ 0.35. The exact
     * integer arithmetic makes the bucket keys — and therefore the whole
     * approximate pipeline — hash-checkable against DuckDB, which MLlib's
-    * Gaussian BRP-LSH (kept as [[Similarity.brpLshNearDup]], spec-covered)
-    * can never be. */
+    * Gaussian BRP-LSH can never be. */
   // 6 tables × 6 bits: P(find pair) at cosine 0.9 ≈ 95%, at 0.35 ≈ 26% —
   // banded for the high-sim dedup regime LSH exists for
   val rpBits = 6

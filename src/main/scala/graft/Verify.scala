@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import org.apache.spark.sql.SparkSession
+
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/check_oracle.py`). Exits 1, naming them, when any query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,18 +14,32 @@ object Verify {
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     val spark = LocalSession()
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.defs.filter(d => only.forall(_.exists(d.name.startsWith))))
     writeOracleJson(outDir, SparkEntry.oracleSql)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] failed ${failed.size}: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query's result to `<outDir>/<name>` as parquet and returns
+    * the names of the queries that threw. A failure does not stop the
+    * loop, so one broken query cannot hide the rest. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      defs: Seq[QueryDef]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    defs.flatMap { d =>
+      try {
+        d.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${d.name}")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
+        Some(d.name)
+      }
+    }
   }
 
   /** `<outDir>/oracle_sql.json`: one name → oracle SQL object, the file

@@ -21,7 +21,7 @@ object BpeKernels {
     * Symbols are space-free by construction (they come from whitespace
     * tokens), so the space-delimited representation is unambiguous. The
     * declarative reference spelling of the same semantics is
-    * [[graft.ops.Bpe.mergePairReference]] (a gaps-and-islands window
+    * `graft.Reference.mergePairReference` (a gaps-and-islands window
     * chain, the form the DuckDB oracles mirror); BpeSpec asserts the two
     * agree, the [[ShingleKernels.wordSpans]] precedent. */
   def mergePair(sym: UTF8String, l: UTF8String, r: UTF8String): UTF8String = {

@@ -20,7 +20,8 @@ object ShingleKernels {
 
   /** Fused word-n-gram shingling.
     *
-    * Spec (identical to TextFns.wordShingles, the oracle-SQL reference form):
+    * Spec (the oracle-SQL reference form; TextExprSpec checks it against
+    * the built-in-function spelling):
     *   toks = split(regexp_replace(lower(trim(text)), '\s+', ' '), ' ')
     *   if |toks| < n → [join(toks, ' ')]
     *   else         → sort(distinct([join(toks[i..i+n), ' ') for i]))
@@ -161,8 +162,8 @@ object ShingleKernels {
     * asset-dedup representation.
     *
     * Spec (identical to the HOF reference spelling
-    * graft.ops.Multimodal.byteShinglesHof, which the DuckDB oracles
-    * mirror via `hex(content::BLOB)`):
+    * graft.Reference.byteShinglesHof, which the DuckDB oracles mirror via
+    * `hex(content::BLOB)`):
     *   hx = uppercase hex of the bytes (2 chars/byte)
     *   if |bytes| < k → [hx]                     ('' for empty content)
     *   else           → sort(distinct([hx[2i..2i+2k) for byte offsets i]))
@@ -206,7 +207,7 @@ object ShingleKernels {
 
   /** Fused character-n-gram shingling.
     *
-    * Spec (identical to TextFns.charShingles):
+    * Spec (TextExprSpec checks it against the built-in-function spelling):
     *   s = regexp_replace(lower(trim(text)), '\s+', ' ')
     *   if numChars(s) < n → [s]
     *   else              → sort(distinct([substr(s, i, n) for i in 1..numChars-n+1]))
@@ -493,8 +494,8 @@ object ClassifyKernels {
 
   private val ws = java.util.regex.Pattern.compile("\\s+")
 
-  /** The five lexical features of graft.ops.Classify.qualityLogit in ONE
-    * pass — value-identical to the explode+aggregate spelling:
+  /** The five lexical features of graft.ops.Classify.qualityLogitFused in
+    * ONE pass — value-identical to the explode+aggregate spelling:
     *
     *  - `n_chars` = numChars (code points, Spark `length`);
     *  - `punct_chars` / `digit_chars` count code points matching Java

@@ -1,9 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
 /** Bit-spread body as a STATIC forwarder (same rationale as
@@ -28,8 +26,9 @@ object ZOrderKernels {
 /** Morton (Z-order) interleave of two non-negative long keys, 21 bits
   * each → one 42-bit curve position. Sorting by the curve position gives
   * files that are small rectangles in (a, b) space, so min/max statistics
-  * prune on EITHER column's predicate — the multi-dimensional counterpart
-  * of [[graft.io.Layout.writeRangeSorted]]'s single-key layout. Values are
+  * prune on EITHER column's predicate, where a single-key sort prunes only
+  * its own column. Registered as the `z_interleave` SQL function
+  * ([[graft.ext.GraftExtensions]]). Values are
   * masked to their low 21 bits (callers bucket/shift larger domains
   * first). One eval per row at write time only — the read path never
   * evaluates it — but it generates code anyway so a layout job's sort
@@ -53,9 +52,4 @@ case class ZInterleave(left: Expression, right: Expression)
 }
 
 object ZOrder {
-  /** Column wrapper for [[ZInterleave]]; casts both keys to long. */
-  def zValue(a: Column, b: Column): Column =
-    ExpressionUtils.column(ZInterleave(
-      ExpressionUtils.expression(a.cast("long")),
-      ExpressionUtils.expression(b.cast("long"))))
 }

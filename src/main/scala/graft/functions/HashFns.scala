@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 
 /** Portable (engine-agnostic) hashing built on md5, for operators whose
   * results must be reproducible by the DuckDB oracle (which lacks xxhash64).
-  * The xxhash64 SimHash ([[VectorFns.simHash]]) is the Spark-only fast
-  * spelling; these md5 forms are the correctness-checkable ones.
   * Everything here is a composition of codegen'd built-ins — no UDFs.
   */
 object HashFns {
@@ -29,37 +27,11 @@ object HashFns {
   val MinHashP: Long = 2147483647L
 
   /** Fixed affine-permutation coefficients (a_k odd-ish, b_k), seeded and
-    * deterministic — shared verbatim by [[minHashSig]] and the oracle SQL. */
+    * deterministic — shared verbatim by the MinHash kernels and the oracle
+    * SQL. */
   def minHashCoeffs(k: Int): Seq[(Long, Long)] = {
     val rng = new scala.util.Random(20260212L)
     Seq.fill(k)((rng.nextInt(Int.MaxValue - 1).toLong + 1L,
       rng.nextInt(Int.MaxValue).toLong))
   }
-
-  /** Base hash array: each shingle md5-hashed ONCE to h ∈ [0, p). Project
-    * this as its own column before [[minHashSigFromBase]] — inlining it
-    * there would re-evaluate the md5 per permutation. */
-  def minHashBase(shingles: Column): Column =
-    transform(shingles, s => md5Long(s, 8) % MinHashP)
-
-  /** MinHash signature (array<long>, length k) over an already-projected
-    * base-hash array: permutation k takes min over (a_k·h + b_k) mod p —
-    * the classic a·x+b universal-hashing MinHash, portable to any engine
-    * with md5. */
-  def minHashSigFromBase(base: Column, k: Int): Column =
-    array(minHashCoeffs(k).map { case (a, b) =>
-      array_min(transform(base, h => (lit(a) * h + lit(b)) % MinHashP))
-    }: _*)
-
-  /** One-shot spelling (base inlined — fine for single rows or tests). */
-  def minHashSig(shingles: Column, k: Int): Column =
-    minHashSigFromBase(minHashBase(shingles), k)
-
-  /** LSH band keys: each of `bands` consecutive `rows`-sized signature
-    * slices joined to a string — the equi-join key for candidate
-    * generation. No hashing needed; the slice itself is the bucket id. */
-  def bandSigs(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      concat_ws("_", slice(sig, b * rows + 1, rows))
-    }: _*)
 }

@@ -110,31 +110,6 @@ object TextFns {
       .cast("long")
   }
 
-  /** Rolling-hash document fingerprint: 64-bit FNV-1a over the normalized
-    * text, via xxhash64 on the lowercased, whitespace-collapsed body.
-    * Deterministic across runs and partitions. */
-  def fingerprint(c: Column): Column =
-    xxhash64(regexp_replace(lower(trim(c)), "\\s+", " "))
-
-  /** Character n-gram array (distinct, sorted) — shingles for MinHash /
-    * Jaccard near-dup detection. Built from sequence+transform so the whole
-    * shingling stays codegen'd; no UDF. */
-  def charShingles(c: Column, n: Int): Column = {
-    val s = regexp_replace(lower(trim(c)), "\\s+", " ")
-    when(length(s) < n, array(s))
-      .otherwise(array_sort(array_distinct(
-        transform(sequence(lit(1), length(s) - (n - 1)), i => s.substr(i, lit(n))))))
-  }
-
-  /** Word n-gram array (distinct, sorted) over whitespace tokens. */
-  def wordShingles(c: Column, n: Int): Column = {
-    val toks = split(regexp_replace(lower(trim(c)), "\\s+", " "), " ")
-    when(size(toks) < n, array(array_join(toks, " ")))
-      .otherwise(array_sort(array_distinct(
-        transform(sequence(lit(0), size(toks) - n),
-          i => array_join(slice(toks, i + lit(1), lit(n)), " ")))))
-  }
-
   /** Heuristic language ID: scores text against per-language marker-word
     * sets and returns the best-scoring language code, "und" when nothing
     * matches. Cheap n-gram/stopword heuristic — the standard trick when a

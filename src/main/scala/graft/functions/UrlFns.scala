@@ -166,11 +166,6 @@ object UrlFns {
     "co.us", "com.mt", "com.cy", "com.lb", "com.jo", "com.kw", "com.qa",
     "com.om", "com.bh", "com.np", "com.lk", "com.kh", "com.mm", "com.fj")
 
-  /** Number of labels in the longest [[publicSuffixes]] entry — bounds
-    * the suffix-match loop. */
-  private[graft] val MaxSuffixLabels: Int =
-    publicSuffixes.map(_.count(_ == '.') + 1).max
-
   /** Wildcard PSL rule BASES this build ships — each models a `*.<base>`
     * entry of the public list (publicsuffix.org): EVERY label directly
     * under the base is itself a public suffix, so a registrable domain

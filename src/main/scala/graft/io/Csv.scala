@@ -36,15 +36,6 @@ object Csv {
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.options(referenceOptions).schema(schema).csv(path)
 
-  /** Permissive read that keeps corrupt lines in `_corrupt_record` for
-    * quarantine instead of failing the 1000-executor job on one bad row. */
-  def readPermissive(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.options(referenceOptions)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema.add("_corrupt_record", "string"))
-      .csv(path)
-
   /** S2/S8 — distributed CSV sink, optionally partitioned (e.g. by theme —
     * the reference's bucket/theme prefix namespace becomes partition
     * directories, giving partition pruning for free). */
@@ -58,16 +49,5 @@ object Csv {
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** S10 — catalog listing: first-level partition/table names under a
-    * warehouse dir (the reference lists bucket key prefixes as "themes",
-    * reference: app.py:118-129). */
-  def listTables(spark: SparkSession, warehouseDir: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(warehouseDir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(warehouseDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).sorted.toSeq
   }
 }

@@ -342,33 +342,4 @@ object Bpe {
       (rnd, l, r, u.getOrElse(rnd, 0L), kept(rnd)) }
       .toDF("merge_round", "left_sym", "right_sym", "n_applied", "kept")
   }
-
-  /** Declarative reference spelling of ONE merge application — the
-    * gaps-and-islands form the DuckDB oracle mirrors, kept as the
-    * spec-tested contract for the fused kernel
-    * ([[graft.expr.BpeKernels.mergePair]]), the wordSpans precedent.
-    * Greedy-left-to-right-non-overlapping == "in each maximal run of
-    * candidate positions, merge the 1st, 3rd, 5th…"; this fold spells it
-    * as a per-symbol state machine instead (skip flag), which is the same
-    * selection. Interpreted HOF — reference/spec use only. */
-  private[graft] def mergePairReference(sym: Column, l: Column,
-      r: Column): Column = {
-    val syms = split(sym, " ")
-    aggregate(
-      sequence(lit(1), size(syms)),
-      struct(array().cast("array<string>").as("out"), lit(false).as("skip")),
-      (acc, i) => {
-        val cur = element_at(syms, i)
-        val nxt = try_element_at(syms, i + 1)
-        when(acc.getField("skip"),
-          struct(acc.getField("out").as("out"), lit(false).as("skip")))
-          .when(cur === l && nxt === r,
-            struct(concat(acc.getField("out"), array(concat(cur, nxt)))
-              .as("out"), lit(true).as("skip")))
-          .otherwise(
-            struct(concat(acc.getField("out"), array(cur)).as("out"),
-              lit(false).as("skip")))
-      },
-      acc => array_join(acc.getField("out"), " "))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -17,11 +17,8 @@ import graft.functions.TextFns
   * integer division), so the score is bit-identical in any engine — no
   * float-boundary ambiguity in the keep/drop decision.
   *
-  * Scale shape: feature extraction is explode + one map-side-combined hash
-  * aggregation keyed by the document id (the q22 shape — conditional sums
-  * stay inside whole-stage codegen, where higher-order filter() would fall
-  * back to interpreted); the logit is a codegen'd projection over the
-  * aggregate. One shuffle total, carrying ~5 longs per document.
+  * Scale shape: one map-side projection per document — a fused feature
+  * kernel and a codegen'd logit, no shuffle.
   */
 object Classify {
 
@@ -44,17 +41,17 @@ object Classify {
     bias = -200000L, wStopPpm = 2L, wPunctPpm = -3L, wDigitPpm = -4L,
     wWordCap = 1500L, wordCap = 400)
 
-  private def charsMatching(c: Column, charClass: String): Column =
-    (length(c) - length(regexp_replace(c, charClass, ""))).cast("long")
-
-  /** [[qualityLogit]] as a MAP-SIDE projection — the five lexical features
-    * from ONE fused kernel pass per document
-    * ([[graft.expr.ClassifyKernels.features]]), value-identical to the
-    * explode+aggregate spelling (Wave9Spec pins row identity) with ZERO
-    * shuffles: the features are doc-local, so the aggregate spelling's
-    * exchange and per-token explode buy nothing. The production spelling;
-    * the aggregate form remains the oracle-reference. Pure projection, so
-    * it also composes into streaming with no watermark constraints. */
+  /** Per-document features + logit + keep verdict under `model`, as a
+    * MAP-SIDE projection — the five lexical features from ONE fused kernel
+    * pass per document ([[graft.expr.ClassifyKernels.features]]),
+    * value-identical to the explode+aggregate spelling (Wave9Spec pins row
+    * identity against it) with ZERO shuffles: the features are doc-local,
+    * so the aggregate spelling's exchange and per-token explode buy
+    * nothing. Pure projection, so it also composes into streaming with no
+    * watermark constraints.
+    *
+    * Output: the id and carry columns, `n_words`, `stop_ppm`, `punct_ppm`,
+    * `digit_ppm`, `logit_e6`, `keep` (logit > 0). */
   def qualityLogitFused(df: DataFrame, idCol: String, textCol: String,
       carryCols: Seq[String] = Nil,
       model: LinearModel = Distilled): DataFrame = {
@@ -67,50 +64,6 @@ object Classify {
           expr("__f[1] * 1000000 DIV greatest(__f[0], 1L)").as("punct_ppm"),
           expr("__f[2] * 1000000 DIV greatest(__f[0], 1L)").as("digit_ppm")): _*)
       .withColumn("logit_e6",
-        lit(model.bias)
-          + lit(model.wStopPpm) * col("stop_ppm")
-          + lit(model.wPunctPpm) * col("punct_ppm")
-          + lit(model.wDigitPpm) * col("digit_ppm")
-          + lit(model.wWordCap) * least(col("n_words"), lit(model.wordCap.toLong)))
-      .withColumn("keep", col("logit_e6") > 0L)
-  }
-
-  /** Per-document features + logit + keep verdict under `model`.
-    *
-    * Output: the id and carry columns, `n_words`, `stop_ppm`, `punct_ppm`,
-    * `digit_ppm`, `logit_e6`, `keep` (logit > 0).
-    *
-    * `toksCol` optionally names a PRE-TOKENIZED array column (the exact
-    * [[graft.functions.TextFns.wordTokens]] spelling) so a multi-stage plan
-    * that shares one materialized tokenization (q113) doesn't re-tokenize
-    * here; when absent the tokens are derived from `textCol` in-plan.
-    */
-  def qualityLogit(df: DataFrame, idCol: String, textCol: String,
-      carryCols: Seq[String] = Nil,
-      model: LinearModel = Distilled,
-      toksCol: Option[String] = None): DataFrame = {
-    val stops = TextFns.Stopwords
-    val tokArr = toksCol.map(col).getOrElse(TextFns.wordTokens(col(textCol)))
-    val toks = df.select(
-      (col(idCol) +: carryCols.map(col)) ++ Seq(
-        length(col(textCol)).cast("long").as("n_chars"),
-        charsMatching(col(textCol), "[\\p{Punct}]").as("punct_chars"),
-        charsMatching(col(textCol), "[0-9]").as("digit_chars"),
-        explode(tokArr).as("tok")): _*)
-    val agg = toks.groupBy((col(idCol) +: carryCols.map(col)): _*)
-      .agg(
-        first(col("n_chars")).as("n_chars"),
-        first(col("punct_chars")).as("punct_chars"),
-        first(col("digit_chars")).as("digit_chars"),
-        count(lit(1)).as("n_words"),
-        sum(when(col("tok").isin(stops: _*), 1L).otherwise(0L)).as("stop_hits"))
-    val feats = agg.select(
-      (col(idCol) +: carryCols.map(col)) ++ Seq(
-        col("n_words"),
-        expr("stop_hits * 1000000 DIV n_words").as("stop_ppm"),
-        expr("punct_chars * 1000000 DIV greatest(n_chars, 1L)").as("punct_ppm"),
-        expr("digit_chars * 1000000 DIV greatest(n_chars, 1L)").as("digit_ppm")): _*)
-    feats.withColumn("logit_e6",
         lit(model.bias)
           + lit(model.wStopPpm) * col("stop_ppm")
           + lit(model.wPunctPpm) * col("punct_ppm")

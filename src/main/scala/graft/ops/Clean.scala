@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Cleaning operators — the reference's per-table "Nettoyage" stage.
   *
@@ -39,9 +38,4 @@ object Clean {
   /** P4 — negated regex filter dropping bot/mod auto-messages. */
   def dropBots(col: String, pattern: String = BotRegex)(df: DataFrame): DataFrame =
     df.filter(!df(col).rlike(pattern))
-
-  /** P11 — conditional id-prefix strip (reference: REDDIT-Ingestion.py:76,127
-    * strips Reddit's "t3_" fullname prefix). */
-  def stripPrefix(c: Column, prefix: String): Column =
-    regexp_replace(c, "^" + java.util.regex.Pattern.quote(prefix), "")
 }

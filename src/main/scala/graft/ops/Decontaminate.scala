@@ -155,19 +155,4 @@ object Decontaminate {
         when(col("n_spans") === 0L, lit(0L))
           .otherwise(expr("n_leaked_spans * 1000000L div n_spans")))
   }
-
-  /** The no-bloom exact spelling of [[bloomDropList]] — the verifier the
-    * spec holds the two-phase plan against (they must be row-identical on
-    * ANY input; the bloom only prunes). */
-  private[graft] def exactDropList(docs: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    val withSplit = Vocab.splitAssign(docs, idCol)
-    val spans = withSplit.select(col("split"), col(idCol),
-      explode(TextExprs.wordSpans(col(textCol), n)).as("span"))
-    val train = spans.filter(col("split") === "train")
-      .select(col(idCol).as("doc_id"), col("span")).distinct()
-    val eval = spans.filter(col("split") =!= "train").select(col("span")).distinct()
-    train.join(eval, Seq("span"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_leaked_spans"))
-  }
 }

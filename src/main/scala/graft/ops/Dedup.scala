@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFns, TextFns, VectorFns}
+import graft.functions.{HashFns, TextFns}
 
 /** Deduplication operators — the training-data-pipeline extension family
   * (exact, MinHash+LSH, SimHash), generalizing the reference's ingest-time
@@ -209,8 +209,8 @@ object Dedup {
     * candidates (nothing weighted to compare — unlike the bigram path's
     * <2-token fallback shingle).
     *
-    * COMPACT spelling (r17, replacing the r16 expanded-array one — kept
-    * as [[weightedMinHashLshPairsExpanded]] for the A/B record): the
+    * COMPACT spelling (r17, replacing the r16 expanded-array one, which
+    * Wave44Spec keeps as its equivalence reference): the
     * `term#k` repeat expansion never materializes as an array anywhere.
     * The per-doc unit is a COMPACT tf vector
     * (`array<struct<term, tfc>>`, one entry per DISTINCT term, sorted —
@@ -304,31 +304,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** The r16 expanded-array spelling of [[weightedMinHashLshPairs]], kept
-    * as the reference implementation for Wave44Spec's equivalence row (its
-    * A/B timing is recorded in BASELINE.md, rounds 16 and 17): materializes
-    * the `term#1…term#min(tf,cap)` expansion as a per-doc sorted array and rides
-    * [[minHashLshPairsOn]]'s array-carrying verify join. Identical output
-    * by construction; retired from q268 because the wide expanded-array
-    * rows GC-thrashed the 64× verify join at default shuffle partitions
-    * (BASELINE.md round 16, task 5). */
-  private[graft] def weightedMinHashLshPairsExpanded(df: DataFrame,
-      idCol: String, textCol: String, numHashes: Int, bands: Int,
-      threshold: Double, tfCap: Int): DataFrame = {
-    require(tfCap >= 1, s"tfCap must be >= 1, got $tfCap")
-    val tf = df.select(col(idCol).as("id"),
-        explode(array_remove(
-          TextFns.wordTokens(col(textCol)), "")).as("term"))
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-    val expanded = tf
-      .withColumn("__reps", transform(
-        sequence(lit(1), least(col("tf"), lit(tfCap.toLong)).cast("int")),
-        k => concat(col("term"), lit("#"), k.cast("string"))))
-      .groupBy(col("id"))
-      .agg(sort_array(flatten(collect_list(col("__reps")))).as("sh"))
-    minHashLshPairsOn(expanded, "id", col("sh"), numHashes, bands, threshold)
-  }
-
   /** Asymmetric CONTAINMENT near-dup pairs — the quote-inclusion case
     * symmetric Jaccard misses: a short document fully embedded in a long
     * one has tiny Jaccard (|A∩B|/|A∪B| ≈ |A|/|B|) but containment
@@ -375,36 +350,17 @@ object Dedup {
         >= minContainmentPpm)
   }
 
-  /** SimHash fingerprint per document over whitespace tokens (xxhash64
-    * perf path — not oracle-expressible, covered by invariant specs).
-    * Near-dup candidates at scale = group by the top `prefixBits` bits. */
-  def simHashFingerprints(df: DataFrame, idCol: String, textCol: String,
-      prefixBits: Int = 16): DataFrame = {
-    val toks = split(normalized(col(textCol)), " ")
-    df.select(col(idCol),
-      VectorFns.simHash(toks).as("simhash"))
-      .withColumn("bucket", shiftrightunsigned(col("simhash"), 64 - prefixBits))
-  }
-
   /** Oracle-checkable SimHash variant: 32-bit fingerprints over md5-prefix
     * token hashes (the same md5→integer bridge the MinHash oracle uses, so
-    * DuckDB can recompute it bit for bit). The xxhash64 form above is the
-    * perf path; this one exists so the hash-compare gate covers SimHash
-    * semantics end to end. Hashes are projected separately from the vote
-    * loop — see [[graft.functions.VectorFns.simHashFromHashes]]. */
+    * DuckDB can recompute it bit for bit), so the hash-compare gate covers
+    * SimHash semantics end to end. The per-bit vote runs in the fused
+    * [[graft.expr.SimHashMd5]] kernel. */
   def simHashFingerprintsMd5(df: DataFrame, idCol: String, textCol: String,
       prefixBits: Int = 8): DataFrame = {
     val toks = split(normalized(col(textCol)), " ")
     df.select(col(idCol),
         graft.expr.HashExprs.simHashMd5(toks).as("simhash"))
       .withColumn("bucket", shiftrightunsigned(col("simhash"), 32 - prefixBits))
-  }
-
-  /** HOF reference spelling of the [[graft.expr.SimHashMd5]] kernel —
-    * interpreted, kept for the bitwise-equality spec. */
-  private[graft] def simHashMd5Hof(tokens: Column): Column = {
-    val hashes = transform(tokens, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-    VectorFns.simHashFromHashes(hashes, 32)
   }
 
   /** N-gram Jaccard similarity for a bounded candidate set produced by any

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,8 +41,7 @@ object Embed {
     * Unlike HDBSCAN itself (mutual-reachability core distances no other
     * engine reproduces) every step here is exact deterministic arithmetic,
     * so the whole operator hash-checks against a SQL oracle — this is the
-    * clustering family's oracle-covered representative; [[kmeansLabels]]
-    * stays as the MLlib centroid form. */
+    * clustering family's oracle-covered representative. */
   def densityClusters(df: DataFrame, idCol: String, vecCol: String,
       planes: Array[Array[Double]], bitsPerTable: Int, threshold: Double,
       minClusterSize: Int): DataFrame = {
@@ -54,19 +51,6 @@ object Embed {
         when(col("comp_size") < minClusterSize, lit(-1L))
           .otherwise(col("component").cast("long")).as("cluster"),
         (col("comp_size") < minClusterSize).as("is_noise"))
-  }
-
-  /** O11 — seeded KMeans over an array<float>/array<double> vector column
-    * (MLlib estimator, outside Catalyst — SURVEY.md §4.2). Returns the
-    * input plus a `cluster` int column. Deterministic for a fixed seed and
-    * input; excluded from the SQL oracle by design (invariant-tested). */
-  def kmeansLabels(df: DataFrame, vecCol: String, k: Int, seed: Long,
-      outCol: String = "cluster"): DataFrame = {
-    val featured = df.withColumn("__features", array_to_vector(col(vecCol)))
-    val model = new KMeans()
-      .setK(k).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("__features").setPredictionCol(outCol)
-    model.fit(featured).transform(featured).drop("__features")
   }
 
   /** O11 centroid form, engine-exact: Lloyd's iteration (the k-means
@@ -80,7 +64,7 @@ object Embed {
     * (plain integer division truncates toward zero in Spark but floors in
     * other engines; the identity makes the numerator exactly divisible so
     * every engine agrees) — so labels and distances hash-check against any
-    * SQL engine, which MLlib's FP kmeans ([[kmeansLabels]]) never can.
+    * SQL engine, which MLlib's floating-point KMeans never can.
     * Argmin ties break toward the smaller cluster id.
     *
     * Scale shape per round: the k·dim centroid table broadcasts (k is

@@ -67,21 +67,6 @@ object Multimodal {
       .toDF()
   }
 
-  /** Resize for image-like assets.
-    *
-    * STUB: a real implementation decodes, resamples, and re-encodes inside
-    * the same mapPartitions shape as [[decodeFeatures]] (codec init once
-    * per partition). The stand-in updates the metadata contract exactly —
-    * new width/height, content passed through, aspect flag — so downstream
-    * schema/partitioning is real and testable without image libs. */
-  def resizeStub(df: DataFrame, newWidth: Int, newHeight: Int): DataFrame =
-    df.withColumn("orig_width", col("width"))
-      .withColumn("orig_height", col("height"))
-      .withColumn("width", lit(newWidth))
-      .withColumn("height", lit(newHeight))
-      .withColumn("aspect_changed",
-        (col("orig_width") * newHeight) =!= (col("orig_height") * newWidth))
-
   /** Interleaved multimodal sequence packing: a document's sequence cost
     * is its text tokens PLUS a fixed patch budget per attached image
     * (`imageTokens` — how vision-language training actually spends
@@ -153,26 +138,13 @@ object Multimodal {
     * mapPartitions stage.
     *
     * Runs the fused codegen kernel ([[graft.expr.TextExprs.byteShingles]]
-    * — one Java loop per row, no intermediate hex string);
-    * [[byteShinglesHof]] is the builtin-HOF reference spelling the spec
-    * asserts bitwise-identical (the simHashMd5Hof pattern: interpreted
-    * HOFs pay ~1µs per hex window and dominated q249's first profile).
-    * Null content → null in both spellings. */
+    * — one Java loop per row, no intermediate hex string); Wave38Spec
+    * asserts it bitwise-identical to the builtin-HOF reference spelling
+    * (`graft.Reference.byteShinglesHof` — interpreted HOFs pay ~1µs per
+    * hex window and dominated q249's first profile). Null content → null
+    * in both spellings. */
   def byteShingles(content: Column, k: Int): Column =
     graft.expr.TextExprs.byteShingles(content, k)
-
-  /** Builtin higher-order-function reference spelling of [[byteShingles]]
-    * — the form the DuckDB oracles mirror textually; spec-tested
-    * identical to the kernel, kept out of the hot path. */
-  private[graft] def byteShinglesHof(content: Column, k: Int): Column = {
-    require(k >= 1, s"shingle bytes must be >= 1, got $k")
-    val hx = hex(content)
-    val width = lit(2 * k)
-    when(length(hx) < width, array(hx))
-      .otherwise(array_sort(array_distinct(transform(
-        sequence(lit(1), length(hx) - width + lit(1), lit(2)),
-        i => hx.substr(i, width)))))
-  }
 
   /** Near-duplicate ASSET pairs over raw bytes: k-byte shingles
     * ([[byteShingles]]) through the banded MinHash+LSH candidate

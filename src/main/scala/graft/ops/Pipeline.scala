@@ -45,10 +45,6 @@ object Pipeline {
     raw.select(cols.toSeq: _*)
   }
 
-  /** Epoch seconds (double or long) → timestamp — F7; the reference carries
-    * raw epoch numbers end to end. */
-  def epochToTs(c: Column): Column = timestamp_micros((c.cast("double") * 1e6).cast("long"))
-
   /** Stage 2 (cleaning, posts): id-dedup + viability predicates
     * (reference: REDDIT-Ingestion.py:116-121 — dedup, empty/deleted title,
     * minimum comment count). */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *  - [[rrfFuse]] consumes ALREADY-RANKED routes (each bounded to its own
   *    top-k per query), so fusion joins tiny per-query shortlists — the
   *    corpus is never touched again.
-  *  - [[hardNegatives]] consumes any candidate frame (brute-force
+  *  - [[marginHardNegatives]] consumes any candidate frame (brute-force
   *    [[Similarity.knnJoin]] at audit scale, [[Similarity.ivfKnnJoin]] at
   *    deploy scale) — mining is a pure ranking over the shortlist, so its
   *    cost is the ANN route's cost, not a corpus pass.
@@ -420,55 +420,18 @@ object Retrieval {
       .filter(col("rank") <= k)
   }
 
-  /** Contrastive-pair mining over an ANN shortlist — the training-data op
-    * behind embedding-model fine-tuning: per anchor, the single `pos` row
-    * is the nearest candidate at/above `posThresh` (a confident positive),
-    * and the `neg` rows are the `nNeg` HARDEST negatives — the highest-
-    * similarity candidates inside [negLo, negHi), close enough to be
-    * informative, far enough to be presumed non-duplicates. The band gap
-    * (negHi < posThresh) is the safety margin that keeps near-duplicates
-    * out of the negative set (false negatives poison a contrastive loss).
-    *
-    * `cands(queryIdCol, docIdCol, simCol)` is any candidate frame —
-    * mining is a window rank per anchor over the shortlist, nothing more,
-    * so the scale cost lives entirely in the route that built the
-    * candidates. Anchors whose shortlist clears neither band emit no
-    * rows. Output: (queryIdCol, role ∈ {pos, neg}, docIdCol, simCol,
-    * rank — 1 for pos, 1..nNeg within neg). */
-  def hardNegatives(cands: DataFrame, queryIdCol: String, docIdCol: String,
-      simCol: String, posThresh: Double, negLo: Double, negHi: Double,
-      nNeg: Int): DataFrame = {
-    require(negHi <= posThresh, "negative band must sit below the positive gate")
-    require(negLo < negHi, "empty negative band")
-    // the shortlist feeds both role branches — materialize it once so the
-    // (possibly expensive) ANN route isn't re-executed per branch
-    val c = cands.localCheckpoint(eager = false)
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(simCol).desc, col(docIdCol).asc)
-    val pos = c.filter(col(simCol) >= posThresh)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") === 1L)
-      .select(col(queryIdCol), lit("pos").as("role"), col(docIdCol),
-        col(simCol), col("rank"))
-    val neg = c.filter(col(simCol) >= negLo && col(simCol) < negHi)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= nNeg)
-      .select(col(queryIdCol), lit("neg").as("role"), col(docIdCol),
-        col(simCol), col("rank"))
-    pos.unionByName(neg)
-  }
-
-  /** Margin-relative hard-negative mining — the scale-free sibling of
-    * [[hardNegatives]]: absolute similarity bands are a property of one
-    * corpus density (double the corpus and yesterday's "hard negative"
-    * similarity is today's nearest neighbor), so production miners anchor
-    * the negative cutoff to EACH anchor's own positive instead. Per
+  /** Margin-relative hard-negative mining — the contrastive-pair miner
+    * behind embedding-model fine-tuning. Absolute similarity bands are a
+    * property of one corpus density (double the corpus and yesterday's
+    * "hard negative" similarity is today's nearest neighbor), so
+    * production miners anchor the negative cutoff to EACH anchor's own
+    * positive instead. Per
     * anchor: `pos` is the single nearest candidate, and the `neg` rows
     * are the `nNeg` hardest candidates at least `margin` below the
     * positive's similarity — the margin is the same near-duplicate
     * safety gap, now self-calibrating per anchor.
     *
-    * Same contract as [[hardNegatives]]: `cands` is any ANN shortlist,
+    * `cands(queryIdCol, docIdCol, simCol)` is any ANN shortlist,
     * mining is two window ranks and one per-anchor equi-join (the 1-row
     * positive side is corpus-derived, so it carries no static broadcast
     * hint — AQE broadcasts it at runtime). Output: (queryIdCol,

@@ -39,33 +39,6 @@ object Shard {
         sum(conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
           .cast("long")).as("checksum"))
 
-  /** Distributed sharded write: one directory per shard
-    * (`shard=<k>/part-*.parquet`), plus the manifest as a side table. The
-    * shard column partitions the layout, so a consumer reads any shard
-    * with partition pruning and verifies it against the manifest before
-    * use.
-    *
-    * The manifest is computed from a READ-BACK of the written files, not
-    * from the input plan: re-executing the upstream lineage would both pay
-    * a second full pass over the source and — if anything upstream is
-    * nondeterministic or the source moved between the two executions —
-    * describe rows that are not the bytes on disk, which defeats an
-    * integrity manifest. Reading back costs one scan of the (already
-    * sharded, column-pruned) output. */
-  def writeShards(df: DataFrame, outDir: String, idCol: String, numShards: Int,
-      tokenCount: Column): DataFrame = {
-    val sharded = assignShards(df, idCol, numShards)
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    // partition-type inference reads `shard=<k>` back as INT; re-align to
-    // assignShards' BIGINT so the persisted manifest schema matches one
-    // computed from the in-memory assignment
-    val written = df.sparkSession.read.parquet(outDir)
-      .withColumn("shard", col("shard").cast("long"))
-    val m = manifest(written, "shard", idCol, tokenCount)
-    m.write.mode("overwrite").parquet(s"$outDir/_manifest")
-    m
-  }
-
   /** Duplicate-cluster-aware fold assignment — the leakage-safe
     * train/val/test split: every member of an exact-duplicate cluster
     * (md5 of normalized text, the [[Dedup.exactGroups]] fingerprint)

@@ -201,32 +201,6 @@ object Similarity {
       .select(col(labelCol), col("n_added"), col("n_total_after"))
   }
 
-  /** LSH-bucketed near-dup via MLlib BucketedRandomProjectionLSH: random
-    * hyperplane projections bucket similar vectors together, and
-    * approxSimilarityJoin generates candidate pairs per bucket — the
-    * built-in-estimator alternative to [[bucketedNearDup]] when no coarse
-    * label exists. Seeded, so deterministic per run; Euclidean-distance
-    * thresholded (MLlib's metric), verified by invariant spec (recall vs
-    * the exact form), not the SQL oracle. */
-  def brpLshNearDup(df: DataFrame, idCol: String, vecCol: String,
-      bucketLength: Double, numHashTables: Int, maxDistance: Double,
-      seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.functions.array_to_vector
-    val featured = df.select(col(idCol), col(vecCol))
-      .withColumn("__features", array_to_vector(col(vecCol)))
-    val model = new BucketedRandomProjectionLSH()
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables).setSeed(seed)
-      .setInputCol("__features").setOutputCol("__hashes")
-      .fit(featured)
-    model.approxSimilarityJoin(featured, featured, maxDistance, "dist")
-      .select(
-        col(s"datasetA.$idCol").as("id_a"),
-        col(s"datasetB.$idCol").as("id_b"),
-        round(col("dist"), 6).as("dist"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
   /** Deployment sizing rule for sign-RP LSH: bits per table so that the
     * EXPECTED bucket occupancy stays ~`targetOccupancy` regardless of
     * corpus size — `bits = ceil(log2(n / targetOccupancy))`, floored at 6.
@@ -256,8 +230,8 @@ object Similarity {
     * (table, bucket) — grouped by the bucket key, never a cross product —
     * and keep the pairs whose exact cosine reaches `threshold`.
     *
-    * Unlike [[brpLshNearDup]] (MLlib, Gaussian planes no other engine can
-    * reproduce) this is hash-checkable end-to-end against DuckDB: the
+    * Unlike MLlib's BucketedRandomProjectionLSH (Gaussian planes no other
+    * engine can reproduce) this is hash-checkable end-to-end against DuckDB: the
     * bucket keys come from exact integer arithmetic ([[graft.expr.SignRpBuckets]]).
     *
     * Plan: one exchange. Each vector's row is exploded once per table,

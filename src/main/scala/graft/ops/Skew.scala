@@ -3,14 +3,12 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for shuffle joins.
+/** Skew diagnosis for shuffle joins.
   *
   * AQE's skew-join split (`spark.sql.adaptive.skewJoin.enabled`, on by
-  * default) handles most cases at runtime; manual salting remains the tool
-  * when one key dominates so hard that even split partitions overwhelm a
-  * task, or when AQE is unavailable (streaming joins). The salt fans the
-  * hot key's rows across `saltFactor` shuffle partitions at the cost of
-  * replicating the other side `saltFactor`×.
+  * default) handles most cases at runtime; the audit here finds the keys
+  * that dominate a join's output before it runs, which is when salting a
+  * hot key or retuning the AQE threshold is decided.
   */
 object Skew {
 
@@ -19,7 +17,7 @@ object Skew {
     * sides' row counts and the output amplification n_left·n_right,
     * top `topK` keys by output with each key's share of the total join
     * output in ppm. A handful of keys owning most of the output is the
-    * signature that calls for salting ([[saltedJoin]]) or an AQE skew
+    * signature that calls for salting the hot keys or an AQE skew
     * threshold retune.
     *
     * Output: (key, n_left, n_right, out_rows, share_ppm), top `topK`
@@ -79,21 +77,5 @@ object Skew {
       .limit(topK)
       .select(col("key"), col("n_left"), col("n_right"), col("out_rows"),
         col("share_ppm"))
-  }
-
-  /** Salted inner equi-join on `key`: `big`'s rows get a deterministic salt
-    * in [0, saltFactor) (hash of the whole row — no RNG, so retried tasks
-    * produce identical output: nondeterministic salting breaks exactly-once
-    * under task retry), `small`'s rows are replicated across every salt
-    * value, and the join key becomes (key, salt). Result equals the plain
-    * join, row for row. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltFactor: Int): DataFrame = {
-    require(saltFactor > 0, "saltFactor must be positive")
-    val bigS = big.withColumn("__salt",
-      pmod(xxhash64(struct(big.columns.map(col).toSeq: _*)), lit(saltFactor.toLong)))
-    val smallS = small.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltFactor.toLong - 1L))))
-    bigS.join(smallS, Seq(key, "__salt")).drop("__salt")
   }
 }

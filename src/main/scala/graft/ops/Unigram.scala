@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM subword segmentation — the SentencePiece-family
@@ -30,12 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: everything runs on the DISTINCT-WORD frame (the
   * [[Vocab.wordCounts]] contract — corpus text is touched once to build
-  * it), so the `maxLen` DP rounds and `maxLen` backtrack rounds cost
-  * O(|vocab| · maxPieceLen) each, independent of corpus size. Piece
-  * lookups are equi-joins on the piece string against the ≤(Σ chars +
-  * nBigrams + nTrigrams)-row vocabulary; round frames are lazily
-  * checkpointed so plan depth stays constant (the [[Bpe.learn]]
-  * discipline).
+  * it), so segmentation cost is independent of corpus size.
   */
 object Unigram {
 
@@ -70,82 +64,20 @@ object Unigram {
       .unionByName(topN(grams(3), nTrigrams))
   }
 
-  /** Viterbi-segment `words(wordCol)` over `vocab(piece, score)`.
+  /** Viterbi-segment `words(wordCol)` over `vocab` (piece → score).
     * Pieces are 1–3 characters (the [[pieceVocab]] shapes); words longer
-    * than `maxLen` are OUT OF CONTRACT and dropped (callers size
-    * `maxLen` to the corpus — the fixture max is 10).
+    * than `maxLen` are OUT OF CONTRACT and dropped. Output: (`wordCol`,
+    * n_pieces, score_sum, seg) — seg is the space-joined piece sequence.
     *
-    * Output: (`wordCol`, n_pieces, score_sum, seg) — seg is the
-    * space-joined piece sequence. */
-  def viterbiSegment(words: DataFrame, wordCol: String, vocab: DataFrame,
-      maxLen: Int): DataFrame = {
-    require(maxLen >= 1)
-    val w0 = words.select(col(wordCol).as("w"))
-      .filter(length(col("w")) > 0 && length(col("w")) <= maxLen)
-      .distinct()
-      .localCheckpoint(false)
-    val v = vocab.select(col("piece"), col("score"))
-    // dp(p): per word with len >= p, minimal cost to segment chars 1..p,
-    // and the chosen predecessor bj (p minus the final piece's length)
-    var dps = Map(0 -> w0.select(col("w"), lit(0L).as("cost"), lit(0L).as("bj")))
-    for (p <- 1 to maxLen) {
-      val cands = (1 to math.min(3, p)).map { l =>
-        dps(p - l)
-          .filter(length(col("w")) >= p)
-          .select(col("w"), col("cost"),
-            substring(col("w"), p - l + 1, l).as("__piece"))
-          .join(v, col("__piece") === col("piece"))
-          .select(col("w"),
-            (col("cost") + lit(Scale) - col("score")).as("cost"),
-            lit((p - l).toLong).as("bj"))
-      }.reduce(_ unionByName _)
-      val rk = Window.partitionBy(col("w"))
-        .orderBy(col("cost").asc, col("bj").asc)
-      dps += p -> cands.withColumn("__rk", row_number().over(rk))
-        .filter(col("__rk") === 1).drop("__rk")
-        .localCheckpoint(false)
-    }
-    val dpAll = (1 to maxLen).map(p =>
-        dps(p).select(col("w").as("dw"), lit(p.toLong).as("p"),
-          col("cost"), col("bj")))
-      .reduce(_ unionByName _)
-      .localCheckpoint(false)
-    // backtrack from p = len(w): prepend the final piece, step to bj.
-    // A word containing a character absent from the vocabulary has no
-    // DP row (no decomposition exists) and drops out at the final join.
-    var bt = w0.select(col("w"), length(col("w")).cast("long").as("pos"),
-      lit("").as("seg"))
-    for (_ <- 1 to maxLen) {
-      bt = bt.join(dpAll, col("w") === col("dw") && col("pos") === col("p"),
-          "left")
-        .select(col("w"),
-          when(col("pos") === 0L, 0L).otherwise(col("bj")).as("pos"),
-          when(col("pos") === 0L, col("seg"))
-            .otherwise(concat(
-              expr("substring(w, bj + 1, pos - bj)"),
-              when(col("seg") === "", lit("")).otherwise(lit(" ")),
-              col("seg"))).as("seg"))
-        .localCheckpoint(false)
-    }
-    w0.join(dpAll, col("w") === col("dw") && length(col("w")) === col("p"))
-      .join(bt.withColumnRenamed("w", "bw").withColumnRenamed("pos", "bpos")
-        .withColumnRenamed("seg", "bseg"), col("w") === col("bw"))
-      .select(col("w").as(wordCol),
-        expr(s"(cost + ${Scale - 1}) div $Scale").as("n_pieces"),
-        expr(s"((cost + ${Scale - 1}) div $Scale) * $Scale - cost").as("score_sum"),
-        col("bseg").as("seg"))
-  }
-
-  /** [[viterbiSegment]] fused into per-row expressions: the whole DP and
-    * backtrack run inside two `aggregate` higher-order functions with the
-    * vocabulary as a broadcast map LITERAL — one Spark job, zero joins,
-    * zero per-round barriers, versus the generic spelling's 2·maxLen
-    * round frames. The trade: the vocabulary must be driver-resident —
-    * fine by construction for [[pieceVocab]] output (every single
-    * character + top-N 2-/3-grams: charset + N entries, an artifact, not
-    * data — the q149 keptMs contract). Semantics are identical
-    * (UnigramSpec proves fused ≡ generic on random words; the struct
-    * `array_min` realizes the same (cost, bj) lexicographic rank).
+    * The whole DP and backtrack run inside two `aggregate` higher-order
+    * functions with the vocabulary as a broadcast map LITERAL — one Spark
+    * job, zero joins, zero per-round barriers, versus the generic
+    * spelling's 2·maxLen round frames. The trade: the vocabulary must be
+    * driver-resident — fine by construction for [[pieceVocab]] output
+    * (every single character + top-N 2-/3-grams: charset + N entries, an
+    * artifact, not data — the q149 keptMs contract). Semantics are
+    * identical (UnigramSpec proves fused ≡ generic on random words; the
+    * struct `array_min` realizes the same (cost, bj) lexicographic rank).
     * Interpreted-HOF cost is per DISTINCT WORD (≤ maxLen · 3 map probes),
     * off the corpus hot path. */
   def viterbiSegmentFused(words: DataFrame, wordCol: String,

@@ -26,19 +26,6 @@ object Vocab {
     * ([[graft.functions.TextFns.wordTokens]]). */
   private def toks(c: Column): Column = graft.functions.TextFns.wordTokens(c)
 
-  /** Positional n-gram spans, HOF reference spelling — the form the DuckDB
-    * oracles mirror; the operators run the fused codegen kernel
-    * ([[graft.expr.ShingleKernels.wordSpans]]), and VocabSpec asserts the
-    * two agree (the interpreted HOF chain costs ~µs per span — 20× the
-    * whole-query budget at sf0.1). */
-  private[graft] def spansReference(c: Column, n: Int): Column = {
-    val t = toks(c)
-    when(size(t) >= n,
-      transform(sequence(lit(0), size(t) - n),
-        i => array_join(slice(t, i + lit(1), lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Per-word corpus counts: one map-side-combined hash aggregation over
     * the exploded token stream; blank tokens (empty docs) dropped. */
   private[graft] def wordCounts(df: DataFrame, textCol: String): DataFrame =
@@ -123,7 +110,7 @@ object Vocab {
     * made of corpus-repeated spans is boilerplate or a copy; doc-level
     * near-dup (MinHash q14, Jaccard q38) misses it when the copying is
     * partial. Positional n-grams — NOT the distinct/sorted shingle sets of
-    * [[graft.functions.TextFns.wordShingles]] — because span COUNTS are
+    * [[graft.expr.TextExprs.wordShingles]] — because span COUNTS are
     * the unit here.
     *
     * Scale shape: explode is map-side (n_tokens − n + 1 spans per doc);

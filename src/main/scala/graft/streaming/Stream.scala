@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -121,72 +119,16 @@ object Stream {
       .drop(r(keyCol))
   }
 
-  /** Per-user running state carried across micro-batches. */
-  case class UserRunning(user_id: String, n_events: Long, value_e4: Long,
-      last_ts: Timestamp)
-
-  /** Custom arbitrary state via flatMapGroupsWithState — the slot for
-    * stateful logic the built-in windows can't express (per-key running
-    * totals, custom eviction, ML feature state). Emits the updated running
-    * row per key per micro-batch.
-    *
-    * With `idleTimeout = Some(d)`, state evicts after `d` of
-    * processing-time inactivity, keeping memory bounded on unbounded key
-    * spaces — note the timeout keeps the query triggering empty
-    * micro-batches to fire evictions (so `processAllAvailable` never
-    * settles; production queries use a processing-time trigger). Pass None
-    * for data-driven-only batches.
-    *
-    * Input columns: (user_id: string, ts: timestamp, value: double). Works
-    * identically on batch Datasets (state is per-group within the batch).
-    */
-  def runningUserStats(events: DataFrame,
-      idleTimeout: Option[String] = Some("1 hour")): Dataset[UserRunning] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf = if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.select(col("user_id").cast("string"), col("ts").cast("timestamp"),
-        col("value").cast("double"))
-      .as[(String, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (user: String, rows: Iterator[(String, Timestamp, Double)],
-            state: GroupState[UserRunning]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(UserRunning(user, 0L, 0L, new Timestamp(0L)))
-            var n = prev.n_events; var v = prev.value_e4; var last = prev.last_ts
-            rows.foreach { case (_, ts, value) =>
-              n += 1
-              // same HALF_UP (away-from-zero) rounding as SQL round() in the
-              // batch forms — math.round is half-up-toward-+Inf and diverges
-              // on negative *.5 values
-              v += BigDecimal(value * 10000)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-              if (ts.after(last)) last = ts
-            }
-            val next = UserRunning(user, n, v, last)
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator.single(next)
-          }
-        })
-  }
-
   /** Running lateness state per event type — see [[latenessStream]]. */
   case class LatenessRunning(typ: String, n: Long, n_late: Long,
       max_late_us: Long, sum_late_us: Long, hwm_us: Long)
 
   /** Streaming form of [[graft.ops.Journey.latenessProfile]]: per event
     * type, a running high-water-mark of event time in INGEST order
-    * (`seqCol` within each micro-batch — the [[nearDupFilterStream]]
-    * in-batch ordering convention), accumulating how many events arrived
+    * (`seqCol` within each micro-batch), accumulating how many events arrived
     * behind an already-seen later event and the lateness tail. Emits the
     * running state after each batch; the LAST row per type equals the
-    * batch profile (StreamingSpec pins the parity).
+    * batch profile (Wave32Spec pins the parity).
     *
     * State is one 5-long record per event type — bounded by the type
     * dimension, no timeout needed. */
@@ -214,52 +156,6 @@ object Stream {
           }
           state.update(s)
           Iterator.single(s)
-        })
-  }
-
-  /** Per-bucket SimHash state for [[nearDupFilterStream]]. */
-  case class BucketPrints(bucket: Long, prints: List[Long])
-
-  /** Emitted by [[nearDupFilterStream]]: a document no earlier (or
-    * lower-id same-batch) document was a near-duplicate of. */
-  case class NovelDoc(doc_id: Long, simhash: Long, bucket: Long)
-
-  /** Streaming near-dup dedup: the incremental form of the q73 SimHash
-    * loop. Each document's md5-SimHash fingerprint (the
-    * [[graft.expr.SimHashMd5]] kernel) keys it to a bucket; per-bucket
-    * state holds the fingerprints seen so far, and a document is emitted
-    * only if no stored print is within `maxHamming` bits. Within a
-    * micro-batch, rows are processed in doc_id order, so the lowest id of
-    * a duplicate group wins deterministically.
-    *
-    * State is per-bucket (the stream shuffles on the 8-bit bucket — 256
-    * keys here; widen the prefix for more parallelism at scale) and capped
-    * at `maxPrintsPerBucket` most-recent prints, so memory stays bounded
-    * on an unbounded crawl at the usual LSH price: a duplicate of an
-    * evicted print re-enters. Works identically on a batch frame (state
-    * is per-group within the batch). */
-  def nearDupFilterStream(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxPrintsPerBucket: Int = 4096): Dataset[NovelDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.ops.Dedup.simHashFingerprintsMd5(docs, idCol, textCol)
-      .select(col(idCol).cast("long"), col("simhash"), col("bucket"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (bucket: Long, rows: Iterator[(Long, Long, Long)],
-            state: GroupState[BucketPrints]) => {
-          var prints = state.getOption.map(_.prints).getOrElse(Nil)
-          val out = List.newBuilder[NovelDoc]
-          rows.toSeq.sortBy(_._1).foreach { case (id, sh, _) =>
-            val dup = prints.exists(p => java.lang.Long.bitCount(p ^ sh) <= maxHamming)
-            if (!dup) {
-              out += NovelDoc(id, sh, bucket)
-              prints = (sh :: prints).take(maxPrintsPerBucket)
-            }
-          }
-          state.update(BucketPrints(bucket, prints))
-          out.result().iterator
         })
   }
 
@@ -291,8 +187,8 @@ object Stream {
     * follows [[graft.ops.Similarity.lshBitsFor]] (~80 members/bucket),
     * and hard-capped at `maxMembersPerBucket` (beyond the cap new
     * members are verdict-emitted as non-keepers but NOT admitted to the
-    * sums — the bounded-state price, the [[nearDupFilterStream]]
-    * eviction precedent). Works identically on a batch frame. */
+    * sums — the bounded-state price). Works identically on a batch
+    * frame. */
   def semanticDedupStream(docs: DataFrame, idCol: String, vecCol: String,
       planes: Array[Array[Double]], bits: Int, quantScale: Double = 1000.0,
       maxMembersPerBucket: Int = 4096): Dataset[SemanticVerdict] = {
@@ -356,14 +252,6 @@ object Stream {
         })
   }
 
-  /** Stream-static enrichment: join a stream against a dimension table.
-    * The static side is re-planned per micro-batch (so dimension updates
-    * between batches are picked up) and broadcasts when small — the
-    * no-shuffle-on-the-stream-side join every event pipeline runs. Works
-    * identically on a batch frame. */
-  def enrichStream(stream: DataFrame, dim: DataFrame, keyCol: String): DataFrame =
-    stream.join(broadcast(dim), Seq(keyCol), "left")
-
   /** Live inverted-index maintenance: the (doc, term, tf) postings table
     * kept current over an unbounded document stream — a running streaming
     * aggregation (documents are immutable and ids unique, so counts only
@@ -382,19 +270,4 @@ object Stream {
       .filter(col("term") =!= "")
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-
-  /** Idempotent micro-batch sink via foreachBatch: each batch overwrites
-    * its OWN directory (`batch=<id>`), so a replayed/retried batch
-    * rewrites the same files instead of duplicating rows — the standard
-    * exactly-once-to-files recipe when the sink itself has no transaction
-    * log. Returns the started query. */
-  def toIdempotentParquetSink(stream: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-      }
-      .start()
 }

@@ -27,7 +27,7 @@ class BpeSpec extends SparkSpec {
       .toDF("id", "sym", "l", "r")
     val both = df.select($"id",
         graft.expr.BpeExprs.bpeMergePair($"sym", $"l", $"r").as("kernel"),
-        Bpe.mergePairReference($"sym", $"l", $"r").as("ref"))
+        Reference.mergePairReference($"sym", $"l", $"r").as("ref"))
       .as[(Long, String, String)].collect()
     both.foreach { case (id, k, ref) =>
       assert(k == ref, s"case $id: kernel=$k ref=$ref")

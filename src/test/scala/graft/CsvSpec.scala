@@ -2,14 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.io.Csv
 import graft.schema.Schemas
 
 /** Declared-schema CSV source/sink round trip (S1/S2): quoted multiline
-  * bodies, escaped quotes, partitioned writes, corrupt-record quarantine,
-  * catalog listing. */
+  * bodies, escaped quotes, partitioned writes. */
 class CsvSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,24 +37,11 @@ class CsvSpec extends SparkSpec {
     val df = Seq(("reddit", "a", 1L), ("stack", "b", 2L), ("reddit", "c", 3L))
       .toDF("platform", "id_post", "score")
     Csv.writeParquet(df, s"$dir/wh/infos", partitionBy = Seq("platform"))
-    val parts = Csv.listTables(spark, s"$dir/wh/infos")
+    val parts = new java.io.File(s"$dir/wh/infos").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
     assert(parts == Seq("platform=reddit", "platform=stack"))
-    assert(Csv.listTables(spark, s"$dir/wh") == Seq("infos"))
     // partition pruning: reading one partition sees only its rows
     val reddit = spark.read.parquet(s"$dir/wh/infos").filter($"platform" === "reddit")
     assert(reddit.count() == 2)
-  }
-
-  test("permissive read quarantines corrupt rows instead of failing") {
-    val dir = tmpDir()
-    Files.writeString(java.nio.file.Path.of(dir, "data.csv"),
-      "id_comment,body,score,created_utc,parent_post_id\n" +
-        "c1,fine,5,2024-01-01T00:00:00.000Z,p1\n" +
-        "c2,broken,NOT_A_NUMBER,2024-01-01T00:00:00.000Z,p1\n")
-    val df = Csv.readPermissive(spark, s"$dir/data.csv", Schemas.comments).cache()
-    val good = df.filter(col("_corrupt_record").isNull)
-    val bad = df.filter(col("_corrupt_record").isNotNull)
-    assert(good.count() == 1 && bad.count() == 1)
-    assert(good.select("id_comment").as[String].collect().toSeq == Seq("c1"))
   }
 }

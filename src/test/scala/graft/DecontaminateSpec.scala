@@ -35,7 +35,7 @@ class DecontaminateSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bloom = Decontaminate.bloomDropList(docs, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().sorted.toSeq
-    val exact = Decontaminate.exactDropList(docs, "doc_id", "text", n = 5)
+    val exact = Reference.exactDropList(docs, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().sorted.toSeq
     assert(bloom == exact)
     // and the fixture actually exercises the path (a leak exists)
@@ -56,9 +56,9 @@ class DecontaminateSpec extends SparkSpec {
     val fHalf = Future(Decontaminate.bloomDropList(half, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().sorted.toSeq)
     val (full, halfRes) = (Await.result(fFull, 120.seconds), Await.result(fHalf, 120.seconds))
-    assert(full == Decontaminate.exactDropList(docs, "doc_id", "text", n = 5)
+    assert(full == Reference.exactDropList(docs, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().sorted.toSeq)
-    assert(halfRes == Decontaminate.exactDropList(half, "doc_id", "text", n = 5)
+    assert(halfRes == Reference.exactDropList(half, "doc_id", "text", n = 5)
       .as[(Long, Long)].collect().sorted.toSeq)
     // and no catalog residue from either invocation
     assert(spark.catalog.listTables().filter($"name".startsWith("graft_decon")).isEmpty)

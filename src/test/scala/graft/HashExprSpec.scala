@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.expr.HashExprs
-import graft.functions.{HashFns, TextFns}
+import graft.functions.HashFns
 
 /** The fused MinHash band-key kernel must produce exactly the band keys of
   * the pure-builtin spelling (md5Long → affine permutations → concat_ws
@@ -13,12 +13,12 @@ class HashExprSpec extends SparkSpec {
 
   test("MinHashBandKeys equals the builtin minHash pipeline band keys") {
     val docs = io.Tables.documents(spark, sfDir).limit(200)
-    val sh = docs.select($"doc_id", TextFns.wordShingles($"text", 2).as("sh"))
+    val sh = docs.select($"doc_id", Reference.wordShingles($"text", 2).as("sh"))
     val k = 12; val bands = 4; val rows = 3
     val builtin = sh
-      .select($"doc_id", HashFns.minHashBase($"sh").as("hb"))
-      .select($"doc_id", HashFns.minHashSigFromBase($"hb", k).as("sig"))
-      .select($"doc_id", HashFns.bandSigs($"sig", bands, rows).as("keys"))
+      .select($"doc_id", Reference.minHashBase($"sh").as("hb"))
+      .select($"doc_id", Reference.minHashSigFromBase($"hb", k).as("sig"))
+      .select($"doc_id", Reference.bandSigs($"sig", bands, rows).as("keys"))
     val fused = sh.select($"doc_id",
       HashExprs.minHashBandKeys($"sh", HashFns.minHashCoeffs(k), bands).as("keys"))
     val b = builtin.as[(Long, Seq[String])].collect().toMap
@@ -31,7 +31,7 @@ class HashExprSpec extends SparkSpec {
     val docs = io.Tables.documents(spark, sfDir).limit(200)
     val toks = docs.select($"doc_id",
       split(graft.ops.Dedup.normalized($"text"), " ").as("tk"))
-    val hof = toks.select($"doc_id", graft.ops.Dedup.simHashMd5Hof($"tk").as("sh"))
+    val hof = toks.select($"doc_id", Reference.simHashMd5Hof($"tk").as("sh"))
       .as[(Long, Long)].collect().toMap
     val fused = toks.select($"doc_id", HashExprs.simHashMd5($"tk").as("sh"))
       .as[(Long, Long)].collect().toMap
@@ -48,7 +48,7 @@ class HashExprSpec extends SparkSpec {
       (3L, null.asInstanceOf[Seq[String]])).toDF("id", "tk")
     val out = df.select($"id", HashExprs.simHashMd5($"tk").as("sh"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    val hof = df.select($"id", graft.ops.Dedup.simHashMd5Hof($"tk").as("sh"))
+    val hof = df.select($"id", Reference.simHashMd5Hof($"tk").as("sh"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(out == hof)
     assert(out(2L) == Some(0xffffffffL)) // empty: ones(0) >= zeros(0) sets every bit

@@ -4,71 +4,10 @@ import java.nio.file.Files
 
 import graft.io.Layout
 
-/** Layout contract: range-partitioned sorted parquet yields files with
-  * DISJOINT key ranges, so min/max statistics can prune at file level —
-  * the property that makes range predicates sub-linear at scale. */
+/** Layout contract: scratch artifacts land under the warehouse, and a
+  * dynamic partition overwrite backfills one partition in place. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
-
-  test("writeRangeSorted produces disjoint per-file key ranges that prune") {
-    val dir = Files.createTempDirectory("graft_layout").toString
-    val li = graft.io.Tables.lineitem(spark, sfDir)
-    Layout.writeRangeSorted(li, s"$dir/li", "l_orderkey", 4)
-
-    val files = new java.io.File(s"$dir/li").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-    assert(files.length >= 2, files.mkString(","))
-
-    // per-file (min, max) of the sort key must not overlap across files
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(org.apache.spark.sql.functions.min($"l_orderkey"),
-          org.apache.spark.sql.functions.max($"l_orderkey")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi <= lo2, ranges.mkString(","))
-      case _ =>
-    }
-
-    // a narrow range predicate intersects exactly one file's key range
-    val probe = ranges.head._2 // last key of the first file
-    val hits = ranges.count { case (lo, hi) => lo <= probe && probe <= hi }
-    assert(hits == 1, ranges.mkString(","))
-
-    // and the layout round-trips: content unchanged
-    assert(spark.read.parquet(s"$dir/li").count() == li.count())
-  }
-
-  test("Z-order layout prunes on BOTH columns where a single sort prunes one") {
-    val dir = Files.createTempDirectory("graft_zorder").toString
-    val li = graft.io.Tables.lineitem(spark, sfDir)
-      .select($"l_orderkey", $"l_partkey", $"l_quantity")
-    val files = 8
-    Layout.writeRangeSorted(li, s"$dir/linear", "l_orderkey", files)
-    Layout.writeZOrdered(li, s"$dir/z", "l_orderkey", "l_partkey", files)
-
-    def ranges(path: String, c: String): Array[(Long, Long)] =
-      new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map { f =>
-          val r = spark.read.parquet(f.getPath)
-            .agg(org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col(c)),
-              org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col(c))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-
-    // a narrow l_partkey probe: in the orderkey-sorted layout every file
-    // spans the whole partkey domain, so nothing prunes; in the Z-order
-    // layout files cover partkey sub-ranges, so some files are skippable
-    val probes = Seq(5L, 50L, 120L, 180L)
-    val linearHits = probes.map(p =>
-      ranges(s"$dir/linear", "l_partkey").count { case (lo, hi) => lo <= p && p <= hi })
-    val zHits = probes.map(p =>
-      ranges(s"$dir/z", "l_partkey").count { case (lo, hi) => lo <= p && p <= hi })
-    assert(zHits.sum < linearHits.sum, s"z=$zHits linear=$linearHits")
-    // round-trip intact
-    assert(spark.read.parquet(s"$dir/z").count() == li.count())
-  }
 
   test("scratchArtifact creates a unique, existing dir under the warehouse") {
     val a = Layout.scratchArtifact(spark, "spec")
@@ -111,9 +50,4 @@ class LayoutSpec extends SparkSpec {
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
-
-  // The bucketed-table layout (Layout.writeBucketed) is proven in
-  // BucketingSpec, which owns the zero-Exchange join property, the
-  // one-file-per-bucket write shape, and the shuffled-baseline contrast
-  // in an isolated database — one suite, one set of managed tables.
 }

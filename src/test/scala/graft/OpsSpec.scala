@@ -23,12 +23,6 @@ class OpsSpec extends SparkSpec {
     assert(out == Set("he said I am a bot yesterday", "normal comment"))
   }
 
-  test("Clean.stripPrefix strips only the leading prefix") {
-    val df = Seq("t3_abc", "xt3_abc", "t3_t3_x").toDF("id")
-    val out = df.select(Clean.stripPrefix($"id", "t3_")).as[String].collect().toSeq
-    assert(out == Seq("abc", "xt3_abc", "t3_x"))
-  }
-
   test("TopK.topNPerGroup keeps n rows per group with deterministic ties") {
     val df = Seq(
       ("p1", "c1", 10L), ("p1", "c2", 10L), ("p1", "c3", 5L),
@@ -72,19 +66,6 @@ class OpsSpec extends SparkSpec {
     assert(out.count() == 2)
     val row2 = out.filter($"id" === "2").collect().head
     assert(row2.getAs[String]("title") == null && row2.getAs[Long]("score") == 5L)
-  }
-
-  test("Multimodal.resizeStub updates metadata and flags aspect change") {
-    val assets = graft.ops.Multimodal.fromText(
-      Seq((1L, "abc"), (2L, "defg")).toDF("id", "t"), "id", "t", "image")
-    val out = graft.ops.Multimodal.resizeStub(assets, 128, 128)
-      .select($"asset_id", $"width", $"height", $"orig_width", $"orig_height", $"aspect_changed")
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(out(1L).getInt(1) == 128 && out(1L).getInt(2) == 128)
-    // asset 1: orig 128x128 (id 1 → w=1*64+64, h=1*64+64) → square stays square
-    assert(!out(1L).getBoolean(5))
-    // asset 2: orig 192x192? id 2 → w=2*64+64=192, h=2*64+64=192 → unchanged aspect
-    assert(out(2L).getInt(3) == 192 && !out(2L).getBoolean(5))
   }
 
   test("Merge.dedupByKey is idempotent") {

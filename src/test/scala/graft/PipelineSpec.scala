@@ -26,7 +26,7 @@ class PipelineSpec extends SparkSpec {
     val redditPosts = Pipeline.normalizePosts("reddit", Map(
       "community" -> col("subreddit"), "id_post" -> col("id"),
       "title" -> col("title"), "body" -> col("selftext"), "score" -> col("score"),
-      "date" -> Pipeline.epochToTs(col("created_utc")), "link" -> col("url"),
+      "date" -> timestamp_seconds(col("created_utc")), "link" -> col("url"),
       "num_comments" -> col("num_comments")))(redditRaw)
 
     // raw comments: one bot, one deleted, four real on r1 (keep top 2)
@@ -40,7 +40,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("cid", "text", "score", "created", "parent")
     val redditComments = Pipeline.normalizeComments(Map(
       "id_comment" -> col("cid"), "body" -> col("text"), "score" -> col("score"),
-      "created_utc" -> Pipeline.epochToTs(col("created")),
+      "created_utc" -> timestamp_seconds(col("created")),
       "parent_post_id" -> col("parent")))(redditCommsRaw)
 
     // raw Stack-shaped: long epoch, html bodies
@@ -50,7 +50,7 @@ class PipelineSpec extends SparkSpec {
     val stackPosts = Pipeline.normalizePosts("stack", Map(
       "community" -> col("site"), "id_post" -> col("question_id"),
       "title" -> col("title"), "body" -> col("body"), "score" -> col("score"),
-      "date" -> Pipeline.epochToTs(col("creation_date")), "link" -> col("link"),
+      "date" -> timestamp_seconds(col("creation_date")), "link" -> col("link"),
       "num_comments" -> col("answer_count")))(stackRaw)
 
     val stackCommsRaw = Seq(
@@ -58,7 +58,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("answer_id", "body", "score", "created_date", "parent_question_id")
     val stackComments = Pipeline.normalizeComments(Map(
       "id_comment" -> col("answer_id"), "body" -> col("body"), "score" -> col("score"),
-      "created_utc" -> Pipeline.epochToTs(col("created_date")),
+      "created_utc" -> timestamp_seconds(col("created_date")),
       "parent_post_id" -> col("parent_question_id")))(stackCommsRaw)
 
     val out = Pipeline.run(redditPosts, redditComments, stackPosts, stackComments,

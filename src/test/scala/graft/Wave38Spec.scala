@@ -113,7 +113,7 @@ class Wave38Spec extends SparkSpec {
     for (k <- Seq(1, 2, 16)) {
       val both = df.select(col("id"),
           graft.ops.Multimodal.byteShingles(col("content"), k).as("fused"),
-          graft.ops.Multimodal.byteShinglesHof(col("content"), k).as("hof"))
+          Reference.byteShinglesHof(col("content"), k).as("hof"))
         .as[(Long, Seq[String], Seq[String])].collect()
       both.foreach { case (id, f, h) => assert(f == h, s"id=$id k=$k") }
     }

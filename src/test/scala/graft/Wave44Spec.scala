@@ -113,7 +113,7 @@ class Wave44Spec extends SparkSpec {
     val narrow = Dedup.weightedMinHashLshPairs(docs, "doc_id", "text",
         numHashes = 12, bands = 4, threshold = 0.0, tfCap = 8)
       .as[(Long, Long, Double)].collect().sorted.toSeq
-    val array = Dedup.weightedMinHashLshPairsExpanded(docs, "doc_id",
+    val array = Reference.weightedMinHashLshPairsExpanded(docs, "doc_id",
         "text", numHashes = 12, bands = 4, threshold = 0.0, tfCap = 8)
       .as[(Long, Long, Double)].collect().sorted.toSeq
     assert(narrow.nonEmpty && narrow == array,

@@ -13,7 +13,7 @@ class Wave9Spec extends SparkSpec {
   test("qualityLogit: features and logit match a hand computation") {
     // "the cat! 42" → 3 tokens? no: "the", "cat!", "42" = 3 words, 1 stop hit
     val df = Seq((1L, "src", "the cat! 42")).toDF("doc_id", "source", "text")
-    val r = Classify.qualityLogit(df, "doc_id", "text", Seq("source"))
+    val r = Reference.qualityLogit(df, "doc_id", "text", Seq("source"))
       .collect().head
     val nChars = 11L; val punct = 1L; val digit = 2L
     val stopPpm = 1L * 1000000L / 3L
@@ -34,7 +34,7 @@ class Wave9Spec extends SparkSpec {
     val df = Seq(
       (1L, "the cat sat on the mat and it is a good day for the cat to be here"),
       (2L, "x9$!@ 77#% 123!! &&** 00-%% 4#2@1 9!9!9")).toDF("doc_id", "text")
-    val out = Classify.qualityLogit(df, "doc_id", "text")
+    val out = Reference.qualityLogit(df, "doc_id", "text")
       .select($"doc_id", $"logit_e6").as[(Long, Long)].collect().toMap
     assert(out(1L) > out(2L))
     assert(out(1L) > 0L && out(2L) < 0L)
@@ -264,14 +264,14 @@ class Wave9Spec extends SparkSpec {
 
   test("qualityLogitFused is row-identical to the aggregate spelling") {
     val docs = graft.io.Tables.documents(spark, sfDir)
-    val agg = Classify.qualityLogit(docs, "doc_id", "text", Seq("source"))
+    val agg = Reference.qualityLogit(docs, "doc_id", "text", Seq("source"))
     val fused = Classify.qualityLogitFused(docs, "doc_id", "text", Seq("source"))
     assert(agg.exceptAll(fused).isEmpty && fused.exceptAll(agg).isEmpty,
       "classifier kernel diverged from the aggregate reference")
     // edge cases: empty text (one '' token), punct/digit-only, astral
     val edge = Seq((1L, ""), (2L, "!!! 123"), (3L, "the 😀 the"),
       (4L, "  the  a  ")).toDF("doc_id", "text")
-    val ea = Classify.qualityLogit(edge, "doc_id", "text")
+    val ea = Reference.qualityLogit(edge, "doc_id", "text")
     val ef = Classify.qualityLogitFused(edge, "doc_id", "text")
     assert(ea.exceptAll(ef).isEmpty && ef.exceptAll(ea).isEmpty)
     // and the fused plan is a pure projection
@@ -308,9 +308,9 @@ class Wave9Spec extends SparkSpec {
     val base = docs.select($"doc_id", $"source", $"text",
       split(lower(trim($"text")), "\\s+").as("toks"),
       graft.expr.TextExprs.wordSpans($"text", 2).as("spans"))
-    val clsA = Classify.qualityLogit(docs, "doc_id", "text")
+    val clsA = Reference.qualityLogit(docs, "doc_id", "text")
       .select($"doc_id", $"logit_e6")
-    val clsB = Classify.qualityLogit(base, "doc_id", "text",
+    val clsB = Reference.qualityLogit(base, "doc_id", "text",
         toksCol = Some("toks"))
       .select($"doc_id", $"logit_e6")
     assert(clsA.exceptAll(clsB).isEmpty && clsB.exceptAll(clsA).isEmpty)
