@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.{Clean, Merge, Relate, TopK}
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.TextFns
 
 /** The engine's query surface: one named query per operator family from
   * SURVEY.md §2, each paired with equivalent DuckDB SQL in [[Queries.defs]]

@@ -332,10 +332,6 @@ object Queries3 {
   val q47RpLsh: Q = (spark, dir) =>
     Similarity.rpLshNearDup(Tables.embeddings(spark, dir), "vec_id", "embedding",
       rpPlanes, rpBits, threshold = 0.35)
-  /** CTE body producing `pairs(id_a, id_b, sim)` — the DuckDB mirror of
-    * [[Similarity.rpLshNearDup]] with [[rpPlanes]] over `sourceRel`
-    * (a relation with `vec_id`, `embedding` columns); shared by q47, the
-    * q52 dedup-cluster oracle, and q83's restricted-corpus clustering. */
   /** DuckDB spelling of ONE sign-RP band key over a quantized-vector
     * column `qv` — THE single source for the bucket-key SQL, shared by
     * [[rpPairsCte]] (q47/q52/q83 family) and q124's decon oracle
@@ -353,6 +349,10 @@ object Queries3 {
   private[graft] val RpQuantExpr: String =
     "list_transform(embedding, x -> floor(x::DOUBLE * 1000 + 0.5))"
 
+  /** CTE body producing `pairs(id_a, id_b, sim)` — the DuckDB mirror of
+    * [[Similarity.rpLshNearDup]] with [[rpPlanes]] over `sourceRel`
+    * (a relation with `vec_id`, `embedding` columns); shared by q47, the
+    * q52 dedup-cluster oracle, and q83's restricted-corpus clustering. */
   def rpPairsCte(sourceRel: String, simThreshold: Double = 0.35,
       planes: Array[Array[Double]] = rpPlanes, bits: Int = rpBits): String = {
     val tables = (0 until planes.length / bits).map(t =>

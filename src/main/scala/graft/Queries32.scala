@@ -93,7 +93,7 @@ object Queries32 {
     val scored = lex
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(qv, Seq("q_id"))
-      .withColumn("__sim", round(graft.functions.VectorFns.cosine(
+      .withColumn("__sim", round(graft.expr.VectorExprs.cosine(
         col("embedding"), col("qvec")), 6))
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("__sim").desc, col("vec_id").asc)

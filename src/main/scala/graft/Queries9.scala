@@ -281,7 +281,7 @@ object Queries9 {
       .select(col("doc_id"), col("source"), col("logit_e6"), col("keep"))
     // the fused RepetitionStats kernel is doc-local (pure projection, no
     // exchanges) and needs no spans — only DSIR actually consumes the
-    // span checkpoint; the aggregate spelling remains the oracle reference
+    // span checkpoint
     val gate = graft.ops.Repetition.gateVerdictsFused(base, "doc_id", "text",
         maxDupLinePpm = 300000L, maxDupLineCharPpm = 200000L,
         maxTopBigramPpm = 180000L)
@@ -334,7 +334,7 @@ object Queries9 {
     val docs = Tables.documents(spark, dir)
     val cls = Classify.qualityLogitFused(docs, "doc_id", "text", Seq("source"))
       .select(col("doc_id"), col("source"), col("keep"))
-    val gate = graft.ops.Repetition.gateVerdicts(docs, "doc_id", "text",
+    val gate = graft.ops.Repetition.gateVerdictsFused(docs, "doc_id", "text",
         maxDupLinePpm = 300000L, maxDupLineCharPpm = 200000L,
         maxTopBigramPpm = 180000L)
       .select(col("doc_id"), col("gate_pass"))

@@ -420,8 +420,9 @@ case class SortedWeightedJaccard(first: Expression, second: Expression,
 object RepetitionKernels {
 
   /** All three Gopher within-document repetition signals in ONE pass over
-    * the row — the fused form of graft.ops.Repetition.repetitionSignals'
-    * explode+aggregate spelling, value-identical by construction:
+    * the row — the fused form of the explode+aggregate spelling specs
+    * check it against (`Reference.repetitionSignals`), value-identical by
+    * construction:
     *
     *  - lines via `split("\n", -1)` (the regex the batch spelling uses,
     *    trailing empties kept), line length in CODE POINTS (Spark

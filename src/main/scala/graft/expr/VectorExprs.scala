@@ -11,6 +11,8 @@ import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
+import graft.functions.VectorFns.QuantScale
+
 /** Codegen'd dense-vector kernels over `array<float>` / `array<double>`.
   *
   * The higher-order-function spellings in [[graft.functions.VectorFns]] are
@@ -36,9 +38,9 @@ object VectorExprs {
 
   /** Column wrapper for [[SignRpBuckets]]. */
   def signRpBuckets(vec: Column, planes: Array[Array[Double]],
-      bitsPerTable: Int, quantScale: Double): Column =
+      bitsPerTable: Int): Column =
     ExpressionUtils.column(SignRpBuckets(ExpressionUtils.expression(vec),
-      planes, bitsPerTable, quantScale))
+      planes, bitsPerTable))
 
   /** Column wrapper for [[BucketPairs]]. */
   def bucketPairs(members: Column, table: Column, floor: Double): Column =
@@ -79,8 +81,8 @@ trait VectorKernel { self: BinaryExpression =>
 }
 
 /** Fused cosine similarity: dot(a,b) / (||a|| * ||b||); 0.0 when either norm
-  * is 0 (matches VectorFns.cosine / the reference's Qdrant COSINE metric,
-  * reference: PLATFORM-contextual-Chunking.py:137-144).
+  * is 0 (matches the zip_with + aggregate spelling and the reference's
+  * Qdrant COSINE metric, reference: PLATFORM-contextual-Chunking.py:137-144).
   *
   * The generated code calls [[CosineSim.eval]]: one static loop that the
   * JIT compiles once and every query shares. A loop spelled into each
@@ -159,7 +161,8 @@ object CosineSim {
   * internal Gaussian draws no SQL engine can replicate).
   *
   * Each input element is quantized to an integer-valued double
-  * (`floor(x * quantScale + 0.5)`) and dotted with ±1 hyperplanes, so every
+  * (`floor(x * QuantScale + 0.5)`, the [[graft.functions.VectorFns.quantize]]
+  * grid) and dotted with ±1 hyperplanes, so every
   * product and partial sum is an integer far below 2^53: the arithmetic is
   * EXACT, order-independent, and bitwise-reproducible in any engine — which
   * is what makes the whole LSH pipeline hash-checkable against DuckDB.
@@ -172,7 +175,7 @@ object CosineSim {
   * ride along as a reference object, not a per-row literal.
   */
 case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
-    bitsPerTable: Int, quantScale: Double)
+    bitsPerTable: Int)
     extends UnaryExpression {
   require(planes.nonEmpty && planes.length % bitsPerTable == 0,
     s"planes(${planes.length}) must be a multiple of bitsPerTable($bitsPerTable)")
@@ -187,14 +190,14 @@ case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
   }
 
   override def nullSafeEval(input: Any): Any =
-    SignRpBuckets.keys(input.asInstanceOf[ArrayData], isFloat, planes, bitsPerTable, quantScale)
+    SignRpBuckets.keys(input.asInstanceOf[ArrayData], isFloat, planes, bitsPerTable, QuantScale)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
     val k = SignRpBuckets.getClass.getName + ".MODULE$"
     nullSafeCodeGen(ctx, ev, a =>
       s"""
-         |${ev.value} = $k.keys($a, $isFloat, $planesRef, $bitsPerTable, ${quantScale}D);
+         |${ev.value} = $k.keys($a, $isFloat, $planesRef, $bitsPerTable, ${QuantScale}D);
          |${ev.isNull} = ${ev.value} == null;
        """.stripMargin)
   }
@@ -206,15 +209,17 @@ case class SignRpBuckets(child: Expression, planes: Array[Array[Double]],
 object SignRpBuckets {
 
   /** One key per table of `bitsPerTable` planes; null when `a` holds a null
-    * element (`isFloat`: element type float, else double). */
+    * element (`isFloat`: element type float, else double). `scale` is
+    * always [[graft.functions.VectorFns.QuantScale]], passed in so the
+    * generated code carries it as a literal. */
   def keys(a: ArrayData, isFloat: Boolean, planes: Array[Array[Double]], bitsPerTable: Int,
-      quantScale: Double): ArrayData = {
+      scale: Double): ArrayData = {
     val n = a.numElements()
     val q = new Array[Double](n)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
-      q(i) = math.floor((if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)) * quantScale + 0.5)
+      q(i) = math.floor((if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)) * scale + 0.5)
       i += 1
     }
     val numTables = planes.length / bitsPerTable

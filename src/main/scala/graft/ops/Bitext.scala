@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFns
+import graft.expr.VectorExprs
 
 /** Bitext mining — margin-based parallel-pair extraction between two
   * monolingual embedding sets (Artetxe & Schwenk 2019, the
@@ -54,7 +54,7 @@ object Bitext {
     // one scored grid feeds the forward ranks, backward ranks and the
     // mined candidates — materialize so the cosine kernel runs once
     val pairs = s.join(t)
-      .withColumn("sim", round(VectorFns.cosine(col("__sv"), col("__tv")), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col("__sv"), col("__tv")), 6))
       .withColumn("s_e6",
         floor(col("sim") * 1000000.0 + 0.5).cast("long") + 1000000L)
       .select(col("src_id"), col("tgt_id"), col("sim"), col("s_e6"))

@@ -79,7 +79,7 @@ object Decontaminate {
     * Survivor corpus = `.filter(col("keep"))`; removal accounting = any
     * rollup over the annotations (q106 publishes the per-source one).
     * `dropList`/`gateFails` are consumed by their FIRST column (doc id) —
-    * pass [[bloomDropList]] and [[Repetition.gateVerdicts]] failures
+    * pass [[bloomDropList]] and [[Repetition.gateVerdictsFused]] failures
     * directly.
     *
     * Scale shape: two left equi-joins on the id. The drop list is rare

@@ -45,7 +45,7 @@ object Dedup {
     *
     * Checkpoint lifetime (applies to every lazy-localCheckpoint operator
     * in this codebase — topVocab's counts, q98's wordCounts, q113's span
-    * base, lloydQuantized's points): the returned frame is LAZY, so the
+    * base, Pq's points): the returned frame is LAZY, so the
     * operator cannot unpersist after "the" consuming action — it never
     * runs one, and the caller may run several. The blocks are freed when
     * the plan's RDD is garbage-collected (Spark's ContextCleaner) or the
@@ -77,39 +77,16 @@ object Dedup {
     val sh = df.select(col(idCol).as("id"), shingles.as("sh"))
       .localCheckpoint(false)
     // fused kernel: md5 + k permutations + band keys in one pass per row
-    // (the pure-builtin spelling, kept in HashFns, pays ~25 interpreted
-    // HOF calls per shingle — see graft.expr.MinHashBandKeys)
-    //
-    // EXACT size-ratio prefilter (the set-Jaccard specialization of
-    // q268's mass cut — the length filter of exact set-similarity joins,
-    // Xiao et al.): shingle arrays are DISTINCT sets by contract, so
-    // |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), hence
-    // J ≤ min(|A|,|B|)/max(|A|,|B|) — a candidate whose sizes are
-    // farther apart than the threshold ratio provably cannot reach the
-    // output. The size rides the banded rows (+8 bytes) and the cut runs
-    // INSIDE the band-join condition, so failing pairs never reach the
-    // pair dedup or the verify join that attaches the two shingle
-    // ARRAYS — the widest rows of the op (the q268-measured GC pressure
-    // point at 64×). Slack analysis as in weightedMinHashLshPairs: the
-    // output filter passes round(J, 6) ≥ threshold, i.e.
-    // J ≥ threshold − 5e-7 at the rounding boundary; the cut uses
-    // threshold − 1e-6, so FP evaluation cannot drop a boundary pair
-    // (double error ≪ 5e-7). threshold = 0 (weightedJaccardPairs'
-    // candidate pass) leaves the cut inert — sizes are non-negative.
-    val banded = sh
-      .select(col("id"), size(col("sh")).cast("long").as("nsh"),
+    // (the pure-builtin spelling, kept in Reference, pays ~25 interpreted
+    // HOF calls per shingle — see graft.expr.MinHashBandKeys). Shingle
+    // arrays are DISTINCT sets by contract, so their sizes feed the exact
+    // size-ratio cut of bandCandidates (inert at weightedJaccardPairs'
+    // threshold 0).
+    val cand = bandCandidates(sh.select(col("id"),
+        size(col("sh")).cast("long").as("w"),
         posexplode(graft.expr.HashExprs.minHashBandKeys(
           col("sh"), HashFns.minHashCoeffs(numHashes), bands))
-          .as(Seq("band", "bsig")))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.id") < col("b.id") &&
-          least(col("a.nsh"), col("b.nsh")).cast("double")
-            >= lit(threshold - 1e-6)
-               * greatest(col("a.nsh"), col("b.nsh")).cast("double"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+          .as(Seq("band", "bsig"))), Some(threshold))
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
     cand.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
@@ -117,6 +94,39 @@ object Dedup {
         round(graft.expr.TextExprs.sortedJaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** The MinHash band self-join every banded op here shares: `banded`
+    * holds one (`id`, `band`, `bsig`) row per document and band, and the
+    * candidates are the distinct pairs (`id_a` < `id_b`) that share any
+    * band signature — an equi-join on (band, signature), never the cross
+    * product.
+    *
+    * With a `threshold`, `banded` also carries each document's set size
+    * `w`, and the join condition drops pairs whose sizes are farther
+    * apart than the threshold ratio (the length filter of exact
+    * set-similarity joins, Xiao et al.): |A∩B| ≤ min(w) and
+    * |A∪B| ≥ max(w), so J ≤ min(w)/max(w), and such a pair provably
+    * cannot reach the output. The size rides the banded rows (+8 bytes)
+    * and the cut runs INSIDE the join condition, so failing pairs never
+    * reach the pair dedup or the verify join that attaches the two sets —
+    * the widest rows of each op (the GC pressure point measured at 64×).
+    * The cut uses threshold − 1e-6: the verify passes round(J, 6) ≥
+    * threshold, i.e. J ≥ threshold − 5e-7 at the rounding boundary, and
+    * the extra 5e-7 slack makes FP evaluation of the cut incapable of
+    * dropping a boundary pair (double error ≪ 5e-7). threshold = 0 leaves
+    * the cut inert, since sizes are non-negative. */
+  private def bandCandidates(banded: DataFrame,
+      threshold: Option[Double]): DataFrame = {
+    val sizeCut = threshold.fold(lit(true))(t =>
+      least(col("a.w"), col("b.w")).cast("double")
+        >= lit(t - 1e-6) * greatest(col("a.w"), col("b.w")).cast("double"))
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
+          col("a.id") < col("b.id") && sizeCut)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** TF-WEIGHTED (multiset) Jaccard refinement of the banded near-dup
@@ -265,34 +275,12 @@ object Dedup {
         transform(col("tv"), e => e.getField("tfc")).as("tfcs"),
         col("mass"))
       .localCheckpoint(false)
-    // EXACT mass-ratio prefilter (the length filter of exact set-similarity
-    // joins, Xiao et al.): |A∩B| ≤ min(mass) and |A∪B| ≥ max(mass), so
-    // J ≤ min(mass)/max(mass) — a pair below the (round-boundary-slackened)
-    // threshold ratio provably cannot reach the output. The mass rides the
-    // banded rows (+8 bytes each), so the cut runs INSIDE the band join
-    // condition: failing pairs never reach the pair dedup, let alone the
-    // verify join that attaches the two tf-vector arrays — the widest rows
-    // of the whole op (the 64×-measured GC pressure point). The cut uses
-    // threshold − 1e-6: the output filter passes round(J, 6) ≥ threshold,
-    // i.e. J ≥ threshold − 5e-7 at the rounding boundary, and the extra
-    // 5e-7 slack makes FP evaluation of the cut incapable of dropping a
-    // boundary pair (double error ≪ 5e-7). Pairs kept by the prefilter but
-    // below threshold still die at the exact verify — the output is
-    // byte-identical, only provably-dead candidates disappear.
-    val banded = compact.select(col("id"), col("mass"),
-      posexplode(graft.expr.HashExprs.weightedMinHashBandKeys(
-        col("terms"), col("tfcs"), HashFns.minHashCoeffs(numHashes), bands))
-        .as(Seq("band", "bsig")))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.id") < col("b.id") &&
-          least(col("a.mass"), col("b.mass")).cast("double")
-            >= lit(threshold - 1e-6)
-               * greatest(col("a.mass"), col("b.mass")).cast("double"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    cand
+    // the expanded set's size is the capped tf mass, so the mass feeds
+    // bandCandidates' exact size-ratio cut
+    bandCandidates(compact.select(col("id"), col("mass").as("w"),
+        posexplode(graft.expr.HashExprs.weightedMinHashBandKeys(
+          col("terms"), col("tfcs"), HashFns.minHashCoeffs(numHashes), bands))
+          .as(Seq("band", "bsig"))), Some(threshold))
       .join(compact.select(col("id").as("id_a"), col("terms").as("__ta"),
         col("tfcs").as("__ca")), Seq("id_a"))
       .join(compact.select(col("id").as("id_b"), col("terms").as("__tb"),
@@ -325,17 +313,10 @@ object Dedup {
     val sh = df.select(col(idCol).as("id"),
       graft.expr.TextExprs.wordShingles(col(textCol), 2).as("sh"))
       .localCheckpoint(false)
-    val banded = sh
-      .select(col("id"),
+    val cand = bandCandidates(sh.select(col("id"),
         posexplode(graft.expr.HashExprs.minHashBandKeys(
           col("sh"), HashFns.minHashCoeffs(numHashes), bands))
-          .as(Seq("band", "bsig")))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+          .as(Seq("band", "bsig"))), None)
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
     cand.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
@@ -694,22 +675,7 @@ object Dedup {
         posexplode(graft.functions.TextFns.wordTokens(col(textCol)))
           .as(Seq("pos0", "tok")))
       .select(col(idCol), (col("pos0") + 1).cast("long").as("pos"), col("tok"))
-    // span occurrences, fingerprinted in the same projection — span TEXT
-    // never reaches an exchange
-    val spans = df.select(col(idCol),
-        posexplode(graft.expr.TextExprs.wordSpans(col(textCol), k))
-          .as(Seq("pos0", "span")))
-      .select(col(idCol), (col("pos0") + 1).cast("long").as("pos"),
-        HashFns.md5Hex(col("span")).as("fp"))
-    val firstOcc = spans.groupBy(col("fp"))
-      .agg(countDistinct(col(idCol)).as("__nd"),
-        min(struct(col(idCol), col("pos"))).as("first_occ"))
-      .filter(col("__nd") > 1L)
-      .select(col("fp"), col("first_occ"))
-    val cut = spans.join(firstOcc, Seq("fp"))
-      .filter(!(col(idCol) === col(s"first_occ.$idCol")
-        && col("pos") === col("first_occ.pos")))
-    val covered = cut
+    val covered = spanCut(df, idCol, textCol, k)
       .select(col(idCol), explode(sequence(col("pos"),
         col("pos") + lit(k.toLong - 1))).as("p"))
       .distinct()
@@ -756,6 +722,24 @@ object Dedup {
       org.apache.spark.sql.functions.size(
         graft.functions.TextFns.wordTokens(col(textCol))).cast("long")
         .as("__nt"))
+    spanCut(df, idCol, textCol, k).join(nTok, Seq(idCol))
+      .withColumn("decile", expr("(pos - 1L) * 10L div __nt"))
+      .groupBy(col("decile"))
+      .agg(count(lit(1)).as("n_spans"),
+        countDistinct(col(idCol)).as("n_docs"))
+  }
+
+  /** The span occurrences [[crossDocSpanDedup]] cuts: every k-token span
+    * (the [[graft.expr.TextExprs.wordSpans]] tokenization) that occurs in
+    * more than one distinct document, minus its first corpus occurrence —
+    * smallest (id, position), the [[paragraphDedupFirst]] min(struct)
+    * rule. Spans are md5-fingerprinted in the same projection that
+    * explodes them, so span TEXT never reaches an exchange; first
+    * occurrence and the cross-doc test are one fingerprint-keyed
+    * aggregation, and the cut is the probe side co-partitioned on the same
+    * fingerprint. Output: (idCol, `pos` 1-based, `fp`, `first_occ`). */
+  private def spanCut(df: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame = {
     val spans = df.select(col(idCol),
         posexplode(graft.expr.TextExprs.wordSpans(col(textCol), k))
           .as(Seq("pos0", "span")))
@@ -766,13 +750,8 @@ object Dedup {
         min(struct(col(idCol), col("pos"))).as("first_occ"))
       .filter(col("__nd") > 1L)
       .select(col("fp"), col("first_occ"))
-    val cut = spans.join(firstOcc, Seq("fp"))
+    spans.join(firstOcc, Seq("fp"))
       .filter(!(col(idCol) === col(s"first_occ.$idCol")
         && col("pos") === col("first_occ.pos")))
-    cut.join(nTok, Seq(idCol))
-      .withColumn("decile", expr("(pos - 1L) * 10L div __nt"))
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_spans"),
-        countDistinct(col(idCol)).as("n_docs"))
   }
 }

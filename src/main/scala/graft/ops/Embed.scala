@@ -53,85 +53,13 @@ object Embed {
         (col("comp_size") < minClusterSize).as("is_noise"))
   }
 
-  /** O11 centroid form, engine-exact: Lloyd's iteration (the k-means
-    * algorithm) over `floor(x·quantScale + 0.5)`-quantized integer
-    * components, a FIXED number of rounds, deterministic hash-scattered
-    * init (cluster j = the vector whose id sorts (j+1)-th by md5 of the
-    * id string — portable to any SQL engine, uncorrelated with id order).
-    * Every quantity is integer arithmetic — distances are Σ(q−c)² longs,
-    * new centroids are FLOOR-divided component means via the
-    * division-free positive-mod identity `(s − ((s mod n)+n) mod n) / n`
-    * (plain integer division truncates toward zero in Spark but floors in
-    * other engines; the identity makes the numerator exactly divisible so
-    * every engine agrees) — so labels and distances hash-check against any
-    * SQL engine, which MLlib's floating-point KMeans never can.
-    * Argmin ties break toward the smaller cluster id.
-    *
-    * Scale shape per round: the k·dim centroid table broadcasts (k is
-    * user-fixed and small); assignment is a map-side join + one
-    * (id)-keyed aggregation; re-centering one (cluster, dim)-keyed
-    * aggregation. Work is n·dim·k per round — Lloyd's own cost — with
-    * nothing driver-side. The exploded points frame is localCheckpointed
-    * once so the `rounds + 1` passes re-read a materialized (id, d, q)
-    * table instead of re-running the scan + explode each round.
-    *
-    * A cluster that captures no points in a round drops out (standard
-    * empty-cluster behavior, mirrored identically by the oracle).
-    * Output: (id, `cluster`, `dist2`). */
-  def lloydQuantized(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      rounds: Int, quantScale: Double = 1000.0): DataFrame = {
-    require(k >= 1 && rounds >= 1)
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.select(col(idCol).as("__id"),
-        posexplode(col(vecCol)).as(Seq("d", "v")))
-      .withColumn("q", floor(col("v") * quantScale + 0.5).cast("long"))
-      .drop("v")
-      .localCheckpoint(false)
-    // init: k seeds in portable-hash order of the id — md5 hex, which the
-    // DuckDB oracle mirrors verbatim (xxhash64 has no DuckDB equivalent).
-    // Hash-scatter keeps the determinism and oracle property of the former
-    // k-smallest-ids init while decorrelating seed choice from id
-    // assignment: low ids often cluster spatially (time-ordered ingest,
-    // per-source id blocks), and seeding all k centroids inside one such
-    // block degrades a fixed-round Lloyd's. Still TakeOrderedAndProject
-    // (per-partition top-k heaps on the hash key) + a window over k rows.
-    val seedOrd = Seq(md5(col("__id").cast("string").cast("binary")),
-      col("__id"))
-    val init = df.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
-      .orderBy(seedOrd: _*).limit(k)
-      .withColumn("j", (row_number().over(Window.orderBy(seedOrd: _*)) - 1)
-        .cast("long"))
-      .select(col("j"), posexplode(col("__vec")).as(Seq("d", "v")))
-      .withColumn("c", floor(col("v") * quantScale + 0.5).cast("long"))
-      .drop("v")
-    def assign(cents: DataFrame): DataFrame = pts
-      .join(broadcast(cents), Seq("d"))
-      .groupBy(col("__id"), col("j"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist2"))
-      .groupBy(col("__id"))
-      .agg(min(struct(col("dist2"), col("j"))).as("__a"))
-      .select(col("__id"), col("__a.j").as("j"), col("__a.dist2").as("dist2"))
-    val lastCents = (1 until rounds).foldLeft(init) { (cents, _) =>
-      pts.join(assign(cents).drop("dist2"), Seq("__id"))
-        .groupBy(col("j"), col("d"))
-        .agg(sum(col("q")).as("__s"), count(lit(1)).as("__n"))
-        .select(col("j"), col("d"),
-          // pmod is already the positive modulus; the subtraction makes
-          // the numerator exactly divisible, so the FP division is exact
-          ((col("__s") - pmod(col("__s"), col("__n"))) / col("__n"))
-            .cast("long").as("c"))
-    }
-    assign(lastCents).select(col("__id").as(idCol), col("j").as("cluster"),
-      col("dist2"))
-  }
-
   /** Embedding-batch sanity gate: flag vectors whose squared L2 norm falls
     * outside the Tukey fences `[q1 − 1.5·IQR, q3 + 1.5·IQR]` of the
     * corpus — the standard pre-index health check (an embedding whose
     * norm collapses toward 0 or explodes is a failed encode, and cosine
     * silently renormalizes it into the index).
     *
-    * Exactness: norms are integer — `Σ floor(x·quantScale + 0.5)²` longs
+    * Exactness: norms are integer — `Σ quantize(x)²` longs
     * (the q47 quantization convention) — and the quartiles come from
     * [[Quantiles.profile]]'s histogram spelling (bounded by the value
     * domain, never a per-group value buffer). For p = .25/.75 the type-7
@@ -140,11 +68,10 @@ object Embed {
     * verdict is engine-bitwise (DuckDB mirrors via quantile_cont).
     *
     * Output per vector: (id, norm2_q, is_low, is_high). */
-  def normOutlierGate(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Double = 1000.0): DataFrame = {
+  def normOutlierGate(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val n2 = df
       .select(col(idCol), explode(col(vecCol)).as("v"))
-      .withColumn("q", floor(col("v") * quantScale + 0.5).cast("long"))
+      .withColumn("q", VectorFns.quantize(col("v")))
       .groupBy(col(idCol))
       .agg(sum(col("q") * col("q")).as("norm2_q"))
       .localCheckpoint(false) // feeds the fence pass AND the verdict join
@@ -174,8 +101,8 @@ object Embed {
     * dispersions of the same order across labels; a collapsed pair
     * (cos → 1) or a blown-up label flags annotation noise.
     *
-    * Integer discipline: vectors quantize to `floor(x·quantScale+0.5)`
-    * longs; centroids use the exact-floor mean (the pmod spelling);
+    * Integer discipline: vectors quantize to [[VectorFns.quantize]]
+    * longs; centroids use the exact [[VectorFns.floorMean]];
     * dispersion is a truncating integer mean of Σ_d (q−c)²; only the
     * final cosine is FP — `round(num/sqrt(qa·qb), 6)`, the q47
     * convention (sqrt is IEEE-exact, the int64→double casts identical in
@@ -187,18 +114,16 @@ object Embed {
     * on the |labels|·dim centroid frame — corpus touched twice,
     * never self-joined. */
   def labelCentroidSeparation(df: DataFrame, idCol: String,
-      labelCol: String, vecCol: String,
-      quantScale: Double = 1000.0): DataFrame = {
+      labelCol: String, vecCol: String): DataFrame = {
     val pts = df.select(col(labelCol).as("__l"), col(idCol).as("__id"),
         posexplode(col(vecCol)).as(Seq("d", "x")))
       .select(col("__l"), col("__id"), col("d"),
-        floor(col("x") * quantScale + 0.5).cast("long").as("q"))
+        VectorFns.quantize(col("x")).as("q"))
       .localCheckpoint(false)
     val cent = pts.groupBy(col("__l"), col("d"))
       .agg(sum(col("q")).as("__s"), count(lit(1)).as("__n"))
       .select(col("__l"), col("d"),
-        ((col("__s") - pmod(col("__s"), col("__n"))) / col("__n"))
-          .cast("long").as("c"),
+        VectorFns.floorMean(col("__s"), col("__n")).as("c"),
         col("__n").as("n"))
     val within = pts.join(cent.select(col("__l"), col("d"), col("c")),
         Seq("__l", "d"))

@@ -19,44 +19,45 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** `iters` rounds of damped PageRank over directed `edges(srcCol,
-    * dstCol)`, integer-exact in ppb units:
-    *
-    *   r₀(v)    = 1e9 div N
-    *   rₜ₊₁(v)  = (1e9·(20−17)) div (20·N)  +  Σ_{u→v} (rₜ(u)·17 div 20) div outdeg(u)
-    *
-    * (damping 0.85 = 17/20 exactly; each u splits its damped rank evenly
-    * across its out-edges by integer division, so total mass only ever
-    * leaks DOWNWARD by the sub-ppb flooring remainders — deterministic,
-    * not drifting). The node set is the union of sources and targets;
-    * a node with no in-edges settles at the teleport floor. Dangling
-    * nodes (no out-edges) simply retire their mass — the uncollected-
-    * remainder convention, documented rather than redistributed, which
-    * keeps every round a single join + aggregate.
-    *
-    * Scale shape: the edge list is the big side and is touched once per
-    * round through an equi-join on `srcCol`; the rank frame is |V| rows.
-    * Lineage is cut every round (lazy localCheckpoint) so deep iteration
-    * counts neither replan nor re-execute the whole chain per action.
-    *
-    * Output: (node, rank_ppb, in_degree, out_degree). */
-  def pageRankPpb(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int): DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    // the edge list enters the plan every round (plus the degree sides) —
-    // materialize it once so an expensive edge construction (a kNN route)
-    // isn't re-executed per iteration (persist() at cluster scale)
+  /** The edge list as (`__src`, `__dst`) and its node set (`__v`, the
+    * union of sources and targets), each lazily checkpointed once: the
+    * edge list enters the plan every round (plus the degree sides), so an
+    * expensive edge construction (a kNN route) is not re-executed per
+    * iteration (persist() at cluster scale). Shared by every loop here. */
+  private def edgesAndNodes(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame) = {
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .localCheckpoint(eager = false)
-    val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-    val indeg = e.groupBy(col("__dst")).agg(count(lit(1)).as("__id"))
     val nodes = e.select(col("__src").as("__v"))
       .union(e.select(col("__dst").as("__v")))
       .distinct()
       .localCheckpoint(eager = false)
-    // N is a loop-bound scalar (the q120 isEmpty class): one job, |V| → 1
-    val n = nodes.count()
-    var rank = nodes.withColumn("__r", expr(s"1000000000L div ${n}L"))
+    (e, nodes)
+  }
+
+  /** The one damped-rank loop, integer-exact in ppb units, over the
+    * (`__v`, `__seed`) node frame with `nSeeds` seeds:
+    *
+    *   r₀(v)   = [v ∈ S]·(1e9 div |S|)
+    *   rₜ₊₁(v) = [v ∈ S]·(3e9 div (20·|S|)) + Σ_{u→v} (rₜ(u)·17 div 20) div outdeg(u)
+    *
+    * (damping 0.85 = 17/20 exactly; each u splits its damped rank evenly
+    * across its out-edges by integer division, so total mass only ever
+    * leaks DOWNWARD by the sub-ppb flooring remainders — deterministic,
+    * not drifting). Dangling nodes (no out-edges) simply retire their
+    * mass — the uncollected-remainder convention, documented rather than
+    * redistributed, which keeps every round a single join + aggregate.
+    * Plain PageRank is the case where every node is a seed.
+    *
+    * Scale shape: the edge list is the big side and is touched once per
+    * round through an equi-join on `__src`; the rank frame is |V| rows.
+    * Lineage is cut every round (lazy localCheckpoint) so deep iteration
+    * counts neither replan nor re-execute the whole chain per action.
+    * Output: (`__v`, `__r`). */
+  private def rankRounds(e: DataFrame, outdeg: DataFrame, flagged: DataFrame,
+      nSeeds: Long, iters: Int): DataFrame = {
+    var rank = flagged.select(col("__v"),
+      when(col("__seed"), lit(1000000000L / nSeeds)).otherwise(0L).as("__r"))
     for (_ <- 1 to iters) {
       val contrib = rank
         .join(e, col("__v") === col("__src"))
@@ -64,13 +65,39 @@ object Graph {
         .select(col("__dst").as("__v"),
           expr("(__r * 17L div 20L) div __od").as("__c"))
         .groupBy(col("__v")).agg(sum(col("__c")).as("__in"))
-      rank = nodes
+      rank = flagged
         .join(contrib, Seq("__v"), "left")
         .select(col("__v"),
-          (lit(3000000000L / (20L * n)) + coalesce(col("__in"), lit(0L))).as("__r"))
+          (when(col("__seed"), lit(3000000000L / (20L * nSeeds)))
+            .otherwise(0L) + coalesce(col("__in"), lit(0L))).as("__r"),
+          col("__seed"))
         .localCheckpoint(eager = false)
+        .select(col("__v"), col("__r"))
     }
     rank
+  }
+
+  /** `iters` rounds of damped PageRank over directed `edges(srcCol,
+    * dstCol)`, integer-exact in ppb units — [[rankRounds]] with every node
+    * a seed:
+    *
+    *   r₀(v)    = 1e9 div N
+    *   rₜ₊₁(v)  = (1e9·(20−17)) div (20·N)  +  Σ_{u→v} (rₜ(u)·17 div 20) div outdeg(u)
+    *
+    * The node set is the union of sources and targets; a node with no
+    * in-edges settles at the teleport floor.
+    *
+    * Output: (node, rank_ppb, in_degree, out_degree). */
+  def pageRankPpb(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int): DataFrame = {
+    require(iters >= 0, "iters must be non-negative")
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
+    val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
+    val indeg = e.groupBy(col("__dst")).agg(count(lit(1)).as("__id"))
+    // N is a loop-bound scalar (the q120 isEmpty class): one job, |V| → 1;
+    // an empty graph has no node to rank, so any positive N serves it
+    val n = math.max(nodes.count(), 1L)
+    rankRounds(e, outdeg, nodes.withColumn("__seed", lit(true)), n, iters)
       .join(indeg, col("__v") === col("__dst"), "left")
       .join(outdeg, col("__v") === col("__src"), "left")
       .select(col("__v").as("node"), col("__r").as("rank_ppb"),
@@ -97,12 +124,7 @@ object Graph {
       seeds: DataFrame, nodeCol: String, labelCol: String,
       iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("__src").as("__v"))
-      .union(e.select(col("__dst").as("__v")))
-      .distinct()
-      .localCheckpoint(eager = false)
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     var lab = nodes
       .join(seeds.select(col(nodeCol).as("__v"),
         col(labelCol).cast("long").as("__lab")), Seq("__v"), "left")
@@ -132,9 +154,8 @@ object Graph {
     * teleport mass restarts ONLY at the seed set, so rank measures graph
     * proximity to the seeds — curation from a trusted corpus slice
     * ("find the documents the kNN graph pulls toward these vetted
-    * examples"). Same exact-integer discipline as [[pageRankPpb]]
-    * (damping 17/20, floor remainders retire), same per-round shape
-    * (one equi-join + aggregate, lineage cut per round):
+    * examples"). [[rankRounds]] with `S` the seeds (the first column of
+    * `seeds`) that are nodes of the graph:
     *
     *   r₀(v)   = 1e9 div |S| for v ∈ S, else 0
     *   rₜ₊₁(v) = [v ∈ S]·(3e9 div (20·|S|)) + Σ_{u→v} (rₜ(u)·17 div 20) div outdeg(u)
@@ -143,13 +164,8 @@ object Graph {
   def personalizedPageRankPpb(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .localCheckpoint(eager = false)
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-    val nodes = e.select(col("__src").as("__v"))
-      .union(e.select(col("__dst").as("__v")))
-      .distinct()
-      .localCheckpoint(eager = false)
     val seedNodes = nodes.join(
       seeds.select(col(seeds.columns.head).as("__v")).distinct(),
       Seq("__v"), "left_semi")
@@ -159,25 +175,7 @@ object Graph {
       .localCheckpoint(eager = false)
     val nSeeds = seedNodes.count() // loop-bound scalar, the q120 class
     require(nSeeds > 0, "personalization needs at least one seed in the graph")
-    var rank = flagged.select(col("__v"),
-      when(col("__seed"), lit(1000000000L / nSeeds)).otherwise(0L).as("__r"))
-    for (_ <- 1 to iters) {
-      val contrib = rank
-        .join(e, col("__v") === col("__src"))
-        .join(outdeg, Seq("__src"))
-        .select(col("__dst").as("__v"),
-          expr("(__r * 17L div 20L) div __od").as("__c"))
-        .groupBy(col("__v")).agg(sum(col("__c")).as("__in"))
-      rank = flagged
-        .join(contrib, Seq("__v"), "left")
-        .select(col("__v"),
-          (when(col("__seed"), lit(3000000000L / (20L * nSeeds)))
-            .otherwise(0L) + coalesce(col("__in"), lit(0L))).as("__r"),
-          col("__seed"))
-        .localCheckpoint(eager = false)
-        .select(col("__v"), col("__r"))
-    }
-    flagged.join(rank, Seq("__v"))
+    flagged.join(rankRounds(e, outdeg, flagged, nSeeds, iters), Seq("__v"))
       .select(col("__v").as("node"), col("__r").as("rank_ppb"),
         col("__seed").as("is_seed"))
   }
@@ -201,14 +199,8 @@ object Graph {
     * wedge joins are equi-joins on node ids over the ORIENTED edge list.
     * All integer. */
   def triangleStats(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
-    val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val e = undirected(edges, aCol, bCol)
+    val deg = degrees(e)
     val dir = e
       .join(deg.select(col("node").as("u"), col("deg").as("__du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("__dv")), Seq("v"))
@@ -252,16 +244,7 @@ object Graph {
   def kCorePeel(edges: DataFrame, aCol: String, bCol: String, k: Long,
       rounds: Int): DataFrame = {
     require(k >= 2 && rounds >= 1)
-    val e0 = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val eFinal = (1 to rounds).foldLeft(e0) { (e, _) =>
+    val eFinal = (1 to rounds).foldLeft(undirected(edges, aCol, bCol)) { (e, _) =>
       val keep = degrees(e).filter(col("deg") >= k).select(col("node"))
       e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
@@ -270,4 +253,21 @@ object Graph {
     }
     degrees(eFinal)
   }
+
+  /** The undirected simple edge set (`u` < `v`, self-loops dropped,
+    * deduplicated), lazily checkpointed — the input of the triangle and
+    * k-core ops. */
+  private def undirected(edges: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    edges
+      .select(least(col(aCol), col(bCol)).as("u"),
+        greatest(col(aCol), col(bCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+      .localCheckpoint(false)
+
+  /** Per-node degree (`node`, `deg`) of an undirected (`u`, `v`) edge set. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(explode(array(col("u"), col("v"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFns.{floorMean, quantize}
+
 /** Distributed dense linear algebra over embedding columns — the piece of
   * corpus curation that needs a MATRIX view of the embedding table rather
   * than a per-row one. First resident: the top principal direction by
@@ -14,51 +16,22 @@ import org.apache.spark.sql.functions._
   *
   * Everything is integer arithmetic in fixed-point units, so the result
   * is bitwise identical on any engine, any partitioning, any core count —
-  * the same determinism discipline as [[Embed.lloydQuantized]]. No libm,
-  * no FP accumulation order anywhere.
+  * the same determinism discipline as [[Pq]]'s Lloyd's. No libm, no FP
+  * accumulation order anywhere.
   */
 object Linalg {
 
-  /** `rounds` power-iteration steps for the top principal direction of
-    * the mean-centered quantized embedding matrix, never materializing
-    * the d×d covariance: each round is v ← normalize(Xᵀ(X v)) — two
-    * linear passes over the exploded (id, dim, value) frame.
-    *
-    * Fixed-point contract (all BIGINT, engine-exact):
-    *  - X quantizes to `floor(x·quantScale + 0.5)` and mean-centers with
-    *    FLOOR division (the pmod spelling, matching DuckDB `//` via exact
-    *    subtraction);
-    *  - v lives in 1e6 units, seeded by an md5 scatter per dimension
-    *    (decorrelated from any real direction, oracle-spellable);
-    *  - s = (X v) div 1000 and the re-normalization denominator
-    *    `greatest(max|w| div 1e6, 1)` keep every product under 2^63 for
-    *    corpora up to ~10⁹ rows at quantScale 1000 (|e| ≤ ~4·10³,
-    *    |s| ≤ ~2.6·10⁸, |w| ≤ n·10¹²).
-    *
-    * Output: one row per dimension (d, v_e6) plus the convergence audit
-    * `cos2_ppm` = cos²(v_{R−1}, v_R) in ppm (computed on div-1e3
-    * downscaled copies so the Cauchy–Schwarz bound keeps the squared dot
-    * inside a long) — ~1e6 means the iteration has settled.
-    *
-    * Scale shape: the exploded frame (n·dim rows) is checkpointed once
-    * and touched twice per round through equi-joins (the per-dim v frame
-    * broadcasts; the per-row s frame shuffles on id); the v/w frames are
-    * |dim| rows. Round count is fixed and small — no driver loop over
-    * data, only over PLAN construction. */
   /** Mean-centered quantized (id, d, e) frame, checkpointed once — the
     * matrix every [[Linalg]] op iterates over. */
-  private def centered(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Double): DataFrame = {
+  private def centered(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
     val x0 = df.select(col(idCol).as("__id"),
         posexplode(col(vecCol)).as(Seq("d", "x")))
       .select(col("__id"), col("d").cast("long").as("d"),
-        floor(col("x") * quantScale + 0.5).cast("long").as("q"))
+        quantize(col("x")).as("q"))
     val mu = x0.groupBy(col("d"))
       .agg(sum(col("q")).as("__s"), count(lit(1)).as("__n"))
-      // exact floor division: subtract the positive modulus first, then
-      // the FP division is exact (the lloydQuantized spelling)
-      .select(col("d"), ((col("__s") - pmod(col("__s"), col("__n"))) /
-        col("__n")).cast("long").as("mu"))
+      .select(col("d"), floorMean(col("__s"), col("__n")).as("mu"))
     x0.join(broadcast(mu), Seq("d"))
       .select(col("__id"), col("d"), (col("q") - col("mu")).as("e"))
       .localCheckpoint(false)
@@ -86,10 +59,36 @@ object Linalg {
     (1 to rounds).foldLeft((v0, v0)) { case ((_, cur), _) => (cur, step(cur)) }
   }
 
+  /** `rounds` power-iteration steps for the top principal direction of
+    * the mean-centered quantized embedding matrix, never materializing
+    * the d×d covariance: each round is v ← normalize(Xᵀ(X v)) — two
+    * linear passes over the exploded (id, dim, value) frame.
+    *
+    * Fixed-point contract (all BIGINT, engine-exact):
+    *  - X quantizes to [[graft.functions.VectorFns.quantize]] and
+    *    mean-centers with [[graft.functions.VectorFns.floorMean]] (FLOOR
+    *    division, matching DuckDB `//`);
+    *  - v lives in 1e6 units, seeded by an md5 scatter per dimension
+    *    (decorrelated from any real direction, oracle-spellable);
+    *  - s = (X v) div 1000 and the re-normalization denominator
+    *    `greatest(max|w| div 1e6, 1)` keep every product under 2^63 for
+    *    corpora up to ~10⁹ rows at scale 1000 (|e| ≤ ~4·10³,
+    *    |s| ≤ ~2.6·10⁸, |w| ≤ n·10¹²).
+    *
+    * Output: one row per dimension (d, v_e6) plus the convergence audit
+    * `cos2_ppm` = cos²(v_{R−1}, v_R) in ppm (computed on div-1e3
+    * downscaled copies so the Cauchy–Schwarz bound keeps the squared dot
+    * inside a long) — ~1e6 means the iteration has settled.
+    *
+    * Scale shape: the exploded frame (n·dim rows) is checkpointed once
+    * and touched twice per round through equi-joins (the per-dim v frame
+    * broadcasts; the per-row s frame shuffles on id); the v/w frames are
+    * |dim| rows. Round count is fixed and small — no driver loop over
+    * data, only over PLAN construction. */
   def powerIterationTop(df: DataFrame, idCol: String, vecCol: String,
-      rounds: Int, quantScale: Double = 1000.0): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 2, "need >= 2 rounds for the convergence audit")
-    val xc = centered(df, idCol, vecCol, quantScale)
+    val xc = centered(df, idCol, vecCol)
     val (vPrev, vLast) = iterate(xc, rounds)
     val convergence = vPrev.select(col("d"), expr("v div 1000L").as("a"))
       .join(vLast.select(col("d"), expr("v div 1000L").as("b")), Seq("d"))
@@ -124,8 +123,8 @@ object Linalg {
     * join (v is |dim| rows) plus one per-row aggregate — corpus touched
     * a constant number of times. */
   def allButTop(df: DataFrame, idCol: String, vecCol: String,
-      rounds: Int, quantScale: Double = 1000.0): DataFrame = {
-    val xc = centered(df, idCol, vecCol, quantScale)
+      rounds: Int): DataFrame = {
+    val xc = centered(df, idCol, vecCol)
     val (_, v) = iterate(xc, rounds)
     val vv = v.agg(sum(col("v") * col("v")).as("vv"))
     val c = xc.join(broadcast(v), Seq("d"))

@@ -4,16 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFns.{floorMean, quantize}
+
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the memory-side half of large-scale ANN
   * that [[Similarity]]'s IVF covers on the routing side. The embedding
   * space splits into `dim / subDim` orthogonal subspaces; each gets its
-  * own small codebook (integer Lloyd's — the [[Embed.lloydQuantized]]
-  * discipline, all subspaces trained in ONE grouped iteration); a vector
-  * is stored as one code per subspace. At 100 TB this is the difference
-  * between 256 B/vector of float and `m` single-byte codes: a 10⁹-vector
-  * index collapses from terabytes to gigabytes, and search scans codes
-  * with table lookups instead of float dot products.
+  * own small codebook (integer Lloyd's, all subspaces trained in ONE
+  * grouped iteration); a vector is stored as one code per subspace. At
+  * 100 TB this is the difference between 256 B/vector of float and `m`
+  * single-byte codes: a 10⁹-vector index collapses from terabytes to
+  * gigabytes, and search scans codes with table lookups instead of float
+  * dot products.
   *
   * ADC (asymmetric distance computation): a query stays unquantized —
   * per subspace its squared distance to each of the `k` centroids is
@@ -22,10 +24,15 @@ import org.apache.spark.sql.functions._
   * entries: one equi-join on (subspace, code) + one keyed sum, never a
   * per-pair float kernel.
   *
-  * Determinism: everything runs on `floor(x·quantScale + 0.5)` longs —
-  * assignments tiebreak (dist2, code), seeds come from the md5-scatter
-  * order (the q31 convention), recentering uses the subtract-remainder
-  * exact integer mean. Every step hash-matches the DuckDB oracle.
+  * Determinism: everything runs on [[graft.functions.VectorFns.quantize]]
+  * longs — assignments tiebreak (dist2, code), seeds come from the
+  * md5-scatter order, recentering uses the exact
+  * [[graft.functions.VectorFns.floorMean]]. Every step hash-matches the
+  * DuckDB oracle.
+  *
+  * One subspace spanning the whole vector (`subDim = Int.MaxValue`: every
+  * row has `sub = 0`, `dloc = d`) is plain k-means: q31's Lloyd's is
+  * [[codebooks]] + [[encode]] at that width, `code` being the cluster.
   *
   * Scale shape: codebooks are statically bounded (m·k·subDim = k·dim
   * longs — the q31 class), so they broadcast; corpus-mass work is one
@@ -38,12 +45,12 @@ object Pq {
 
   /** Quantized sub-vector points: (`__id`, `sub`, `dloc`, `q`). */
   private def subPts(df: DataFrame, idCol: String, vecCol: String,
-      subDim: Int, quantScale: Double): DataFrame =
+      subDim: Int): DataFrame =
     df.select(col(idCol).as("__id"), posexplode(col(vecCol)).as(Seq("d", "v")))
       .select(col("__id"),
         expr(s"d div $subDim").cast("long").as("sub"),
         pmod(col("d"), lit(subDim)).cast("long").as("dloc"),
-        floor(col("v") * quantScale + 0.5).cast("long").as("q"))
+        quantize(col("v")).as("q"))
 
   /** Nearest-centroid assignment per (vector, subspace): (`__id`, `sub`,
     * `code`, `dist2`), ties → smallest code. */
@@ -63,10 +70,14 @@ object Pq {
     * points in a round drops out (standard empty-cluster behavior,
     * mirrored by the oracle). */
   def codebooks(df: DataFrame, idCol: String, vecCol: String, subDim: Int,
-      k: Int, rounds: Int, quantScale: Double = 1000.0): DataFrame = {
+      k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && subDim >= 1)
-    val pts = subPts(df, idCol, vecCol, subDim, quantScale)
+    val pts = subPts(df, idCol, vecCol, subDim)
       .localCheckpoint(false)
+    // seeds in md5 order of the id string, which the DuckDB oracle mirrors
+    // verbatim (xxhash64 has no DuckDB twin): deterministic, yet not
+    // correlated with id order, where low ids often sit together in space
+    // (time-ordered ingest, per-source id blocks)
     val seedOrd = Seq(md5(col("__id").cast("string").cast("binary")),
       col("__id"))
     val init = df.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
@@ -74,17 +85,15 @@ object Pq {
       .withColumn("j", (row_number().over(Window.orderBy(seedOrd: _*)) - 1)
         .cast("long"))
       .select(col("j"), posexplode(col("__vec")).as(Seq("d", "v")))
-      .select(col("j"),
-        expr(s"d div $subDim").cast("long").as("sub"),
+      .select(expr(s"d div $subDim").cast("long").as("sub"), col("j"),
         pmod(col("d"), lit(subDim)).cast("long").as("dloc"),
-        floor(col("v") * quantScale + 0.5).cast("long").as("c"))
+        quantize(col("v")).as("c"))
     (1 until rounds).foldLeft(init) { (cents, _) =>
       pts.join(assign(pts, cents).drop("dist2"), Seq("__id", "sub"))
         .groupBy(col("sub"), col("code"), col("dloc"))
         .agg(sum(col("q")).as("__s"), count(lit(1)).as("__n"))
         .select(col("sub"), col("code").as("j"), col("dloc"),
-          ((col("__s") - pmod(col("__s"), col("__n"))) / col("__n"))
-            .cast("long").as("c"))
+          floorMean(col("__s"), col("__n")).as("c"))
     }
   }
 
@@ -92,9 +101,8 @@ object Pq {
     * `code`, `dist2`) — m rows per vector, `dist2` the per-subspace
     * quantization distortion. */
   def encode(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, subDim: Int,
-      quantScale: Double = 1000.0): DataFrame =
-    assign(subPts(df, idCol, vecCol, subDim, quantScale), cents)
+      cents: DataFrame, subDim: Int): DataFrame =
+    assign(subPts(df, idCol, vecCol, subDim), cents)
       .withColumnRenamed("__id", idCol)
 
   /** ADC top-k: per query (UNQUANTIZED — asymmetric), tabulate per-
@@ -105,8 +113,8 @@ object Pq {
     * Output: (`qIdCol`, `rank`, `idCol`, `adc_dist2`). */
   def adcTopK(codes: DataFrame, idCol: String, cents: DataFrame,
       queries: DataFrame, qIdCol: String, vecCol: String, subDim: Int,
-      topK: Int, quantScale: Double = 1000.0): DataFrame = {
-    val dt = subPts(queries, qIdCol, vecCol, subDim, quantScale)
+      topK: Int): DataFrame = {
+    val dt = subPts(queries, qIdCol, vecCol, subDim)
       .join(broadcast(cents), Seq("sub", "dloc"))
       .groupBy(col("__id").as(qIdCol), col("sub"), col("j").as("code"))
       .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("pd"))
@@ -126,11 +134,11 @@ object Pq {
     * contract; cost is |queries| · |corpus| · dim, the price of ground
     * truth (the q122 discipline). */
   def exactTopK(df: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qIdCol: String, vecCol2: String, topK: Int,
-      quantScale: Double = 1000.0): DataFrame = {
-    val cp = subPts(df, idCol, vecCol, Int.MaxValue, quantScale)
+      queries: DataFrame, qIdCol: String, vecCol2: String,
+      topK: Int): DataFrame = {
+    val cp = subPts(df, idCol, vecCol, Int.MaxValue)
       .select(col("__id").as(idCol), col("dloc").as("d"), col("q"))
-    val qp = subPts(queries, qIdCol, vecCol2, Int.MaxValue, quantScale)
+    val qp = subPts(queries, qIdCol, vecCol2, Int.MaxValue)
       .select(col("__id").as(qIdCol), col("dloc").as("d"),
         col("q").as("qq"))
     val w = Window.partitionBy(col(qIdCol))
@@ -150,15 +158,12 @@ object Pq {
     * Output: (`qIdCol`, `n_hits`, `n_exact`, `recall_ppm`). */
   def recallAudit(df: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, subDim: Int,
-      k: Int, rounds: Int, topK: Int,
-      quantScale: Double = 1000.0): DataFrame = {
-    val cents = codebooks(df, idCol, vecCol, subDim, k, rounds, quantScale)
-    val codes = encode(df, idCol, vecCol, cents, subDim, quantScale)
-      .drop("dist2")
+      k: Int, rounds: Int, topK: Int): DataFrame = {
+    val cents = codebooks(df, idCol, vecCol, subDim, k, rounds)
+    val codes = encode(df, idCol, vecCol, cents, subDim).drop("dist2")
     val adc = adcTopK(codes, idCol, cents, queries, qIdCol, qVecCol, subDim,
-      topK, quantScale)
-    val exact = exactTopK(df, idCol, vecCol, queries, qIdCol, qVecCol, topK,
-      quantScale)
+      topK)
+    val exact = exactTopK(df, idCol, vecCol, queries, qIdCol, qVecCol, topK)
     val hits = adc.select(col(qIdCol), col(idCol))
       .join(exact.select(col(qIdCol), col(idCol)), Seq(qIdCol, idCol))
       .groupBy(col(qIdCol)).agg(count(lit(1)).as("n_hits"))

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.expr.TextExprs
-
 /** WITHIN-document repetition signals — the Gopher quality rules (Rae et
   * al. 2021, appendix A1.1) that reject machine-generated and boilerplate-
   * heavy text by measuring how much a document repeats ITSELF. The
@@ -16,17 +14,16 @@ import graft.expr.TextExprs
   * All three signals are integer ppm (floor), per the oracle determinism
   * convention — no floats anywhere.
   *
-  * Scale shape: line stats and bigram stats are each an explode + TWO-level
-  * hash aggregation — first keyed by (doc, line|span) then by doc — so
-  * every shuffle is map-side-combined and keyed by doc-local keys (no
-  * corpus-global hot keys, unlike the cross-doc ops which key by the span
-  * itself). The top-bigram argmax is a plain `min(struct(-cnt, span))`
-  * aggregate, not a window — one pass, O(1) buffer per doc. Everything
-  * scales with documents, embarrassingly.
+  * Scale shape: the signals are one fused kernel call per document, a
+  * map-side projection with no shuffle (no corpus-global hot keys, unlike
+  * the cross-doc ops which key by the span itself). Everything scales
+  * with documents, embarrassingly.
   */
 object Repetition {
 
-  /** Per-document repetition signals over `textCol`:
+  /** Per-document repetition signals over `textCol`, as a MAP-SIDE
+    * projection — one fused kernel call per document
+    * ([[graft.expr.RepetitionKernels.signals]]):
     *
     *  - `dup_line_ppm`: duplicated lines / lines (a line is duplicated if
     *    an identical line occurred earlier in the SAME doc; ppm of line
@@ -41,66 +38,13 @@ object Repetition {
     *    can exceed 1e6; thresholds compare, they don't normalize.
     *
     * Tokenization matches the span family ([[Vocab.repeatedSpans]], q93):
-    * lowercase, space-trim, split on `\s+`. `spansCol` optionally names a
-    * PRE-COMPUTED word-bigram array column (the `wordSpans(text, 2)`
-    * spelling) so a plan sharing one materialized tokenization (q113)
-    * doesn't re-derive spans here. */
-  def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
-      spansCol: Option[String] = None): DataFrame = {
-    val id = col(idCol)
-
-    // line repetition: (doc, line) counts, then per-doc fold. The
-    // normalized doc length rides along through both aggregates (it is
-    // constant per doc — 8 bytes per shuffle row) so the final projection
-    // needs NO third scan of the corpus text: split("\n") emits >= 1 line
-    // for every document (even empty text), so starting from this agg
-    // keeps the operator total.
-    val normLen = length(lower(trim(col(textCol)))).cast("long")
-    val lines = df.select(id, normLen.as("__nl"),
-      explode(split(col(textCol), "\n")).as("__line"))
-    val lineAgg = lines.groupBy(id, col("__line"))
-      .agg(count(lit(1)).as("__c"), first(col("__nl")).as("__nl"))
-      .groupBy(id)
-      .agg(
-        sum(col("__c")).as("__n_lines"),
-        sum(col("__c") - 1).as("__dup_lines"),
-        sum((col("__c") - 1) * length(col("__line"))).as("__dup_chars"),
-        sum(col("__c") * length(col("__line"))).as("__tot_chars"),
-        first(col("__nl")).as("__norm_len"))
-
-    // top word-bigram: (doc, span) counts, argmax by (count desc, span asc)
-    val spanArr = spansCol.map(col).getOrElse(TextExprs.wordSpans(col(textCol), 2))
-    val spans = df.select(id, explode(spanArr).as("__span"))
-    val topBigram = spans.groupBy(id, col("__span"))
-      .agg(count(lit(1)).as("__c"))
-      .groupBy(id)
-      .agg(min(struct((-col("__c")).as("n"), col("__span").as("s"))).as("__top"))
-      .select(id, (-col("__top.n")).as("__top_c"),
-        length(col("__top.s")).cast("long").as("__top_len"))
-
-    lineAgg
-      .join(topBigram, Seq(idCol), "left")
-      .select(id,
-        expr("__dup_lines * 1000000 DIV __n_lines").as("dup_line_ppm"),
-        when(col("__tot_chars") === 0, 0L)
-          .otherwise(expr("__dup_chars * 1000000 DIV __tot_chars"))
-          .as("dup_line_char_ppm"),
-        when(col("__top_c").isNull || col("__norm_len") === 0, 0L)
-          .otherwise(expr("__top_c * __top_len * 1000000 DIV __norm_len"))
-          .as("top_bigram_ppm"))
-  }
-
-  /** [[repetitionSignals]] as a MAP-SIDE projection — one fused kernel
-    * call per document ([[graft.expr.RepetitionKernels.signals]]),
-    * value-identical to the aggregate spelling (RepetitionSpec pins the
-    * row identity on the fixture corpus) with ZERO shuffles: the signals
-    * are doc-local, so the aggregate spelling's two exchanges (distinct
+    * lowercase, space-trim, split on `\s+`. Value-identical to the
+    * aggregate spelling `Reference.repetitionSignals` (RepetitionSpec pins
+    * the row identity on the fixture corpus) with ZERO shuffles: the
+    * signals are doc-local, so that spelling's two exchanges (distinct
     * (doc, line) and (doc, span) pairs, carrying line/span TEXT) buy
-    * nothing but codegen'd combining that the kernel does in-row. This is
-    * the production spelling; the aggregate form remains the
-    * oracle-reference and the spelling for callers that already hold a
-    * materialized span column (q113's shared checkpoint). Being pure
-    * projection it also composes into Structured Streaming pipelines
+    * nothing but codegen'd combining that the kernel does in-row. Being
+    * pure projection it also composes into Structured Streaming pipelines
     * with no watermark or output-mode constraints. */
   def repetitionSignalsFused(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
@@ -110,8 +54,11 @@ object Repetition {
         col("__r").getItem(1).as("dup_line_char_ppm"),
         col("__r").getItem(2).as("top_bigram_ppm"))
 
-  /** [[gateVerdicts]] over the fused kernel — the map-side production
-    * gate. */
+  /** Per-document gate verdict: [[repetitionSignalsFused]] plus a
+    * `gate_pass` boolean (the published rule is a conjunction of
+    * acceptances — a doc fails if ANY signal exceeds its threshold). The
+    * per-doc form the APPLY step consumes ([[Decontaminate.applyVerdicts]],
+    * q106); [[repetitionGate]] (q102) is its per-source rollup. */
   def gateVerdictsFused(df: DataFrame, idCol: String, textCol: String,
       maxDupLinePpm: Long, maxDupLineCharPpm: Long,
       maxTopBigramPpm: Long): DataFrame =
@@ -120,21 +67,8 @@ object Repetition {
         col("dup_line_char_ppm") <= maxDupLineCharPpm &&
         col("top_bigram_ppm") <= maxTopBigramPpm)
 
-  /** Per-document gate verdict: [[repetitionSignals]] plus a `gate_pass`
-    * boolean (the published rule is a conjunction of acceptances — a doc
-    * fails if ANY signal exceeds its threshold). The per-doc form the
-    * APPLY step consumes ([[Decontaminate.applyVerdicts]], q106);
-    * [[repetitionGate]] (q102) is its per-source rollup. */
-  def gateVerdicts(df: DataFrame, idCol: String, textCol: String,
-      maxDupLinePpm: Long, maxDupLineCharPpm: Long,
-      maxTopBigramPpm: Long, spansCol: Option[String] = None): DataFrame =
-    repetitionSignals(df, idCol, textCol, spansCol).withColumn("gate_pass",
-      col("dup_line_ppm") <= maxDupLinePpm &&
-        col("dup_line_char_ppm") <= maxDupLineCharPpm &&
-        col("top_bigram_ppm") <= maxTopBigramPpm)
-
   /** Gopher-style repetition GATE: apply rejection thresholds to
-    * [[repetitionSignals]] and roll pass/fail rates up by `byCol` — the
+    * [[repetitionSignalsFused]] and roll pass/fail rates up by `byCol` — the
     * per-source acceptance report a filtering run publishes. A document
     * fails if ANY signal exceeds its threshold (the published rule is a
     * conjunction of acceptances). Thresholds are in ppm. */

@@ -39,21 +39,6 @@ object Shard {
         sum(conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
           .cast("long")).as("checksum"))
 
-  /** Duplicate-cluster-aware fold assignment — the leakage-safe
-    * train/val/test split: every member of an exact-duplicate cluster
-    * (md5 of normalized text, the [[Dedup.exactGroups]] fingerprint)
-    * lands in the SAME fold, because the fold hash is taken over the
-    * cluster representative (smallest member id), never the document id.
-    * A doc-level split scatters a duplicate family across folds and the
-    * validation set silently contains training text.
-    *
-    * Output: one row per document (idCol, cluster_id, fold, plus
-    * naive_fold — what a doc-level md5 split would have assigned, kept
-    * so the straddle audit is computable downstream without re-hashing).
-    *
-    * Scale shape: one fingerprint aggregate (32-char keys, map-combined)
-    * plus one equi-join back on the fingerprint — the q07 dedup shuffle
-    * shape, never document payloads. */
   /** Shuffle-quality audit: did the epoch permutation actually
     * decorrelate sources? Orders each epoch's documents by the
     * [[Mixture.epochOrder]] key (md5(epoch:id), id tiebreak) WITHIN
@@ -100,6 +85,21 @@ object Shard {
         col("hhi_ppm"))
   }
 
+  /** Duplicate-cluster-aware fold assignment — the leakage-safe
+    * train/val/test split: every member of an exact-duplicate cluster
+    * (md5 of normalized text, the [[Dedup.exactGroups]] fingerprint)
+    * lands in the SAME fold, because the fold hash is taken over the
+    * cluster representative (smallest member id), never the document id.
+    * A doc-level split scatters a duplicate family across folds and the
+    * validation set silently contains training text.
+    *
+    * Output: one row per document (idCol, cluster_id, fold, plus
+    * naive_fold — what a doc-level md5 split would have assigned, kept
+    * so the straddle audit is computable downstream without re-hashing).
+    *
+    * Scale shape: one fingerprint aggregate (32-char keys, map-combined)
+    * plus one equi-join back on the fingerprint — the q07 dedup shuffle
+    * shape, never document payloads. */
   def clusterAwareFolds(df: DataFrame, idCol: String, textCol: String,
       numFolds: Int): DataFrame = {
     require(numFolds >= 2)
@@ -205,24 +205,6 @@ object Shard {
     graft.expr.HashExprs.jumpHash(
       graft.functions.HashFns.md5Long(key), numShards)
 
-  /** Resharding-stability audit: when the shard count changes
-    * nOld → nNew, what fraction of documents MOVE under (a) the mod-hash
-    * assignment ([[assignShards]] — the stateless default) vs (b)
-    * [[rendezvousShard]]? One row per scheme:
-    * (scheme ∈ {mod, rendezvous}, n_docs, n_moved, moved_ppm), with the
-    * ppm division branched on the 9 223 372 036 854 bound (the repo's
-    * overflow rule — doc counts past it would overflow the ·1e6).
-    *
-    * Expected values the audit verifies in practice: rendezvous moves
-    * ≈ (1 − nOld/nNew)·1e6 ppm on a grow (the provable minimum — every
-    * move is a doc some NEW shard won); mod-hash moves
-    * ≈ (1 − gcd-structure)·1e6, usually nearly everything. Run this
-    * before a reshard to size the rewrite.
-    *
-    * Scale shape: one map-side projection computing all four assignments
-    * (2·(nOld+nNew) digests per row, no shuffle), one 1-row grand-total
-    * aggregate, exploded to the 2-row report on the driver side of the
-    * plan — no collect, no second scan. */
   /** Shard-balance audit of the three stateless assignment schemes at a
     * fixed shard count — the pre-deploy check that the cheap scheme (jump:
     * O(log n) integer steps) balances like the digest schemes before a
@@ -275,6 +257,24 @@ object Shard {
                 |END""".stripMargin).cast("long").as("peak_ppm"))
   }
 
+  /** Resharding-stability audit: when the shard count changes
+    * nOld → nNew, what fraction of documents MOVE under (a) the mod-hash
+    * assignment ([[assignShards]] — the stateless default) vs (b)
+    * [[rendezvousShard]]? One row per scheme:
+    * (scheme ∈ {mod, rendezvous}, n_docs, n_moved, moved_ppm), with the
+    * ppm division branched on the 9 223 372 036 854 bound (the repo's
+    * overflow rule — doc counts past it would overflow the ·1e6).
+    *
+    * Expected values the audit verifies in practice: rendezvous moves
+    * ≈ (1 − nOld/nNew)·1e6 ppm on a grow (the provable minimum — every
+    * move is a doc some NEW shard won); mod-hash moves
+    * ≈ (1 − gcd-structure)·1e6, usually nearly everything. Run this
+    * before a reshard to size the rewrite.
+    *
+    * Scale shape: one map-side projection computing all four assignments
+    * (2·(nOld+nNew) digests per row, no shuffle), one 1-row grand-total
+    * aggregate, exploded to the 2-row report on the driver side of the
+    * plan — no collect, no second scan. */
   def reshardStability(df: DataFrame, idCol: String,
       nOld: Int, nNew: Int): DataFrame =
     reshardReport(df, idCol, nOld, nNew, includeJump = false)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.VectorExprs
 import graft.functions.VectorFns
 
 /** Vector similarity search — the engine's replacement for the reference's
@@ -29,7 +30,7 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, idCol: String, vecCol: String,
       query: DataFrame, qvecCol: String, k: Int, threshold: Double): DataFrame = {
     val scored = corpus.crossJoin(broadcast(query))
-      .withColumn("sim", round(VectorFns.cosine(col(vecCol), col(qvecCol)), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col(vecCol), col(qvecCol)), 6))
       .filter(col("sim") >= threshold)
     scored.orderBy(col("sim").desc, col(idCol).asc)
       .select(col(idCol), col("sim"))
@@ -43,7 +44,7 @@ object Similarity {
       queries: DataFrame, queryId: String, queryVec: String, k: Int): DataFrame = {
     val pairs = corpus.crossJoin(broadcast(queries))
       .filter(col(corpusId) =!= col(queryId))
-      .withColumn("sim", round(VectorFns.cosine(col(corpusVec), col(queryVec)), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col(corpusVec), col(queryVec)), 6))
     val w = Window.partitionBy(col(queryId)).orderBy(col("sim").desc, col(corpusId).asc)
     pairs.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -56,7 +57,7 @@ object Similarity {
     * Each side's L2 norm is projected ONCE per row; the per-pair work is a
     * single fused dot product. The arithmetic (left-to-right sums, sqrt·sqrt
     * denominator, zero-denominator → 0) is bitwise-identical to
-    * [[VectorFns.cosine]], so results hash-match the naive spelling. */
+    * [[VectorExprs.cosine]], so results hash-match the naive spelling. */
   def nearDupPairsExact(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val prepped = df.select(col(idCol), col(vecCol),
@@ -75,7 +76,7 @@ object Similarity {
       .withColumn("sim", round(
         when(col("vec_a").isNull || col("vec_b").isNull, lit(null).cast("double"))
           .otherwise(when(denom === 0.0, lit(0.0))
-            .otherwise(graft.expr.VectorExprs.dot(col("vec_a"), col("vec_b")) / denom)), 6))
+            .otherwise(VectorExprs.dot(col("vec_a"), col("vec_b")) / denom)), 6))
       .filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("sim"))
   }
@@ -90,7 +91,7 @@ object Similarity {
     val b = df.select(col(bucketCol).as("b"), col(idCol).as("id_b"), col(vecCol).as("vec_b"))
     a.join(b, Seq("b"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", round(VectorFns.cosine(col("vec_a"), col("vec_b")), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col("vec_a"), col("vec_b")), 6))
       .filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("sim"))
   }
@@ -168,7 +169,7 @@ object Similarity {
       .orderBy(col("__csim").desc, col(labelCol).asc)
     val assigned = rows.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(cents)) // ≤ nlist rows — statically bounded
-      .withColumn("__csim", round(VectorFns.cosine(col(vecCol), col("centroid")), 6))
+      .withColumn("__csim", round(VectorExprs.cosine(col(vecCol), col("centroid")), 6))
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .select(col(idCol), col(vecCol), col(labelCol))
@@ -262,16 +263,16 @@ object Similarity {
     * candidates × vector lookups.
     */
   def rpLshNearDup(df: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Double]], bitsPerTable: Int, threshold: Double,
-      quantScale: Double = 1000.0): DataFrame = {
+      planes: Array[Array[Double]], bitsPerTable: Int,
+      threshold: Double): DataFrame = {
     val shufN = df.sparkSession.sessionState.conf.numShufflePartitions
     val tables = planes.length / bitsPerTable
     // explode the table indices, not the key array: a generator over the
     // `keys` column gets `size(keys) > 0` inferred and pushed below the
     // projection, hashing every vector three times
     val buckets = df.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), graft.expr.VectorExprs.signRpBuckets(
-        col(vecCol), planes, bitsPerTable, quantScale).as("keys"))
+      .select(col(idCol).as("id"), col(vecCol).as("vec"), VectorExprs.signRpBuckets(
+        col(vecCol), planes, bitsPerTable).as("keys"))
       .select(col("id"), col("keys"), col("vec"), explode(lit((0 until tables).toArray)).as("t"))
       .withColumn("key", col("keys")(col("t")))
       .filter(col("key").isNotNull)
@@ -279,7 +280,7 @@ object Similarity {
       .groupBy(col("t"), col("key"))
       .agg(collect_list(struct(col("id"), col("keys"), col("vec"))).as("members"))
     buckets
-      .select(explode(graft.expr.VectorExprs.bucketPairs(col("members"), col("t"),
+      .select(explode(VectorExprs.bucketPairs(col("members"), col("t"),
         threshold - 1e-6)).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), round(col("p.cos"), 6).as("sim"))
       .filter(col("sim") >= threshold)
@@ -294,12 +295,12 @@ object Similarity {
     * bucket centroid — and mark the rest as semantic duplicates.
     *
     * All arithmetic is integer-exact end-to-end, so the verdict hash-checks
-    * against any engine: embeddings quantize to `floor(x·quantScale + 0.5)`
+    * against any engine: embeddings quantize to [[VectorFns.quantize]]
     * longs (the q47 convention), and "nearest the centroid" compares
     * `Σ_d (n·q_d − S_d)²` — distance to the centroid scaled by the bucket
     * size `n`, avoiding the mean's division entirely. Magnitude bound:
-    * |n·q| ≤ n·quantScale·max|x|, so the squared sum stays inside a long
-    * for n·quantScale ≲ 3·10⁸ — at larger buckets, coarsen quantScale or
+    * |n·q| ≤ n·QuantScale·max|x|, so the squared sum stays inside a long
+    * for n·QuantScale ≲ 3·10⁸ — at larger buckets, coarsen the scale or
     * widen to decimal (same plan shape).
     *
     * Scale shape — the reason SemDeDup beats pairwise dedup at 100 TB:
@@ -324,8 +325,7 @@ object Similarity {
     * Output per input row: the id, `bucket`, `n_members`, `dist2`
     * (scaled integer distance), `keep`. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Double]], bits: Int,
-      quantScale: Double = 1000.0): DataFrame = {
+      planes: Array[Array[Double]], bits: Int): DataFrame = {
     val dim = planes.head.length
     // ~1M rows ≈ tens of MB serialized — the conventional broadcast comfort
     // zone; anything bigger shuffles (the bound is static: no count job).
@@ -333,11 +333,11 @@ object Similarity {
       if ((1L << math.min(bits, 62)) * dim <= smallAggRowCap) broadcast _
       else identity _
     val keyed = df.select(col(idCol), col(vecCol),
-      element_at(graft.expr.VectorExprs.signRpBuckets(
-        col(vecCol), planes, bits, quantScale), 1).as("bucket"))
+      element_at(VectorExprs.signRpBuckets(col(vecCol), planes, bits), 1)
+        .as("bucket"))
     val e = keyed
       .select(col(idCol), col("bucket"), posexplode(col(vecCol)).as(Seq("d", "v")))
-      .withColumn("q", floor(col("v") * quantScale + 0.5).cast("long"))
+      .withColumn("q", VectorFns.quantize(col("v")))
       .drop("v")
     val nb = keyed.groupBy(col("bucket")).agg(count(lit(1)).as("n_members"))
     val s = e.groupBy(col("bucket"), col("d")).agg(sum(col("q")).as("__sd"))
@@ -365,23 +365,23 @@ object Similarity {
     *
     *   Σ_{i≠j} ||x_i − x_j||² = 2n·Σ_i ||x_i||² − 2·Σ_d (Σ_i x_id)²
     *
-    * computed over `floor(x·quantScale + 0.5)` quantized longs, so the
+    * computed over [[VectorFns.quantize]]d longs, so the
     * statistic is integer-exact and engine-portable. Output per group:
     * `n`, `pair_dist2_sum` (the closed form above), and `mean_dist2_e6` =
     * floor(sum · 1e6 / (n·(n−1))) (0 for singleton groups). Magnitude
-    * bound: sum ≤ 2n²·dim·quantScale²·max|x|² — longs hold to n ≈ 10⁵ per
-    * group at the default scale; shard groups or coarsen quantScale past
+    * bound: sum ≤ 2n²·dim·QuantScale²·max|x|² — longs hold to n ≈ 10⁵ per
+    * group at scale 1000; shard groups or coarsen the scale past
     * that (same plan shape).
     *
     * Scale shape: one explode of n·dim components into a
     * (group, dim)-keyed aggregation (map-side combined; |groups|·dim
     * output rows), then a |groups|-row projection. Linear in n·dim;
     * the pairwise semantics cost literally nothing extra. */
-  def embeddingDispersion(df: DataFrame, groupCol: String, vecCol: String,
-      quantScale: Double = 1000.0): DataFrame = {
+  def embeddingDispersion(df: DataFrame, groupCol: String,
+      vecCol: String): DataFrame = {
     val e = df
       .select(col(groupCol), posexplode(col(vecCol)).as(Seq("d", "v")))
-      .withColumn("q", floor(col("v") * quantScale + 0.5).cast("long"))
+      .withColumn("q", VectorFns.quantize(col("v")))
     val byDim = e.groupBy(col(groupCol), col("d"))
       .agg(sum(col("q") * col("q")).as("__sq"), sum(col("q")).as("__s"),
         count(lit(1)).as("__n"))
@@ -419,13 +419,13 @@ object Similarity {
       query: DataFrame, qvecCol: String, nprobe: Int, k: Int, threshold: Double): DataFrame = {
     val cents = centroids(index.select(col(labelCol), col(vecCol)), labelCol, vecCol)
     val probed = cents.crossJoin(broadcast(query))
-      .withColumn("csim", round(VectorFns.cosine(col("centroid"), col(qvecCol)), 6))
+      .withColumn("csim", round(VectorExprs.cosine(col("centroid"), col(qvecCol)), 6))
       .orderBy(col("csim").desc, col(labelCol).asc)
       .limit(nprobe)
       .select(col(labelCol))
     index.join(broadcast(probed), Seq(labelCol))
       .crossJoin(broadcast(query))
-      .withColumn("sim", round(VectorFns.cosine(col(vecCol), col(qvecCol)), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col(vecCol), col(qvecCol)), 6))
       .filter(col("sim") >= threshold)
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(k)
@@ -455,7 +455,7 @@ object Similarity {
     val wp = Window.partitionBy(col(queryId))
       .orderBy(col("csim").desc, col(labelCol).asc)
     val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("csim", round(VectorFns.cosine(col("centroid"), col(queryVec)), 6))
+      .withColumn("csim", round(VectorExprs.cosine(col("centroid"), col(queryVec)), 6))
       .withColumn("rk", row_number().over(wp))
       .filter(col("rk") <= nprobe)
       .select(col(queryId), col(labelCol))
@@ -464,7 +464,7 @@ object Similarity {
     index.join(probes, Seq(labelCol))
       .join(queries, Seq(queryId))
       .filter(col(idCol) =!= col(queryId))
-      .withColumn("sim", round(VectorFns.cosine(col(vecCol), col(queryVec)), 6))
+      .withColumn("sim", round(VectorExprs.cosine(col(vecCol), col(queryVec)), 6))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col(queryId), col(idCol), col("sim"), col("rank"))
@@ -537,11 +537,11 @@ object Similarity {
     * engine-exact. */
   def semanticDecon(train: DataFrame, idCol: String, vecCol: String,
       evalSet: DataFrame, evalIdCol: String, evalVecCol: String,
-      planes: Array[Array[Double]], bits: Int, threshold: Double,
-      quantScale: Double = 1000.0): DataFrame = {
+      planes: Array[Array[Double]], bits: Int,
+      threshold: Double): DataFrame = {
     def keyed(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(id), posexplode(graft.expr.VectorExprs.signRpBuckets(
-        col(vec), planes, bits, quantScale)).as(Seq("t", "key")))
+      df.select(col(id), posexplode(VectorExprs.signRpBuckets(
+        col(vec), planes, bits)).as(Seq("t", "key")))
     val cand = keyed(train, idCol, vecCol)
       .join(keyed(evalSet, evalIdCol, evalVecCol), Seq("t", "key"))
       .select(col(idCol), col(evalIdCol)).distinct()
@@ -549,7 +549,7 @@ object Similarity {
       .join(train.select(col(idCol), col(vecCol)), Seq(idCol))
       .join(evalSet.select(col(evalIdCol), col(evalVecCol)), Seq(evalIdCol))
       .withColumn("sim",
-        round(graft.expr.VectorExprs.cosine(col(vecCol), col(evalVecCol)), 6))
+        round(VectorExprs.cosine(col(vecCol), col(evalVecCol)), 6))
       .filter(col("sim") >= threshold)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_eval_hits"),

@@ -66,16 +66,6 @@ object Sketch {
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_count"))
   }
 
-  /** HyperLogLog registers over a token column, grouped: register index =
-    * top `b` bits of the 32-bit md5-prefix hash, register value = max over
-    * occurrences of rank(tail) where rank = (leading zeros of the
-    * (32−b)-bit tail) + 1 ∈ [1, 32−b+1]. ALL 2^b registers are
-    * materialized per group (empty ones as 0) so the estimator reads a
-    * complete dense sketch. Output: (groupCol, reg, mreg).
-    *
-    * Scale shape: the occurrence stream collapses map-side into
-    * |groups|·2^b max-aggregated rows; the dense completion is a join
-    * against a 2^b-row literal frame. */
   /** The SPARSE register aggregation of [[hllRegisters]] — only occupied
     * (group, reg) cells, each at its max rank. This is the exact shape a
     * Structured Streaming complete-mode aggregation maintains (bounded
@@ -99,6 +89,16 @@ object Sketch {
       .agg(max(col("__rank")).as("mreg"))
   }
 
+  /** HyperLogLog registers over a token column, grouped: register index =
+    * top `b` bits of the 32-bit md5-prefix hash, register value = max over
+    * occurrences of rank(tail) where rank = (leading zeros of the
+    * (32−b)-bit tail) + 1 ∈ [1, 32−b+1]. ALL 2^b registers are
+    * materialized per group (empty ones as 0) so the estimator reads a
+    * complete dense sketch. Output: (groupCol, reg, mreg).
+    *
+    * Scale shape: the occurrence stream collapses map-side into
+    * |groups|·2^b max-aggregated rows; the dense completion is a join
+    * against a 2^b-row literal frame. */
   def hllRegisters(tokens: DataFrame, groupCol: String, tokenCol: String,
       b: Int): DataFrame = {
     require(b >= 4 && b <= 16)

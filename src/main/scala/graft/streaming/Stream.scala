@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.VectorFns
+
 /** Structured Streaming operators (north-star extension — the reference has
   * no streaming at all, SURVEY.md §2.9; the `events` fixture supplies the
   * event-time data).
@@ -179,7 +181,8 @@ object Stream {
     * downstream keeps the LATEST row per id). After the stream drains,
     * the latest verdicts equal the batch operator's output on the same
     * rows exactly: the arithmetic is the same integer form
-    * (`q = floor(x·quantScale + 0.5)` longs; `dist2 = Σ_d (n·q_d − S_d)²`),
+    * ([[graft.functions.VectorFns.quantize]]d longs `q`;
+    * `dist2 = Σ_d (n·q_d − S_d)²`),
     * order-independent, so arrival order and batching cannot change it.
     *
     * Scale shape: the stream shuffles once on the bucket key; state per
@@ -190,15 +193,15 @@ object Stream {
     * sums — the bounded-state price). Works identically on a batch
     * frame. */
   def semanticDedupStream(docs: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Double]], bits: Int, quantScale: Double = 1000.0,
+      planes: Array[Array[Double]], bits: Int,
       maxMembersPerBucket: Int = 4096): Dataset[SemanticVerdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol),
-          v => floor(v.cast("double") * quantScale + 0.5).cast("long")).as("qv"),
+        transform(col(vecCol), v => VectorFns.quantize(v.cast("double")))
+          .as("qv"),
         element_at(graft.expr.VectorExprs.signRpBuckets(
-          col(vecCol), planes, bits, quantScale), 1).as("bucket"))
+          col(vecCol), planes, bits), 1).as("bucket"))
       .as[(Long, Seq[Long], Long)]
       .groupByKey(_._3)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(

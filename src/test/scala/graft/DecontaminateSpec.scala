@@ -80,7 +80,7 @@ class DecontaminateSpec extends SparkSpec {
   test("applyVerdicts: survivors are exactly train minus dropped minus gated") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val drop = Decontaminate.bloomDropList(docs, "doc_id", "text", n = 5)
-    val gateFail = graft.ops.Repetition.gateVerdicts(docs, "doc_id", "text",
+    val gateFail = Reference.gateVerdicts(docs, "doc_id", "text",
         maxDupLinePpm = 300000L, maxDupLineCharPpm = 200000L,
         maxTopBigramPpm = 180000L)
       .filter(!$"gate_pass").select("doc_id")

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.GraftExtensions
-import graft.expr.TextExprs
-import graft.functions.VectorFns
+import graft.expr.{TextExprs, VectorExprs}
 
 /** The SQL-registered native functions must resolve in spark.sql and agree
   * with their Column-API forms. */
@@ -18,7 +17,7 @@ class ExtensionsSpec extends SparkSpec {
     val sql = spark.sql("SELECT cosine_sim(a, b) AS c, dot_product(a, b) AS d FROM vspec")
       .as[(Double, Double)].head()
     val api = df.select(
-      VectorFns.cosine($"a", $"b"), graft.expr.VectorExprs.dot($"a", $"b"))
+      VectorExprs.cosine($"a", $"b"), VectorExprs.dot($"a", $"b"))
       .as[(Double, Double)].head()
     assert(sql == api)
     assert(math.abs(sql._2 - 32.0) < 1e-12)

@@ -29,6 +29,27 @@ class PqSpec extends SparkSpec {
     assert(bySubJ.values.forall(_.length == 2))
   }
 
+  test("one subspace when subDim >= width: sub = 0 and dloc = d (q31's k-means)") {
+    // n = k and rounds = 1: the centroids are the quantized vectors
+    // themselves, so each centroid read in dloc order must equal one
+    // vector read in d order
+    val want = vecs.as[(Long, Seq[Float])].collect()
+      .map(_._2.map(x => math.floor(x * 1000.0 + 0.5).toLong)).toSet
+    for (subDim <- Seq(4, Int.MaxValue)) {
+      val c = Pq.codebooks(vecs, "vec_id", "embedding", subDim, k = 4, rounds = 1)
+        .as[(Long, Long, Long, Long)].collect()
+      assert(c.forall(_._1 == 0L), s"subDim $subDim: one subspace")
+      val cents = c.groupBy(_._2).values
+        .map(_.sortBy(_._3).map(r => r._3 -> r._4).toSeq).toSeq
+      assert(cents.forall(_.map(_._1) == (0L until 4L)), "dloc = d")
+      assert(cents.map(_.map(_._2)).toSet == want)
+      val codes = Pq.encode(vecs, "vec_id", "embedding", Pq.codebooks(vecs,
+          "vec_id", "embedding", subDim, k = 4, rounds = 1), subDim)
+        .as[(Long, Long, Long, Long)].collect()
+      assert(codes.length == 4 && codes.forall(r => r._2 == 0L && r._4 == 0L))
+    }
+  }
+
   test("encode: m codes per vector, zero distortion when n = k") {
     val c = Pq.codebooks(vecs, "vec_id", "embedding", 2, 4, 2)
     val codes = Pq.encode(vecs, "vec_id", "embedding", c, 2).collect()

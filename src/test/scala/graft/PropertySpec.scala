@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{TextFns, VectorFns}
+import graft.expr.VectorExprs
+import graft.functions.TextFns
 import graft.ops.{Dedup, Merge, TopK}
 
 /** Property-based invariants (SURVEY.md §5.2.2), driven by ScalaCheck with
@@ -34,13 +35,13 @@ class PropertySpec extends SparkSpec {
       whenever(a.nonEmpty && b.nonEmpty) {
         val df = Seq((a, b)).toDF("a", "b")
         val r = df.select(
-          VectorFns.cosine($"a", $"a").as("self"),
-          when(length(lit("x")) > 0, VectorFns.cosine($"a", lit(null).cast("array<float>"))).as("nul"))
+          VectorExprs.cosine($"a", $"a").as("self"),
+          when(length(lit("x")) > 0, VectorExprs.cosine($"a", lit(null).cast("array<float>"))).as("nul"))
           .head()
         if (a.exists(_ != 0f)) assert(math.abs(r.getDouble(0) - 1.0) < 1e-9)
         assert(r.isNullAt(1))
         if (a.length == b.length) {
-          val sim = df.select(VectorFns.cosine($"a", $"b")).head().getDouble(0)
+          val sim = df.select(VectorExprs.cosine($"a", $"b")).head().getDouble(0)
           assert(sim >= -1.0 - 1e-9 && sim <= 1.0 + 1e-9)
         }
       }

@@ -337,4 +337,83 @@ object Reference {
     train.join(eval, Seq("span"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_leaked_spans"))
   }
+
+  // twins of Repetition.repetitionSignalsFused and gateVerdictsFused
+
+  /** Per-document repetition signals over `textCol`:
+    *
+    *  - `dup_line_ppm`: duplicated lines / lines (a line is duplicated if
+    *    an identical line occurred earlier in the SAME doc; ppm of line
+    *    count beyond first occurrences).
+    *  - `dup_line_char_ppm`: characters in those beyond-first-occurrence
+    *    lines / total line characters (0 when the doc has no characters).
+    *  - `top_bigram_ppm`: characters covered by the most frequent word
+    *    2-gram (count × its length, over the normalized doc length; ties
+    *    broken to the lexicographically smallest bigram; 0 for docs with
+    *    fewer than two tokens). Overlapping occurrences are counted per
+    *    occurrence — as in the published rule — so heavily degenerate docs
+    *    can exceed 1e6; thresholds compare, they don't normalize.
+    *
+    * Tokenization matches the span family ([[graft.ops.Vocab.repeatedSpans]], q93):
+    * lowercase, space-trim, split on `\s+`. `spansCol` optionally names a
+    * PRE-COMPUTED word-bigram array column (the `wordSpans(text, 2)`
+    * spelling) so a plan sharing one materialized tokenization (q113)
+    * doesn't re-derive spans here. */
+  def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
+      spansCol: Option[String] = None): DataFrame = {
+    val id = col(idCol)
+
+    // line repetition: (doc, line) counts, then per-doc fold. The
+    // normalized doc length rides along through both aggregates (it is
+    // constant per doc — 8 bytes per shuffle row) so the final projection
+    // needs NO third scan of the corpus text: split("\n") emits >= 1 line
+    // for every document (even empty text), so starting from this agg
+    // keeps the operator total.
+    val normLen = length(lower(trim(col(textCol)))).cast("long")
+    val lines = df.select(id, normLen.as("__nl"),
+      explode(split(col(textCol), "\n")).as("__line"))
+    val lineAgg = lines.groupBy(id, col("__line"))
+      .agg(count(lit(1)).as("__c"), first(col("__nl")).as("__nl"))
+      .groupBy(id)
+      .agg(
+        sum(col("__c")).as("__n_lines"),
+        sum(col("__c") - 1).as("__dup_lines"),
+        sum((col("__c") - 1) * length(col("__line"))).as("__dup_chars"),
+        sum(col("__c") * length(col("__line"))).as("__tot_chars"),
+        first(col("__nl")).as("__norm_len"))
+
+    // top word-bigram: (doc, span) counts, argmax by (count desc, span asc)
+    val spanArr = spansCol.map(col).getOrElse(TextExprs.wordSpans(col(textCol), 2))
+    val spans = df.select(id, explode(spanArr).as("__span"))
+    val topBigram = spans.groupBy(id, col("__span"))
+      .agg(count(lit(1)).as("__c"))
+      .groupBy(id)
+      .agg(min(struct((-col("__c")).as("n"), col("__span").as("s"))).as("__top"))
+      .select(id, (-col("__top.n")).as("__top_c"),
+        length(col("__top.s")).cast("long").as("__top_len"))
+
+    lineAgg
+      .join(topBigram, Seq(idCol), "left")
+      .select(id,
+        expr("__dup_lines * 1000000 DIV __n_lines").as("dup_line_ppm"),
+        when(col("__tot_chars") === 0, 0L)
+          .otherwise(expr("__dup_chars * 1000000 DIV __tot_chars"))
+          .as("dup_line_char_ppm"),
+        when(col("__top_c").isNull || col("__norm_len") === 0, 0L)
+          .otherwise(expr("__top_c * __top_len * 1000000 DIV __norm_len"))
+          .as("top_bigram_ppm"))
+  }
+
+  /** Per-document gate verdict: [[repetitionSignals]] plus a `gate_pass`
+    * boolean (the published rule is a conjunction of acceptances — a doc
+    * fails if ANY signal exceeds its threshold). The per-doc form the
+    * APPLY step consumes ([[graft.ops.Decontaminate.applyVerdicts]], q106);
+    * [[graft.ops.Repetition.repetitionGate]] (q102) is its per-source rollup. */
+  def gateVerdicts(df: DataFrame, idCol: String, textCol: String,
+      maxDupLinePpm: Long, maxDupLineCharPpm: Long,
+      maxTopBigramPpm: Long, spansCol: Option[String] = None): DataFrame =
+    repetitionSignals(df, idCol, textCol, spansCol).withColumn("gate_pass",
+      col("dup_line_ppm") <= maxDupLinePpm &&
+        col("dup_line_char_ppm") <= maxDupLineCharPpm &&
+        col("top_bigram_ppm") <= maxTopBigramPpm)
 }

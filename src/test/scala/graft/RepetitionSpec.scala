@@ -21,7 +21,7 @@ class RepetitionSpec extends SparkSpec {
     .toDF("doc_id", "text", "source")
 
   test("repetitionSignals: hand-computed ppm for dup lines, chars, top bigram") {
-    val out = Repetition.repetitionSignals(docs, "doc_id", "text")
+    val out = Reference.repetitionSignals(docs, "doc_id", "text")
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     // doc 1: dup_lines 2/4 = 500000 ppm; dup chars 2/4 = 500000 ppm;
     // top bigram "a a" (tie → lexicographically smallest) count 1, len 3,
@@ -51,7 +51,7 @@ class RepetitionSpec extends SparkSpec {
   }
 
   test("plan shape: argmax is an aggregate, not a window; doc-keyed shuffles only") {
-    val df = Repetition.repetitionSignals(
+    val df = Reference.repetitionSignals(
       spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
     val plan = df.queryExecution.executedPlan.toString()
     // the top-bigram pick must stay a min(struct) hash aggregate — a
@@ -63,7 +63,7 @@ class RepetitionSpec extends SparkSpec {
 
   test("fused kernel is row-identical to the aggregate spelling on the fixture corpus") {
     val docs = graft.io.Tables.documents(spark, sfDir)
-    val agg = Repetition.repetitionSignals(docs, "doc_id", "text")
+    val agg = Reference.repetitionSignals(docs, "doc_id", "text")
     val fused = Repetition.repetitionSignalsFused(docs, "doc_id", "text")
     assert(agg.exceptAll(fused).isEmpty && fused.exceptAll(agg).isEmpty,
       "kernel diverged from the aggregate reference")
@@ -71,7 +71,7 @@ class RepetitionSpec extends SparkSpec {
     val edge = Seq(
       (1L, ""), (2L, "\n\n"), (3L, "a\na\na"), (4L, "x y x y x y"),
       (5L, "  word  "), (6L, "émoji 😀 émoji 😀 émoji 😀")).toDF("doc_id", "text")
-    val ea = Repetition.repetitionSignals(edge, "doc_id", "text")
+    val ea = Reference.repetitionSignals(edge, "doc_id", "text")
     val ef = Repetition.repetitionSignalsFused(edge, "doc_id", "text")
     assert(ea.exceptAll(ef).isEmpty && ef.exceptAll(ea).isEmpty)
   }

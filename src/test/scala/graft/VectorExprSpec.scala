@@ -72,7 +72,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     val planes = VectorExprs.rademacherPlanes(numPlanes = 12, dim = 16, seed = 42L)
     val df = randVecs(100, 16, 17L).toDF("id", "v")
     def keys(): Seq[(Long, Seq[Long])] = {
-      df.select($"id", VectorExprs.signRpBuckets($"v", planes, 4, 1000.0).as("k"))
+      df.select($"id", VectorExprs.signRpBuckets($"v", planes, 4).as("k"))
         .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
     }
     val k1 = keys()
@@ -105,7 +105,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     * every (table, bucket), `distinct` the pairs, verify. */
   private def rpLshAllTables(e: DataFrame, threshold: Double): DataFrame = {
     val keyed = e.select(col("vec_id"), posexplode(VectorExprs.signRpBuckets(
-      col("embedding"), Queries3.rpPlanes, Queries3.rpBits, 1000.0)).as(Seq("t", "key")))
+      col("embedding"), Queries3.rpPlanes, Queries3.rpBits)).as(Seq("t", "key")))
     val cand = keyed.select(col("t"), col("key"), col("vec_id").as("id_a"))
       .join(keyed.select(col("t"), col("key"), col("vec_id").as("id_b")), Seq("t", "key"))
       .filter(col("id_a") < col("id_b"))
@@ -128,7 +128,7 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     // the fixture has pairs sharing a bucket in several tables, which the
     // first-table rule must emit once
     val keys = e.select(col("vec_id"), VectorExprs.signRpBuckets(
-        col("embedding"), Queries3.rpPlanes, Queries3.rpBits, 1000.0).as("k"))
+        col("embedding"), Queries3.rpPlanes, Queries3.rpBits).as("k"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(want.exists { case (a, b, _) => keys(a).zip(keys(b)).count(p => p._1 == p._2) > 1 })
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -87,10 +88,17 @@ class Wave10Spec extends SparkSpec {
       "verdict must be rerun-stable")
   }
 
-  test("lloydQuantized: valid labels, non-trivial split, rerun-stable, hand-checkable") {
+  /** q31's Lloyd's: one-subspace PQ codebooks + encode, code as cluster. */
+  private def lloyd(df: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val cents = graft.ops.Pq.codebooks(df, "vec_id", "embedding",
+      Int.MaxValue, k, rounds)
+    graft.ops.Pq.encode(df, "vec_id", "embedding", cents, Int.MaxValue)
+      .select($"vec_id", $"code".as("cluster"), $"dist2")
+  }
+
+  test("Lloyd's via one-subspace Pq: valid labels, non-trivial split, rerun-stable, hand-checkable") {
     val emb = graft.io.Tables.embeddings(spark, sfDir)
-    def run() = graft.ops.Embed
-      .lloydQuantized(emb, "vec_id", "embedding", k = 10, rounds = 4)
+    def run() = lloyd(emb, k = 10, rounds = 4)
     val out = run().collect()
     assert(out.length == emb.count(), "every vector must get a label")
     val clusters = out.map(_.getLong(1)).toSet
@@ -108,8 +116,7 @@ class Wave10Spec extends SparkSpec {
     val tiny = Seq(
       (1L, Seq(0.0f, 0.0f)), (2L, Seq(10.0f, 10.0f)),
       (3L, Seq(0.1f, 0.0f)), (4L, Seq(10.0f, 9.9f))).toDF("vec_id", "embedding")
-    val t = graft.ops.Embed.lloydQuantized(tiny, "vec_id", "embedding",
-        k = 2, rounds = 1)
+    val t = lloyd(tiny, k = 2, rounds = 1)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(t(4L) == ((0L, 0L)) && t(1L) == ((1L, 0L)))
     assert(t(2L) == ((0L, 100L * 100L)), "9.9 vs 10.0 quantizes to a 100 gap")

@@ -314,8 +314,8 @@ class Wave9Spec extends SparkSpec {
         toksCol = Some("toks"))
       .select($"doc_id", $"logit_e6")
     assert(clsA.exceptAll(clsB).isEmpty && clsB.exceptAll(clsA).isEmpty)
-    val sigA = graft.ops.Repetition.repetitionSignals(docs, "doc_id", "text")
-    val sigB = graft.ops.Repetition.repetitionSignals(base, "doc_id", "text",
+    val sigA = Reference.repetitionSignals(docs, "doc_id", "text")
+    val sigB = Reference.repetitionSignals(base, "doc_id", "text",
       spansCol = Some("spans"))
     assert(sigA.exceptAll(sigB).isEmpty && sigB.exceptAll(sigA).isEmpty)
     val wA = graft.ops.Dsir.importanceWeights(docs, "doc_id", "text",
