@@ -96,7 +96,7 @@ class Wave10Spec extends SparkSpec {
       .select($"vec_id", $"code".as("cluster"), $"dist2")
   }
 
-  test("Lloyd's via one-subspace Pq: valid labels, non-trivial split, rerun-stable, hand-checkable") {
+  test("Lloyd's via Pq: valid labels, non-trivial split, rerun-stable, hand-checkable") {
     val emb = graft.io.Tables.embeddings(spark, sfDir)
     def run() = lloyd(emb, k = 10, rounds = 4)
     val out = run().collect()
