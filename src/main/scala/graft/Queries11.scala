@@ -76,16 +76,17 @@ object Queries11 {
       |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
       |    FROM documents) WHERE tok <> '')""".stripMargin
 
-  /** BM25 (k1 1.2, b 0.75) per-(doc, term) weights in micro-units as CTE
-    * `name`, over `tf`, `dl`, `st` and the document frequencies `dfRel`,
-    * keyed by `id` (q130's chain, q142's passages, q241's cut route). */
+  /** BM25 per-(doc, term) weights in micro-units as CTE `name`, over `tf`,
+    * `dl`, `st` and the document frequencies `dfRel`, keyed by `id` (q130's
+    * chain, q142's passages, q241's cut route). `k1` and `b` are
+    * [[Retrieval.Bm25K1]] and [[Retrieval.Bm25B]], the engine's own pair. */
   private[graft] def bm25WeightCte(name: String, id: String,
       dfRel: String): String =
     s"""$name AS MATERIALIZED (SELECT t.$id, t.term,
        |    floor(
        |      ln(((st.n_docs::DOUBLE - f.df::DOUBLE) + 0.5) / (f.df::DOUBLE + 0.5) + 1.0)
-       |      * ((t.tf::DOUBLE * (1.2 + 1.0))
-       |         / (t.tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (l.dl::DOUBLE / st.avgdl))))
+       |      * ((t.tf::DOUBLE * (${Retrieval.Bm25K1} + 1.0))
+       |         / (t.tf::DOUBLE + ${Retrieval.Bm25K1} * ((1.0 - ${Retrieval.Bm25B}) + ${Retrieval.Bm25B} * (l.dl::DOUBLE / st.avgdl))))
        |      * 1e6 + 0.5)::BIGINT AS c_e6
        |  FROM tf t JOIN $dfRel f USING (term)
        |  JOIN dl l ON l.$id = t.$id CROSS JOIN st)""".stripMargin

@@ -47,6 +47,11 @@ object VectorExprs {
     ExpressionUtils.column(BucketPairs(ExpressionUtils.expression(members),
       ExpressionUtils.expression(table), floor))
 
+  /** Column wrapper for [[SortedMean]]. */
+  def sortedMean(lists: Column, count: Column): Column =
+    ExpressionUtils.column(SortedMean(ExpressionUtils.expression(lists),
+      ExpressionUtils.expression(count)))
+
   /** Deterministic ±1 (Rademacher) hyperplanes, `numPlanes × dim`, from a
     * seeded java LCG — reproducible across JVMs and inlinable into oracle
     * SQL as literals. */
@@ -321,6 +326,41 @@ case class BucketPairs(members: Expression, table: Expression, floor: Double)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(members = newLeft, table = newRight)
+}
+
+/** The mean of one (label, pos) column of [[graft.ops.Similarity.centroids]].
+  * `lists` holds the column's non-null components as `array<array<double>>`,
+  * one array per map-side label run; `count` is the number of vectors that
+  * reach the position. The components are sorted ascending
+  * (`java.util.Arrays.sort`), folded left to right from 0.0 and divided by
+  * `count`.
+  *
+  * Called once per group, so it is evaluated, not generated: the sort and
+  * the fold are compiled code that every query shares. */
+case class SortedMean(lists: Expression, count: Expression)
+    extends BinaryExpression with CodegenFallback {
+
+  override def left: Expression = lists
+  override def right: Expression = count
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(l: Any, c: Any): Any = {
+    val parts = l.asInstanceOf[ArrayData]
+    val arrays = Array.tabulate(parts.numElements())(i => parts.getArray(i).toDoubleArray())
+    val xs = new Array[Double](arrays.map(_.length).sum)
+    var at = 0
+    arrays.foreach { a => System.arraycopy(a, 0, xs, at, a.length); at += a.length }
+    java.util.Arrays.sort(xs)
+    var acc = 0.0
+    var i = 0
+    while (i < xs.length) { acc += xs(i); i += 1 }
+    acc / c.asInstanceOf[Long]
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(lists = newLeft, count = newRight)
 }
 
 /** Fused dot product: sum_i a_i * b_i (double, left-to-right). */

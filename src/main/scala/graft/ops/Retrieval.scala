@@ -28,6 +28,13 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25's term-saturation `k1` and length-normalization `b`, the
+    * Robertson–Zaragoza defaults. The oracle SQL
+    * ([[graft.Queries11.bm25WeightCte]]) spells the same pair from these
+    * names, so no other value could be checked. */
+  final val Bm25K1 = 1.2
+  final val Bm25B = 0.75
+
   /** BM25 ranked retrieval: score every (query, document) pair that shares
     * at least one term, keep the top `k` documents per query.
     *
@@ -50,10 +57,9 @@ object Retrieval {
     * Output: (queryId, docId, score_e6, rank), rank ≤ k. */
   def bm25Rank(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      maxDfPpm: Option[Long] = None): DataFrame =
+      k: Int, maxDfPpm: Option[Long] = None): DataFrame =
     bm25RankFrom(postings(docs, idCol, textCol), idCol,
-      queries, queryIdCol, queryTextCol, k, k1, b, maxDfPpm)
+      queries, queryIdCol, queryTextCol, k, maxDfPpm)
 
   /** The corpus-side index of the BM25 family: term frequencies (`tf` —
     * the postings list), document lengths (`dl`), document frequencies
@@ -104,10 +110,9 @@ object Retrieval {
   /** [[bm25Rank]] over a pre-built [[Postings]] index. */
   def bm25RankFrom(p: Postings, idCol: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      maxDfPpm: Option[Long] = None): DataFrame =
+      k: Int, maxDfPpm: Option[Long] = None): DataFrame =
     bm25RankTerms(p, idCol, queryTerms(queries, queryIdCol, queryTextCol),
-      queryIdCol, k, k1, b, maxDfPpm)
+      queryIdCol, k, maxDfPpm)
 
   /** [[bm25Rank]] driven by an explicit (query, term) probe set — the
     * entry point a query-EXPANSION pass needs: the second retrieval pass
@@ -115,11 +120,10 @@ object Retrieval {
     * set no query text spells. `qterms` must carry the term under the
     * internal `__term` name (as [[queryTerms]] emits). */
   def bm25RankTerms(p: Postings, idCol: String, qterms: DataFrame,
-      queryIdCol: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75, maxDfPpm: Option[Long] = None): DataFrame = {
+      queryIdCol: String, k: Int, maxDfPpm: Option[Long] = None): DataFrame = {
     val w = Window.partitionBy(col(queryIdCol))
       .orderBy(col("score_e6").desc, col(idCol).asc)
-    bm25ScoresTerms(p, idCol, qterms, queryIdCol, k1, b, maxDfPpm)
+    bm25ScoresTerms(p, idCol, qterms, queryIdCol, maxDfPpm)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
@@ -157,8 +161,7 @@ object Retrieval {
     * set scales with the corpus, pre-aggregate or shard it — do not feed
     * it here. */
   def bm25ScoresTerms(p: Postings, idCol: String, qterms: DataFrame,
-      queryIdCol: String, k1: Double = 1.2, b: Double = 0.75,
-      maxDfPpm: Option[Long] = None): DataFrame = {
+      queryIdCol: String, maxDfPpm: Option[Long] = None): DataFrame = {
     import p.{tf, dl, stats}
     val dfreq = maxDfPpm match {
       case Some(ppm) =>
@@ -169,7 +172,7 @@ object Retrieval {
       case None => p.dfreq
     }
     val idf = bm25Idf
-    val tfn = bm25Tfn(k1, b)
+    val tfn = bm25Tfn
     // the per-term weight is a (doc, term) fact — the query never enters
     // it — so the double chain runs ONCE per postings row, and the (much
     // larger) query-probe join below carries only a pre-floored long.
@@ -241,11 +244,11 @@ object Retrieval {
   }
 
   /** The BM25 tf normalization of a postings row (see [[bm25Idf]]). */
-  private def bm25Tfn(k1: Double, b: Double): Column = {
+  private def bm25Tfn: Column = {
     val tfD = col("__tf").cast("double")
     val dlD = col("__dl").cast("double")
-    (tfD * lit(k1 + 1.0)) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * (dlD / col("__avgdl"))))
+    (tfD * lit(Bm25K1 + 1.0)) /
+      (tfD + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * (dlD / col("__avgdl"))))
   }
 
   /** The (doc, term) BM25 weight table of [[bm25ScoresTerms]] EXPOSED as
@@ -266,14 +269,13 @@ object Retrieval {
     * planner through the checkpoint. At SMJ scale the dl equi-join
     * inserts its own doc exchange (EnsureRequirements), exactly as in
     * [[bm25ScoresTerms]]. */
-  def bm25WeightTable(p: Postings, idCol: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+  def bm25WeightTable(p: Postings, idCol: String): DataFrame =
     p.tf
       .join(p.dfreq, Seq("__term"))
       .join(p.dl, Seq(idCol))
       .crossJoin(broadcast(p.stats))
       .select(col(idCol), col("__term"),
-        floor(bm25Idf * bm25Tfn(k1, b) * 1e6 + 0.5).cast("long").as("__c_e6"),
+        floor(bm25Idf * bm25Tfn * 1e6 + 0.5).cast("long").as("__c_e6"),
         col("__df"), col("__n_docs"))
 
   /** [[bm25WeightTable]] lazily checkpointed with its DOC partitioning
@@ -289,9 +291,8 @@ object Retrieval {
     * pass over the checkpointed blocks. The weight table is
     * corpus-sized, so the helper's no-auto-broadcast conservatism is
     * exactly right here. */
-  def bm25WeightTableCheckpointed(p: Postings, idCol: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val wt = bm25WeightTable(p, idCol, k1, b)
+  def bm25WeightTableCheckpointed(p: Postings, idCol: String): DataFrame = {
+    val wt = bm25WeightTable(p, idCol)
     org.apache.spark.sql.graftbridge.Bridge.localCheckpointHashPartitioned(
       wt, Seq(idCol),
       wt.sparkSession.sessionState.conf.numShufflePartitions)

@@ -1,8 +1,14 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.expr.VectorExprs
 import graft.functions.VectorFns
@@ -96,23 +102,142 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** Coarse centroids per bucket (IVF training step): element-wise mean of
-    * vectors per label via posexplode + positional re-assembly. Two shuffles
-    * ((label,pos) agg + label collect), both on bounded keys.
+  /** Coarse centroids per bucket (IVF training step): the element-wise mean
+    * of the vectors of each label, one `centroid` array per label. Two
+    * shuffles, (label, pos) then label, both on bounded keys.
     *
-    * The mean is computed as a left-to-right fold over the VALUE-SORTED
-    * list, not `avg`: float summation order under partial aggregation is
-    * scheduling-dependent, which would make the result differ run-to-run
-    * and engine-to-engine. Sorting first pins the FP result bitwise. */
-  def centroids(df: DataFrame, bucketCol: String, vecCol: String): DataFrame =
-    df.select(col(bucketCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
+    * The mean of a (label, pos) column is a left-to-right fold from 0.0 over
+    * its VALUE-SORTED non-null components, divided by the number of vectors
+    * that reach `pos` (null components count, add nothing), not `avg`: float
+    * summation order under partial aggregation is scheduling-dependent,
+    * which would make the result differ run-to-run and engine-to-engine.
+    * Sorting first pins the FP result bitwise. A label whose vectors are all
+    * null or empty gets no row.
+    *
+    * No row is made per vector component. Each input partition is sorted by
+    * label, and [[LabelColumns]] streams each label's run into one row per
+    * position: the label, `pos`, the run's non-null components widened to
+    * double, and the count of vectors that reach `pos`. Those rows take the
+    * (label, pos) exchange, and [[graft.expr.SortedMean]] finishes each
+    * group once: `java.util.Arrays.sort`, the fold, the division. The
+    * per-label assembly (sort the (pos, mean) pairs, keep the means) is the
+    * original spelling's, so schema and values are bit-identical to
+    * `posexplode` + `array_sort(collect_list(v))` + `aggregate`.
+    *
+    * Memory: one group holds one column of one cell, as 8-byte doubles.
+    * Map-side, one label's run within one partition, behind a sort that can
+    * spill. Collecting whole vectors per label and finishing them in one
+    * kernel was as fast, but then one group holds a whole cell's vectors,
+    * and the noise cell of a density clustering is most of the corpus.
+    *
+    * Sorting with `Arrays.sort` in place of `array_sort`'s SQL comparator
+    * cannot move a result. The two orders differ only among values the SQL
+    * comparator calls equal: −0.0 against +0.0, and NaNs among themselves.
+    * A fold from +0.0 gives the same bits whatever the order of ±0.0 (the
+    * accumulator never becomes −0.0, and adding ±0.0 to it is exact). A NaN
+    * makes the sum NaN wherever it sorts, and +∞ and −∞ together give NaN
+    * in either order. (When a NaN component meets the NaN that ∞ − ∞
+    * makes, which of their bits the sum keeps is the JIT's choice of
+    * operand, in either spelling.)
+    *
+    * The sorted input is captured with `queryExecution.toRdd` (the
+    * [[Ids.globalIndex]] precedent), so an input plan with an exchange runs
+    * that exchange when this frame is built. */
+  def centroids(df: DataFrame, bucketCol: String, vecCol: String): DataFrame = {
+    val sorted = df.select(col(bucketCol), col(vecCol).cast("array<double>"))
+      .sortWithinPartitions(col(bucketCol))
+    val label = sorted.schema.head
+    val runs = sorted.queryExecution.toRdd
+      .mapPartitions(rows => new LabelColumns(rows, label.dataType))
+    val schema = StructType(Seq(label, StructField("pos", IntegerType, nullable = false),
+      StructField("__vals", ArrayType(DoubleType, containsNull = false), nullable = false),
+      StructField("__n", LongType, nullable = false)))
+    Bridge.dataFrameFromInternalRdd(df.sparkSession, runs, schema)
       .groupBy(col(bucketCol), col("pos"))
-      .agg((aggregate(array_sort(collect_list(col("v").cast("double"))),
-        lit(0.0), (acc, x) => acc + x) / count(lit(1))).as("mean_v"))
+      .agg(VectorExprs.sortedMean(collect_list(col("__vals")), sum(col("__n"))).as("mean_v"))
       .groupBy(col(bucketCol))
       .agg(array_sort(collect_list(struct(col("pos"), col("mean_v")))).as("pairs"))
       .select(col(bucketCol),
         transform(col("pairs"), p => p.getField("mean_v")).as("centroid"))
+  }
+
+  /** One input partition of [[centroids]], sorted by label (field 0, the
+    * vector as `array<double>` in field 1), as one row per (label, pos) of
+    * each label's run: label, pos, the run's non-null components at pos,
+    * and the number of the run's vectors that reach pos. Holds one run.
+    * Each input row is consumed before the next is asked for, because the
+    * sort reuses it. */
+  private final class LabelColumns(rows: Iterator[InternalRow], labelType: DataType)
+      extends Iterator[InternalRow] {
+    private val ordering = PhysicalDataType.ordering(labelType)
+    private var cols = Array.empty[Array[Double]] // components per pos
+    private var fill = Array.empty[Int] // used length of each cols(p)
+    private var reach = Array.empty[Long] // vectors reaching each pos
+    private var width = 0 // longest vector of the run
+    private var label: Any = null // copied out of the reused row
+    private var inRun = false
+    private var out: Iterator[InternalRow] = Iterator.empty
+
+    override def hasNext: Boolean = {
+      while (!out.hasNext && (inRun || rows.hasNext)) {
+        if (rows.hasNext) {
+          val r = rows.next()
+          if (!inRun) start(r)
+          else if (sameLabel(r)) add(r)
+          else { out = emit(); start(r) }
+        } else { out = emit(); inRun = false }
+      }
+      out.hasNext
+    }
+
+    override def next(): InternalRow = { hasNext; out.next() }
+
+    private def sameLabel(r: InternalRow): Boolean =
+      if (r.isNullAt(0)) label == null
+      else label != null && ordering.compare(label, r.get(0, labelType)) == 0
+
+    private def start(r: InternalRow): Unit = {
+      label = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, labelType))
+      inRun = true
+      add(r)
+    }
+
+    private def add(r: InternalRow): Unit = if (!r.isNullAt(1)) {
+      val v = r.getArray(1)
+      val n = v.numElements()
+      if (n > cols.length) {
+        val was = cols.length
+        cols = java.util.Arrays.copyOf(cols, n)
+        for (p <- was until n) cols(p) = new Array[Double](8)
+        fill = java.util.Arrays.copyOf(fill, n)
+        reach = java.util.Arrays.copyOf(reach, n)
+      }
+      width = math.max(width, n)
+      var p = 0
+      while (p < n) {
+        reach(p) += 1
+        if (!v.isNullAt(p)) {
+          if (fill(p) == cols(p).length) cols(p) = java.util.Arrays.copyOf(cols(p), 2 * fill(p))
+          cols(p)(fill(p)) = v.getDouble(p)
+          fill(p) += 1
+        }
+        p += 1
+      }
+    }
+
+    private def emit(): Iterator[InternalRow] = {
+      val rowsOut = Array.tabulate[InternalRow](width) { p =>
+        val row = new GenericInternalRow(Array[Any](label, p,
+          UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(cols(p), fill(p))),
+          reach(p)))
+        fill(p) = 0
+        reach(p) = 0L
+        row
+      }
+      width = 0
+      rowsOut.iterator
+    }
+  }
 
   /** Write the vector index partitioned by its coarse (IVF) label:
     * `path/label=<l>/part-*.parquet`. Probed searches then read ONLY the
@@ -125,7 +250,14 @@ object Similarity {
     * because the IVF contract freezes the quantizer at build time:
     * incremental additions ([[upsertIvfIndex]]) must route through the
     * ORIGINAL centroids, not centroids drifted by the additions
-    * themselves. */
+    * themselves.
+    *
+    * The quantizer is [[centroids]] over the index as it comes: each input
+    * partition is sorted by label and streamed label run by label run, so
+    * the build makes one row per (label, pos) per partition, never one per
+    * vector component. The index is not repartitioned by label before its
+    * write: that saved 130–210 ms per `pipeline_scaled` flow, but at cluster
+    * scale it is one more shuffle of the whole corpus. */
   def writeIvfIndex(index: DataFrame, labelCol: String, path: String): Unit = {
     index.write.mode("overwrite").partitionBy(labelCol).parquet(path)
     val vecCol = index.columns.find(c =>

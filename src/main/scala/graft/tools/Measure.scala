@@ -4,8 +4,10 @@ import java.util.Locale
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -24,11 +26,14 @@ import graft.{LocalSession, SparkEntry, Verify}
   *    set. Ambient speed drifts between JVMs, so compare confs this way,
   *    never across two runs.
   *  - `profile`: per rep, the jobs, stages and tasks the run launched,
-  *    summed task and GC seconds and shuffle read+write bytes; plus the
+  *    summed task and GC seconds, shuffle read+write bytes, and the
+  *    classes Janino compiled (`compiles`) and the time it took
+  *    (`compile_ms`), driver and executors alike; plus the
   *    planning wall of a fresh frame by phase, and the costliest
   *    stages of the fastest rep. Task time far below wall × cores means
   *    the query is stage-latency-bound (fix the plan shape); near it
-  *    means compute-bound (fix the kernels).
+  *    means compute-bound (fix the kernels). A second rep that still
+  *    compiles classes generates code that misses Spark's codegen cache.
   *  - `plan`: `explain("formatted")` before execution; no jobs run.
   *  - `executed`: the final adaptive plan after execution, with the
   *    reused exchanges and final stage shapes a pre-execution plan
@@ -72,7 +77,12 @@ object Measure {
   final case class StageCost(id: Int, name: String, tasks: Int, taskS: Double,
       shuffleBytes: Long)
   final case class Rep(wallS: Double, jobs: Int, stages: Int, tasks: Int,
-      taskS: Double, gcS: Double, shuffleBytes: Long, byStage: Seq[StageCost])
+      taskS: Double, gcS: Double, shuffleBytes: Long, compiles: Long,
+      compileMs: Double, byStage: Seq[StageCost])
+
+  /** (classes compiled, compile nanoseconds) so far in this JVM. */
+  private def codegenCounters: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
   final case class Profiled(planS: Double, phases: Seq[(String, Double)], reps: Seq[Rep]) {
     def best: Rep = reps.minBy(_.wallS)
   }
@@ -100,10 +110,10 @@ object Measure {
     }
 
     def reset(): Unit = synchronized { jobs = 0; stageNames.clear(); perStage.clear() }
-    def rep(wallS: Double): Rep = synchronized {
+    def rep(wallS: Double, compiles: Long, compileMs: Double): Rep = synchronized {
       def total(i: Int) = perStage.values.map(_(i)).sum
       Rep(wallS, jobs, stageNames.size, total(0).toInt, total(1) / 1e3, total(2) / 1e3,
-        total(3), perStage.toSeq.map { case (id, a) =>
+        total(3), compiles, compileMs, perStage.toSeq.map { case (id, a) =>
           StageCost(id, stageNames.getOrElse(id, "?"), a(0).toInt, a(1) / 1e3, a(3))
         })
     }
@@ -125,9 +135,11 @@ object Measure {
     try Profiled(planS, phases, Seq.fill(reps) {
       Bridge.drainListenerBus(sc)
       collector.reset()
+      val (n0, ns0) = codegenCounters
       val wall = seconds(fn(spark, sfDir).count())
+      val (n1, ns1) = codegenCounters
       Bridge.drainListenerBus(sc)
-      collector.rep(wall)
+      collector.rep(wall, n1 - n0, (ns1 - ns0) / 1e6)
     }) finally sc.removeSparkListener(collector)
   }
 
@@ -183,7 +195,8 @@ object Measure {
             "gc_s" -> r.gcS, "shuffle_mb" -> mb(r.shuffleBytes),
             "phases_s" -> Obj(p.phases: _*),
             "reps" -> p.reps.map(x => Obj("wall_s" -> x.wallS, "jobs" -> x.jobs,
-              "stages" -> x.stages, "tasks" -> x.tasks)),
+              "stages" -> x.stages, "tasks" -> x.tasks, "compiles" -> x.compiles,
+              "compile_ms" -> x.compileMs)),
             "top_stages" -> r.byStage.sortBy(-_.taskS).take(6).map(s => Obj(
               "id" -> s.id, "task_s" -> s.taskS, "tasks" -> s.tasks,
               "shuffle_mb" -> mb(s.shuffleBytes), "name" -> s.name)))

@@ -45,6 +45,26 @@ object Reference {
     when(union === 0.0, lit(0.0)).otherwise(inter / union)
   }
 
+  // twin of graft.ops.Similarity.centroids
+
+  /** Coarse centroids per bucket (IVF training step): element-wise mean of
+    * vectors per label via posexplode + positional re-assembly. Two shuffles
+    * ((label,pos) agg + label collect), both on bounded keys.
+    *
+    * The mean is computed as a left-to-right fold over the VALUE-SORTED
+    * list, not `avg`: float summation order under partial aggregation is
+    * scheduling-dependent, which would make the result differ run-to-run
+    * and engine-to-engine. Sorting first pins the FP result bitwise. */
+  def centroids(df: DataFrame, bucketCol: String, vecCol: String): DataFrame =
+    df.select(col(bucketCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .groupBy(col(bucketCol), col("pos"))
+      .agg((aggregate(array_sort(collect_list(col("v").cast("double"))),
+        lit(0.0), (acc, x) => acc + x) / count(lit(1))).as("mean_v"))
+      .groupBy(col(bucketCol))
+      .agg(array_sort(collect_list(struct(col("pos"), col("mean_v")))).as("pairs"))
+      .select(col(bucketCol),
+        transform(col("pairs"), p => p.getField("mean_v")).as("centroid"))
+
   // twins of graft.expr.HashExprs.minHashBandKeys
 
   /** Base hash array: each shingle md5-hashed ONCE to h ∈ [0, p). Project
