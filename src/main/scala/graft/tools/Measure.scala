@@ -83,6 +83,7 @@ object Measure {
   /** (classes compiled, compile nanoseconds) so far in this JVM. */
   private def codegenCounters: (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   final case class Profiled(planS: Double, phases: Seq[(String, Double)], reps: Seq[Rep]) {
     def best: Rep = reps.minBy(_.wallS)
   }
