@@ -42,8 +42,9 @@ object Queries11 {
     * q131, q138, q228, q251, q256). */
   private[graft] def bm25TopK(d: DataFrame, k: Int,
       queryMod: Long = 50L): DataFrame =
-    Retrieval.bm25Rank(d, "doc_id", "text", textQueries(d, queryMod),
-      "q_id", "q_text", k = k)
+    Retrieval.bm25Rank(Retrieval.postings(d, "doc_id", "text"), "doc_id",
+      Retrieval.queryTerms(textQueries(d, queryMod), "q_id", "q_text"),
+      "q_id", k)
 
   /** The retrieval query sample: every document with id ≡ 7 (mod
     * `queryMod`) as a free-text query `(q_id, q_text)`. */

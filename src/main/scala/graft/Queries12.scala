@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.{Graph, RankEval, Retrieval, Similarity}
+import graft.ops.{Graph, RankEval, Retrieval, Similarity, TopK}
 
 /** Twelfth query wave: the evaluation-and-governance layer over the wave-11
   * retrieval stack, plus the data-prep closers — PRF query expansion
@@ -25,12 +25,16 @@ object Queries12 {
   /** RM3-lite expansion terms: BM25 top-5 feedback docs per query (the
     * q130 query sample), terms weighted by summed length-normalized
     * frequency, query's own terms excluded, top-3 kept — see
-    * [[graft.ops.Retrieval.prfExpansionTerms]]. */
+    * [[graft.ops.Retrieval.prfExpansion]]. One postings build serves
+    * both the feedback rank and the feedback-set term fetch — the corpus
+    * text is tokenized ONCE. */
   val q134PrfExpansion: Q = (spark, dir) => {
     val d = Tables.documents(spark, dir)
-    val queries = Queries11.textQueries(d)
-    Retrieval.prfExpansionTerms(d, "doc_id", "text",
-        queries, "q_id", "q_text", fbK = 5, nTerms = 3)
+    val p = Retrieval.postings(d, "doc_id", "text")
+    val qterms = Retrieval.queryTerms(Queries11.textQueries(d), "q_id", "q_text")
+    val fb = Retrieval.bm25Rank(p, "doc_id", qterms, "q_id", 5)
+      .select(col("q_id"), col("doc_id"))
+    Retrieval.prfExpansion(p, "doc_id", fb, qterms, "q_id", nTerms = 3)
       .orderBy("q_id", "rank")
   }
 
@@ -167,14 +171,13 @@ object Queries12 {
   // --------------------------------------- expanded second-pass BM25
   /** The PRF loop CLOSED: second-pass BM25@10 probing with each query's
     * original terms ∪ its q134 expansion terms — the retrieval run the
-    * expansion table exists to feed. One postings build serves the
-    * feedback pass, the expansion weights and the final rank
-    * ([[graft.ops.Retrieval.bm25RankTerms]]); original and expansion
-    * term sets are disjoint by construction (the expansion anti-joins
-    * the query's own terms), so the probe union is exact in both
-    * engines. */
+    * expansion table exists to feed. One postings build and one shared
+    * weight table ([[graft.ops.Retrieval.bm25WeightsShared]]) serve the
+    * feedback pass, the expansion weights and the final rank; original
+    * and expansion term sets are disjoint by construction (the expansion
+    * anti-joins the query's own terms), so the probe union is exact in
+    * both engines. */
   val q137ExpandedBm25: Q = (spark, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(spark, dir)
     val queries = Queries11.textQueries(d)
     val p = Retrieval.postings(d, "doc_id", "text")
@@ -184,31 +187,24 @@ object Queries12 {
     // which (query, term) pairs they join — the dfreq/dl attachment and
     // the idf·tfn arithmetic run once, not once per pass; the checkpoint
     // DECLARES its doc partitioning, so each pass is exchange-free
-    val wt = Retrieval.bm25WeightTableCheckpointed(p, "doc_id")
+    val wt = Retrieval.bm25WeightsShared(p, "doc_id")
     // BM25 scores are additive over disjoint probe sets, so the first
     // pass's UN-truncated score table is half of the expanded answer:
     // rank its top-5 as the feedback set, probe ONLY the (≤3 per query)
     // expansion terms in pass two, and sum — the original probe set is
     // never re-joined (the expensive join at degenerate-vocabulary worst
-    // case; see ops.Retrieval.bm25ScoresTerms)
-    val s1 = Retrieval.bm25ScoresFromWeights(wt, "doc_id", orig, "q_id")
+    // case; see ops.Retrieval.bm25Scores)
+    val s1 = Retrieval.bm25Scores(wt, "doc_id", orig, "q_id")
       .localCheckpoint(eager = false)
-    val wfb = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_e6").desc, col("doc_id").asc)
-    val fb = s1.withColumn("rank", row_number().over(wfb))
-      .filter(col("rank") <= 5)
+    val fb = TopK.topNPerGroup("q_id", "score_e6", "doc_id", 5)(s1)
       .select(col("q_id"), col("doc_id"))
-    val exp = Retrieval.prfExpansionFromFeedback(p, "doc_id", fb, orig,
-        "q_id", nTerms = 3)
+    val exp = Retrieval.prfExpansion(p, "doc_id", fb, orig, "q_id", nTerms = 3)
       .select(col("q_id"), col("term").as("__term"))
-    val s2 = Retrieval.bm25ScoresFromWeights(wt, "doc_id", exp, "q_id")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_e6").desc, col("doc_id").asc)
-    s1.unionByName(s2)
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("score_e6")).as("score_e6"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
+    val s2 = Retrieval.bm25Scores(wt, "doc_id", exp, "q_id")
+    TopK.rankPerGroup("q_id", "score_e6", "doc_id", 10, "rank")(
+        s1.unionByName(s2)
+          .groupBy(col("q_id"), col("doc_id"))
+          .agg(sum(col("score_e6")).as("score_e6")))
       .orderBy("q_id", "rank")
   }
 
@@ -459,9 +455,9 @@ object Queries12 {
   private[graft] def passageRetrieval(spark: SparkSession, dir: String,
       maxDfPpm: Option[Long], queryMod: Long = 50L): DataFrame = {
     val (p, queries) = passagePostings(spark, dir, queryMod)
-    top5Passages(Retrieval.bm25ScoresTerms(p, "passage_id",
-        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
-        maxDfPpm = maxDfPpm))
+    top5Passages(Retrieval.bm25Scores(Retrieval.bm25Weights(p, "passage_id"),
+        "passage_id", Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
+        maxDfPpm))
       .select(col("q_id"), col("passage_id"),
         expr("passage_id div 10000L").as("doc_id"), col("score_e6"), col("rank"))
       .orderBy("q_id", "rank")
@@ -481,21 +477,16 @@ object Queries12 {
 
   /** Each query's 5 best `score_e6` passages as `rank`, passages of the
     * query's own document excluded (q142, q143, q241). */
-  private[graft] def top5Passages(scores: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_e6").desc, col("passage_id").asc)
-    scores.filter(expr("passage_id div 10000L") =!= col("q_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-  }
+  private[graft] def top5Passages(scores: DataFrame): DataFrame =
+    TopK.rankPerGroup("q_id", "score_e6", "passage_id", 5, "rank")(
+      scores.filter(expr("passage_id div 10000L") =!= col("q_id")))
 
   /** Shared passage-BM25 oracle prefix (q142/q143): the sentence-chunk
     * passages (`pg`, with per-passage token counts), the passage postings
     * index, the query term probe and the summed scores `sc` — the SQL
     * face of `Chunk.sentenceChunks` + `Retrieval.postings` +
-    * `bm25ScoresTerms` over passages. The optional probe-side
-    * document-frequency cutoff mirrors `bm25ScoresTerms(maxDfPpm)`: terms
+    * `bm25Scores` over passages. The optional probe-side
+    * document-frequency cutoff mirrors `bm25Scores(maxDfPpm)`: terms
     * whose passage df exceeds the ppm are filtered from `dfreq` BEFORE the
     * weight join (lengths/avgdl/N stay full-index, as in the engine). */
   private[graft] def passageScoreCtes(maxDfPpm: Option[Long],
@@ -567,9 +558,9 @@ object Queries12 {
       .localCheckpoint(eager = false)
     val queries = Queries11.textQueries(sd, queryMod)
     val p = Retrieval.postings(chunks, "passage_id", "chunk")
-    val ranked = top5Passages(Retrieval.bm25ScoresTerms(p, "passage_id",
-        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
-        maxDfPpm = maxDfPpm))
+    val ranked = top5Passages(Retrieval.bm25Scores(
+        Retrieval.bm25Weights(p, "passage_id"), "passage_id",
+        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id", maxDfPpm))
     val wb = Window.partitionBy(col("q_id")).orderBy(col("rank").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val budgeted = ranked

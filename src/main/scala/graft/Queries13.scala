@@ -242,17 +242,16 @@ object Queries13 {
   private val PqTopK = 10
 
   /** PQ codebook health report: train per-subspace codebooks
-    * ([[graft.ops.Pq.codebooks]] — one grouped integer Lloyd's over all
+    * ([[graft.ops.Pq.train]] — one grouped integer Lloyd's over all
     * subspaces), encode the corpus, and report per (subspace, code) the
     * population and total quantization distortion — the table an index
     * operator reads before shipping a codebook (empty or overloaded
     * codes mean a bad split). */
   val q150PqCodebook: Q = (spark, dir) => {
     val e = Tables.embeddings(spark, dir)
-    val cents = graft.ops.Pq.codebooks(e, "vec_id", "embedding",
+    val (_, codes) = graft.ops.Pq.train(e, "vec_id", "embedding",
       PqSubDim, PqK, PqRounds)
-    graft.ops.Pq.encode(e, "vec_id", "embedding", cents, PqSubDim)
-      .groupBy(col("sub"), col("code"))
+    codes.groupBy(col("sub"), col("code"))
       .agg(count(lit(1)).as("n_vectors"), sum(col("dist2")).as("distortion"))
       .orderBy("sub", "code")
   }
@@ -307,10 +306,8 @@ object Queries13 {
     * corpus. */
   val q151PqAdcTopk: Q = (spark, dir) => {
     val e = Tables.embeddings(spark, dir)
-    val cents = graft.ops.Pq.codebooks(e, "vec_id", "embedding",
+    val (cents, codes) = graft.ops.Pq.train(e, "vec_id", "embedding",
       PqSubDim, PqK, PqRounds)
-    val codes = graft.ops.Pq.encode(e, "vec_id", "embedding", cents, PqSubDim)
-      .drop("dist2")
     val queries = e.filter(col("vec_id") % 100L === 7L)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
     graft.ops.Pq.adcTopK(codes, "vec_id", cents, queries, "q_id", "qvec",

@@ -418,17 +418,16 @@ object Queries2 {
   /** Seeded k-means labels as an engine-exact integer Lloyd's iteration
     * (k = 10, 4 assignment rounds, clusters initialized from the 10
     * vec_ids first in md5-hash order — a portable hash scatter both
-    * engines spell identically): [[graft.ops.Pq.codebooks]] and
-    * [[graft.ops.Pq.encode]] over one subspace spanning the whole vector,
+    * engines spell identically): [[graft.ops.Pq.train]] over one
+    * subspace spanning the whole vector,
     * whose code is the cluster. Unlike an MLlib estimator, this spelling
     * is one a SQL oracle can mirror round for round, which gives the
     * clustering family full hash coverage instead of a rows-only check. */
   val q31KMeans: Q = (spark, dir) => {
     val emb = Tables.embeddings(spark, dir)
-    val cents = Pq.codebooks(emb, "vec_id", "embedding", Int.MaxValue,
+    val (_, codes) = Pq.train(emb, "vec_id", "embedding", Int.MaxValue,
       k = 10, rounds = 4)
-    Pq.encode(emb, "vec_id", "embedding", cents, Int.MaxValue)
-      .select(col("vec_id"), col("code").as("cluster"), col("dist2"))
+    codes.select(col("vec_id"), col("code").as("cluster"), col("dist2"))
       .orderBy("vec_id")
   }
 

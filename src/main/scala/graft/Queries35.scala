@@ -23,7 +23,7 @@ object Queries35 {
     * stopword's postings list is corpus-sized, so it dominates both the
     * probe join's run time and its key skew while its near-zero idf
     * barely moves ranks. Top-5 per query re-ranked on surviving terms
-    * only; [[graft.ops.Retrieval.bm25ScoresTerms]] `maxDfPpm`. */
+    * only; [[graft.ops.Retrieval.bm25Scores]] `maxDfPpm`. */
   val q234PassageRetrievalDfCut: Q = (spark, dir) =>
     Queries12.passageRetrieval(spark, dir, maxDfPpm = Some(300000L))
 
@@ -223,7 +223,7 @@ object Queries35 {
     * tokenized once instead of once per route — same-session A/B at
     * sf0.1: 8.23 → 6.68 s min-of-3 vs the two-independent-plans
     * spelling (the score/rank passes, not the build, dominate) — AND one
-    * checkpointed [[graft.ops.Retrieval.bm25WeightTable]] (r19): per-term
+    * checkpointed [[graft.ops.Retrieval.bm25WeightsShared]] (r19): per-term
     * weights are cutoff-invariant, so the cut route is a row FILTER on
     * the shared table and the dfreq/dl joins + idf·tfn arithmetic run
     * once instead of once per route. The oracle's CTE chain is the same
@@ -235,12 +235,12 @@ object Queries35 {
     val (p, queries) = Queries12.passagePostings(spark, dir, queryMod)
     // scored by BOTH routes; the checkpoint DECLARES its doc partitioning
     // (graftbridge), so each route is one exchange-free stage over it
-    val wt = Retrieval.bm25WeightTableCheckpointed(p, "passage_id")
+    val wt = Retrieval.bm25WeightsShared(p, "passage_id")
     val qterms = Retrieval.queryTerms(queries, "q_id", "q_text")
       .localCheckpoint(false) // probes BOTH routes
     def route(maxDfPpm: Option[Long]): DataFrame =
-      Queries12.top5Passages(Retrieval.bm25ScoresFromWeights(wt,
-          "passage_id", qterms, "q_id", maxDfPpm = maxDfPpm))
+      Queries12.top5Passages(Retrieval.bm25Scores(wt,
+          "passage_id", qterms, "q_id", maxDfPpm))
         .select(col("q_id"), col("passage_id"))
     RankEval.overlapAtK(route(None), route(Some(300000L)),
         "q_id", "passage_id")
@@ -260,7 +260,7 @@ object Queries35 {
          |  FROM ${if (maxDfPpm.isDefined) "sc_cut" else "sc"}) WHERE rank <= 5)""".stripMargin
     // one WITH: the shared uncut CTE chain, plus a cut score CTE re-using
     // the same postings (dfc_cut filters dfreq; wt_cut/sc_cut mirror
-    // Retrieval.bm25ScoresTerms(maxDfPpm))
+    // Retrieval.bm25Scores(maxDfPpm))
     s"""WITH ${Queries12.passageScoreCtes(None, queryMod)},
        |dfc_cut AS MATERIALIZED (SELECT f.term, f.df FROM dfreq f CROSS JOIN st
        |  WHERE f.df * 1000000 <= 300000 * st.n_docs),

@@ -74,7 +74,7 @@ object Queries41 {
     * distribution inverted-index retrieval is designed for (a short
     * stopword-like head, a long informative tail), now inside the
     * driver's CORRECTNESS gate instead of only the out-of-band 64×
-    * runs. [[graft.ops.Retrieval.bm25Rank]]. */
+    * runs. [[graft.ops.Retrieval.bm25Rank]] via [[Queries11.bm25TopK]]. */
   val q256Bm25Zipf: Q = (spark, dir) => q256With(spark, dir, 50L)
 
   private[graft] def q256With(spark: SparkSession, dir: String,

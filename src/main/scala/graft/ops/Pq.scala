@@ -32,7 +32,7 @@ import graft.functions.VectorFns.{floorMean, quantize}
   *
   * One subspace spanning the whole vector (`subDim = Int.MaxValue`: every
   * row has `sub = 0`, `dloc = d`) is plain k-means: q31's Lloyd's is
-  * [[codebooks]] + [[encode]] at that width, `code` being the cluster.
+  * [[train]] at that width, `code` being the cluster.
   *
   * Scale shape: codebooks are statically bounded (m·k·subDim = k·dim
   * longs — the q31 class), so they broadcast; corpus-mass work is one
@@ -63,14 +63,18 @@ object Pq {
     .select(col("__id"), col("sub"), col("__a.j").as("code"),
       col("__a.dist2").as("dist2"))
 
-  /** Train per-subspace codebooks: (`sub`, `j`, `dloc`, `c`) — `rounds`
-    * Lloyd's cycles over ALL subspaces at once (the group key rides the
-    * aggregation keys; no per-subspace driver loop). Seeds: the k
-    * md5-scatter-first vectors' sub-slices. A centroid capturing no
+  /** Train per-subspace codebooks and PQ-encode the training corpus
+    * against them: (codebooks, codes). Codebooks are (`sub`, `j`, `dloc`,
+    * `c`) — `rounds` Lloyd's cycles over ALL subspaces at once (the group
+    * key rides the aggregation keys; no per-subspace driver loop). Seeds:
+    * the k md5-scatter-first vectors' sub-slices. A centroid capturing no
     * points in a round drops out (standard empty-cluster behavior,
-    * mirrored by the oracle). */
-  def codebooks(df: DataFrame, idCol: String, vecCol: String, subDim: Int,
-      k: Int, rounds: Int): DataFrame = {
+    * mirrored by the oracle). Codes are (`idCol`, `sub`, `code`, `dist2`)
+    * — m rows per vector, `dist2` the per-subspace quantization
+    * distortion — assigned from the same checkpointed points the rounds
+    * read, so the corpus is exploded and quantized once. */
+  def train(df: DataFrame, idCol: String, vecCol: String, subDim: Int,
+      k: Int, rounds: Int): (DataFrame, DataFrame) = {
     require(k >= 1 && rounds >= 1 && subDim >= 1)
     val pts = subPts(df, idCol, vecCol, subDim)
       .localCheckpoint(false)
@@ -88,22 +92,15 @@ object Pq {
       .select(expr(s"d div $subDim").cast("long").as("sub"), col("j"),
         pmod(col("d"), lit(subDim)).cast("long").as("dloc"),
         quantize(col("v")).as("c"))
-    (1 until rounds).foldLeft(init) { (cents, _) =>
+    val cents = (1 until rounds).foldLeft(init) { (cents, _) =>
       pts.join(assign(pts, cents).drop("dist2"), Seq("__id", "sub"))
         .groupBy(col("sub"), col("code"), col("dloc"))
         .agg(sum(col("q")).as("__s"), count(lit(1)).as("__n"))
         .select(col("sub"), col("code").as("j"), col("dloc"),
           floorMean(col("__s"), col("__n")).as("c"))
     }
+    (cents, assign(pts, cents).withColumnRenamed("__id", idCol))
   }
-
-  /** PQ-encode a corpus against trained codebooks: (`idCol`, `sub`,
-    * `code`, `dist2`) — m rows per vector, `dist2` the per-subspace
-    * quantization distortion. */
-  def encode(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, subDim: Int): DataFrame =
-    assign(subPts(df, idCol, vecCol, subDim), cents)
-      .withColumnRenamed("__id", idCol)
 
   /** ADC top-k: per query (UNQUANTIZED — asymmetric), tabulate per-
     * (subspace, centroid) squared distances, score every encoded corpus
@@ -159,8 +156,7 @@ object Pq {
   def recallAudit(df: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, subDim: Int,
       k: Int, rounds: Int, topK: Int): DataFrame = {
-    val cents = codebooks(df, idCol, vecCol, subDim, k, rounds)
-    val codes = encode(df, idCol, vecCol, cents, subDim).drop("dist2")
+    val (cents, codes) = train(df, idCol, vecCol, subDim, k, rounds)
     val adc = adcTopK(codes, idCol, cents, queries, qIdCol, qVecCol, subDim,
       topK)
     val exact = exactTopK(df, idCol, vecCol, queries, qIdCol, qVecCol, topK)

@@ -387,7 +387,7 @@ object Similarity {
     * work is occupancy² comparisons per bucket, which AQE's byte-based
     * coalescing cannot see (left adaptive, the `pipeline_scaled` fixture's
     * candidate join ran on 1 task). Same pattern and rationale as
-    * [[Retrieval.bm25ScoresTerms]]'s doc repartition.
+    * [[Retrieval.bm25Weights]]' doc repartition.
     *
     * At 100 TB: comparisons per bucket scale with collision probability
     * (1 - θ/π)^bits — tune bits up to keep buckets bounded ([[lshBitsFor]]);

@@ -6,12 +6,12 @@ import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.{LocalSession, SparkEntry, Verify}
+import graft.{LocalSession, Q, SparkEntry, Verify}
 
 /** The measurement CLI over registered queries, one JSON line per query
   * on stdout:
@@ -19,7 +19,7 @@ import graft.{LocalSession, SparkEntry, Verify}
   * runMain graft.tools.Measure time|ab|profile <sfDir> <reps> <name>...
   * runMain graft.tools.Measure plan|executed <sfDir> <name>...
   * }}}
-  *  - `time`: wall seconds of `count()` over a fresh frame, `reps` times.
+  *  - `time`: wall seconds of a fresh frame's run, `reps` times.
   *  - `ab`: same-JVM A/B of runtime confs given as
   *    `GRAFT_CONF="k=v,k2=v2"`. Both arms warm once, then `reps`
   *    interleaved A,B pairs; A is the session as built, B has the confs
@@ -39,6 +39,9 @@ import graft.{LocalSession, SparkEntry, Verify}
   *    reused exchanges and final stage shapes a pre-execution plan
   *    cannot show.
   *
+  * `time`, `ab` and `profile` run each frame to a `noop` sink, which
+  * reads every output column, so the timed plan is the query's own (a
+  * `count()` lets Catalyst prune every column the count does not read).
   * The session is [[graft.LocalSession]], as for [[graft.Bench]]. */
 object Measure {
   private val Usage = "usage: Measure time|ab|profile <sfDir> <reps> <name>... | " +
@@ -50,16 +53,17 @@ object Measure {
     (System.nanoTime() - t0) / 1e9
   }
 
-  def time(spark: SparkSession, sfDir: String, reps: Int, name: String): Seq[Double] = {
-    val fn = SparkEntry.queries(name)
-    Seq.fill(reps)(seconds(fn(spark, sfDir).count()))
-  }
+  /** Run `df` to the end, evaluating every output column. */
+  private def run(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  def time(spark: SparkSession, sfDir: String, reps: Int, q: Q): Seq[Double] =
+    Seq.fill(reps)(seconds(run(q(spark, sfDir))))
 
   /** (A, B) wall seconds per rep. The confs `conf` names are restored to
     * their prior values, or unset, afterwards. */
-  def ab(spark: SparkSession, sfDir: String, reps: Int, name: String,
+  def ab(spark: SparkSession, sfDir: String, reps: Int, q: Q,
       conf: Seq[(String, String)]): (Seq[Double], Seq[Double]) = {
-    val fn = SparkEntry.queries(name)
     // getAll holds only explicitly set confs; getOption would return a
     // registered conf's default, which the restore would then pin
     val set0 = spark.conf.getAll
@@ -67,7 +71,7 @@ object Measure {
     def set(b: Boolean): Unit =
       if (b) conf.foreach { case (k, v) => spark.conf.set(k, v) }
       else saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    def arm(b: Boolean): Double = { set(b); seconds(fn(spark, sfDir).count()) }
+    def arm(b: Boolean): Double = { set(b); seconds(run(q(spark, sfDir))) }
     try {
       arm(true); arm(false)
       Seq.fill(reps)((arm(false), arm(true))).unzip
@@ -120,12 +124,11 @@ object Measure {
     }
   }
 
-  def profile(spark: SparkSession, sfDir: String, reps: Int, name: String): Profiled = {
-    val fn = SparkEntry.queries(name)
+  def profile(spark: SparkSession, sfDir: String, reps: Int, q: Q): Profiled = {
     // planning cost on a fresh frame: analysis, optimization and physical
     // planning without executing; the tracker splits the phases
     val t0 = System.nanoTime()
-    val qe = fn(spark, sfDir).queryExecution
+    val qe = q(spark, sfDir).queryExecution
     qe.executedPlan
     val planS = (System.nanoTime() - t0) / 1e9
     val phases = qe.tracker.phases.toSeq.sortBy(_._1).map { case (p, s) =>
@@ -137,18 +140,18 @@ object Measure {
       Bridge.drainListenerBus(sc)
       collector.reset()
       val (n0, ns0) = codegenCounters
-      val wall = seconds(fn(spark, sfDir).count())
+      val wall = seconds(run(q(spark, sfDir)))
       val (n1, ns1) = codegenCounters
       Bridge.drainListenerBus(sc)
       collector.rep(wall, n1 - n0, (ns1 - ns0) / 1e6)
     }) finally sc.removeSparkListener(collector)
   }
 
-  def plan(spark: SparkSession, sfDir: String, name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+  def plan(spark: SparkSession, sfDir: String, q: Q): String =
+    q(spark, sfDir).queryExecution.explainString(FormattedMode)
 
-  def executed(spark: SparkSession, sfDir: String, name: String): String = {
-    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+  def executed(spark: SparkSession, sfDir: String, q: Q): String = {
+    val qe = q(spark, sfDir).queryExecution
     // an RDD action on THIS frame's executedPlan drives its adaptive root
     // to the final stages; count() would plan a different query execution
     // and leave this one unfinalized
@@ -180,16 +183,17 @@ object Measure {
     // absorb one-time session costs before the first timed query
     if (timed) spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { name =>
+      val q = SparkEntry.queries(name)
       val fields: Seq[(String, Any)] = mode match {
         case "time" =>
-          val runs = time(spark, sfDir, reps, name)
+          val runs = time(spark, sfDir, reps, q)
           Seq("min_s" -> runs.min, "runs_s" -> runs)
         case "ab" =>
-          val (a, b) = ab(spark, sfDir, reps, name, conf)
+          val (a, b) = ab(spark, sfDir, reps, q, conf)
           Seq("conf" -> Obj(conf: _*), "a_min_s" -> a.min, "b_min_s" -> b.min,
             "a_s" -> a, "b_s" -> b)
         case "profile" =>
-          val p = profile(spark, sfDir, reps, name)
+          val p = profile(spark, sfDir, reps, q)
           val r = p.best
           Seq("wall_s" -> r.wallS, "plan_s" -> p.planS, "jobs" -> r.jobs,
             "stages" -> r.stages, "tasks" -> r.tasks, "task_s" -> r.taskS,
@@ -201,8 +205,8 @@ object Measure {
             "top_stages" -> r.byStage.sortBy(-_.taskS).take(6).map(s => Obj(
               "id" -> s.id, "task_s" -> s.taskS, "tasks" -> s.tasks,
               "shuffle_mb" -> mb(s.shuffleBytes), "name" -> s.name)))
-        case "plan" => Seq("plan" -> plan(spark, sfDir, name))
-        case "executed" => Seq("plan" -> executed(spark, sfDir, name))
+        case "plan" => Seq("plan" -> plan(spark, sfDir, q))
+        case "executed" => Seq("plan" -> executed(spark, sfDir, q))
       }
       println(json(Obj(Seq("mode" -> mode, "query" -> name, "sf" -> sfDir) ++ fields: _*)))
     }

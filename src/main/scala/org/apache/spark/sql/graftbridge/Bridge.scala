@@ -116,9 +116,19 @@ object Bridge {
     * checkpointed rows (`HashPartitioning(cols, n)`, Murmur3 — what every
     * `ClusteredDistribution` requirement hashes with), and user-specified
     * repartition counts are exempt from AQE coalescing, so declaration
-    * and physical layout cannot diverge. The rebuilt leaf carries NO
-    * origin statistics (they live in a curried constructor list the
-    * instance does not expose), so the planner sizes it at
+    * and physical layout cannot diverge. When `df` is ALREADY laid out
+    * that way (its plan ends in a matching explicit-count repartition
+    * below partitioning-preserving operators, as
+    * [[graft.ops.Retrieval.bm25Weights]]' doc pin does), the planner
+    * drops this repartition (EnsureRequirements' `optimizeOutRepartition`
+    * removes a user repartition whose child already reports a
+    * semantically equal `HashPartitioning`), and the declaration stays
+    * sound: the rule fires only when the rows are already
+    * hash-partitioned on the same expressions and count, and an upstream
+    * explicit-count repartition is exempt from coalescing like this one.
+    * The rebuilt leaf carries NO origin statistics (they live in a
+    * curried constructor list the instance does not expose), so the
+    * planner sizes it at
     * `defaultSizeInBytes` — i.e. the frame will never be auto-broadcast.
     * That is the right conservatism for this helper's intended use
     * (corpus-sized intermediates whose broadcast would be a bug); do NOT

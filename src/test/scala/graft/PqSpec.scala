@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Pq
 
-/** Product-quantization semantics: codebook shape, encode contract, and
+/** Product-quantization semantics: codebook shape, code contract, and
   * the ADC ≡ exact identity on a lossless corpus (n = k → every vector
   * seeds its own centroid → zero quantization error). */
 class PqSpec extends SparkSpec {
@@ -19,8 +19,8 @@ class PqSpec extends SparkSpec {
     .toDF("vec_id", "embedding")
 
   test("codebooks: one codebook per subspace, dloc spans the sub-dimensions") {
-    val c = Pq.codebooks(vecs, "vec_id", "embedding", subDim = 2, k = 4, rounds = 2)
-      .collect()
+    val (cb, _) = Pq.train(vecs, "vec_id", "embedding", subDim = 2, k = 4, rounds = 2)
+    val c = cb.collect()
     val subs = c.map(_.getLong(0)).distinct.sorted
     assert(subs.toSeq == Seq(0L, 1L))
     assert(c.map(_.getLong(2)).forall(d => d >= 0 && d < 2)) // dloc
@@ -36,30 +36,28 @@ class PqSpec extends SparkSpec {
     val want = vecs.as[(Long, Seq[Float])].collect()
       .map(_._2.map(x => math.floor(x * 1000.0 + 0.5).toLong)).toSet
     for (subDim <- Seq(4, Int.MaxValue)) {
-      val c = Pq.codebooks(vecs, "vec_id", "embedding", subDim, k = 4, rounds = 1)
-        .as[(Long, Long, Long, Long)].collect()
+      val (cb, codesDf) = Pq.train(vecs, "vec_id", "embedding", subDim, k = 4, rounds = 1)
+      val c = cb.as[(Long, Long, Long, Long)].collect()
       assert(c.forall(_._1 == 0L), s"subDim $subDim: one subspace")
       val cents = c.groupBy(_._2).values
         .map(_.sortBy(_._3).map(r => r._3 -> r._4).toSeq).toSeq
       assert(cents.forall(_.map(_._1) == (0L until 4L)), "dloc = d")
       assert(cents.map(_.map(_._2)).toSet == want)
-      val codes = Pq.encode(vecs, "vec_id", "embedding", Pq.codebooks(vecs,
-          "vec_id", "embedding", subDim, k = 4, rounds = 1), subDim)
-        .as[(Long, Long, Long, Long)].collect()
+      val codes = codesDf.as[(Long, Long, Long, Long)].collect()
       assert(codes.length == 4 && codes.forall(r => r._2 == 0L && r._4 == 0L))
     }
   }
 
   test("encode: m codes per vector, zero distortion when n = k") {
-    val c = Pq.codebooks(vecs, "vec_id", "embedding", 2, 4, 2)
-    val codes = Pq.encode(vecs, "vec_id", "embedding", c, 2).collect()
+    val (_, codesDf) = Pq.train(vecs, "vec_id", "embedding", 2, 4, 2)
+    val codes = codesDf.collect()
     assert(codes.length == 4 * 2) // n · m rows
     assert(codes.forall(_.getLong(3) == 0L)) // lossless → dist2 = 0
   }
 
   test("ADC equals exact integer L2 on a lossless corpus") {
-    val c = Pq.codebooks(vecs, "vec_id", "embedding", 2, 4, 2)
-    val codes = Pq.encode(vecs, "vec_id", "embedding", c, 2).drop("dist2")
+    val (c, codesDf) = Pq.train(vecs, "vec_id", "embedding", 2, 4, 2)
+    val codes = codesDf.drop("dist2")
     val q = vecs.select($"vec_id".as("q_id"), $"embedding".as("qvec"))
     val adc = Pq.adcTopK(codes, "vec_id", c, q, "q_id", "qvec", 2, 3)
       .select($"q_id", $"rank", $"vec_id", $"adc_dist2".as("d"))
@@ -80,8 +78,8 @@ class PqSpec extends SparkSpec {
   }
 
   test("adcTopK excludes the query's own row") {
-    val c = Pq.codebooks(vecs, "vec_id", "embedding", 2, 4, 2)
-    val codes = Pq.encode(vecs, "vec_id", "embedding", c, 2).drop("dist2")
+    val (c, codesDf) = Pq.train(vecs, "vec_id", "embedding", 2, 4, 2)
+    val codes = codesDf.drop("dist2")
     val q = vecs.select($"vec_id".as("q_id"), $"embedding".as("qvec"))
     val out = Pq.adcTopK(codes, "vec_id", c, q, "q_id", "qvec", 2, 10).collect()
     assert(out.forall(r => r.getLong(0) != r.getLong(2)))

@@ -260,12 +260,14 @@ class StreamingSpec extends SparkSpec {
         batchTf.as[(Long, String, Long)].collect().toSet)
       // 2) BM25 over the LIVE index answers exactly like a batch rebuild
       val queries = Seq((1L, "apple banana apple")).toDF("q_id", "q_text")
-      val fromLive = graft.ops.Retrieval.bm25RankFrom(
+      val qterms = graft.ops.Retrieval.queryTerms(queries, "q_id", "q_text")
+      val fromLive = graft.ops.Retrieval.bm25Rank(
           graft.ops.Retrieval.postingsFromTf(live, "doc_id", "term", "tf"),
-          "doc_id", queries, "q_id", "q_text", k = 10)
+          "doc_id", qterms, "q_id", k = 10)
         .as[(Long, Long, Long, Long)].collect().toSet
-      val fromBatch = graft.ops.Retrieval.bm25Rank(batchDocs, "doc_id", "text",
-          queries, "q_id", "q_text", k = 10)
+      val fromBatch = graft.ops.Retrieval.bm25Rank(
+          graft.ops.Retrieval.postings(batchDocs, "doc_id", "text"),
+          "doc_id", qterms, "q_id", k = 10)
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(fromLive == fromBatch && fromLive.nonEmpty)
     } finally q.stop()

@@ -88,13 +88,10 @@ class Wave10Spec extends SparkSpec {
       "verdict must be rerun-stable")
   }
 
-  /** q31's Lloyd's: one-subspace PQ codebooks + encode, code as cluster. */
-  private def lloyd(df: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val cents = graft.ops.Pq.codebooks(df, "vec_id", "embedding",
-      Int.MaxValue, k, rounds)
-    graft.ops.Pq.encode(df, "vec_id", "embedding", cents, Int.MaxValue)
+  /** q31's Lloyd's: one-subspace PQ training, code as cluster. */
+  private def lloyd(df: DataFrame, k: Int, rounds: Int): DataFrame =
+    graft.ops.Pq.train(df, "vec_id", "embedding", Int.MaxValue, k, rounds)._2
       .select($"vec_id", $"code".as("cluster"), $"dist2")
-  }
 
   test("Lloyd's via Pq: valid labels, non-trivial split, rerun-stable, hand-checkable") {
     val emb = graft.io.Tables.embeddings(spark, sfDir)

@@ -2,12 +2,29 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Graph, Retrieval}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, RepartitionByExpression}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+
+import graft.ops.{Graph, Retrieval, TopK}
 
 /** Wave 12: BM25 lexical retrieval, reciprocal-rank fusion, hard-negative
   * mining, and integer PageRank over an edge list. */
 class Wave12Spec extends SparkSpec {
   import spark.implicits._
+
+  /** BM25@k of `queries(q_id, q_text)` over `docs(doc_id, text)`. */
+  private def bm25Rank(docs: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    Retrieval.bm25Rank(Retrieval.postings(docs, "doc_id", "text"), "doc_id",
+      Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id", k)
+
+  /** The single-pass BM25 score table of `q`, cut at `maxDfPpm`. */
+  private def bm25Scores(docs: DataFrame, q: DataFrame,
+      maxDfPpm: Option[Long]): DataFrame =
+    Retrieval.bm25Scores(
+      Retrieval.bm25Weights(Retrieval.postings(docs, "doc_id", "text"), "doc_id"),
+      "doc_id", Retrieval.queryTerms(q, "q_id", "q_text"), "q_id", maxDfPpm)
 
   test("bm25Rank matches a reference Scala spelling of the formula") {
     val docs = Seq(
@@ -16,8 +33,7 @@ class Wave12Spec extends SparkSpec {
       (3L, "apple cherry cherry durian"),
       (4L, "banana banana banana")).toDF("doc_id", "text")
     val queries = Seq((1L, "apple banana apple")).toDF("q_id", "q_text")
-    val out = Retrieval.bm25Rank(docs, "doc_id", "text",
-        queries, "q_id", "q_text", k = 10)
+    val out = bm25Rank(docs, queries, k = 10)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._2 -> r._3).toMap
 
@@ -54,7 +70,7 @@ class Wave12Spec extends SparkSpec {
     val docs = (1L to 9L).map(i => (i, "the quick fox")).toDF("doc_id", "text")
       .union(Seq((10L, "the zebra")).toDF("doc_id", "text"))
     val q = Seq((99L, "zebra the")).toDF("q_id", "q_text")
-    val top = Retrieval.bm25Rank(docs, "doc_id", "text", q, "q_id", "q_text", 3)
+    val top = bm25Rank(docs, q, 3)
       .filter(col("rank") === 1L).as[(Long, Long, Long, Long)].collect()
     assert(top.length == 1 && top.head._2 == 10L)
   }
@@ -69,9 +85,8 @@ class Wave12Spec extends SparkSpec {
       .toDF("doc_id", "text")
     val q = Seq((99L, "zebra the fox")).toDF("q_id", "q_text")
     def scores(cut: Option[Long]): Map[Long, Long] =
-      Retrieval.bm25Rank(docs, "doc_id", "text", q, "q_id", "q_text",
-          k = 100, maxDfPpm = cut)
-        .as[(Long, Long, Long, Long)].collect().map(r => r._2 -> r._3).toMap
+      bm25Scores(docs, q, cut)
+        .as[(Long, Long, Long)].collect().map(r => r._2 -> r._3).toMap
     val full = scores(None)
     val cut = scores(Some(500000L))
     assert(full.keySet == (1L to 10L).toSet) // everything matches 'the'
@@ -92,11 +107,61 @@ class Wave12Spec extends SparkSpec {
       .toDF("doc_id", "text")
     val q = Seq((99L, "the alpha gamma")).toDF("q_id", "q_text")
     def topk(cut: Option[Long]): Seq[(Long, Long)] =
-      Retrieval.bm25Rank(docs, "doc_id", "text", q, "q_id", "q_text",
-          k = 10, maxDfPpm = cut)
+      TopK.rankPerGroup("q_id", "score_e6", "doc_id", 10, "rank")(
+          bm25Scores(docs, q, cut))
         .as[(Long, Long, Long, Long)].collect().toSeq
         .map(r => (r._4, r._2)).sorted
     assert(topk(Some(800000L)) == topk(None))
+  }
+
+  test("bm25WeightsShared scores the sf0.01 passages exactly like bm25Weights, uncut and cut") {
+    val (p, queries) = Queries12.passagePostings(spark, "/root/testdata/sf0.01", 50L)
+    val qterms = Retrieval.queryTerms(queries, "q_id", "q_text")
+    val single = Retrieval.bm25Weights(p, "passage_id")
+    val shared = Retrieval.bm25WeightsShared(p, "passage_id")
+    for (cut <- Seq(None, Some(300000L))) {
+      def scores(wt: DataFrame) =
+        Retrieval.bm25Scores(wt, "passage_id", qterms, "q_id", cut)
+          .select($"q_id", $"passage_id", $"score_e6")
+      val (a, b) = (scores(single), scores(shared))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"cut $cut")
+      assert(!a.isEmpty, s"cut $cut")
+    }
+  }
+
+  test("a single-pass df cut is planned below the doc repartition") {
+    // the cut filters the FINISHED weight table; Catalyst must push it
+    // into the dfreq × stats cross join, so cut terms never reach the
+    // doc shuffle (it could not if stats joined after the dl join)
+    val docs = Seq((1L, "the fox"), (2L, "the river"), (3L, "the zebra"))
+      .toDF("doc_id", "text")
+    val q = Seq((9L, "the fox")).toDF("q_id", "q_text")
+    val plan = bm25Scores(docs, q, Some(500000L)).queryExecution.optimizedPlan
+    def cuts(p: LogicalPlan): Int = p.collect {
+      case f: Filter if f.condition.references.exists(_.name == "__df") => f
+      case j: Join if j.condition.exists(_.references.exists(_.name == "__df")) => j
+    }.size
+    val pins = plan.collect { case r: RepartitionByExpression => r }
+    assert(pins.size == 1, plan)
+    assert(cuts(plan) == 1 && cuts(pins.head.child) == 1, plan)
+  }
+
+  test("the shared weight checkpoint adds no exchange to the weight build") {
+    // bm25WeightsShared's checkpoint repartitions by doc at the session's
+    // shuffle parallelism — bm25Weights' own doc pin — so the planner
+    // must drop it and the build shuffles the weights once
+    val p = Retrieval.postings(
+      Seq((1L, "the fox"), (2L, "the river")).toDF("doc_id", "text"), "doc_id", "text")
+    val n = spark.sessionState.conf.numShufflePartitions
+    val plan = Retrieval.bm25Weights(p, "doc_id").repartition(n, $"doc_id")
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+    val pins = plan.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(pins.size == 1, plan)
   }
 
   test("rrfFuse: hand-checked points, bi-modal docs outrank single-route") {

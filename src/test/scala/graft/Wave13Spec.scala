@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Graph, RankEval, Retrieval}
+import graft.ops.{Graph, RankEval, Retrieval, TopK}
 
 /** Wave 12 follow-on: PRF expansion, nDCG/MRR audit, label propagation. */
 class Wave13Spec extends SparkSpec {
   import spark.implicits._
 
-  test("prfExpansionTerms: feedback terms weighted, query terms excluded") {
+  test("prfExpansion: feedback terms weighted, query terms excluded") {
     // query "apple" retrieves docs 2/3 (both contain it); their terms
     // weight by tf*1e6 div dl, summed across the feedback set
     val docs = Seq(
@@ -16,8 +16,11 @@ class Wave13Spec extends SparkSpec {
       (2L, "apple banana banana cherry"),
       (3L, "apple banana durian durian")).toDF("doc_id", "text")
     val q = Seq((1L, "apple")).toDF("q_id", "q_text")
-    val out = Retrieval.prfExpansionTerms(docs, "doc_id", "text",
-        q, "q_id", "q_text", fbK = 2, nTerms = 10)
+    val p = Retrieval.postings(docs, "doc_id", "text")
+    val qt = Retrieval.queryTerms(q, "q_id", "q_text")
+    val fb = Retrieval.bm25Rank(p, "doc_id", qt, "q_id", 2)
+      .select($"q_id", $"doc_id")
+    val out = Retrieval.prfExpansion(p, "doc_id", fb, qt, "q_id", nTerms = 10)
       .as[(Long, String, Long, Long)].collect()
       .map(r => r._2 -> ((r._3, r._4))).toMap
     // banana: doc2 2/4 + doc3 1/4 -> 500000 + 250000 = 750000 (rank 1)
@@ -60,21 +63,23 @@ class Wave13Spec extends SparkSpec {
       RankEval.idealCumE6(10).last, RankEval.idealCumE6(10).last, 1000000L)))
   }
 
-  test("bm25RankTerms: the term-frame entry point IS bm25Rank on query text") {
+  test("bm25Rank: ranks like the shared weight table, and a widened probe only adds score") {
     val docs = Seq((1L, "apple banana apple"), (2L, "banana cherry"),
       (3L, "apple cherry cherry durian"), (4L, "banana banana banana"))
       .toDF("doc_id", "text")
     val q = Seq((9L, "apple banana")).toDF("q_id", "q_text")
     val p = Retrieval.postings(docs, "doc_id", "text")
-    val viaText = Retrieval.bm25RankFrom(p, "doc_id", q, "q_id", "q_text", 10)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val viaTerms = Retrieval.bm25RankTerms(p, "doc_id",
+    val viaText = Retrieval.bm25Rank(p, "doc_id",
         Retrieval.queryTerms(q, "q_id", "q_text"), "q_id", 10)
       .as[(Long, Long, Long, Long)].collect().toSet
-    assert(viaText == viaTerms && viaText.nonEmpty)
+    val viaShared = TopK.rankPerGroup("q_id", "score_e6", "doc_id", 10, "rank")(
+        Retrieval.bm25Scores(Retrieval.bm25WeightsShared(p, "doc_id"), "doc_id",
+          Retrieval.queryTerms(q, "q_id", "q_text"), "q_id"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(viaText == viaShared && viaText.nonEmpty)
     // widening the probe set can only ADD score mass: every doc's score
     // under (original + one extra matching term) dominates the original
-    val widened = Retrieval.bm25RankTerms(p, "doc_id",
+    val widened = Retrieval.bm25Rank(p, "doc_id",
         Retrieval.queryTerms(q, "q_id", "q_text")
           .unionByName(Seq((9L, "cherry")).toDF("q_id", "__term")), "q_id", 10)
       .as[(Long, Long, Long, Long)].collect()
