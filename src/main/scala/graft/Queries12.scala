@@ -455,9 +455,8 @@ object Queries12 {
   private[graft] def passageRetrieval(spark: SparkSession, dir: String,
       maxDfPpm: Option[Long], queryMod: Long = 50L): DataFrame = {
     val (p, queries) = passagePostings(spark, dir, queryMod)
-    top5Passages(Retrieval.bm25Scores(Retrieval.bm25Weights(p, "passage_id"),
-        "passage_id", Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id",
-        maxDfPpm))
+    top5Passages(Retrieval.bm25Weights(p, "passage_id"),
+        Retrieval.queryTerms(queries, "q_id", "q_text"), maxDfPpm)
       .select(col("q_id"), col("passage_id"),
         expr("passage_id div 10000L").as("doc_id"), col("score_e6"), col("rank"))
       .orderBy("q_id", "rank")
@@ -475,11 +474,15 @@ object Queries12 {
       Queries11.textQueries(sd, queryMod))
   }
 
-  /** Each query's 5 best `score_e6` passages as `rank`, passages of the
-    * query's own document excluded (q142, q143, q241). */
-  private[graft] def top5Passages(scores: DataFrame): DataFrame =
+  /** Each query's 5 best passages by BM25 `score_e6` as `rank`: the
+    * probe set `qterms` over the passage weight table `wt`
+    * ([[Retrieval.bm25Weights]] or its shared form), cut at `maxDfPpm`,
+    * passages of the query's own document excluded (q142, q143, q241). */
+  private[graft] def top5Passages(wt: DataFrame, qterms: DataFrame,
+      maxDfPpm: Option[Long]): DataFrame =
     TopK.rankPerGroup("q_id", "score_e6", "passage_id", 5, "rank")(
-      scores.filter(expr("passage_id div 10000L") =!= col("q_id")))
+      Retrieval.bm25Scores(wt, "passage_id", qterms, "q_id", maxDfPpm)
+        .filter(expr("passage_id div 10000L") =!= col("q_id")))
 
   /** Shared passage-BM25 oracle prefix (q142/q143): the sentence-chunk
     * passages (`pg`, with per-passage token counts), the passage postings
@@ -558,9 +561,8 @@ object Queries12 {
       .localCheckpoint(eager = false)
     val queries = Queries11.textQueries(sd, queryMod)
     val p = Retrieval.postings(chunks, "passage_id", "chunk")
-    val ranked = top5Passages(Retrieval.bm25Scores(
-        Retrieval.bm25Weights(p, "passage_id"), "passage_id",
-        Retrieval.queryTerms(queries, "q_id", "q_text"), "q_id", maxDfPpm))
+    val ranked = top5Passages(Retrieval.bm25Weights(p, "passage_id"),
+        Retrieval.queryTerms(queries, "q_id", "q_text"), maxDfPpm)
     val wb = Window.partitionBy(col("q_id")).orderBy(col("rank").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val budgeted = ranked

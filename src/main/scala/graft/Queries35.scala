@@ -239,8 +239,7 @@ object Queries35 {
     val qterms = Retrieval.queryTerms(queries, "q_id", "q_text")
       .localCheckpoint(false) // probes BOTH routes
     def route(maxDfPpm: Option[Long]): DataFrame =
-      Queries12.top5Passages(Retrieval.bm25Scores(wt,
-          "passage_id", qterms, "q_id", maxDfPpm))
+      Queries12.top5Passages(wt, qterms, maxDfPpm)
         .select(col("q_id"), col("passage_id"))
     RankEval.overlapAtK(route(None), route(Some(300000L)),
         "q_id", "passage_id")
