@@ -47,6 +47,10 @@ object VectorExprs {
     ExpressionUtils.column(BucketPairs(ExpressionUtils.expression(members),
       ExpressionUtils.expression(table), floor))
 
+  /** Column wrapper for [[UnsafeVector]]. */
+  def unsafeVector(vec: Column): Column =
+    ExpressionUtils.column(UnsafeVector(ExpressionUtils.expression(vec)))
+
   /** Column wrapper for [[SortedMean]]. */
   def sortedMean(lists: Column, count: Column): Column =
     ExpressionUtils.column(SortedMean(ExpressionUtils.expression(lists),
@@ -257,7 +261,18 @@ object SignRpBuckets {
   * id_a < id_b whose key arrays agree at no table below `table` (so a pair
   * sharing buckets in several tables is compared only in the first), whose
   * vectors are null-free and of one length, and whose [[CosineSim]] value is
-  * at least `floor`. The cosine is [[CosineSim.eval]], bit for bit.
+  * at least `floor`, in member order (i, then j > i).
+  *
+  * The loop is priced per pair, so everything per member is done once per
+  * bucket: each member with a non-null id and a null-free vector has its
+  * vector copied into a `double[]` (floats widen exactly), its norm
+  * `sqrt(Σx²)` taken by the left-to-right loop of [[CosineSim.eval]], and
+  * its keys below `table` read into a `long[]`. Member i's partners are
+  * then dotted with it four at a time, one accumulator per partner, each
+  * adding its products in index order ([[BucketPairs.dots]]). The products,
+  * their order of summation, the denominator `norm_a · norm_b` and the 0.0
+  * for a zero denominator are those of [[CosineSim.eval]], and IEEE `*` is
+  * commutative, so the cosine is [[CosineSim.eval]]'s bit for bit.
   *
   * Called once per bucket, so it is evaluated, not generated: the pairwise
   * loop is compiled code that every query shares. */
@@ -286,37 +301,54 @@ case class BucketPairs(members: Expression, table: Expression, floor: Double)
     val tbl = t.asInstanceOf[Int]
     val n = arr.numElements()
     val ids = new Array[Any](n)
-    val keys = new Array[ArrayData](n)
-    val vecs = new Array[ArrayData](n)
+    val vecs = new Array[Array[Double]](n) // null: the member pairs with none
+    val norms = new Array[Double](n)
+    val keys = new Array[Long](n * tbl)
     var i = 0
     while (i < n) {
       val r = arr.getStruct(i, 3)
-      ids(i) = if (r.isNullAt(0)) null else r.get(0, idType)
-      keys(i) = r.getArray(1)
-      val v = if (r.isNullAt(2)) null else r.getArray(2)
-      vecs(i) = if (v == null || CosineSim.anyNull(v)) null else v
+      val v = if (r.isNullAt(0) || r.isNullAt(2)) null else r.getArray(2)
+      if (v != null && !CosineSim.anyNull(v)) {
+        ids(i) = r.get(0, idType)
+        vecs(i) = BucketPairs.widen(v, vecFloat)
+        norms(i) = BucketPairs.norm(vecs(i))
+        val ks = r.getArray(1)
+        var k = 0
+        while (k < tbl) { keys(i * tbl + k) = ks.getLong(k); k += 1 }
+      }
       i += 1
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    val partner = new Array[Int](n) // member i's partners j, in j order
+    val iFirst = new Array[Boolean](n) // whether id(i) < id(j)
+    val dots = new Array[Double](n)
     i = 0
     while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        if (ids(i) != null && ids(j) != null && vecs(i) != null && vecs(j) != null &&
-            vecs(i).numElements() == vecs(j).numElements()) {
-          val c = idOrdering.compare(ids(i), ids(j))
-          if (c != 0) {
-            val a = if (c < 0) i else j
-            val b = i + j - a
-            var k = 0
-            while (k < tbl && keys(a).getLong(k) != keys(b).getLong(k)) k += 1
-            if (k == tbl) {
-              val cos = CosineSim.eval(vecs(a), vecFloat, vecs(b), vecFloat)
-              if (cos >= floor) out += InternalRow(ids(a), ids(b), cos)
+      val x = vecs(i)
+      if (x != null) {
+        var np = 0
+        var j = i + 1
+        while (j < n) {
+          if (vecs(j) != null && vecs(j).length == x.length) {
+            val c = idOrdering.compare(ids(i), ids(j))
+            if (c != 0) {
+              var k = 0
+              while (k < tbl && keys(i * tbl + k) != keys(j * tbl + k)) k += 1
+              if (k == tbl) { partner(np) = j; iFirst(np) = c < 0; np += 1 }
             }
           }
+          j += 1
         }
-        j += 1
+        BucketPairs.dots(x, vecs, partner, np, dots)
+        var p = 0
+        while (p < np) {
+          val a = if (iFirst(p)) i else partner(p)
+          val b = i + partner(p) - a
+          val denom = norms(a) * norms(b)
+          val cos = if (denom == 0.0) 0.0 else dots(p) / denom
+          if (cos >= floor) out += InternalRow(ids(a), ids(b), cos)
+          p += 1
+        }
       }
       i += 1
     }
@@ -326,6 +358,110 @@ case class BucketPairs(members: Expression, table: Expression, floor: Double)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(members = newLeft, table = newRight)
+}
+
+object BucketPairs {
+
+  /** The null-free vector `v` as doubles (`isFloat`: element type float). */
+  private def widen(v: ArrayData, isFloat: Boolean): Array[Double] =
+    if (!isFloat) v.toDoubleArray()
+    else {
+      val f = v.toFloatArray()
+      val d = new Array[Double](f.length)
+      var k = 0
+      while (k < f.length) { d(k) = f(k); k += 1 }
+      d
+    }
+
+  /** `sqrt(Σ x(k)²)`, summed left to right from 0.0. */
+  private def norm(x: Array[Double]): Double = {
+    var s = 0.0
+    var k = 0
+    while (k < x.length) { s += x(k) * x(k); k += 1 }
+    math.sqrt(s)
+  }
+
+  /** `out(p) = Σ_k x(k) · vecs(partner(p))(k)` for every p < np, each
+    * summed left to right from 0.0. Four partners share one pass over `x`,
+    * each in its own accumulator, so `x(k)` is loaded once per four
+    * products and the four sums run independently. */
+  private def dots(x: Array[Double], vecs: Array[Array[Double]], partner: Array[Int],
+      np: Int, out: Array[Double]): Unit = {
+    val d = x.length
+    var p = 0
+    while (p + 4 <= np) {
+      val y0 = vecs(partner(p)); val y1 = vecs(partner(p + 1))
+      val y2 = vecs(partner(p + 2)); val y3 = vecs(partner(p + 3))
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var k = 0
+      while (k < d) {
+        val xk = x(k)
+        s0 += xk * y0(k); s1 += xk * y1(k); s2 += xk * y2(k); s3 += xk * y3(k)
+        k += 1
+      }
+      out(p) = s0; out(p + 1) = s1; out(p + 2) = s2; out(p + 3) = s3
+      p += 4
+    }
+    while (p < np) {
+      val y = vecs(partner(p))
+      var s = 0.0
+      var k = 0
+      while (k < d) { s += x(k) * y(k); k += 1 }
+      out(p) = s
+      p += 1
+    }
+  }
+}
+
+/** The vector `child` (`array<float|double>`) as an `UnsafeArrayData`, for
+  * a generator that writes it into several output rows: a generated row
+  * writer copies an `UnsafeArrayData` in one memory copy, and any other
+  * array (a vectorized Parquet scan's `ColumnarArray`) element by element,
+  * once per output row. An `UnsafeArrayData` passes through as it is; null
+  * elements stay null. */
+case class UnsafeVector(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+
+  private def isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case ArrayType(DoubleType, _) => false
+    case t => throw new IllegalArgumentException(s"UnsafeVector needs array<float|double>, got $t")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    UnsafeVector.copy(input.asInstanceOf[ArrayData], isFloat)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = UnsafeVector.getClass.getName + ".MODULE$"
+    defineCodeGen(ctx, ev, a => s"$k.copy($a, $isFloat)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object UnsafeVector {
+
+  /** `a` itself when it is an `UnsafeArrayData`, else a copy: the elements
+    * in bulk (`toFloatArray`/`toDoubleArray`), then each null element's
+    * bit set and its slot zeroed (`isFloat`: element type float). */
+  def copy(a: ArrayData, isFloat: Boolean): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case _ =>
+      val u = if (isFloat) UnsafeArrayData.fromPrimitiveArray(a.toFloatArray())
+        else UnsafeArrayData.fromPrimitiveArray(a.toDoubleArray())
+      var i = 0
+      while (i < a.numElements()) {
+        if (a.isNullAt(i)) {
+          if (isFloat) u.setFloat(i, 0.0f) else u.setDouble(i, 0.0)
+          u.setNullAt(i)
+        }
+        i += 1
+      }
+      u
+  }
 }
 
 /** The mean of one (label, pos) column of [[graft.ops.Similarity.centroids]].

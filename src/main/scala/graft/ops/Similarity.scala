@@ -259,7 +259,7 @@ object Similarity {
     * write: that saved 130–210 ms per `pipeline_scaled` flow, but at cluster
     * scale it is one more shuffle of the whole corpus. */
   def writeIvfIndex(index: DataFrame, labelCol: String, path: String): Unit = {
-    index.write.mode("overwrite").partitionBy(labelCol).parquet(path)
+    writeIndexCells(index, labelCol, path)
     val vecCol = index.columns.find(c =>
       c != labelCol && index.schema(c).dataType.isInstanceOf[
         org.apache.spark.sql.types.ArrayType])
@@ -269,6 +269,15 @@ object Similarity {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_quantizer")
   }
+
+  /** The one writer of index cells, for [[writeIvfIndex]] and
+    * [[upsertIvfIndex]]: partitioned by `labelCol`, Parquet dictionary
+    * encoding off. A vector column overflows its dictionary page in every
+    * file and falls back to plain encoding anyway, after the writer has
+    * hashed each of its values into the dictionary first. */
+  private def writeIndexCells(df: DataFrame, labelCol: String, path: String): Unit =
+    df.write.mode("overwrite").option("parquet.enable.dictionary", "false")
+      .partitionBy(labelCol).parquet(path)
 
   /** Read back a partitioned IVF index (partition pruning applies to any
     * `labelCol` predicate Catalyst can derive). */
@@ -320,8 +329,7 @@ object Similarity {
       .localCheckpoint(eager = false)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try existing.unionByName(assigned)
-      .write.mode("overwrite").partitionBy(labelCol).parquet(path)
+    try writeIndexCells(existing.unionByName(assigned), labelCol, path)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
@@ -371,7 +379,14 @@ object Similarity {
     * carrying its id, its whole key array and the vector, and repartitioned
     * on (t, key); the bucket's members are collected on that same
     * partitioning, and [[graft.expr.BucketPairs]] compares them pairwise in
-    * one compiled loop per bucket. A pair is compared only in the FIRST
+    * one compiled loop per bucket: each member's vector widened to doubles
+    * and its norm taken once per bucket, then its dot products with its
+    * partners four at a time, each summed in index order, which keeps the
+    * cosine [[graft.expr.CosineSim]]'s bit for bit. Before the explode, the
+    * vector is made an `UnsafeArrayData` once per row
+    * ([[graft.expr.UnsafeVector]]), so the `tables` copies of it that the
+    * explode writes are bulk copies, not one element write each (a Parquet
+    * scan hands over a `ColumnarArray`). A pair is compared only in the FIRST
     * table where its two key arrays agree, so each pair is verified once —
     * the set a `distinct` over every colliding table would keep — and the
     * kernel returns only pairs with cosine ≥ threshold − 1e-6, which
@@ -401,13 +416,17 @@ object Similarity {
     val tables = planes.length / bitsPerTable
     // explode the table indices, not the key array: a generator over the
     // `keys` column gets `size(keys) > 0` inferred and pushed below the
-    // projection, hashing every vector three times
+    // projection, hashing every vector three times. For the same reason the
+    // rows without keys (a vector with a null element has none) are dropped
+    // by `size(keys) > t`, which holds for every t when keys exist: a null
+    // test on `keys[t]` gets `isnotnull(keys)` inferred and pushed below the
+    // projection, hashing every vector twice.
     val buckets = df.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), VectorExprs.signRpBuckets(
-        col(vecCol), planes, bitsPerTable).as("keys"))
+      .select(col(idCol).as("id"), VectorExprs.unsafeVector(col(vecCol)).as("vec"),
+        VectorExprs.signRpBuckets(col(vecCol), planes, bitsPerTable).as("keys"))
       .select(col("id"), col("keys"), col("vec"), explode(lit((0 until tables).toArray)).as("t"))
+      .filter(size(col("keys")) > col("t"))
       .withColumn("key", col("keys")(col("t")))
-      .filter(col("key").isNotNull)
       .repartition(shufN, col("t"), col("key"))
       .groupBy(col("t"), col("key"))
       .agg(collect_list(struct(col("id"), col("keys"), col("vec"))).as("members"))

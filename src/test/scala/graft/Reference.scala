@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
-import graft.expr.TextExprs
+import graft.expr.{CosineSim, TextExprs}
 import graft.functions.TextFns
 import graft.functions.HashFns.{MinHashP, md5Long, minHashCoeffs}
 import graft.functions.VectorFns.l2Norm
@@ -43,6 +47,57 @@ object Reference {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = size(array_union(a, b)).cast("double")
     when(union === 0.0, lit(0.0)).otherwise(inter / union)
+  }
+
+  // twin of graft.expr.BucketPairs
+
+  /** The pairwise loop of [[graft.expr.BucketPairs]] without per-member
+    * norms or blocked dot products: every (i, j > i) pair reads both
+    * vectors through [[CosineSim.eval]]. `members` is the bucket's
+    * `array<struct<id, keys, vec>>`, `idType` the id's type and `vecFloat`
+    * whether the vector's elements are floats. */
+  def bucketPairs(members: ArrayData, table: Int, floor: Double, idType: DataType,
+      vecFloat: Boolean): ArrayData = {
+    val idOrdering = PhysicalDataType.ordering(idType)
+    val arr = members
+    val tbl = table
+    val n = arr.numElements()
+    val ids = new Array[Any](n)
+    val keys = new Array[ArrayData](n)
+    val vecs = new Array[ArrayData](n)
+    var i = 0
+    while (i < n) {
+      val r = arr.getStruct(i, 3)
+      ids(i) = if (r.isNullAt(0)) null else r.get(0, idType)
+      keys(i) = r.getArray(1)
+      val v = if (r.isNullAt(2)) null else r.getArray(2)
+      vecs(i) = if (v == null || CosineSim.anyNull(v)) null else v
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n) {
+        if (ids(i) != null && ids(j) != null && vecs(i) != null && vecs(j) != null &&
+            vecs(i).numElements() == vecs(j).numElements()) {
+          val c = idOrdering.compare(ids(i), ids(j))
+          if (c != 0) {
+            val a = if (c < 0) i else j
+            val b = i + j - a
+            var k = 0
+            while (k < tbl && keys(a).getLong(k) != keys(b).getLong(k)) k += 1
+            if (k == tbl) {
+              val cos = CosineSim.eval(vecs(a), vecFloat, vecs(b), vecFloat)
+              if (cos >= floor) out += InternalRow(ids(a), ids(b), cos)
+            }
+          }
+        }
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray[Any])
   }
 
   // twin of graft.ops.Similarity.centroids

@@ -164,6 +164,27 @@ class VectorExprSpec extends SparkSpec with TableDrivenPropertyChecks
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("rpLshNearDup hashes each vector once and drops vectors with null elements") {
+    val planes = VectorExprs.rademacherPlanes(6, 3, 5L)
+    // a Parquet scan, as in the pipeline: over a relation the optimizer
+    // cannot fold, a filter on the keys is pushed below the projection and
+    // spells the hash a second time
+    val dir = java.nio.file.Files.createTempDirectory("rp-hash-once").toString
+    Seq[(Long, Option[Seq[Option[Float]]])](
+      (1L, Some(Seq(Some(1f), Some(2f), Some(3f)))), (2L, Some(Seq(Some(1f), Some(2f), Some(3f)))),
+      (3L, Some(Seq(Some(1f), None, Some(3f)))), (4L, None), (5L, Some(Seq(Some(1f), Some(2f), Some(3f)))))
+      .toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val rp = ops.Similarity.rpLshNearDup(spark.read.parquet(dir), "id", "v", planes, 2, 0.5)
+    var hashes = 0
+    rp.queryExecution.optimizedPlan.foreach(_.expressions.foreach(_.foreach {
+      case _: graft.expr.SignRpBuckets => hashes += 1
+      case _ =>
+    }))
+    assert(hashes == 1, rp.queryExecution.optimizedPlan)
+    assert(rp.as[(Long, Long, Double)].collect().sorted.toSeq ==
+      Seq((1L, 2L, 1.0), (1L, 5L, 1.0), (2L, 5L, 1.0)))
+  }
+
   test("BucketPairs orders ids, skips equal and null members, and keeps the first table") {
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("keys", ArrayType(LongType)), StructField("vec", ArrayType(DoubleType))))
