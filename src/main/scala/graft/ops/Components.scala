@@ -1,8 +1,15 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DataType
 
 /** Connected components over a pair table — the step that turns near-dup
   * PAIRS (exact, MinHash-LSH, sign-RP-LSH) into dedup GROUPS with one
@@ -27,6 +34,26 @@ import org.apache.spark.sql.functions._
   * Every step is a window or an aggregate over the edge list — no cross
   * products, no driver-side state — so each round is a constant number of
   * shuffles regardless of data size.
+  *
+  * Contraction: before the rounds, each partition of the deduplicated
+  * edge set is contracted on its own — the local step of REPOSE (ICDE'21)
+  * ahead of the cross-partition rounds. One `mapPartitions` kernel runs
+  * union-find over the partition's edges (union by min under the id type's
+  * ordering, path compression) and emits (x, root(x)) for every endpoint
+  * x that is not its local component's root. The root is the local
+  * component's minimum, so every row keeps u > v. The contracted set has
+  * the same components as the input: each emitted edge joins two nodes
+  * the partition's edges connect, and each input edge's endpoints are
+  * linked to one root. The rounds' fixpoint — the star forest rooted at
+  * each component's minimum, (a) below — depends on nothing but the
+  * components, so no output row changes, whatever the partitioning. What
+  * changes is the round count: a component whose edges share a partition
+  * reaches the rounds as a star already. The kernel reads the `distinct`'s
+  * output inside the setup checkpoint's job (the frame is rebuilt over
+  * `queryExecution.toRdd`, as [[Similarity.centroids]] does), so it adds
+  * no exchange, no job and no driver collect. Memory: one hash-map entry
+  * per distinct endpoint of the partition (at most two per edge), which
+  * does not spill.
   *
   * Round shape: 2 exchanges and 3 jobs. The round's input (the previous
   * round's raw small-star output, duplicates included) is made symmetric
@@ -97,8 +124,10 @@ import org.apache.spark.sql.functions._
   * branches), so nothing recomputes it. On a multi-node cluster prefer
   * reliable `checkpoint` to survive executor loss.
   *
-  * Each round's jobs carry the call site `Components.round<k>`, so a job
-  * log or a listener attributes them to the round.
+  * The setup's jobs (the `distinct`'s exchange and the contraction's
+  * checkpoint) carry the call site `Components.setup`, and each round's
+  * jobs `Components.round<k>`, so a job log or a listener attributes every
+  * job to its step.
   */
 object Components {
 
@@ -148,6 +177,43 @@ object Components {
     observeSignature(small, out, lit(true))
   }
 
+  /** The contraction: one partition's distinct (larger, smaller) edges as
+    * the star forest of their local components — one (x, root(x)) row per
+    * endpoint x that is not its component's root. Union-find over the
+    * partition's endpoints, union by min (the smaller root wins, under the
+    * id type's ordering) with path compression, so each root is its local
+    * component's minimum and every row still has u > v. Holds one map
+    * entry per distinct endpoint; a key is copied out of the input row
+    * (which the scan reuses, `UTF8String` bytes included) before it is
+    * stored. */
+  private def contract(rows: Iterator[InternalRow], idType: DataType): Iterator[InternalRow] = {
+    val ordering = PhysicalDataType.ordering(idType)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var root = x
+      var up = parent.get(root)
+      while (up != root) { root = up; up = parent.get(root) }
+      var y = x
+      while (y != root) { val next = parent.get(y); parent.put(y, root); y = next }
+      root
+    }
+    def node(r: InternalRow, i: Int): Any = {
+      val x = r.get(i, idType)
+      if (parent.containsKey(x)) find(parent.get(x)) // the stored copy, not `x`
+      else { val c = InternalRow.copyValue(x); parent.put(c, c); c }
+    }
+    rows.foreach { r =>
+      val (a, b) = (node(r, 0), node(r, 1))
+      if (a != b) {
+        if (ordering.lt(a, b)) parent.put(b, a) else parent.put(a, b)
+      }
+    }
+    parent.keySet.iterator.asScala.flatMap { x =>
+      val root = find(x)
+      if (root == x) None else Some(new GenericInternalRow(Array[Any](x, root)))
+    }
+  }
+
   /** @param vertices one row per vertex
     * @param idCol    vertex id (numeric or string with total order)
     * @param edges    undirected pair table (each pair listed once)
@@ -155,30 +221,38 @@ object Components {
     */
   def connectedComponents(vertices: DataFrame, idCol: String, edges: DataFrame,
       srcCol: String, dstCol: String, maxIter: Int = 50): DataFrame = {
+    val sc = edges.sparkSession.sparkContext
+    // the caller's call site, as `setCallSite(String)` stores it
+    val callerSite = sc.getLocalProperty("callSite.short")
+    // the jobs `body` launches (AQE's stage jobs inherit local properties)
+    // carry the label `site`
+    def labelled[T](site: String)(body: => T): T = {
+      sc.setCallSite(site)
+      try body finally sc.setLocalProperty("callSite.short", callerSite)
+    }
     // canonical orientation (larger, smaller); drop self-loops and dups
-    val setup = Observation()
-    var e = edges
+    val oriented = edges
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .observe(setup, count(lit(1)).as("n"))
-      .localCheckpoint()
+    val idType = oriented.schema.head.dataType
+    val setup = Observation()
+    var e = labelled("Components.setup") {
+      // capturing the RDD runs the distinct's exchange here
+      val stars = oriented.queryExecution.toRdd.mapPartitions(contract(_, idType))
+      Bridge.dataFrameFromInternalRdd(edges.sparkSession, stars, oriented.schema)
+        .observe(setup, count(lit(1)).as("n"))
+        .localCheckpoint()
+    }
     var prevIn: Option[(Long, BigDecimal)] = None
     var iter = 0
     // no edges: every vertex is its own component
     var converged = setup.get("n").asInstanceOf[Long] == 0L
-    val sc = edges.sparkSession.sparkContext
-    // the caller's call site, as `setCallSite(String)` stores it
-    val callerSite = sc.getLocalProperty("callSite.short")
     while (!converged && iter < maxIter) {
       iter += 1
       val (in, out) = (Observation(), Observation())
-      // the round's jobs (AQE's stage jobs inherit local properties) carry
-      // the round's label
-      sc.setCallSite(s"Components.round$iter")
-      e = try starRound(e, in, out).localCheckpoint()
-        finally sc.setLocalProperty("callSite.short", callerSite)
+      e = labelled(s"Components.round$iter")(starRound(e, in, out).localCheckpoint())
       val inSig = signature(in)
       converged = signature(out) == inSig || prevIn.contains(inSig)
       prevIn = Some(inSig)

@@ -95,6 +95,11 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(one.size - none.size <= 3, s"no edges: $none, one edge: $one")
     assert(one.count(_ == "Components.round1") == 3, one)
     assert(!one.exists(s => s != null && s.startsWith("Components.round2")), one)
+    // the setup (the distinct's exchange, the contraction's checkpoint)
+    // and the rounds: no job goes unlabelled
+    assert((none ++ one).forall(s => s != null && s.startsWith("Components.")),
+      s"no edges: $none, one edge: $one")
+    assert(none.contains("Components.setup"), none)
     assert(spark.sparkContext.getLocalProperty("callSite.short") == before,
       "the caller's call site is restored")
   }
@@ -123,24 +128,70 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("connectedComponents: a duplicated clique with a chain equals union-find") {
-    // a 12-clique whose edges are each listed 3x in both orientations —
-    // every round's input dedupe must absorb it — with a 10-node chain
-    // hanging off a middle member, ids zig-zagging below the clique's
+  /** A 12-clique whose edges are each listed 3x in both orientations —
+    * every round's input dedupe must absorb it — with a 10-node chain
+    * hanging off a middle member, ids zig-zagging below the clique's, and
+    * one isolated vertex. */
+  private val cliqueChain: (List[Long], List[(Long, Long)]) = {
     val clique = (20L to 31L).toList
     val cliqueEdges = for {
       a <- clique; b <- clique if a < b
       e <- Seq((a, b), (b, a)); _ <- 1 to 3
     } yield e
     val chain = List(25L, 9L, 14L, 3L, 17L, 6L, 12L, 1L, 15L, 8L, 11L)
-    val edges = cliqueEdges ++ chain.zip(chain.tail)
-    val ids = (clique ++ chain :+ 40L).distinct
+    ((clique ++ chain :+ 40L).distinct, cliqueEdges ++ chain.zip(chain.tail))
+  }
+
+  /** Union-find reference: each id's component is the least id it reaches. */
+  private def unionFind[T](ids: Seq[T], edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
     val parent = mutable.Map(ids.map(i => i -> i): _*)
-    def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+    def find(x: T): T = if (parent(x) == x) x else find(parent(x))
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
     }
-    assert(cc(ids, edges) == ids.map(i => i -> find(i)).toMap)
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  /** Run `body` with the session confs `confs` set, then restore them. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("connectedComponents: a duplicated clique with a chain equals union-find") {
+    val (ids, edges) = cliqueChain
+    assert(cc(ids, edges) == unionFind(ids, edges))
+  }
+
+  test("connectedComponents: edges over several partitions, and string ids, equal union-find") {
+    // the contraction sees a different subgraph in each of 7 partitions;
+    // string ids arrive in rows the scan reuses, so a kernel that keeps
+    // them without copying stores the wrong ids
+    val (ids, edges) = cliqueChain
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "7") {
+      assert(cc(ids, edges) == unionFind(ids, edges))
+      // "v9" > "v25": the string order is not the numeric one
+      val (sIds, sEdges) = (ids.map(i => s"v$i"), edges.map { case (a, b) => (s"v$a", s"v$b") })
+      val out = Components.connectedComponents(sIds.toDF("id"), "id", sEdges.toDF("a", "b"), "a", "b")
+        .as[(String, String)].collect().toMap
+      assert(out == unionFind(sIds, sEdges))
+    }
+  }
+
+  test("connectedComponents: a 64-node adversarial chain in one partition takes one round") {
+    // ids in bit-reversed order along the chain: neighbours sit far apart
+    // in id order, the shape that needs several star rounds uncontracted.
+    // AQE coalesces the distinct's few-KB output into one partition, so
+    // the contraction sees the whole chain.
+    val ids = (0 until 64).map(i => Integer.reverse(i) >>> 26).map(_.toLong + 1)
+    val sites = jobCallSites(assert(cc(ids, ids.zip(ids.tail)).values.toSet == Set(1L)))
+    assert(sites.count(_ == "Components.round1") == 3, sites)
+    assert(!sites.exists(s => s != null && s.startsWith("Components.round2")), sites)
   }
 }
