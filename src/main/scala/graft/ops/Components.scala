@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.DataType
   * The edge set converges to rooted stars whose root is the component
   * minimum, in O(log n) rounds — unlike plain min-label propagation, whose
   * round count is the graph DIAMETER (a chain of near-identical docs makes
-  * that linear; measured 19 rounds vs 4 on the sf0.1 near-dup graph).
+  * that linear).
   * Every step is a window or an aggregate over the edge list — no cross
   * products, no driver-side state — so each round is a constant number of
   * shuffles regardless of data size.
@@ -48,12 +48,14 @@ import org.apache.spark.sql.types.DataType
   * each component's minimum, (a) below — depends on nothing but the
   * components, so no output row changes, whatever the partitioning. What
   * changes is the round count: a component whose edges share a partition
-  * reaches the rounds as a star already. The kernel reads the `distinct`'s
-  * output inside the setup checkpoint's job (the frame is rebuilt over
-  * `queryExecution.toRdd`, as [[Similarity.centroids]] does), so it adds
-  * no exchange, no job and no driver collect. Memory: one hash-map entry
-  * per distinct endpoint of the partition (at most two per edge), which
-  * does not spill.
+  * reaches the rounds as a star already. Rounds without and with the
+  * contraction, 4 cores: q52, q81 and q104 at sf0.1 7 → 1, q83 at sf0.1
+  * 5 → 1, the `pipeline_scaled` near-dup graph (perfbench, seed 1) 5 → 1.
+  * The kernel reads the `distinct`'s output inside the setup checkpoint's
+  * job (the frame is rebuilt over `queryExecution.toRdd`, as
+  * [[Similarity.centroids]] does), so it adds no exchange, no job and no
+  * driver collect. Memory: one hash-map entry per distinct endpoint of the
+  * partition (at most two per edge), which does not spill.
   *
   * Round shape: 2 exchanges and 3 jobs. The round's input (the previous
   * round's raw small-star output, duplicates included) is made symmetric
@@ -183,34 +185,35 @@ object Components {
     * partition's endpoints, union by min (the smaller root wins, under the
     * id type's ordering) with path compression, so each root is its local
     * component's minimum and every row still has u > v. Holds one map
-    * entry per distinct endpoint; a key is copied out of the input row
+    * entry per distinct endpoint. A key is copied out of the input row
     * (which the scan reuses, `UTF8String` bytes included) before it is
-    * stored. */
+    * stored, and every value is the stored object of some key, so nodes
+    * compare by reference. */
   private def contract(rows: Iterator[InternalRow], idType: DataType): Iterator[InternalRow] = {
     val ordering = PhysicalDataType.ordering(idType)
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
+    val parent = new java.util.HashMap[AnyRef, AnyRef]()
+    def find(x: AnyRef): AnyRef = {
       var root = x
-      var up = parent.get(root)
-      while (up != root) { root = up; up = parent.get(root) }
+      while (parent.get(root) ne root) root = parent.get(root)
       var y = x
-      while (y != root) { val next = parent.get(y); parent.put(y, root); y = next }
+      while (y ne root) { val next = parent.get(y); parent.put(y, root); y = next }
       root
     }
-    def node(r: InternalRow, i: Int): Any = {
+    def node(r: InternalRow, i: Int): AnyRef = {
       val x = r.get(i, idType)
-      if (parent.containsKey(x)) find(parent.get(x)) // the stored copy, not `x`
-      else { val c = InternalRow.copyValue(x); parent.put(c, c); c }
+      val stored = parent.get(x)
+      if (stored != null) find(stored)
+      else { val c = InternalRow.copyValue(x).asInstanceOf[AnyRef]; parent.put(c, c); c }
     }
     rows.foreach { r =>
       val (a, b) = (node(r, 0), node(r, 1))
-      if (a != b) {
+      if (a ne b) {
         if (ordering.lt(a, b)) parent.put(b, a) else parent.put(a, b)
       }
     }
     parent.keySet.iterator.asScala.flatMap { x =>
       val root = find(x)
-      if (root == x) None else Some(new GenericInternalRow(Array[Any](x, root)))
+      if (root eq x) None else Some(new GenericInternalRow(Array[Any](x, root)))
     }
   }
 
