@@ -127,9 +127,10 @@ import org.apache.spark.sql.types.DataType
   * reliable `checkpoint` to survive executor loss.
   *
   * The setup's jobs (the `distinct`'s exchange and the contraction's
-  * checkpoint) carry the call site `Components.setup`, and each round's
-  * jobs `Components.round<k>`, so a job log or a listener attributes every
-  * job to its step.
+  * checkpoint, with any exchange of the input plan that has not run yet)
+  * carry the call site `Components.setup`, and each round's jobs
+  * `Components.round<k>`, so a job log or a listener attributes every job
+  * to its step.
   */
 object Components {
 

@@ -143,7 +143,8 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Union-find reference: each id's component is the least id it reaches. */
-  private def unionFind[T](ids: Seq[T], edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+  private def unionFind[T](ids: Seq[T], edges: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
     val parent = mutable.Map(ids.map(i => i -> i): _*)
     def find(x: T): T = if (parent(x) == x) x else find(parent(x))
     edges.foreach { case (a, b) =>
@@ -178,8 +179,8 @@ class ComponentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(cc(ids, edges) == unionFind(ids, edges))
       // "v9" > "v25": the string order is not the numeric one
       val (sIds, sEdges) = (ids.map(i => s"v$i"), edges.map { case (a, b) => (s"v$a", s"v$b") })
-      val out = Components.connectedComponents(sIds.toDF("id"), "id", sEdges.toDF("a", "b"), "a", "b")
-        .as[(String, String)].collect().toMap
+      val out = Components.connectedComponents(sIds.toDF("id"), "id",
+        sEdges.toDF("a", "b"), "a", "b").as[(String, String)].collect().toMap
       assert(out == unionFind(sIds, sEdges))
     }
   }
